@@ -204,6 +204,10 @@ object EsiEtl {
     // wide extract) would otherwise re-run the scan + cleaning chain +
     // five FK joins once EACH — Router.split's documented caller duty.
     // The persisted projection is just the FK ids + measure, narrow.
+    // It is the only cache a load leaves: CsvSource caches nothing, so
+    // this persist reads the CSV again after the dim probe did — the
+    // files are parsed twice by design, which costs less than caching
+    // the parsed scan (a cache build per file).
     val facts = resolved.select(factCols.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (in, out) = Router.split(facts, col("tip_movi") === "entrada")

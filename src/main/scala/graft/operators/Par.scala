@@ -19,8 +19,8 @@ package graft.operators
   *    (`shutdownNow` + await) before the cause rethrows, so sibling
   *    jobs can't keep writing their output paths in the background
   *    while the caller unwinds into a retry or cleanup;
-  *  - a GLOBAL permit pool (8) bounds total concurrent bodies across
-  *    every live Par call, nesting included (q220 Par-wraps two
+  *  - a GLOBAL permit pool (8) bounds the bodies on worker threads
+  *    across every live Par call, nesting included (q220 Par-wraps two
   *    register() calls, each of which Par-maps its grains — the r16
   *    version could multiply pools per level, up to 64 threads). A
   *    body only goes to a worker thread when a permit is free;
@@ -29,6 +29,14 @@ package graft.operators
   *    inner map still overlaps its siblings whenever capacity exists
   *    (the first sequential-nesting fix measurably cost q220 the
   *    overlap its r16 win came from).
+  *
+  * The stated bound is therefore: at most 8 pooled bodies, plus one
+  * inline body per thread that calls Par from OUTSIDE a Par body. A
+  * worker thread that nests a call runs its inline bodies on itself, a
+  * thread already counted among the 8; so however deep the nesting, at
+  * most 8 + (outside callers) threads run Par bodies at once. A pooled
+  * body keeps its permit until it returns, even past the failure path's
+  * await timeout.
   */
 object Par {
 
@@ -49,17 +57,22 @@ object Par {
     // permit, and die after the call (the pool is per-call; the BOUND
     // is the global semaphore, not the pool size)
     val pool = java.util.concurrent.Executors.newCachedThreadPool()
-    // one idempotent permit-release per pooled body: the normal path
-    // releases in the callable's finally; the failure path releases
-    // after awaitTermination for tasks cancellation prevented from
-    // ever starting (their finally never runs — without this, every
-    // cancelled-before-start task would LEAK a global permit)
+    // each pooled body's permit is released exactly once, by whichever
+    // side claims the task first: call(), which runs the body and
+    // releases when it returns, or abandon(), for a task cancellation
+    // or a failed submit kept from ever starting (without it, every
+    // cancelled-before-start task would LEAK a global permit). A body
+    // still running when the failure path gives up waiting keeps its
+    // permit, so the bound holds while it runs.
     final class Task(i: Int)
         extends java.util.concurrent.Callable[T] {
-      val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def release(): Unit =
-        if (released.compareAndSet(false, true)) permits.release()
-      override def call(): T = try body(indexes(i)) finally release()
+      private val claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def abandon(): Unit =
+        if (claimed.compareAndSet(false, true)) permits.release()
+      override def call(): T =
+        if (claimed.compareAndSet(false, true))
+          try body(indexes(i)) finally permits.release()
+        else throw new java.util.concurrent.CancellationException()
     }
     val tasks = new Array[Task](n)
     val futs = new Array[java.util.concurrent.Future[T]](n)
@@ -71,7 +84,7 @@ object Par {
         if (permits.tryAcquire()) {
           tasks(i) = new Task(i)
           try futs(i) = pool.submit(tasks(i))
-          catch { case t: Throwable => tasks(i).release(); failure = t }
+          catch { case t: Throwable => tasks(i).abandon(); failure = t }
         } else {
           // no capacity anywhere (all 8 permits busy across the JVM):
           // run inline — the submitting thread would otherwise idle in
@@ -105,7 +118,7 @@ object Par {
         futs.foreach(f => if (f != null) f.cancel(true): Unit)
         pool.shutdownNow()
         pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-        tasks.foreach(t => if (t != null) t.release())
+        tasks.foreach(t => if (t != null) t.abandon())
         throw failure
       }
       out

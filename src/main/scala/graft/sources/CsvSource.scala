@@ -11,10 +11,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (`Datos/preprocessing.py:95-96`), and repairs rows whose field arity
   * is wrong by re-parsing the first cell as an embedded CSV line
   * (`preprocessing.py:152-187`). Spark-natively this is one PERMISSIVE
-  * scan with a corrupt-record column and one repair pass over the
-  * (tiny) corrupt subset, unioned back — no driver-side loops; the
-  * repair is a per-row expression over a filtered DataFrame, so it
-  * scales with the corrupt fraction, not the file size.
+  * scan with a corrupt-record column and ONE projection over it: each
+  * row is kept as parsed, rebuilt from its raw line, or dropped, in the
+  * same pass — no cache, no second pass over the corrupt subset, no
+  * union, no driver-side loops. The re-parse runs only on corrupt rows,
+  * so its cost scales with the corrupt fraction, not the file size.
   */
 object CsvSource {
 
@@ -48,24 +49,18 @@ object CsvSource {
     * through; rows that still don't fit are dropped, never letting a
     * malformed line kill the scan (the reference's csv.reader repair,
     * `preprocessing.py:152-187`). */
-  def repair(df0: DataFrame, schema: StructType, sep: String): DataFrame = {
-    // Spark refuses plans that reference ONLY the corrupt-record column
-    // of a raw scan; caching the parsed frame (the documented
-    // workaround) is fine here — the repair is a second pass anyway.
-    val df = df0.cache()
-    val good = df.filter(col(corruptCol).isNull).drop(corruptCol)
+  def repair(df: DataFrame, schema: StructType, sep: String): DataFrame = {
+    val corrupt = col(corruptCol)
     val n = schema.fields.length
     // a wrong-arity line usually arrives as ONE quoted cell holding the
     // true CSV line, with inner quotes doubled per RFC 4180; recover
     // the embedded line exactly as the reference's csv.reader does —
     // strip the outer quotes and un-double the inner ones. Lines not
     // wholly quoted pass through untouched (their quoting is live).
-    val isWrapped =
-      col(corruptCol).startsWith("\"") && col(corruptCol).endsWith("\"")
+    val isWrapped = corrupt.startsWith("\"") && corrupt.endsWith("\"")
     val stripped = when(isWrapped,
-      regexp_replace(regexp_replace(col(corruptCol), "^\"|\"$", ""),
-        "\"\"", "\""))
-      .otherwise(col(corruptCol))
+      regexp_replace(regexp_replace(corrupt, "^\"|\"$", ""), "\"\"", "\""))
+      .otherwise(corrupt)
     // still-broken detection: from_csv in PERMISSIVE mode never returns
     // a null struct, so "parse failed" must be read off a corrupt-record
     // field INSIDE a re-parse. That check runs against an ALL-STRING
@@ -81,17 +76,22 @@ object CsvSource {
     val arityOk = from_csv(stripped, arityProbe,
       Map("sep" -> sep, "mode" -> "PERMISSIVE",
         "columnNameOfCorruptRecord" -> innerBad))(innerBad).isNull
+    // cheap pre-check first: the raw split over-approximates arity
+    // (never under-counts — quoted separators only inflate it), so < n
+    // means certainly unrecoverable; the exact check is the re-parse
+    val recoverable =
+      size(split(stripped, java.util.regex.Pattern.quote(sep))) >= n && arityOk
     val parsed = from_csv(stripped, schema,
       Map("sep" -> sep, "mode" -> "PERMISSIVE"))
-    val rebuilt = df.filter(col(corruptCol).isNotNull)
-      // cheap pre-filter: the raw split over-approximates arity (never
-      // under-counts — quoted separators only inflate it), so < n means
-      // certainly unrecoverable; the exact check is the string re-parse
-      .where(size(split(stripped, java.util.regex.Pattern.quote(sep))) >= n)
-      .where(arityOk)
-      .select(parsed.as("__r"))
-      .select(col("__r.*"))
-    good.unionByName(rebuilt)
+    // the row is built BEFORE the filter on purpose: Spark rejects a raw
+    // CSV plan whose only required column is the corrupt one, and a
+    // filter on the corrupt column alone leaves exactly that plan under
+    // a bare count() (the projection is pruned away). Filtering on the
+    // built row keeps every data column required; an unrecoverable row
+    // builds to null.
+    val row = when(corrupt.isNull, struct(schema.fieldNames.map(col): _*))
+      .when(recoverable, parsed)
+    df.select(row.as("__r")).where(col("__r").isNotNull).select(col("__r.*"))
   }
 
   /** Scan + repair + per-file lineage union — the A1/G1 shape: all

@@ -36,23 +36,43 @@ class ParSpec extends AnyFunSuite {
       "bodies started in the background after the failure rethrew")
   }
 
-  test("nested Par stays bounded by the global permits, not pool × pool") {
+  /** Runs `callers` threads, each a three-level nest of mapIndexed
+    * (4 × 4 × 4 leaves); returns the peak number of leaves running at
+    * once. */
+  private def nestedPeak(callers: Int): Int = {
     val concurrent = new java.util.concurrent.atomic.AtomicInteger(0)
     val peak = new java.util.concurrent.atomic.AtomicInteger(0)
-    val out = Par.mapIndexed(0 until 8) { o =>
-      Par.mapSeq(0 until 8) { i =>
-        val c = concurrent.incrementAndGet()
-        peak.updateAndGet(p => math.max(p, c))
-        Thread.sleep(30)
-        concurrent.decrementAndGet()
-        o * 10 + i
+    def nest(): Int =
+      Par.mapIndexed(0 until 4) { a =>
+        Par.mapIndexed(0 until 4) { b =>
+          Par.mapIndexed(0 until 4) { c =>
+            val now = concurrent.incrementAndGet()
+            peak.updateAndGet(p => math.max(p, now))
+            Thread.sleep(20)
+            concurrent.decrementAndGet()
+            a * 16 + b * 4 + c
+          }.sum
+        }.sum
       }.sum
-    }
-    assert(out.toSeq == (0 until 8).map(o => (0 until 8).map(o * 10 + _).sum))
-    // bound = 8 global permits + inline bodies on the (≤ 8) caller
-    // threads that found no free permit — far under the 64 threads
-    // multiplied per-level pools would spawn
-    assert(peak.get() <= 16, s"nested bodies exceeded the bound: ${peak.get()}")
+    val sums = new java.util.concurrent.atomic.AtomicIntegerArray(callers)
+    val threads = (0 until callers).map(t => new Thread(() => sums.set(t, nest())))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    (0 until callers).foreach(t => assert(sums.get(t) == (0 until 64).sum))
+    peak.get()
+  }
+
+  test("nested Par stays bounded by the global permits, not pool × pool") {
+    // the stated bound: 8 pooled bodies + one inline body on the one
+    // caller thread — nesting depth adds nothing (a pooled thread runs
+    // its inner inline bodies on itself)
+    val peak = nestedPeak(callers = 1)
+    assert(peak <= 9, s"nested bodies exceeded 8 pooled + 1 inline: $peak")
+  }
+
+  test("each outside caller adds at most one inline body to the bound") {
+    val peak = nestedPeak(callers = 3)
+    assert(peak <= 8 + 3, s"nested bodies exceeded 8 pooled + 3 inline: $peak")
   }
 
   test("permits are not leaked by the failure/cancellation path") {
