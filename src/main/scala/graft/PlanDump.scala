@@ -1,27 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: dump `.explain("formatted")` for a list
   * of declared queries to files (`plans/rNN/<query>_<tag>.txt`), so
   * plan-shape claims in OPTIMIZATION_rNN.md are checkable without a
-  * Spark runtime. Mirrors Bench's session config (same AQE, same
-  * shuffle-partition seed) so the dumped plan is the benched plan.
+  * Spark runtime. Builds its session with [[Sessions]], as Bench
+  * does, so the dumped plan is the benched plan by construction.
   *
   * Usage: PlanDump <sfDir> <outDir> <tag> <name1,name2,...|all>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, namesCsv) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(32))
     val names =
       if (namesCsv == "all") Queries.benchNames
       else namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq

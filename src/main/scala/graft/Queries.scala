@@ -88,10 +88,8 @@ object Queries {
     Set("lineitem", "orders", "documents", "embeddings")
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (fanOutTables(name)) {
-      val path = s"$dir/$name.parquet"
-      fanOut(spark, path, spark.read.parquet(path))
-    }
+    if (fanOutTables(name))
+      fanOut(spark, s"$dir/$name.parquet", Tables.load(spark, dir, name))
     else if (name == "events") {
       // One loader, one contract: Tables.events handles both fixture
       // generations (TIMESTAMP(NANOS)-as-int64 legacy and native
@@ -100,7 +98,7 @@ object Queries {
       // its own key (window start, user_id) — a pre-repartition is a
       // pure extra stage, measured ~2× slower on q13.
       Tables.events(spark, dir)
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Tables.load(spark, dir, name)
 
   private val dec2 = DecimalType(18, 2)
   private val dec6 = DecimalType(18, 6)
@@ -859,10 +857,8 @@ object Queries {
       .orderBy("fact", "mes_movi", "via_tran", "sex_migr")
   }
 
-  /** The deterministic ESI-shaped stream q36 derives from orders —
-    * shared with [[Q36Profile]] so the profiled phases are built from
-    * the exact frame the benched query uses. */
-  private[graft] def q36Raw(s: SparkSession, dir: String): DataFrame =
+  /** The deterministic ESI-shaped stream q36 derives from orders. */
+  private def q36Raw(s: SparkSession, dir: String): DataFrame =
     // t() already fans out the single-row-group orders scan, so the
     // regex-heavy cleaning chain runs spread across the cluster
     q36RawFromOrders(t(s, dir, "orders"))
@@ -892,10 +888,6 @@ object Queries {
       when(col("o_orderkey") % 7 === 0, lit("sin especificar"))
         .otherwise((col("o_custkey") % 80 + 1).cast("string")).as("edad"))
   }
-
-  /** Exposes [[dmean]] to the ad-hoc profiler so its reconstructed q36
-    * tail is expression-identical to the benched query. */
-  private[graft] def dmeanForProfiler(c: Column): Column = dmean(c)
 
   val q36Sql: String =
     """WITH raw AS (SELECT

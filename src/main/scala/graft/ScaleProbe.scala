@@ -3,14 +3,45 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale probe: times the round-3 operators on a 10× union-replicated
-  * corpus (ids offset per replica so key cardinality scales too) and
-  * prints one JSON line of seconds per operator. The point is the
-  * SHAPE of the growth, not absolute numbers: an operator whose cost
-  * is linear-ish in rows at 10× has no hidden quadratic/driver
-  * bottleneck waiting at 1000×.
+/** Scale probe: times operator families on a k× union-replicated
+  * corpus (ids offset per replica so key cardinality scales too). Each
+  * timed entry prints a `[probe-entry]` fragment as it lands, and each
+  * set ends with one `[probe] {...,"replication":k}` JSON line. The
+  * point is the SHAPE of the growth, not absolute numbers: an operator
+  * whose cost is linear-ish in rows at 10× has no hidden
+  * quadratic/driver bottleneck waiting at 1000×.
   *
-  * Usage: `sbt "runMain graft.ScaleProbe /root/testdata/sf0.1 10"`
+  * Sets (see [[sets]]; `r3` when none is named):
+  *  - `r3`: skyline, bloom semi join, hierarchy, inverted index, cross
+  *    near-dup, gaps, and the round-4 operators
+  *  - `r5`: exact-rank percentiles, budget mix, containment
+  *  - `r6`: KMeans, hard negatives, winnow, chunk dups, DSIR, vocabulary
+  *  - `r7`: the dedup/ANN third decade plus the q177 curation chain
+  *  - `r7b`: span dedup, PQ / IVF-ADC, bigram perplexity
+  *  - `r8`: sampled PQ fit, bloom-gated decontamination
+  *  - `r9`: the stored-signature dedup faces
+  *  - `r13`: band-index pruning sweep, restart rebuild, replay stability
+  *  - `r13lookup`: band-index lookup alone at the key cap
+  *  - `r14`: shared-scan agg registration, drill-across
+  *  - `r15`: closure maintenance, budget advisor, refresh isolation
+  *  - `r17`: salted cluster join, PQ fit variants
+  *  - `flagship`: q36 / q64 / q87 / q11 / q91
+  *  - `events`: the events operator family
+  *  - `asof`: as-of join, window vs native node, both directions
+  *  - `zorder`: Z-order stats and clustering
+  *  - `curationcmp`: curation chain, lineage vs persisted vs scratch
+  *  - `curationstages`: curation chain, one entry per stage
+  *  - `sigfetch`: signature-store fetch vs the lazy semi join
+  *  - `aggnav`: agg-table registration, routed drill, refresh
+  *  - `viewrefresh`: partition-scoped view refresh vs materialize
+  *  - `streams`, `streamcompact`, `eventcompact`: per-batch walls of
+  *    the streaming sinks (k = micro-batch count)
+  *
+  * `SPARK_GRAFT_PROBE_ONLY=name,...` times only the named entries.
+  *
+  * Usage: `sbt "runMain graft.ScaleProbe <sfDir> <k> [set] [parts]"`,
+  * or `scripts/probe.sh` outside sbt. `parts` overrides the shuffle
+  * partition count, which otherwise equals the core count.
   */
 object ScaleProbe {
 
@@ -39,47 +70,42 @@ object ScaleProbe {
     offset.repartition(parts)
   }
 
+  /** Every probe set by name. */
+  private[graft] val sets: Map[String, (SparkSession, String, Int) => Unit] =
+    Map(
+      "r3" -> (r3Probes _), "r5" -> (r5Probes _), "r6" -> (r6Probes _),
+      "r7" -> (r7Probes _), "r7b" -> (r7bProbes _), "r8" -> (r8Probes _),
+      "r9" -> (r9Probes _), "r13" -> (r13Probes _),
+      "r13lookup" -> (r13LookupProbes _), "r14" -> (r14Probes _),
+      "r15" -> (r15Probes _), "r17" -> (r17Probes _),
+      "flagship" -> (flagship _), "events" -> (eventsProbes _),
+      "asof" -> (asofProbes _), "zorder" -> (zorderProbes _),
+      "curationcmp" -> (curationCmpProbes _),
+      "curationstages" -> (curationStageProbes _),
+      "sigfetch" -> (sigFetchProbes _), "aggnav" -> (aggNavProbes _),
+      "viewrefresh" -> (viewRefreshProbes _),
+      "streams" -> (streamProbes _),
+      "streamcompact" -> (streamCompactProbes _),
+      "eventcompact" -> (eventCompactProbes _))
+
+  /** The set called `name`. An unknown name fails with the valid ones,
+    * so a typo never silently runs some other set. */
+  private[graft] def set(name: String): (SparkSession, String, Int) => Unit =
+    sets.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown probe set '$name'; valid sets: " +
+        sets.keys.toSeq.sorted.mkString(", ")))
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val k = if (args.length > 1) args(1).toInt else 10
-    val set = if (args.length > 2) args(2) else "r3"
+    val run = set(if (args.length > 2) args(2) else "r3")
     // a real cluster sizes shuffle partitions with the data — let the
     // probe do the same, so partition-starvation spill (fixed 32 lanes
     // under 100× volume) is distinguishable from algorithmic blowup
-    val parts = if (args.length > 3) args(3) else "32"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .withExtensions(new GraftExtensions) // native plan strategies (as-of, skyline)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val parts = if (args.length > 3) Some(args(3).toInt) else None
+    val spark = Sessions.local(Sessions.cpus(32), parts)
     Telemetry.ensure(spark)
-    if (set == "flagship") flagship(spark, dir, k)
-    else if (set == "r5") r5Probes(spark, dir, k)
-    else if (set == "r6") r6Probes(spark, dir, k)
-    else if (set == "r7") r7Probes(spark, dir, k)
-    else if (set == "r7b") r7bProbes(spark, dir, k)
-    else if (set == "curationcmp") curationCmpProbes(spark, dir, k)
-    else if (set == "curationstages") curationStageProbes(spark, dir, k)
-    else if (set == "asof") asofProbes(spark, dir, k)
-    else if (set == "zorder") zorderProbes(spark, dir, k)
-    else if (set == "events") eventsProbes(spark, dir, k)
-    else if (set == "streams") streamProbes(spark, dir, k)
-    else if (set == "streamcompact") streamCompactProbes(spark, dir, k)
-    else if (set == "eventcompact") eventCompactProbes(spark, dir, k)
-    else if (set == "sigfetch") sigFetchProbes(spark, dir, k)
-    else if (set == "r8") r8Probes(spark, dir, k)
-    else if (set == "r9") r9Probes(spark, dir, k)
-    else if (set == "r13") r13Probes(spark, dir, k)
-    else if (set == "r13lookup") r13LookupProbes(spark, dir, k)
-    else if (set == "aggnav") aggNavProbes(spark, dir, k)
-    else if (set == "r14") r14Probes(spark, dir, k)
-    else if (set == "r15") r15Probes(spark, dir, k)
-    else if (set == "viewrefresh") viewRefreshProbes(spark, dir, k)
-    else if (set == "r17") r17Probes(spark, dir, k)
-    else r3Probes(spark, dir, k)
+    run(spark, dir, k)
     spark.stop()
   }
 
@@ -90,26 +116,23 @@ object ScaleProbe {
     * choice, not a data-volume knob; its cost is rows × k per round
     * regardless). */
   private def r6Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): (String, Double, Long) = {
-      val s = System.nanoTime(); val n = f
-      (name, (System.nanoTime() - s) / 1e9, n)
-    }
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val embK = replicate(tbl("embeddings"), Seq("vec_id"), k).persist(lvl)
-    val docsK = replicate(tbl("documents"), Seq("doc_id"), k).persist(lvl)
+    val embK = replicate(Tables.load(spark, dir, "embeddings"),
+      Seq("vec_id"), k).persist(lvl)
+    val docsK = replicate(Tables.load(spark, dir, "documents"),
+      Seq("doc_id"), k).persist(lvl)
     Seq(embK, docsK).foreach(_.count())
 
     val results = Seq(
-      t("kmeans") {
+      timeEntry("kmeans") {
         ml.KMeansRel.fitAssign(embK, "vec_id", "embedding",
           k = 8, iters = 2).count()
       },
-      t("hard_negatives") {
+      timeEntry("hard_negatives") {
         sim.Similarity.hardNegatives(embK, "vec_id", "embedding", "label",
           nClusters = 8 * k, k = 5).count()
       },
-      t("hard_negatives_coarse") {
+      timeEntry("hard_negatives_coarse") {
         // two-level assignment: exact assignment's n·c cosines are the
         // probe-measured super-linearity once c scales with the corpus;
         // nCoarse ≈ √c restores O(n·√c)
@@ -117,25 +140,22 @@ object ScaleProbe {
           nClusters = 8 * k, k = 5,
           nCoarse = math.max(4, math.ceil(math.sqrt(8.0 * k)).toInt)).count()
       },
-      t("winnow") {
+      timeEntry("winnow") {
         text.TextOps.winnow(docsK, "doc_id", "text", k = 4, w = 4).count()
       },
-      t("chunk_dup") {
+      timeEntry("chunk_dup") {
         dedup.Dedup.chunkDupStats(docsK, "doc_id", "text", size = 16).count()
       },
-      t("dsir") {
+      timeEntry("dsir") {
         text.Importance.importanceWeights(docsK, "doc_id", "text",
           col("lang") === "en").count()
       },
-      t("vocab_coverage") {
+      timeEntry("vocab_coverage") {
         text.TextOps.vocabCoverage(docsK, "doc_id", "text",
           vocabSize = 4096).count()
       })
 
-    val json = results.map { case (n, sec, rows) =>
-      f""""$n":{"sec":$sec%.2f,"rows":$rows}"""
-    }.mkString("{", ",", s""","replication":$k}""")
-    println(s"[probe] $json")
+    report(k, results)
   }
 
   /** Salted explode-replication for TEXT: the [[replicateExplode]]
@@ -183,15 +203,15 @@ object ScaleProbe {
     * probes: nlist is a recall dial, not a data-size dial, and the
     * probe measures the pruned-scan slope. */
   private def r7bProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): String = timeEntry(name)(f)
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val docsK = replicateTextSalted(tbl("documents"), k).persist(lvl)
-    val embK = replicateVecSalted(tbl("embeddings"), k).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
+    val embK = replicateVecSalted(Tables.load(spark, dir, "embeddings"), k)
+      .persist(lvl)
     Seq(docsK, embK).foreach(_.count())
 
     val results = Seq(
-      t("span_dedup") {
+      timeEntry("span_dedup") {
         // sum over clean_text lengths forces the reassembly (a bare
         // count() would let Catalyst prune the whole coverage chain)
         dedup.Dedup.spanDedup(docsK, "doc_id", "text", w = 8)
@@ -199,7 +219,7 @@ object ScaleProbe {
             sum(col("n_removed")).as("r"))
           .head().getLong(1)
       },
-      t("pq_fit_encode_adc") {
+      timeEntry("pq_fit_encode_adc") {
         // constant 20-query set (replica 0): ADC cost = queries × codes
         val model = sim.Pq.fit(embK, "vec_id", "embedding",
           m = 4, kCodes = 16, iters = 1)
@@ -209,7 +229,7 @@ object ScaleProbe {
             .select(col("vec_id").as("qid"), col("embedding")),
           "qid", "embedding", model, k = 10).count()
       },
-      t("ivfadc_topk") {
+      timeEntry("ivfadc_topk") {
         val model = sim.Pq.ivfAdcFit(embK, "vec_id", "embedding",
           nlist = 64, m = 4, kCodes = 16, iters = 1)
         val index = sim.Pq.ivfAdcIndex(embK, "vec_id", "embedding", model)
@@ -222,13 +242,13 @@ object ScaleProbe {
         index.unpersist()
         n
       },
-      t("perplexity") {
+      timeEntry("perplexity") {
         text.NgramLm.perplexity(docsK, "doc_id", "text")
           .agg(sum(col("n_bigrams")).as("b"), sum(col("ppl")).as("p"))
           .head().getLong(0)
       })
 
-    println(results.mkString("[probe] {", ",", s""","replication":$k}"""))
+    report(k, results)
   }
 
   /** Round-17 probes (VERDICT r16 item 7): decade evidence that the
@@ -244,8 +264,6 @@ object ScaleProbe {
     *    independent per-slice fits (m·(1+iters) corpus passes) — the
     *    KMeansRelSpec bit-identity comparator, priced at decades. */
   private def r17Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): String = timeEntry(name)(f)
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     // STAGED PARQUET, deliberately NOT block-cached: the fused-fit
     // claim is "fewer CORPUS PASSES" — with the replicated corpus
     // persisted in executor memory a pass costs ~nothing and the probe
@@ -257,7 +275,7 @@ object ScaleProbe {
     // as the honest record of why the staging exists.)
     val staged = java.nio.file.Files
       .createTempDirectory("probe_r17_emb").toString
-    replicateVecSalted(tbl("embeddings"), k).write
+    replicateVecSalted(Tables.load(spark, dir, "embeddings"), k).write
       .mode("overwrite").parquet(staged)
     def embK = spark.read.parquet(staged)
     val m = 4
@@ -270,10 +288,6 @@ object ScaleProbe {
       require(dim % m == 0, s"dim $dim must divide into $m subspaces")
       dim / m
     }
-    // SPARK_GRAFT_PROBE_ONLY=pq_fit_fused,... isolates entries
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def want(n: String) = only.forall(_.contains(n))
     try {
       val results = Seq(
         "hard_negatives_salted" -> (() =>
@@ -313,8 +327,8 @@ object ScaleProbe {
               iters).length.toLong
           }.sum
         })
-      ).collect { case (n, f) if want(n) => t(n)(f()) }
-      println(results.mkString("[probe] {", ",", s""","replication":$k}"""))
+      ).map { case (n, f) => timeEntry(n)(f()) }
+      report(k, results)
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staged))
   }
@@ -327,27 +341,27 @@ object ScaleProbe {
     * per code, not a fixed fraction), and the reason fit cost should
     * be ~FLAT across decades while encode scales per-row ~1. */
   private def r8Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): String = timeEntry(name)(f)
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val docsK = replicateTextSalted(tbl("documents"), k).persist(lvl)
-    val embK = replicateVecSalted(tbl("embeddings"), k).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
+    val embK = replicateVecSalted(Tables.load(spark, dir, "embeddings"), k)
+      .persist(lvl)
     Seq(docsK, embK).foreach(_.count())
     // ~fixed absolute sample: fraction ≈ 1/k via the md5 hex prefix
     val thr = if (k >= 1000) "004" else if (k >= 100) "02"
       else if (k >= 10) "1" else "g"
 
     val results = Seq(
-      t("pq_fit_full") {
+      timeEntry("pq_fit_full") {
         sim.Pq.fit(embK, "vec_id", "embedding",
           m = 4, kCodes = 16, iters = 1).books.length.toLong
       },
-      t("pq_fit_sample") {
+      timeEntry("pq_fit_sample") {
         sim.Pq.fitSample(embK, "vec_id", "embedding",
           m = 4, kCodes = 16, iters = 1, hexThreshold = thr)
           .books.length.toLong
       },
-      t("pq_sample_encode_adc") {
+      timeEntry("pq_sample_encode_adc") {
         val model = sim.Pq.fitSample(embK, "vec_id", "embedding",
           m = 4, kCodes = 16, iters = 1, hexThreshold = thr)
         sim.Pq.adcTopK(
@@ -356,7 +370,7 @@ object ScaleProbe {
             .select(col("vec_id").as("qid"), col("embedding")),
           "qid", "embedding", model, k = 10).count()
       },
-      t("decontaminate_bloom") {
+      timeEntry("decontaminate_bloom") {
         // the q177 chain's 52%-share stage, isolated: constant-sized
         // benchmark side, corpus grams bloom-gated before the exact
         // semi join
@@ -366,7 +380,7 @@ object ScaleProbe {
           "doc_id", "text", n = 4).count()
       })
 
-    println(results.mkString("[probe] {", ",", s""","replication":$k}"""))
+    report(k, results)
   }
 
   /** Round-9: the stored-signature dedup faces' own decade evidence.
@@ -382,34 +396,33 @@ object ScaleProbe {
     * ≤~1 across decades, and the stored dedup never re-shingles
     * (its cost tracks the text path minus the shingle build). */
   private def r9Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): String = timeEntry(name)(f)
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val docsK = replicateTextSalted(tbl("documents"), k).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
     docsK.count()
     val sigDir = java.nio.file.Files.createTempDirectory("probe_sigs").toString
     try {
       val results = Seq(
-        t("sig_build_store") {
+        timeEntry("sig_build_store") {
           dedup.Dedup.nearDupSignatures(docsK, "doc_id", "text")
             .write.mode("overwrite").parquet(sigDir)
           spark.read.parquet(sigDir).count()
         },
-        t("neardup_text") {
+        timeEntry("neardup_text") {
           dedup.Dedup.nearDupPairs(docsK, "doc_id", "text",
             threshold = 0.9).count()
         },
-        t("neardup_from_sigs") {
+        timeEntry("neardup_from_sigs") {
           dedup.Dedup.nearDupPairsFromSignatures(
             spark.read.parquet(sigDir), threshold = 0.9).count()
         },
-        t("cross_vs_sigs") {
+        timeEntry("cross_vs_sigs") {
           dedup.Dedup.crossNearDupPairsVsSignatures(
             docsK.filter(col("doc_id") % 2 === 0), "doc_id", "text",
             spark.read.parquet(sigDir).filter(col("id") % 2 === 1),
             threshold = 0.9).count()
         })
-      println(results.mkString("[probe] {", ",", s""","replication":$k}"""))
+      report(k, results)
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sigDir))
   }
@@ -422,10 +435,9 @@ object ScaleProbe {
     * output by CurationSpec's bit-identity test. */
   private def curationCmpProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    def t(name: String)(f: => Long): String = timeEntry(name)(f)
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val docsK = replicateTextSalted(tbl("documents"), k).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
     docsK.count()
     val weights = Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1)
     // autoBytes: the pure-mode entries (lineage/persisted) disable
@@ -460,16 +472,16 @@ object ScaleProbe {
       def want(m: String) = mode.forall(_ == m)
       val results =
         (if (want("lineage"))
-          Seq(t("curation_lineage") { chain(persist = false) })
+          Seq(timeEntry("curation_lineage") { chain(persist = false) })
          else Seq.empty) ++
         (if (want("persisted"))
-          Seq(t("curation_persisted") { chain(persist = true) })
+          Seq(timeEntry("curation_persisted") { chain(persist = true) })
          else Seq.empty) ++
         (if (want("scratch"))
           // the r9 decade probe priced pairs-from-PARQUET-sigs 4.2×
           // under pairs-from-cached-sigs on the same corpus (39.6 vs
           // 168.4 s at 1000×) — this entry prices that delta in-chain
-          Seq(t("curation_scratch") { chain(persist = true, Some(scratchDir)) })
+          Seq(timeEntry("curation_scratch") { chain(persist = true, Some(scratchDir)) })
          else Seq.empty) ++
         (if (mode.contains("auto")) {
           // OPT-IN only (never part of the legacy all-modes-unset
@@ -496,13 +508,13 @@ object ScaleProbe {
           })
           watcher.setDaemon(true)
           watcher.start()
-          val frag = t("curation_auto") {
+          val frag = timeEntry("curation_auto") {
             chain(persist = false,
               autoBytes = etl.Curation.ScratchAutoBytes) }
           chainDone = true
-          Seq(frag, s""""auto_scratch_path_taken":$sawScratch""")
+          Seq(frag, Some(s""""auto_scratch_path_taken":$sawScratch"""))
         } else Seq.empty)
-      println(results.mkString("[probe] {", ",", s""","replication":$k}"""))
+      report(k, results)
     } finally org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(scratchDir))
   }
@@ -513,43 +525,41 @@ object ScaleProbe {
     * lineage-vs-persisted head-to-head can't give. */
   private def curationStageProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    def t(name: String)(f: => Long): String = timeEntry(name)(f)
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val docsK = replicateTextSalted(tbl("documents"), k).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
     docsK.count()
     val weights = Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1)
     val d1 = dedup.Dedup.dropExactDups(docsK, "doc_id", "text").persist(lvl)
-    val r1 = t("s1_exact_dedup") { d1.count() }
+    val r1 = timeEntry("s1_exact_dedup") { d1.count() }
     // signatures materialized ONCE (the Curation.curate persistStages
     // shape since round 9): the pair plan's banding and verify
     // branches both read them, and the r9 decade probe prices the
     // stored path 6.7× under the from-text path
     val sigs = dedup.Dedup.nearDupSignatures(d1, "doc_id", "text")
       .persist(lvl)
-    val r2s = t("s2s_sig_build") { sigs.count() }
+    val r2s = timeEntry("s2s_sig_build") { sigs.count() }
     val pairs = dedup.Dedup
       .nearDupPairsFromSignatures(sigs, threshold = 0.9).persist(lvl)
-    val r2a = t("s2a_neardup_pairs") { pairs.count() }
+    val r2a = timeEntry("s2a_neardup_pairs") { pairs.count() }
     val d2 = dedup.Dedup.dropNearDups(d1, "doc_id", pairs).persist(lvl)
-    val r2b = t("s2b_cc_drop") { d2.count() }
+    val r2b = timeEntry("s2b_cc_drop") { d2.count() }
     val d3 = d2.filter(
       round(text.TextOps.qualityScore(col("text")), 6) >= 0.3)
     val d4 = text.Decontaminate.decontaminate(
       d3.filter(col("doc_id") >= 10), docsK.filter(col("doc_id") < 10),
       "doc_id", "text", n = 4).persist(lvl)
-    val r4 = t("s3_quality_s4_decontaminate") { d4.count() }
+    val r4 = timeEntry("s3_quality_s4_decontaminate") { d4.count() }
     val d5 = features.Features.budgetMixSample(
       d4.select("doc_id", "lang", "n_chars"), "lang", "doc_id", "n_chars",
       weights, budget = 40000L * k)
-    val r5 = t("s5_budget_mix_shards") {
+    val r5 = timeEntry("s5_budget_mix_shards") {
       d5.withColumn("shard", operators.Shards.shardCol("doc_id", 8))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
         .count()
     }
-    println(Seq(r1, r2s, r2a, r2b, r4, r5)
-      .mkString("[probe] {", ",", s""","replication":$k}"""))
+    report(k, Seq(r1, r2s, r2a, r2b, r4, r5))
   }
 
   /** Task-metrics telemetry for the probe entries: cumulative spill
@@ -589,32 +599,44 @@ object ScaleProbe {
     * whole set — a probe decade whose last entry exhausts this box's
     * shuffle disk (containment at 1000×) must still report the
     * entries that finished. Each fragment carries the window's spill
-    * deltas and max task-peak memory (see [[Telemetry]]). */
-  private def timeEntry(name: String)(f: => Long): String = {
-    val mem0 = Telemetry.memSpill.get()
-    val disk0 = Telemetry.diskSpill.get()
-    Telemetry.windowPeakTaskMem.set(0L)
-    val s = System.nanoTime()
-    def mb(b: Long): Long = b / (1024 * 1024)
-    def tele: String = {
-      // listener events drain asynchronously — give the bus a moment
-      // so the window's last tasks land in the counters
-      Thread.sleep(300)
-      s""""spill_mb":${mb(Telemetry.memSpill.get() - mem0)},""" +
+    * deltas and max task-peak memory (see [[Telemetry]]). An entry
+    * left out of `SPARK_GRAFT_PROBE_ONLY` is not run: None. */
+  private def timeEntry(name: String)(f: => Long): Option[String] =
+    if (!probeOnly.forall(_.contains(name))) None
+    else {
+      val mem0 = Telemetry.memSpill.get()
+      val disk0 = Telemetry.diskSpill.get()
+      Telemetry.windowPeakTaskMem.set(0L)
+      val s = System.nanoTime()
+      val result = try Right(f) catch { case e: Throwable => Left(e) }
+      val sec = (System.nanoTime() - s) / 1e9
+      // the window's last task-end events are still on the async bus
+      org.apache.spark.sql.graft.Bridge
+        .waitListenerBusEmpty(SparkSession.active.sparkContext)
+      def mb(b: Long): Long = b / (1024 * 1024)
+      val outcome = result.fold(
+        e => s""""err":"${e.getClass.getSimpleName}"""", n => s""""rows":$n""")
+      val frag = f""""$name":{"sec":$sec%.2f,$outcome,""" +
+        s""""spill_mb":${mb(Telemetry.memSpill.get() - mem0)},""" +
         s""""disk_spill_mb":${mb(Telemetry.diskSpill.get() - disk0)},""" +
-        s""""peak_task_mem_mb":${mb(Telemetry.windowPeakTaskMem.get())}"""
+        s""""peak_task_mem_mb":${mb(Telemetry.windowPeakTaskMem.get())}}"""
+      println(s"[probe-entry] $frag")
+      // not a listener wait: the pause gives the ContextCleaner time to
+      // delete the shuffle files of the DAG the GC just released
+      System.gc()
+      Thread.sleep(2000)
+      Some(frag)
     }
-    val frag = try {
-      val n = f
-      f""""$name":{"sec":${(System.nanoTime() - s) / 1e9}%.2f,"rows":$n,$tele}"""
-    } catch { case e: Throwable =>
-      f""""$name":{"sec":${(System.nanoTime() - s) / 1e9}%.2f,"err":"${e.getClass.getSimpleName}",$tele}"""
-    }
-    println(s"[probe-entry] $frag")
-    System.gc()
-    Thread.sleep(2000)
-    frag
-  }
+
+  private val probeOnly: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_PROBE_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** A set's closing line; the `[probe]` prefix is greppable past sbt
+    * log noise. */
+  private def report(k: Int, frags: Seq[Option[String]]): Unit =
+    println((frags.flatten :+ s""""replication":$k""")
+      .mkString("[probe] {", ",", "}"))
 
   /** Round-7: the dedup/ANN family's third probe decade (the verdict's
     * missing evidence tier) plus the q177 end-to-end curation chain.
@@ -629,36 +651,36 @@ object ScaleProbe {
     // probe's DAG eagerly once timed (outside the timed window), and
     // prints each fragment as it lands: a decade whose LAST entry
     // dies on disk still reports the entries that finished.
-    def t(name: String)(f: => Long): String = timeEntry(name)(f)
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val docsK = replicateTextSalted(tbl("documents"), k).persist(lvl)
-    val embK = replicateVecSalted(tbl("embeddings"), k).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
+    val embK = replicateVecSalted(Tables.load(spark, dir, "embeddings"), k)
+      .persist(lvl)
     Seq(docsK, embK).foreach(_.count())
 
     val results = Seq(
-      t("minhash_lsh") {
+      timeEntry("minhash_lsh") {
         dedup.Dedup.nearDupPairs(docsK, "doc_id", "text",
           threshold = 0.9).count()
       },
-      t("cross_dup") {
+      timeEntry("cross_dup") {
         dedup.Dedup.crossNearDupPairs(
           docsK.filter(col("doc_id") % 2 === 0), "doc_id", "text",
           docsK.filter(col("doc_id") % 2 === 1), "doc_id", "text",
           threshold = 0.9).count()
       },
-      t("semantic_dup") {
+      timeEntry("semantic_dup") {
         // cells scale with the corpus; past 128 seeds CoarseAuto takes
         // the two-level path by DEFAULT — this is the no-knob evidence
         dedup.Dedup.semanticDupPairs(embK, "vec_id", "embedding",
           k = 8 * k, threshold = 0.999).count()
       },
-      t("knn_join") {
+      timeEntry("knn_join") {
         sim.Similarity.knnJoin(
           embK.filter(col("vec_id") % 50 === 0), "vec_id",
           embK, "vec_id", "embedding", nClusters = 8 * k, k = 3).count()
       },
-      t("curation_pipeline") {
+      timeEntry("curation_pipeline") {
         // the q177 chain at k× volume: budget scales with the corpus
         val d1 = dedup.Dedup.dropExactDups(docsK, "doc_id", "text")
         val d2 = dedup.Dedup.dropNearDups(d1, "doc_id",
@@ -691,13 +713,13 @@ object ScaleProbe {
       // and an entry that thrashes retry loops for an hour before
       // ENOSPC measures the disk, not the operator.
       if (k >= 1000)
-        """"containment":{"skipped":"single-box disk: all-pairs-dense candidates ~300GB scratch at this decade"}"""
-      else t("containment") {
+        Some(""""containment":{"skipped":"single-box disk: all-pairs-dense candidates ~300GB scratch at this decade"}""")
+      else timeEntry("containment") {
         dedup.Dedup.containmentPairs(docsK, "doc_id", "text",
           threshold = 0.8).count()
       })
 
-    println(results.mkString("[probe] {", ",", s""","replication":$k}"""))
+    report(k, results)
   }
 
   /** The events operator family (funnel, transitions, sessionization,
@@ -711,10 +733,6 @@ object ScaleProbe {
     * output the count cannot prune (unlike the as-of probe's window).
     */
   private def eventsProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): (String, Double, Long) = {
-      val s = System.nanoTime(); val n = f
-      (name, (System.nanoTime() - s) / 1e9, n)
-    }
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // props dropped before persist: no probe reads it, and the
     // free-text payload would dominate the cached bytes at 1000×
@@ -725,24 +743,24 @@ object ScaleProbe {
     evK.count()
 
     val results = Seq(
-      t("funnel") {
+      timeEntry("funnel") {
         operators.Funnel.counts(evK, "user_id", "event_type", "ts",
           Seq("view", "click", "purchase")).count()
       },
-      t("transitions") {
+      timeEntry("transitions") {
         operators.Paths.transitionMatrix(evK, "user_id", "event_type",
           "ts", "event_id").count()
       },
-      t("sessionize_window") {
+      timeEntry("sessionize_window") {
         streaming.EventStream.sessionizeBatch(evK, 1800L).count()
       },
-      t("sessionize_native") {
+      timeEntry("sessionize_native") {
         streaming.EventStream.sessionizeNative(evK, 1800L).count()
       },
-      t("heavy_hitters") {
+      timeEntry("heavy_hitters") {
         operators.HeavyHitters(evK, col("user_id"), 200).count()
       },
-      t("hll_dau7") {
+      timeEntry("hll_dau7") {
         val perDay = evK.filter(col("user_id").isNotNull)
           .groupBy(to_date(col("ts")).as("day"))
           .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
@@ -754,7 +772,7 @@ object ScaleProbe {
           .agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("est"))
           .count()
       },
-      t("twap") {
+      timeEntry("twap") {
         // FORCED unchunked (chunkSeconds = 0): ~5 event types = 5
         // sort tasks — the measured wall, kept as the comparison floor
         features.Features.timeWeightedAvg(
@@ -763,14 +781,14 @@ object ScaleProbe {
           "event_type", "sec", "event_id", "value",
           chunkSeconds = 0L).count()
       },
-      t("twap_chunked") {
+      timeEntry("twap_chunked") {
         features.Features.timeWeightedAvg(
           evK.select(col("event_type"), unix_timestamp(col("ts")).as("sec"),
             col("event_id"), col("value")),
           "event_type", "sec", "event_id", "value",
           chunkSeconds = 86400L).count()
       },
-      t("twap_auto") {
+      timeEntry("twap_auto") {
         // the ChunkAuto DEFAULT: probe + data-chosen path — at this
         // decade the probe must pick a chunked plan, not the wall
         features.Features.timeWeightedAvg(
@@ -778,7 +796,7 @@ object ScaleProbe {
             col("event_id"), col("value")),
           "event_type", "sec", "event_id", "value").count()
       },
-      t("cusum") {
+      timeEntry("cusum") {
         // noop, not count(): count prunes the unused cusum WINDOW out
         // of the unchunked plan (leaving a bare scan) but cannot
         // eliminate the chunked path's stitch joins — same fairness
@@ -791,7 +809,7 @@ object ScaleProbe {
           .write.format("noop").mode("overwrite").save()
         0L
       },
-      t("cusum_chunked") {
+      timeEntry("cusum_chunked") {
         features.Features.cusumDeviation(
           evK.select(col("event_type"), unix_timestamp(col("ts")).as("sec"),
             col("event_id"), col("value")),
@@ -800,7 +818,7 @@ object ScaleProbe {
           .write.format("noop").mode("overwrite").save()
         0L
       },
-      t("cusum_auto") {
+      timeEntry("cusum_auto") {
         features.Features.cusumDeviation(
           evK.select(col("event_type"), unix_timestamp(col("ts")).as("sec"),
             col("event_id"), col("value")),
@@ -809,10 +827,7 @@ object ScaleProbe {
         0L
       })
 
-    val json = results.map { case (n, sec, rows) =>
-      f""""$n":{"sec":$sec%.2f,"rows":$rows}"""
-    }.mkString("{", ",", s""","replication":$k}""")
-    println(s"[probe] $json")
+    report(k, results)
   }
 
   /** As-of join, window formulation vs native merge node, at
@@ -824,10 +839,6 @@ object ScaleProbe {
     * materializing the unioned sort, so its working set per task is
     * O(right-rows-per-key), not O(union). */
   private def asofProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): (String, Double, Long) = {
-      val s = System.nanoTime(); val n = f
-      (name, (System.nanoTime() - s) / 1e9, n)
-    }
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // drop props before persisting: the free-text payload is dead
     // weight for the join and dominates the cached bytes at 1000×
@@ -851,29 +862,26 @@ object ScaleProbe {
       df.write.format("noop").mode("overwrite").save(); 0L
     }
     val results = Seq(
-      t("asof_window") {
+      timeEntry("asof_window") {
         full(operators.AsOfJoin.asOf(clicks, errors, "user_id", "ts",
           Seq("err_id", "err_value"), "err_id"))
       },
-      t("asof_native") {
+      timeEntry("asof_native") {
         full(operators.AsOfJoin.asOfNative(clicks, errors, "user_id", "ts",
           Seq("err_id", "err_value"), "err_id"))
       },
       // the round-9 direction flip, same fixture: the forward scan
       // must track its backward twin decade-for-decade on both faces
-      t("asof_window_fwd") {
+      timeEntry("asof_window_fwd") {
         full(operators.AsOfJoin.asOf(clicks, errors, "user_id", "ts",
           Seq("err_id", "err_value"), "err_id", forward = true))
       },
-      t("asof_native_fwd") {
+      timeEntry("asof_native_fwd") {
         full(operators.AsOfJoin.asOfNative(clicks, errors, "user_id", "ts",
           Seq("err_id", "err_value"), "err_id", forward = true))
       })
 
-    val json = results.map { case (n, sec, rows) =>
-      f""""$n":{"sec":$sec%.2f,"rows":$rows}"""
-    }.mkString("{", ",", s""","replication":$k}""")
-    println(s"[probe] $json")
+    report(k, results)
   }
 
   /** Z-order layout at arbitrary replication: volume grows with k
@@ -882,30 +890,23 @@ object ScaleProbe {
     * entries are one pass + one exchange — the decade ratio per row
     * must stay ~flat. */
   private def zorderProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): (String, Double, Long) = {
-      val s = System.nanoTime(); val n = f
-      (name, (System.nanoTime() - s) / 1e9, n)
-    }
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val li = replicate(
-      spark.read.parquet(s"$dir/lineitem.parquet")
+      Tables.load(spark, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey"),
       Seq("l_orderkey"), k).persist(lvl)
     li.count()
     val results = Seq(
-      t("zorder_stats") {
+      timeEntry("zorder_stats") {
         operators.ZOrder.zBucketStats(li, "l_partkey", "l_suppkey", 64)
           .write.format("noop").mode("overwrite").save(); 0L
       },
-      t("zorder_cluster") {
+      timeEntry("zorder_cluster") {
         operators.ZOrder.cluster(li, "l_partkey", "l_suppkey", 64)
           .write.format("noop").mode("overwrite").save(); 0L
       })
     li.unpersist()
-    val json = results.map { case (n, sec, rows) =>
-      f""""$n":{"sec":$sec%.2f,"rows":$rows}"""
-    }.mkString("{", ",", s""","replication":$k}""")
-    println(s"[probe] $json")
+    report(k, results)
   }
 
   /** Round-5 operators at arbitrary replication: ExactRank percentiles
@@ -913,15 +914,11 @@ object ScaleProbe {
     * replica decade), budget mixture sampling, and inverted-index
     * containment (docs salted as in [[flagship]]). */
   private def r5Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): (String, Double, Long) = {
-      val s = System.nanoTime(); val n = f
-      (name, (System.nanoTime() - s) / 1e9, n)
-    }
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val liK = replicate(tbl("lineitem"), Seq("l_orderkey"), k).persist(lvl)
+    val liK = replicate(Tables.load(spark, dir, "lineitem"),
+      Seq("l_orderkey"), k).persist(lvl)
     val docsK = (0 until k).map { i =>
-      tbl("documents")
+      Tables.load(spark, dir, "documents")
         .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
         .withColumn("text",
           regexp_replace(col("text"), "((\\S+\\s+){2})", s"$$1zzr$i "))
@@ -929,21 +926,21 @@ object ScaleProbe {
     Seq(liK, docsK).foreach(_.count())
 
     val results = Seq(
-      t("exact_rank_pctl") {
+      timeEntry("exact_rank_pctl") {
         features.Features.groupPercentilesRank(
           liK.select(col("l_returnflag"),
             col("l_extendedprice").cast("double").as("v")),
           "l_returnflag", col("v"),
           Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75")).count()
       },
-      t("budget_mix") {
+      timeEntry("budget_mix") {
         features.Features.budgetMixSample(
           docsK.select("doc_id", "lang", "n_chars"),
           "lang", "doc_id", "n_chars",
           Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1),
           budget = 40000L * k).count()
       },
-      t("containment") {
+      timeEntry("containment") {
         // default df cap (1000): this synthetic corpus builds its
         // containment pairs from shared sentence templates, so the
         // hot-shingle tail IS the signal here — the cap bounds Σ df²
@@ -953,60 +950,56 @@ object ScaleProbe {
           threshold = 0.8).count()
       })
 
-    val json = results.map { case (n, sec, rows) =>
-      f""""$n":{"sec":$sec%.2f,"rows":$rows}"""
-    }.mkString("{", ",", s""","replication":$k}""")
-    println(s"[probe] $json")
+    report(k, results)
   }
 
   private def r3Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): (String, Double, Long) = {
-      val s = System.nanoTime(); val n = f
-      (name, (System.nanoTime() - s) / 1e9, n)
-    }
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
 
-    val partK = replicate(tbl("part"), Seq("p_partkey"), k).cache()
-    val liK = replicate(tbl("lineitem"), Seq("l_orderkey"), k).cache()
-    val docsK = replicate(tbl("documents"), Seq("doc_id"), k).cache()
+    val partK = replicate(Tables.load(spark, dir, "part"),
+      Seq("p_partkey"), k).cache()
+    val liK = replicate(Tables.load(spark, dir, "lineitem"),
+      Seq("l_orderkey"), k).cache()
+    val docsK = replicate(Tables.load(spark, dir, "documents"),
+      Seq("doc_id"), k).cache()
     Seq(partK, liK, docsK).foreach(_.count()) // materialize outside timings
 
     val results = Seq(
-      t("skyline") {
+      timeEntry("skyline") {
         operators.Skyline.skyline(
           partK.select("p_partkey", "p_size", "p_retailprice"),
           Seq("p_size", "p_retailprice")).count()
       },
-      t("bloom_semi") {
-        val hot = tbl("orders").filter(col("o_totalprice") > 400000d)
+      timeEntry("bloom_semi") {
+        val hot = Tables.load(spark, dir, "orders")
+          .filter(col("o_totalprice") > 400000d)
         operators.BloomJoin.semiJoin(liK, "l_orderkey", hot, "o_orderkey",
           expectedItems = 40000L).count()
       },
-      t("hierarchy") {
+      timeEntry("hierarchy") {
         operators.Hierarchy.rootAndDepth(
           partK.select(col("p_partkey").as("id"),
             when(col("p_partkey") % 100000000L >= 10,
               expr("p_partkey DIV 10")).as("parent")),
           "id", "parent").count()
       },
-      t("inverted_index_search") {
+      timeEntry("inverted_index_search") {
         text.TextOps.searchAnd(
           text.TextOps.invertedIndex(docsK, "doc_id", "text"),
           Seq("batch", "scan", "join")).count()
       },
-      t("cross_near_dup") {
+      timeEntry("cross_near_dup") {
         dedup.Dedup.crossNearDupPairs(
           docsK.filter(col("doc_id") % 2 === 0), "doc_id", "text",
           docsK.filter(col("doc_id") % 2 === 1), "doc_id", "text",
           threshold = 0.9).count()
       },
-      t("gaps") {
+      timeEntry("gaps") {
         operators.Gaps.missingRanges(
           liK.select(col("l_orderkey")).filter(col("l_orderkey") % 10 =!= 3),
           "l_orderkey", bucketWidth = 100000L).count()
       },
       // round-4 ops
-      t("cumsum_two_level") {
+      timeEntry("cumsum_two_level") {
         // bucketWidth 4 over ~6M distinct keys → ~1.5M buckets, far
         // past the 100k cap: exercises the distributed offset fallback
         val seq = liK.select(
@@ -1015,7 +1008,7 @@ object ScaleProbe {
         operators.PrefixSum.cumsum(seq, "ord", "v", "cs",
           bucketWidth = 4, maxDriverBuckets = 100000L).count()
       },
-      t("auc_rank_window") {
+      timeEntry("auc_rank_window") {
         // ~100k distinct grid-quantized scores through the bounded
         // global rank window — the q133 shape at 10×
         val scored = liK.select(
@@ -1023,30 +1016,26 @@ object ScaleProbe {
           round(col("l_extendedprice").cast("double") / 1000.0, 2).as("score"))
         ml.Metrics.aucBinary(scored, "label", "score").count()
       },
-      t("basket_rules") {
+      timeEntry("basket_rules") {
         // pair blowup bounded by basket size (≤7 lines/order): the
         // a<b self-join at 6M item rows
         operators.Basket.pairRules(
           liK.select(col("l_orderkey"), (col("l_partkey") % 100).as("i")),
           "l_orderkey", "i", minPairCount = 50L).count()
       },
-      t("mad_outliers") {
+      timeEntry("mad_outliers") {
         graft.features.Features.madOutliers(
           liK.select(col("l_returnflag"), col("l_extendedprice")
             .cast("double").as("p")),
           "l_returnflag", "p", k = 4.0).count()
       },
-      t("gini_by_group") {
+      timeEntry("gini_by_group") {
         ml.Metrics.giniByGroup(
           liK.select(col("l_returnflag"), col("l_extendedprice")),
           "l_returnflag", "l_extendedprice").count()
       })
 
-    val json = results.map { case (n, sec, rows) =>
-      f""""$n":{"sec":$sec%.2f,"rows":$rows}"""
-    }.mkString("{", ",", s""","replication":$k}""")
-    // [probe] prefix: greppable past sbt log noise
-    println(s"[probe] $json")
+    report(k, results)
   }
 
   /** The flagship five from the round-4 verdict (q36 / q64 / q87 /
@@ -1068,16 +1057,12 @@ object ScaleProbe {
     * Usage: `sbt "runMain graft.ScaleProbe /root/testdata/sf0.1 100 flagship"`
     * (set SPARK_DRIVER_MEM=48g for 100×). */
   private def flagship(spark: SparkSession, dir: String, k: Int): Unit = {
-    def t(name: String)(f: => Long): (String, Double, Long) = {
-      val s = System.nanoTime(); val n = f
-      (name, (System.nanoTime() - s) / 1e9, n)
-    }
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-    val ordersK = replicate(tbl("orders"), Seq("o_orderkey", "o_custkey"), k)
-      .persist(lvl)
-    val liK = replicate(tbl("lineitem"), Seq("l_orderkey"), k).persist(lvl)
+    val ordersK = replicate(Tables.load(spark, dir, "orders"),
+      Seq("o_orderkey", "o_custkey"), k).persist(lvl)
+    val liK = replicate(Tables.load(spark, dir, "lineitem"),
+      Seq("l_orderkey"), k).persist(lvl)
     // salt density matters: with the 3-token shingles used by MinHash,
     // a salt token every 2 words puts one in EVERY shingle, so replica
     // signatures are fully divergent — sparser salt leaves bands whose
@@ -1085,7 +1070,7 @@ object ScaleProbe {
     // and the candidate set grows ~C(k,2)/doc (corpus artifact, was
     // the q64 "super-linearity" at 100×)
     val docsK = (0 until k).map { i =>
-      tbl("documents")
+      Tables.load(spark, dir, "documents")
         .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
         .withColumn("text",
           regexp_replace(col("text"), "((\\S+\\s+){2})", s"$$1zzr$i "))
@@ -1093,7 +1078,7 @@ object ScaleProbe {
     Seq(ordersK, liK, docsK).foreach(_.count()) // materialize outside timings
 
     val results = Seq(
-      t("q36_etl") {
+      timeEntry("q36_etl") {
         // the benched pipeline minus the driver-sort edge: warehouse
         // build + broadcast FK resolution + router + star join + cube agg
         val wh = graft.etl.EsiEtl.buildWarehouse(
@@ -1108,22 +1093,22 @@ object ScaleProbe {
           .agg(count(lit(1)).as("cnt"))
           .count()
       },
-      t("q64_dup_clusters") {
+      timeEntry("q64_dup_clusters") {
         val pairs = dedup.Dedup.nearDupPairs(docsK, "doc_id", "text",
           threshold = 0.9)
         dedup.Dedup.dupClusters(pairs).count()
       },
-      t("q87_topk_bounded") {
+      timeEntry("q87_topk_bounded") {
         features.Features.topKPerGroupBounded(liK, "l_orderkey",
           struct(negate(col("l_extendedprice")).as("np"),
             col("l_linenumber").as("l_linenumber")), 2).count()
       },
-      t("q11_topk_hashagg") {
+      timeEntry("q11_topk_hashagg") {
         features.Features.topKPerGroupAgg(liK, "l_orderkey",
           struct(negate(col("l_extendedprice")).as("np"),
             col("l_linenumber").as("l_linenumber")), 2).count()
       },
-      t("q91_cdc_merge") {
+      timeEntry("q91_cdc_merge") {
         val base = ordersK.select(
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), year(col("o_orderdate")).as("__y"))
@@ -1136,10 +1121,7 @@ object ScaleProbe {
           keyCols = Seq("o_orderkey"), opCol = "op", seqCol = "seq").count()
       })
 
-    val json = results.map { case (n, sec, rows) =>
-      f""""$n":{"sec":$sec%.2f,"rows":$rows}"""
-    }.mkString("{", ",", s""","replication":$k}""")
-    println(s"[probe] $json")
+    report(k, results)
   }
 
   /** Round-8 streaming probes: PER-BATCH wall vs batch index for the
@@ -1185,13 +1167,12 @@ object ScaleProbe {
     * the decoded rows collapse to O(candidates). */
   private def sigFetchProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val plainDir = tmp("sigprobe_plain")
     val storeDir = tmp("sigprobe_store")
     try {
-      val docsK = replicateTextSalted(tbl("documents")
+      val docsK = replicateTextSalted(Tables.load(spark, dir, "documents")
         .select("doc_id", "text"), k)
       dedup.Dedup.nearDupSignatures(docsK, "doc_id", "text")
         .write.mode("overwrite").parquet(plainDir)
@@ -1206,7 +1187,8 @@ object ScaleProbe {
         (plainBytes + (128L << 20) - 1) / (128L << 20)).toInt
       dedup.Dedup.writeSignatures(spark.read.parquet(plainDir), storeDir,
         nFiles)
-      val batch = tbl("documents").select("doc_id", "text").limit(2000)
+      val batch = Tables.load(spark, dir, "documents")
+        .select("doc_id", "text").limit(2000)
         .withColumn("doc_id", col("doc_id") + lit(7700000000L))
         .withColumn("text", regexp_replace(col("text"),
           "((\\S+\\s+){2})", "$1zzr3 ")).persist(lvl)
@@ -1634,13 +1616,12 @@ object ScaleProbe {
   }
 
   private def r13Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val storeDir = tmp("r13_store")
     val sinkBase = tmp("r13_sink")
     try {
-      val docs = tbl("documents").select("doc_id", "text")
+      val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
       val sigs = dedup.Dedup.nearDupSignatures(
         replicateTextSalted(docs, k), "doc_id", "text")
       val tmpPlain = tmp("r13_plain")
@@ -1748,11 +1729,10 @@ object ScaleProbe {
     * log(rows/P) is exactly what this exposes. */
   private def r13LookupProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val storeDir = tmp("r13l_store")
     try {
-      val docs = tbl("documents").select("doc_id", "text")
+      val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
       dedup.Dedup.nearDupSignatures(replicateTextSalted(docs, k),
         "doc_id", "text").write.mode("overwrite").parquet(storeDir)
       val stored = spark.read.parquet(storeDir)
@@ -1812,7 +1792,6 @@ object ScaleProbe {
   private def streamCompactProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val fsConf = spark.sessionState.newHadoopConf()
     val times = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
     val listener = new StreamingQueryListener {
@@ -1830,7 +1809,8 @@ object ScaleProbe {
     spark.streams.addListener(listener)
     def tmp(prefix: String): String =
       java.nio.file.Files.createTempDirectory(prefix).toString
-    val docs = tbl("documents").select("doc_id", "text", "lang", "n_chars")
+    val docs = Tables.load(spark, dir, "documents")
+      .select("doc_id", "text", "lang", "n_chars")
     val src = tmp("probe_dsc_src")
     val sink = tmp("probe_dsc_sink") + "/accepted"
     val cp = tmp("probe_dsc_cp")
@@ -1855,7 +1835,8 @@ object ScaleProbe {
     val liveDirs = fs.listStatus(sinkPath).filter(_.isDirectory)
       .map(_.getPath.getName)
       .count(n => n.startsWith("batch_id=") || n.startsWith("gen="))
-    Thread.sleep(2000)
+    // drain the async listener bus so every progress event has landed
+    org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
     spark.streams.removeListener(listener)
     val ts = times.synchronized { times.toSeq }.sortBy(_._1).map(_._2)
     val third = math.max(ts.length / 3, 1)
@@ -1932,7 +1913,8 @@ object ScaleProbe {
     val liveDirs = fs.listStatus(sinkPath).filter(_.isDirectory)
       .map(_.getPath.getName)
       .count(n => n.startsWith("batch_id=") || n.startsWith("gen="))
-    Thread.sleep(2000)
+    // drain the async listener bus so every progress event has landed
+    org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
     spark.streams.removeListener(listener)
     val ts = times.synchronized { times.toSeq }.sortBy(_._1).map(_._2)
     val third = math.max(ts.length / 3, 1)
@@ -1945,7 +1927,6 @@ object ScaleProbe {
 
   private def streamProbes(spark: SparkSession, dir: String, k: Int): Unit = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
-    def tbl(n: String) = spark.read.parquet(s"$dir/$n.parquet")
     val fsConf = spark.sessionState.newHadoopConf()
     val times =
       scala.collection.mutable.ArrayBuffer[(String, Long, Double)]()
@@ -1977,7 +1958,8 @@ object ScaleProbe {
     }
 
     // --- near-dup ingest: the O(accepted) catcher ---------------------
-    val docs = tbl("documents").select("doc_id", "text", "lang", "n_chars")
+    val docs = Tables.load(spark, dir, "documents")
+      .select("doc_id", "text", "lang", "n_chars")
     val dsSrc = tmp("probe_docstream_src")
     val dsSink = tmp("probe_docstream_sink") + "/accepted"
     val dsCp = tmp("probe_docstream_cp")
@@ -2007,7 +1989,7 @@ object ScaleProbe {
       benchGramN = 13).awaitTermination()
 
     // --- stateless SCD2 enrichment (q179 family) ----------------------
-    val ordSrc = tbl("orders").filter(col("o_custkey") < 5000)
+    val ordSrc = Tables.load(spark, dir, "orders").filter(col("o_custkey") < 5000)
       .select("o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate")
     val scdDim = etl.Scd.scd2FromChangeLog(ordSrc,
       keyCols = Seq("o_custkey"), attrCols = Seq("o_orderpriority"),
@@ -2043,7 +2025,8 @@ object ScaleProbe {
       queryName = "probe_hh",
       maxFilesPerTrigger = Some(1)).awaitTermination()
 
-    Thread.sleep(2000) // listener events are delivered asynchronously
+    // drain the async listener bus so every progress event has landed
+    org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
     spark.streams.removeListener(listener)
     val byName = times.synchronized { times.toSeq }
       .groupBy(_._1).map { case (n, ts) =>

@@ -47,7 +47,7 @@ object Tables {
     * NTZ matches the naive-timestamp view DuckDB and pandas see. */
   def events(spark: SparkSession, dir: String): DataFrame =
     withNanosAsLong(spark) {
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = load(spark, dir, "events")
       raw.schema("ts").dataType match {
         case LongType => raw.withColumn("ts",
           expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"))
@@ -62,16 +62,11 @@ object Tables {
     * would re-anchor the naive timestamp in the session timezone). */
   def eventsEpochMicros(spark: SparkSession, dir: String): DataFrame =
     withNanosAsLong(spark) {
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = load(spark, dir, "events")
       raw.schema("ts").dataType match {
         case LongType => raw.withColumn("ts", expr("ts DIV 1000"))
         case _ => raw.withColumn("ts",
           expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', CAST(ts AS TIMESTAMP_NTZ))"))
       }
     }
-
-  /** Register every table as a temp view so `spark.sql` mirrors the
-    * DuckDB oracle's view of the world. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

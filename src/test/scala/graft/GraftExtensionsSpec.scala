@@ -1,28 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  /** A sibling session over the shared SparkContext, built with the
-    * extensions installed. getOrCreate would return the existing
-    * session (and skip extension application), so the default/active
-    * handles are cleared for the builder call and restored after. */
-  private lazy val spark: SparkSession = {
-    val base = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   test("normalize_string is callable from SQL") {
     val n = spark.sql("SELECT normalize_string('  Ángel   CRUZ  ') AS n")
@@ -79,7 +61,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("CollapseNormalize folds nested normalize_string applications") {
     // non-literal input so constant folding can't remove the expression
-    val df = spark.read.parquet(s"${TestSpark.sf}/nation.parquet")
+    val df = TestSpark.table("nation")
       .selectExpr("normalize_string(normalize_string(normalize_string(n_name))) AS n")
     val optimized = df.queryExecution.optimizedPlan
     var count = 0

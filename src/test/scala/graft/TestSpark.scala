@@ -4,25 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared test session: one JVM (Test/fork), one SparkSession. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror the Verify/Bench sessions: the SkylinePlan strategy must
-      // be present for q100's native path, and lint must see the plans
-      // the driver's sessions will actually run
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // Verify's session at its default core count, pinned to 4 whatever
+  // SPARK_GRAFT_CPUS says so partition-count assertions hold on any
+  // host; lint and plan specs see the plans Verify and Bench run
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf: String = "/root/testdata/sf0.001"
 
-  def table(name: String): DataFrame =
-    spark.read.parquet(s"$sf/$name.parquet")
+  def table(name: String): DataFrame = Tables.load(spark, sf, name)
 
   /** Order-free comparison form: columns sorted by name, rows sorted
     * by their joined string — shared by the olap specs so the two

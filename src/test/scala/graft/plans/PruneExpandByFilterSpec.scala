@@ -1,31 +1,13 @@
 package graft.plans
 
 import graft.TestSpark
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class PruneExpandByFilterSpec extends AnyFunSuite {
 
-  /** Sibling session with the extensions (same pattern as
-    * RewriteWindowTopKSpec — getOrCreate would skip extension wiring). */
-  private lazy val spark: SparkSession = {
-    val base = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
-
-  private def orders = spark.read
-    .parquet(s"${TestSpark.sf}/orders.parquet")
+  private def orders = TestSpark.table("orders")
     .select(year(col("o_orderdate")).as("y"),
       month(col("o_orderdate")).as("m"),
       col("o_orderpriority").as("prio"),

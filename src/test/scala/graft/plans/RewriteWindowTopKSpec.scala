@@ -1,32 +1,13 @@
 package graft.plans
 
 import graft.TestSpark
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class RewriteWindowTopKSpec extends AnyFunSuite {
 
-  /** Sibling session with the extensions (same pattern as
-    * GraftExtensionsSpec — getOrCreate would skip extension wiring). */
-  private lazy val spark: SparkSession = {
-    val base = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
-
-  private def lineitem = spark.read
-    .parquet(s"${TestSpark.sf}/lineitem.parquet")
+  private def lineitem = TestSpark.table("lineitem")
     .select("l_orderkey", "l_linenumber", "l_extendedprice")
 
   private def topK(df: org.apache.spark.sql.DataFrame) = df
@@ -41,19 +22,22 @@ class RewriteWindowTopKSpec extends AnyFunSuite {
     assert(!physical.contains("Window"), s"window survived:\n$physical")
     assert(physical.contains("bounded_topk"), s"no heap agg:\n$physical")
 
-    // ground truth from the UNREWRITTEN session
-    val base = TestSpark.spark.read
-      .parquet(s"${TestSpark.sf}/lineitem.parquet")
-      .select("l_orderkey", "l_linenumber", "l_extendedprice")
-    val want = topK(base)
-      .select("l_orderkey", "l_linenumber", "rn")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+    // ground truth ranked in Scala from the collected rows: every
+    // session carries the rule, so a Spark-side baseline would be
+    // rewritten as well
+    val want = lineitem.collect().toSeq.groupBy(_.getLong(0)).values
+      .flatMap(_.sortBy(r => (-r.getDouble(2), r.getInt(1))).take(2)
+        .zipWithIndex.map { case (r, i) => (r.getLong(0), r.getInt(1), i + 1) })
+      .toSet
     val got = q.select("l_orderkey", "l_linenumber", "rn")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     assert(got === want)
     assert(got.nonEmpty)
     // schema (names, order, types) must survive the rewrite
-    assert(q.schema === topK(base).schema)
+    def shape(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(shape(q.queryExecution.optimizedPlan) ===
+      shape(q.queryExecution.analyzed))
   }
 
   test("rewritten rank column remains usable downstream") {

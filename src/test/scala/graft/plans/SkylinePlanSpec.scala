@@ -3,26 +3,11 @@ package graft.plans
 import scala.util.Random
 
 import graft.TestSpark
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class SkylinePlanSpec extends AnyFunSuite {
 
-  /** Sibling session with the extensions (GraftExtensionsSpec pattern). */
-  private lazy val spark: SparkSession = {
-    val base = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   test("native skyline node plans as SkylineExec and matches the mapPartitions path") {
     import spark.implicits._
