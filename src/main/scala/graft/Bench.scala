@@ -50,15 +50,8 @@ object Bench {
 
     // SPARK_GRAFT_BENCH_ONLY=q36_esi_etl,... isolates queries under the
     // same protocol (warmup + min-of-3) — for profiling, not the driver
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(f) =>
-        val only = f.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = only -- Queries.benchNames.toSet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names not in benchNames: ${unknown.mkString(", ")}")
-        Queries.benchNames.filter(only)
-      case None => Queries.benchNames
-    }
+    val names = Queries.onlyNames("SPARK_GRAFT_BENCH_ONLY", Queries.benchNames)
+      .fold(Queries.benchNames)(Queries.benchNames.filter)
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       names.foreach(run(_, warmDir)) // untimed
     // one untimed pass on the TARGET dir too: codegen/JIT warm on the

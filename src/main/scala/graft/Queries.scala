@@ -5298,16 +5298,17 @@ object Queries {
   def q177CurationPipeline(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     // scratchAutoBytes = 0: force the parquet-scratch + pinned-stages
-    // posture (bit-identical output — CurationSpec asserts all three
+    // posture (bit-identical output — CurationSpec asserts both
     // storage paths equal). r16 profiling: the unpersisted default
     // recomputes the minhash/shingle signature relation once per
     // consumer branch (banding + both verify sides) and ran 9.1 s
-    // here; persistStages alone is WORSE (the block cache hands every
-    // branch whole rows, shingle arrays included — 27 s); the scratch
-    // column-prunes each branch's read and won the paired window at
-    // 0.74x (6.8 s, control 0.90x). Same plan shape the module's own
-    // 1000x probe chose — the fixture-scale gate was simply set too
-    // high for this chain's 3-way signature fan-out.
+    // here; pinned stages alone (a since-retired mode) were WORSE (the
+    // block cache hands every branch whole rows, shingle arrays
+    // included — 27 s); the scratch column-prunes each branch's read
+    // and won the paired window at 0.74x (6.8 s, control 0.90x). Same
+    // plan shape the module's own 1000x probe chose — the
+    // fixture-scale gate was simply set too high for this chain's
+    // 3-way signature fan-out.
     val accepted = graft.etl.Curation.curate(docs,
       idCol = "doc_id", textCol = "text",
       domainCol = "lang", costCol = "n_chars",
@@ -9344,4 +9345,19 @@ object Queries {
     // stored partials) — benched so sliced serving stays dim-sized,
     // never a fact fallback
     "q239_mdx_routed_slicer")
+
+  /** The names the comma-separated environment variable `envVar`
+    * selects out of `known` (None when it is unset) — the one
+    * name filter behind Bench's `SPARK_GRAFT_BENCH_ONLY` and Verify's
+    * `SPARK_GRAFT_ONLY`. A name outside `known` fails, so a typo never
+    * silently selects nothing. */
+  private[graft] def onlyNames(envVar: String, known: Iterable[String],
+      env: Map[String, String] = sys.env): Option[Set[String]] =
+    env.get(envVar).map { spec =>
+      val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- known
+      require(unknown.isEmpty,
+        s"$envVar names unknown: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
 }

@@ -20,16 +20,20 @@ import org.apache.spark.sql.functions._
   *  - `r7b`: span dedup, PQ / IVF-ADC, bigram perplexity
   *  - `r8`: sampled PQ fit, bloom-gated decontamination
   *  - `r9`: the stored-signature dedup faces
-  *  - `r13`: band-index pruning sweep, restart rebuild, replay stability
-  *  - `r13lookup`: band-index lookup alone at the key cap
+  *  - `r13`: band-index partition sweep (pruned lookup), restart
+  *    rebuild, replay stability
+  *  - `r13lookup`: band-index lookup alone at the key cap, across
+  *    partition counts
   *  - `r14`: shared-scan agg registration, drill-across
   *  - `r15`: closure maintenance, budget advisor, refresh isolation
-  *  - `r17`: salted cluster join, PQ fit variants
+  *  - `r17`: salted cluster join at 4 fixed clusters; PQ fit
+  *    (production, independent per-slice, shared-seed sequential)
   *  - `flagship`: q36 / q64 / q87 / q11 / q91
   *  - `events`: the events operator family
   *  - `asof`: as-of join, window vs native node, both directions
   *  - `zorder`: Z-order stats and clustering
-  *  - `curationcmp`: curation chain, lineage vs persisted vs scratch
+  *  - `curationcmp`: curation chain, one storage path per JVM
+  *    (`SPARK_GRAFT_CURATION_MODE`: `lineage`, the default, or `auto`)
   *  - `curationstages`: curation chain, one entry per stage
   *  - `sigfetch`: signature-store fetch vs the lazy semi join
   *  - `aggnav`: agg-table registration, routed drill, refresh
@@ -251,28 +255,22 @@ object ScaleProbe {
     report(k, results)
   }
 
-  /** Round-17 probes (VERDICT r16 item 7): decade evidence that the
-    * round-16 techniques' wins GROW with data size — the sf0.1 bench
-    * is overhead-bound and cannot see them.
+  /** Round-17 probes (VERDICT r16 item 7): decade evidence for the
+    * round-16 techniques — the sf0.1 bench is overhead-bound and
+    * cannot see them.
     *  - salted low-cardinality cluster join (q161's shape: nClusters=4
-    *    FIXED, salt slices = parallelism/clusters): salted vs the
-    *    forced-unsalted plan (`saltSlices = 1`) on the same corpus —
-    *    the unsalted plan's per-cell pair scan runs in 4 tasks no
-    *    matter the decade, so the ratio must widen with k;
-    *  - fused PQ sub-quantizer fit (q182's shape: one seed scan + one
-    *    cell-aggregate scan per Lloyd round for all m subspaces) vs m
-    *    independent per-slice fits (m·(1+iters) corpus passes) — the
+    *    FIXED, salt slices = parallelism/clusters);
+    *  - the production PQ sub-quantizer fit (shared seed draw +
+    *    Par-overlapped per-subspace Lloyd loops) vs m independent
+    *    per-slice fits and the shared-seed SEQUENTIAL loops — the
     *    KMeansRelSpec bit-identity comparator, priced at decades. */
   private def r17Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    // STAGED PARQUET, deliberately NOT block-cached: the fused-fit
-    // claim is "fewer CORPUS PASSES" — with the replicated corpus
+    // STAGED PARQUET, deliberately NOT block-cached: the PQ fit
+    // variants differ in CORPUS PASSES — with the replicated corpus
     // persisted in executor memory a pass costs ~nothing and the probe
-    // would measure only the fused plan's overhead (the ×m explode)
-    // while hiding exactly the scan cost the fusion removes. Reading a
+    // would hide exactly the scan cost the variants trade. Reading a
     // real parquet per pass prices passes the way a 100 TB deployment
-    // pays them. (First r17 shot did persist: fused read 35 s vs
-    // independent 15 s at k=20 — an artifact of free passes; kept here
-    // as the honest record of why the staging exists.)
+    // pays them.
     val staged = java.nio.file.Files
       .createTempDirectory("probe_r17_emb").toString
     replicateVecSalted(Tables.load(spark, dir, "embeddings"), k).write
@@ -293,17 +291,10 @@ object ScaleProbe {
         "hard_negatives_salted" -> (() =>
           sim.Similarity.hardNegatives(embK, "vec_id", "embedding", "label",
             nClusters = 4, k = 5).count()),
-        "hard_negatives_unsalted" -> (() =>
-          sim.Similarity.hardNegatives(embK, "vec_id", "embedding", "label",
-            nClusters = 4, k = 5, saltSlices = 1).count()),
         // the PRODUCTION path (r17): shared full-vector seed draw +
         // Par-overlapped per-subspace Lloyd loops
         "pq_fit" -> (() =>
           sim.Pq.fit(embK, "vec_id", "embedding", m, kCodes, iters)
-            .books.map(_.length.toLong).sum),
-        "pq_fit_fused" -> (() =>
-          sim.Pq.PqModel(subDim, ml.KMeansRel.fitCentroidsSubspaces(
-            embK, "vec_id", "embedding", m, subDim, kCodes, iters))
             .books.map(_.length.toLong).sum),
         "pq_fit_independent" -> (() =>
           (0 until m).map { s =>
@@ -427,102 +418,75 @@ object ScaleProbe {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sigDir))
   }
 
-  /** Head-to-head: the q177 curation chain with raw lineage vs with
-    * stage-boundary persistence ([[graft.etl.Curation.curate]]
-    * `persistStages`). The chain's early stages feed 3+ consumers
-    * each, so the unpersisted plan recomputes them per consumer —
-    * this probe prices that recomputation factor at scale. Identical
+  /** Head-to-head: the q177 curation chain on raw lineage vs on the
+    * auto scratch+pins path ([[graft.etl.Curation.curate]]'s
+    * `scratchAutoBytes` gate). The chain's early stages feed 3+
+    * consumers each, so the lineage plan recomputes them per consumer
+    * — this probe prices that recomputation factor at scale. Identical
     * output by CurationSpec's bit-identity test. */
   private def curationCmpProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
+    // SPARK_GRAFT_CURATION_MODE selects ONE mode so each runs in its
+    // own fresh JVM: the original several-in-one-JVM sequence had
+    // ORDERING BIAS — the first mode paid the whole JVM/JIT/codegen
+    // warmup and the last ran hottest, overstating the later modes'
+    // advantage (r9 re-shots: scratch measured 129.7 s in third
+    // position but 377–627 s cold). One JVM per mode is the honest
+    // comparator.
+    val modes = Seq("lineage", "auto")
+    val mode = sys.env.getOrElse("SPARK_GRAFT_CURATION_MODE", "lineage")
+    require(modes.contains(mode), s"unknown SPARK_GRAFT_CURATION_MODE " +
+      s"'$mode'; valid modes: ${modes.mkString(", ")}")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
       .persist(lvl)
     docsK.count()
     val weights = Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1)
-    // autoBytes: the pure-mode entries (lineage/persisted) disable
-    // the round-10 stats gate so each mode prices ITS OWN storage
-    // strategy; the "auto" entry runs knob-free to verify the gate
-    // picks the scratch path (and matches its time) at probe scale
-    def chain(persist: Boolean, scratch: Option[String] = None,
-        autoBytes: Long = Long.MaxValue): Long =
+    def chain(autoBytes: Long): Long =
       etl.Curation.exportProfile(
         etl.Curation.curate(docsK, "doc_id", "text", "lang", "n_chars",
           threshold = 0.9, minQuality = 0.3,
           benchmark = docsK.filter(col("doc_id") < 10), decontaminateN = 4,
           weights = weights, budget = 40000L * k,
           corpusPredicate = col("doc_id") >= 10,
-          persistStages = persist, scratchDir = scratch,
           scratchAutoBytes = autoBytes),
         "doc_id", "n_chars", 8).count()
-    val scratchDir = java.nio.file.Files
-      .createTempDirectory("curation_scratch").toString
-    try {
-      // SPARK_GRAFT_CURATION_MODE selects ONE mode so each can run in
-      // its own fresh JVM: the original three-in-one-JVM sequence had
-      // ORDERING BIAS — the first mode paid the whole JVM/JIT/codegen
-      // warmup and the third ran hottest, overstating the later
-      // modes' advantage (r9 re-shots: scratch measured 129.7 s in
-      // third position but 377–627 s cold). One JVM per mode is the
-      // honest comparator; legacy all-three behavior when unset.
-      // SPARK_GRAFT_SCRATCH_ONLY=1 is the older scratch-only switch.
-      val mode = sys.env.get("SPARK_GRAFT_CURATION_MODE")
-        .orElse(if (sys.env.get("SPARK_GRAFT_SCRATCH_ONLY")
-          .contains("1")) Some("scratch") else None)
-      def want(m: String) = mode.forall(_ == m)
-      val results =
-        (if (want("lineage"))
-          Seq(timeEntry("curation_lineage") { chain(persist = false) })
-         else Seq.empty) ++
-        (if (want("persisted"))
-          Seq(timeEntry("curation_persisted") { chain(persist = true) })
-         else Seq.empty) ++
-        (if (want("scratch"))
-          // the r9 decade probe priced pairs-from-PARQUET-sigs 4.2×
-          // under pairs-from-cached-sigs on the same corpus (39.6 vs
-          // 168.4 s at 1000×) — this entry prices that delta in-chain
-          Seq(timeEntry("curation_scratch") { chain(persist = true, Some(scratchDir)) })
-         else Seq.empty) ++
-        (if (mode.contains("auto")) {
-          // OPT-IN only (never part of the legacy all-modes-unset
-          // sequence): a fourth same-JVM mode would run hottest and
-          // re-introduce exactly the ordering bias the per-mode
-          // protocol removed.
-          // knob-free: the ScratchAutoBytes stats gate must route the
-          // chain through its own warehouse scratch at probe scale —
-          // the r10 default-mode verification (expect ≈
-          // curation_scratch). A poll thread records whether the
-          // scratch directory actually appeared (it is deleted in the
-          // chain's own finally, so only a live watch can see it).
-          @volatile var sawScratch = false
-          @volatile var chainDone = false
-          val wh = new java.io.File(new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
-          val watcher = new Thread(() => {
-            while (!chainDone) {
-              val ls = Option(wh.list()).getOrElse(Array.empty[String])
-              if (ls.exists(_.startsWith("_graft_curation_scratch_")))
-                sawScratch = true
-              Thread.sleep(250)
-            }
-          })
-          watcher.setDaemon(true)
-          watcher.start()
-          val frag = timeEntry("curation_auto") {
-            chain(persist = false,
-              autoBytes = etl.Curation.ScratchAutoBytes) }
-          chainDone = true
-          Seq(frag, Some(s""""auto_scratch_path_taken":$sawScratch"""))
-        } else Seq.empty)
-      report(k, results)
-    } finally org.apache.commons.io.FileUtils
-      .deleteQuietly(new java.io.File(scratchDir))
+    val results =
+      if (mode == "lineage")
+        // the gate disabled, so the entry prices lineage at any scale
+        Seq(timeEntry("curation_lineage") { chain(Long.MaxValue) })
+      else {
+        // knob-free: the ScratchAutoBytes stats gate must route the
+        // chain through its own warehouse scratch at probe scale — the
+        // r10 default-mode verification. A poll thread records whether
+        // the scratch directory actually appeared (it is deleted in
+        // the chain's own finally, so only a live watch can see it).
+        @volatile var sawScratch = false
+        @volatile var chainDone = false
+        val wh = new java.io.File(new org.apache.hadoop.fs.Path(
+          spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+        val watcher = new Thread(() => {
+          while (!chainDone) {
+            val ls = Option(wh.list()).getOrElse(Array.empty[String])
+            if (ls.exists(_.startsWith("_graft_curation_scratch_")))
+              sawScratch = true
+            Thread.sleep(250)
+          }
+        })
+        watcher.setDaemon(true)
+        watcher.start()
+        val frag = timeEntry("curation_auto") {
+          chain(etl.Curation.ScratchAutoBytes) }
+        chainDone = true
+        Seq(frag, Some(s""""auto_scratch_path_taken":$sawScratch"""))
+      }
+    report(k, results)
   }
 
   /** Stage-level timing of the curation chain: every stage's INPUT is
     * pinned before its own timer starts, so each entry prices one
     * stage's own work, not its lineage — the attribution the
-    * lineage-vs-persisted head-to-head can't give. */
+    * lineage-vs-scratch head-to-head can't give. */
   private def curationStageProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -532,7 +496,7 @@ object ScaleProbe {
     val weights = Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1)
     val d1 = dedup.Dedup.dropExactDups(docsK, "doc_id", "text").persist(lvl)
     val r1 = timeEntry("s1_exact_dedup") { d1.count() }
-    // signatures materialized ONCE (the Curation.curate persistStages
+    // signatures materialized ONCE (the Curation.curate scratch+pins
     // shape since round 9): the pair plan's banding and verify
     // branches both read them, and the r9 decade probe prices the
     // stored path 6.7× under the from-text path
@@ -1124,29 +1088,6 @@ object ScaleProbe {
     report(k, results)
   }
 
-  /** Round-8 streaming probes: PER-BATCH wall vs batch index for the
-    * streaming family under AvailableNow with maxFilesPerTrigger=1 —
-    * the shape that catches O(accepted)-class walls (per-batch cost
-    * growing with what the stream has already committed, invisible to
-    * a 3-batch correctness spec). `k` = micro-batch count; each batch
-    * is one fresh corpus replica (ids offset; doc text mutated so
-    * replicas are not near-dups of each other, making the accepted
-    * corpus grow linearly while per-batch input stays constant).
-    * Healthy = the per-batch series is FLAT after the first-batch
-    * warmup; the pre-round-8 DocStream (accepted side re-read and
-    * re-shingled per batch) slopes linearly here. `flatness` =
-    * mean(last third)/mean(second third) — ~1 flat, ~k/2 linear. */
-  /** Long-stream lifecycle probe: the near-dup ingest alone, k waves
-    * (= k micro-batches), with [[graft.streaming.DocStream]] sink
-    * compaction every 8 commits. The thing to certify at ~50 batches:
-    * per-batch wall stays FLAT while the sink's live directory count
-    * stays bounded (≤ compactEvery small partitions + one generation
-    * per fold) instead of growing one data + one `_sig` directory per
-    * batch forever — the many-small-files listing/union tax the r8
-    * verdict flagged as the remaining streaming-scale risk. Prints
-    * per-batch walls, flatness, the final live directory count, and
-    * the accepted row count (which must match the uncompacted
-    * semantics — compaction moves bytes, never changes the corpus). */
   /** Round-10: the signature-store FETCH path vs the lazy semi-join
     * plan at the ingest stream's steady-state scale. Stored side =
     * signatures of k salted replicas, written in BOTH layouts: plain
@@ -1273,31 +1214,6 @@ object ScaleProbe {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
-  /** Round-13 probes — the indexed ingest path's three open scale
-    * questions, measured:
-    *
-    * (a) PRUNING SWEEP: per-batch indexed cross-dedup wall as the
-    * index's partition count grows, pruned (partitioner-aligned key
-    * filter) vs unpruned (every partition binary-searches every key —
-    * the pre-r13 behavior, reconstructed over the SAME persisted
-    * partitions via [[graft.dedup.BandIndex.withoutPruning]]). The
-    * unpruned miss term is P × K × log(rows/P) array probes; pruned,
-    * each partition hash-screens the key array (~ns/key, no array
-    * access) and searches only its own ~K/P keys. Claim: the pruned
-    * wall stays flat as P grows.
-    *
-    * (b) RESTART REBUILD: `BandIndex.build` wall over the full store —
-    * the cold-start a restarted sink pays per generation before its
-    * first batch (the index is deliberately rebuildable state, so a
-    * restart re-pays one fold-epoch build; this prices it).
-    *
-    * (c) REPLAY STABILITY: 40 at-least-once replays of ONE committed
-    * batch against a compacted, index-forced sink. The corpus and the
-    * index are CONSTANT across replays (a replayed batch excludes its
-    * own partition), so storage memory and the persisted-RDD count
-    * must stay FLAT — any climb is per-batch leaked state. The
-    * pre-r13 lookup broadcasts leaked exactly here, one pair per
-    * replayed/normal batch. */
   /** Aggregate-navigation probe: a k×1M-row synthetic fact (dims wide
     * enough that grains stay dim-sized), then the four costs that
     * justify agg tables — registration (offline), a routed drill vs
@@ -1615,6 +1531,26 @@ object ScaleProbe {
       ",", s""","replication":$k}"""))
   }
 
+  /** Round-13 probes — the indexed ingest path's three open scale
+    * questions, measured:
+    *
+    * (a) PARTITION SWEEP: per-batch indexed cross-dedup wall as the
+    * index's partition count grows. Each partition hash-screens the
+    * key array (~ns/key, no array access) and searches only its own
+    * ~K/P keys; claim: the wall stays flat as P grows.
+    *
+    * (b) RESTART REBUILD: `BandIndex.build` wall over the full store —
+    * the cold-start a restarted sink pays per generation before its
+    * first batch (the index is deliberately rebuildable state, so a
+    * restart re-pays one fold-epoch build; this prices it).
+    *
+    * (c) REPLAY STABILITY: 40 at-least-once replays of ONE committed
+    * batch against a compacted, index-forced sink. The corpus and the
+    * index are CONSTANT across replays (a replayed batch excludes its
+    * own partition), so storage memory and the persisted-RDD count
+    * must stay FLAT — any climb is per-batch leaked state. The
+    * pre-r13 lookup broadcasts leaked exactly here, one pair per
+    * replayed/normal batch. */
   private def r13Probes(spark: SparkSession, dir: String, k: Int): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
@@ -1649,25 +1585,19 @@ object ScaleProbe {
       val rebuildSec = (System.nanoTime() - t0) / 1e9
       val idxRows = idx0.indexedRows
       idx0.unpersist()
-      // (a) the partition-count sweep, pruned vs unpruned
+      // (a) the partition-count sweep
       val sweep = Seq(1, 8, 32, 128).map { p =>
         val idx = dedup.BandIndex.build(stored, numParts = p)
-        def shot(ix: dedup.BandIndex): (Double, Long) = {
+        val shots = (1 to 3).map { _ =>
           val s = System.nanoTime()
           val n = dedup.Dedup.crossNearDupPairsVsSignaturesIndexed(batch,
-            "doc_id", "text", stored, ix, None, 0.9,
+            "doc_id", "text", stored, idx, None, 0.9,
             smallRelationBytes = 0L).count()
           ((System.nanoTime() - s) / 1e9, n)
         }
-        val pruned = (1 to 3).map(_ => shot(idx))
-        val noPrune = idx.withoutPruning
-        val unpruned = (1 to 3).map(_ => shot(noPrune))
         idx.unpersist()
-        require(pruned.map(_._2).distinct == unpruned.map(_._2).distinct,
-          s"pruned/unpruned pair counts diverge at p=$p")
-        f""""p$p":{"pruned_sec":${pruned.map(_._1).min}%.2f,""" +
-          f""""unpruned_sec":${unpruned.map(_._1).min}%.2f,""" +
-          s""""pairs":${pruned.head._2}}"""
+        f""""p$p":{"pruned_sec":${shots.map(_._1).min}%.2f,""" +
+          s""""pairs":${shots.head._2}}"""
       }
       println(sweep.mkString("""[probe] {"prune_sweep":{""", ",",
         f"""},"rebuild_sec":$rebuildSec%.2f,"index_rows":$idxRows,""" +
@@ -1724,9 +1654,8 @@ object ScaleProbe {
     * isolates `BandIndex.lookup` itself at the cap-scale key set —
     * `MaxLookupKeys`-sized probes (a ~250k-doc mega-batch), ~7/8
     * misses (keys drawn from the store's buckets with most bands
-    * perturbed) — across partition counts, pruned vs unpruned over
-    * the same persisted partitions. The unpruned miss term P × K ×
-    * log(rows/P) is exactly what this exposes. */
+    * perturbed) — across partition counts; the wall should stay flat
+    * as P grows. */
   private def r13LookupProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
@@ -1766,21 +1695,14 @@ object ScaleProbe {
         .collect().map(r => (r.getInt(0), r.getLong(1)))
       val sweep = Seq(1, 8, 32, 128).map { p =>
         val idx = dedup.BandIndex.build(stored, numParts = p)
-        def shots(ix: dedup.BandIndex): (Double, Long) = {
-          val timed = (1 to 3).map { _ =>
-            val s = System.nanoTime()
-            val n = ix.lookup(spark, keys).count()
-            ((System.nanoTime() - s) / 1e9, n)
-          }
-          (timed.map(_._1).min, timed.head._2)
+        val shots = (1 to 3).map { _ =>
+          val s = System.nanoTime()
+          val n = idx.lookup(spark, keys).count()
+          ((System.nanoTime() - s) / 1e9, n)
         }
-        val (prunedSec, prunedRows) = shots(idx)
-        val (unprunedSec, unprunedRows) = shots(idx.withoutPruning)
         idx.unpersist()
-        require(prunedRows == unprunedRows,
-          s"pruned/unpruned row counts diverge at p=$p")
-        f""""p$p":{"pruned_sec":$prunedSec%.2f,""" +
-          f""""unpruned_sec":$unprunedSec%.2f,"rows":$prunedRows}"""
+        f""""p$p":{"pruned_sec":${shots.map(_._1).min}%.2f,""" +
+          s""""rows":${shots.head._2}}"""
       }
       println(sweep.mkString("""[probe] {"lookup_sweep":{""", ",",
         s"""},"keys":${keys.length},"stored_docs":$storedDocs,""" +
@@ -1789,6 +1711,17 @@ object ScaleProbe {
       new java.io.File(storeDir))
   }
 
+  /** Long-stream lifecycle probe: the near-dup ingest alone, k waves
+    * (= k micro-batches), with [[graft.streaming.DocStream]] sink
+    * compaction every 8 commits. The thing to certify at ~50 batches:
+    * per-batch wall stays FLAT while the sink's live directory count
+    * stays bounded (≤ compactEvery small partitions + one generation
+    * per fold) instead of growing one data + one `_sig` directory per
+    * batch forever — the many-small-files listing/union tax the r8
+    * verdict flagged as the remaining streaming-scale risk. Prints
+    * per-batch walls, flatness, the final live directory count, and
+    * the accepted row count (which must match the uncompacted
+    * semantics — compaction moves bytes, never changes the corpus). */
   private def streamCompactProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -1925,6 +1858,18 @@ object ScaleProbe {
     println(f"""[probe] {"asof_enrich_compacting":{"batches":$arr,"flatness":$flat%.2f},"live_dirs":$liveDirs,"rows":$rows,"replication":$k}""")
   }
 
+  /** Round-8 streaming probes: PER-BATCH wall vs batch index for the
+    * streaming family under AvailableNow with maxFilesPerTrigger=1 —
+    * the shape that catches O(accepted)-class walls (per-batch cost
+    * growing with what the stream has already committed, invisible to
+    * a 3-batch correctness spec). `k` = micro-batch count; each batch
+    * is one fresh corpus replica (ids offset; doc text mutated so
+    * replicas are not near-dups of each other, making the accepted
+    * corpus grow linearly while per-batch input stays constant).
+    * Healthy = the per-batch series is FLAT after the first-batch
+    * warmup; the pre-round-8 DocStream (accepted side re-read and
+    * re-shingled per batch) slopes linearly here. `flatness` =
+    * mean(last third)/mean(second third) — ~1 flat, ~k/2 linear. */
   private def streamProbes(spark: SparkSession, dir: String, k: Int): Unit = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val fsConf = spark.sessionState.newHadoopConf()

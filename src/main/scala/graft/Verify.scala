@@ -5,17 +5,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Local-iteration filter: SPARK_GRAFT_ONLY=q100_skyline,q42_json
+    // restricts the dump to named queries; an unknown name fails
+    // before any work. Unset (the full correctness dump) → all queries.
+    val only = Queries.onlyNames("SPARK_GRAFT_ONLY", SparkEntry.queries.keySet)
     val spark = Sessions.local(Sessions.cpus(4))
     new java.io.File(outDir).mkdirs()
     def rmTree(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmTree)
       f.delete(): Unit
     }
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q100_skyline,q42_json
-    // restricts the dump to named queries. Unset (the driver's case)
-    // → all queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only match {
       case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
       case None => SparkEntry.queries

@@ -126,13 +126,6 @@ final class BandIndex private (
   /** The persisted parts RDD's id — leak-accounting visibility for
     * specs (which persisted RDDs belong to live indexes). */
   private[graft] def rddId: Int = parts.id
-
-  /** A/B hook for the pruning probe: the same persisted partitions
-    * with key pruning disabled (every partition probes the full key
-    * set — the pre-pruning behavior). The mapped RDD reads the
-    * persisted parent; nothing is copied or re-persisted. */
-  private[graft] def withoutPruning: BandIndex =
-    new BandIndex(parts.map(p => p.copy(alignedParts = 0)), indexedRows)
 }
 
 object BandIndex {

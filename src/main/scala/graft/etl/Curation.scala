@@ -17,23 +17,23 @@ import graft.text.{Decontaminate, TextOps}
   * alone reads its input three times — band join, both shingle-verify
   * sides — and every later stage re-reads the dedup survivors), so an
   * unpersisted chain recomputes the expensive early stages once per
-  * consumer. At probe scale that recomputation factor is most of the
-  * chain's wall-clock. `persistStages = true` pins each stage boundary
-  * at MEMORY_AND_DISK while its consumers run and releases it
-  * afterwards — the scale posture a real pipeline run wants. The
-  * DEFAULT stays unpersisted: identical results, zero caching policy
-  * imposed on callers who compose their own persistence (q177's
-  * oracle-checked path).
+  * consumer. [[curate]] therefore has two storage paths with
+  * bit-identical results: plain LINEAGE for small corpora, and the
+  * warehouse SCRATCH+PINS path (near-dup signatures through a parquet
+  * scratch, the other stage boundaries pinned at MEMORY_AND_DISK) once
+  * the corpus's size estimate reaches the `scratchAutoBytes` gate. The
+  * 1000× probe table (README, curation section) measured the two
+  * other postures — stages pinned in the block cache alone, and a
+  * caller-owned scratch directory — and retired both.
   */
 object Curation {
 
   /** Corpora whose Catalyst size estimate reaches this make [[curate]]
-    * route the near-dup signature stage through a PARQUET SCRATCH
-    * automatically when the caller set no storage knob — the engine's
+    * route the chain through the scratch+pins path — the engine's
     * stats-gate pattern ([[graft.text.Decontaminate.SmallCorpusBytes]]):
     * plan statistics are free (no job), estimates err LARGE through
     * joins — which errs toward scratch, the correct direction at scale
-    * — and the chain is bit-identical on every path, so the choice
+    * — and the chain is bit-identical on both paths, so the choice
     * never changes a result. Measured one JVM per mode at the 1000×
     * probe scale (500k docs, ~150 MB raw text — cached-corpus stats
     * ~200 MB): scratch+pins 42–69 s vs lineage 98–119 s same-day
@@ -41,10 +41,12 @@ object Curation {
     * ordering) — scratch wins because parquet column-prunes each
     * consumer's branch where the block cache feeds whole rows, and
     * the signature bytes live compressed on disk instead of squatting
-    * on executor memory the rest of the chain wants. The threshold
-    * sits well under that corpus (which already enjoys the full win)
-    * and well over the benchmark fixtures' single-digit-MB estimates,
-    * where the scratch write's fixed cost exceeds what it saves. */
+    * on executor memory the rest of the chain wants. The win holds at
+    * fixture scale too: q177's r16 paired run measured scratch+pins at
+    * 6.8 s against lineage at 9.1 s, which is why q177 (and the
+    * cube_serve benchmark set-up) pass `scratchAutoBytes = 0`. The
+    * default stays at 64 MB so that ad-hoc callers on tiny corpora
+    * skip the scratch write and its temp directory. */
   val ScratchAutoBytes: Long = 64L * 1024 * 1024
 
   /** Accepted documents after the full gate chain (before sharding):
@@ -54,74 +56,60 @@ object Curation {
     * mixture. Column contract: docs(idCol, textCol, domainCol,
     * costCol).
     *
-    * `scratchDir` routes the near-dup signature stage through a
-    * PARQUET scratch write instead of the block-store cache: the pair
-    * plan's banding branch then scans only `(id, bands)` and its
-    * verify branch only `(id, sh)` (parquet column pruning — the
-    * block cache deserializes whole rows, shingle arrays included,
-    * for both), the bytes live compressed on disk instead of
-    * occupying executor memory the rest of the chain wants, and scan
-    * parallelism follows file splits rather than cached-partition
-    * count. The caller owns the directory's lifecycle (it must
-    * outlive consumption of the returned frame).
-    *
-    * With NO storage knob set, the chain picks for itself: a corpus
-    * whose Catalyst size estimate reaches `scratchAutoBytes`
-    * ([[ScratchAutoBytes]]) takes the scratch path through a TEMP
-    * directory the chain owns — the final selection is materialized
-    * (pinned at MEMORY_AND_DISK, like `persistStages`' return) and
-    * the scratch deleted before returning, so the caller sees only
-    * the accepted frame. Results are bit-identical on every path. */
+    * A corpus whose Catalyst size estimate reaches `scratchAutoBytes`
+    * ([[ScratchAutoBytes]]) takes the scratch+pins path through a
+    * TEMP directory the chain owns: the near-dup signature stage is
+    * written to parquet (the pair plan's banding branch then scans
+    * only `(id, bands)` and its verify branch only `(id, sh)`), the
+    * other stage boundaries pin at MEMORY_AND_DISK while their
+    * consumers run, the final selection is checkpointed, and the
+    * scratch is deleted before returning, so the caller sees only the
+    * accepted frame. Smaller corpora run on plain lineage. Results are
+    * bit-identical on both paths. */
   def curate(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String, costCol: String,
       threshold: Double, minQuality: Double,
       benchmark: DataFrame, decontaminateN: Int,
       weights: Map[String, Double], budget: Long,
       corpusPredicate: Column = lit(true),
-      persistStages: Boolean = false,
-      scratchDir: Option[String] = None,
       scratchAutoBytes: Long = ScratchAutoBytes): DataFrame = {
+    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     val autoDir: Option[String] =
-      if (persistStages || scratchDir.nonEmpty) None
+      if (est.isValidLong && est.toLong < scratchAutoBytes) None
       else {
-        val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-        val big = !est.isValidLong || est.toLong >= scratchAutoBytes
-        if (big) {
-          // under the WAREHOUSE dir, not a driver-local tempdir: on a
-          // real cluster every executor must reach the scratch, and
-          // the warehouse is the one path the session already
-          // guarantees is shared storage
-          val base = docs.sparkSession.conf.get("spark.sql.warehouse.dir")
-          Some(s"$base/_graft_curation_scratch_${java.util.UUID.randomUUID}")
-        } else None
+        // under the WAREHOUSE dir, not a driver-local tempdir: on a
+        // real cluster every executor must reach the scratch, and
+        // the warehouse is the one path the session already
+        // guarantees is shared storage
+        val base = docs.sparkSession.conf.get("spark.sql.warehouse.dir")
+        Some(s"$base/_graft_curation_scratch_${java.util.UUID.randomUUID}")
       }
-    // the auto path adopts the FULL scale posture, not just the
+    // the scratch path adopts the FULL scale posture, not just the
     // scratch half: stage boundaries feed multiple consumers each, so
-    // they pin too (measured in isolation this round: scratch+pins
-    // 42 s vs scratch-sigs-over-lineage 119 s at 1000×)
-    val effPersist = persistStages || autoDir.isDefined
+    // they pin too (measured in isolation: scratch+pins 42 s vs
+    // scratch-sigs-over-lineage 119 s at 1000×)
     def staged(df: DataFrame): DataFrame =
-      if (effPersist) df.persist(StorageLevel.MEMORY_AND_DISK) else df
-    val effScratch = scratchDir.orElse(autoDir)
+      if (autoDir.isDefined) df.persist(StorageLevel.MEMORY_AND_DISK)
+      else df
     try {
     val d1 = staged(Dedup.dropExactDups(docs, idCol, textCol))
     // the near-dup signature relation (bands + shingle sets) appears
     // in BOTH the banding branch and the candidate-verify branch of
     // the pair plan; Spark materializes no common subexpression, so
-    // an unpersisted chain computes every doc's minhash/shingles
-    // twice. With persistStages the signatures pin ONCE — the r9
-    // decade probe prices exactly this: the same corpus dedups 6.7×
-    // faster off a materialized signature relation than off text.
+    // the lineage path computes every doc's minhash/shingles twice,
+    // and the scratch path writes them ONCE — the r9 decade probe
+    // prices exactly this: the same corpus dedups 6.7× faster off a
+    // materialized signature relation than off text.
     // Composition identity: nearDupPairs IS
     // nearDupPairsFromSignatures ∘ nearDupSignatures, so results are
-    // bit-identical either way (q177 oracle path stays unpersisted).
-    val sigs = effScratch match {
+    // bit-identical either way.
+    val sigs = autoDir match {
       case Some(dir) =>
         val path = s"$dir/near_dup_sigs"
         Dedup.nearDupSignatures(d1, idCol, textCol)
           .write.mode("overwrite").parquet(path)
         docs.sparkSession.read.parquet(path)
-      case None => staged(Dedup.nearDupSignatures(d1, idCol, textCol))
+      case None => Dedup.nearDupSignatures(d1, idCol, textCol)
     }
     val d2 = staged(Dedup.dropNearDups(d1, idCol,
       Dedup.nearDupPairsFromSignatures(sigs, threshold)))
@@ -139,36 +127,25 @@ object Curation {
       d4.select(col(idCol), col(domainCol), col(costCol)),
       domainCol = domainCol, keyCol = idCol, costCol = costCol,
       weights = weights, budget = budget)
-    // materialize the selection before releasing the pinned stages
-    // (unpersisting first would recompute the whole chain) and, on
-    // the auto path, before the finally deletes the scratch — the
-    // accepted set is budget-sized, a pin the caller wants anyway
-    val out =
-      if (effPersist) {
-        val pinned =
-          if (autoDir.isDefined) {
-            // the auto path deletes its scratch below, so the
-            // returned frame's LINEAGE must not survive past that
-            // deletion (a persist alone keeps the full lineage — any
-            // later cache-block loss would recompute through the
-            // deleted path and fail with a mystery FileNotFound).
-            // Checkpointing truncates the lineage: reliably when the
-            // session has a checkpoint dir, locally otherwise (the
-            // local form is executor-resident — documented
-            // non-fault-tolerant; callers needing a durable handle
-            // pass an explicit scratchDir and own its lifecycle).
-            val sc = docs.sparkSession.sparkContext
-            if (sc.getCheckpointDir.isDefined) d5.checkpoint()
-            else d5.localCheckpoint()
-          } else {
-            val p = d5.persist(StorageLevel.MEMORY_AND_DISK)
-            p.count()
-            p
-          }
-        Seq(d1, sigs, d2, d4).foreach(_.unpersist())
-        pinned
-      } else d5
-    out
+    if (autoDir.isEmpty) d5
+    else {
+      // materialize the selection before releasing the pinned stages
+      // (unpersisting first would recompute the whole chain) and
+      // before the finally deletes the scratch — the accepted set is
+      // budget-sized, a pin the caller wants anyway. A persist alone
+      // would keep the full lineage, and any later cache-block loss
+      // would recompute through the deleted path and fail with a
+      // mystery FileNotFound; checkpointing truncates the lineage:
+      // reliably when the session has a checkpoint dir, locally
+      // otherwise (the local form is executor-resident — documented
+      // non-fault-tolerant).
+      val sc = docs.sparkSession.sparkContext
+      val pinned =
+        if (sc.getCheckpointDir.isDefined) d5.checkpoint()
+        else d5.localCheckpoint()
+      Seq(d1, d2, d4).foreach(_.unpersist())
+      pinned
+    }
     } finally autoDir.foreach { dir =>
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(docs.sparkSession.sessionState.newHadoopConf())

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sim.Similarity
@@ -139,26 +139,19 @@ object KMeansRel {
       .sortBy { case (h, id, _) => (h, id) }
       .map(_._3)
 
-  /** The assignment argmin for one centroid table over `vec` — ONE
-    * copy of the (d, i)-struct arithmetic, shared by [[step]] and
-    * [[stepSubspaces]] so the fused PQ round cannot drift from the
-    * per-subspace contract. */
-  private def assignExpr(vec: Column,
-      cents: Array[Array[Double]]): Column =
-    array_min(array(cents.zipWithIndex.map { case (c, i) =>
-      val cArr = array(c.toIndexedSeq.map(lit): _*)
-      val c2 = lit(c.map(x => x * x).sum)
-      struct((c2 - lit(2.0) * Similarity.dot(vec, cArr)).as("d"),
-        lit(i.toLong).as("i"))
-    }.toIndexedSeq: _*)).getField("i")
-
   /** One Lloyd round: assignment projection (centroid literals) into
     * the per-(cluster, dim) grid-rounded decimal-exact mean aggregate;
     * the (≤ k·dim)-row result comes back to the driver and empty
     * clusters keep their old centroid. */
   private def step(v: DataFrame,
       cents: Array[Array[Double]]): Array[Array[Double]] = {
-    val cells = v.select(assignExpr(col("__v"), cents).as("__c"),
+    val assign = array_min(array(cents.zipWithIndex.map { case (c, i) =>
+      val cArr = array(c.toIndexedSeq.map(lit): _*)
+      val c2 = lit(c.map(x => x * x).sum)
+      struct((c2 - lit(2.0) * Similarity.dot(col("__v"), cArr)).as("d"),
+        lit(i.toLong).as("i"))
+    }.toIndexedSeq: _*)).getField("i")
+    val cells = v.select(assign.as("__c"),
         posexplode(col("__v")).as(Seq("__p", "__e")))
       .groupBy(col("__c"), col("__p"))
       .agg(round(sum(col("__e").cast("decimal(38,12)")).cast("double")
@@ -171,68 +164,6 @@ object KMeansRel {
           val m = rows.map(r => r.getInt(1) -> r.getDouble(2)).toMap
           Array.tabulate(old.length)(p => m(p))
         case None => old // empty cluster: previous centroid survives
-      }
-    }
-  }
-
-  /** The m × kCodes sub-quantizer codebooks of a product quantizer
-    * ([[graft.sim.Pq.fit]]) from ONE seed scan and ONE cell-aggregate
-    * scan per Lloyd round — instead of one of each PER SUBSPACE. The
-    * md5 seed draw orders by (md5(id), id), never by vector values,
-    * so the per-sub-slice draw selects the SAME k rows for every
-    * subspace: one full-vector TakeOrdered sliced driver-side is
-    * bit-identical to m independent draws. Each fused round computes
-    * all m assignments once per row (an array of the same
-    * [[assignExpr]] literals), maps the exploded full-vector position
-    * p0 to (subspace p0/subDim, dim p0%subDim), and aggregates the
-    * same grid-rounded decimal-exact mean per (subspace, cluster,
-    * dim) — decimal sums are order-independent, so the fused groups
-    * equal the per-subspace ones value-for-value (KMeansRelSpec pins
-    * the equality). At corpus scale this cuts the fit from
-    * m·(1 + iters) passes to 1 + iters. */
-  private[graft] def fitCentroidsSubspaces(vectors: DataFrame,
-      idCol: String, vecCol: String, m: Int, subDim: Int, kCodes: Int,
-      iters: Int): Array[Array[Array[Double]]] = {
-    require(kCodes >= 1, s"need kCodes >= 1, got $kCodes")
-    require(iters >= 0, s"need iters >= 0, got $iters")
-    val v = clean(vectors, idCol, vecCol)
-    val seedsFull = seedCentroids(v, idCol, kCodes)
-    var books = Array.tabulate(m)(s =>
-      seedsFull.map(c => c.slice(s * subDim, (s + 1) * subDim)))
-    for (_ <- 1 to iters) books = stepSubspaces(v, books, subDim)
-    books
-  }
-
-  /** One FUSED Lloyd round over every subspace — see
-    * [[fitCentroidsSubspaces]]. */
-  private def stepSubspaces(v: DataFrame,
-      books: Array[Array[Array[Double]]],
-      subDim: Int): Array[Array[Array[Double]]] = {
-    val m = books.length
-    val ca = array((0 until m).map { s =>
-      assignExpr(slice(col("__v"), s * subDim + 1, subDim), books(s))
-    }.toIndexedSeq: _*)
-    val sub = floor(col("__p0") / subDim).cast("int")
-    val cells = v
-      .select(ca.as("__ca"), posexplode(col("__v")).as(Seq("__p0", "__e")))
-      .select(sub.as("__s"), element_at(col("__ca"), sub + 1).as("__c"),
-        (col("__p0") % subDim).cast("int").as("__p"), col("__e"))
-      .groupBy(col("__s"), col("__c"), col("__p"))
-      .agg(round(sum(col("__e").cast("decimal(38,12)")).cast("double")
-        / count(lit(1)), 9).as("__m"))
-      .collect()
-    val bySub = cells.groupBy(_.getInt(0))
-    Array.tabulate(m) { s =>
-      val byCluster = bySub
-        .getOrElse(s, Array.empty[org.apache.spark.sql.Row])
-        .groupBy(_.getLong(1))
-      books(s).zipWithIndex.map { case (old, i) =>
-        byCluster.get(i.toLong) match {
-          case Some(rows) =>
-            val mm = rows.map(r => r.getInt(2) -> r.getDouble(3)).toMap
-            Array.tabulate(old.length)(p => mm(p))
-          case None => old // empty cluster: previous centroid survives
-        }
       }
     }
   }

@@ -69,15 +69,15 @@ object Pq {
     // SHARED SEED + PAR-OVERLAPPED PER-SUBSPACE LLOYD (r17): the md5
     // seed draw orders by (md5(id), id), never by vector values, so
     // ONE full-vector TakeOrdered sliced driver-side IS each
-    // subspace's seed draw (bit-identical — KMeansRelSpec pins the
-    // equivalence chain Pq.fit ≡ fused ≡ m independent fits); the m
+    // subspace's seed draw (bit-identical — KMeansRelSpec pins
+    // Pq.fit ≡ m independent per-slice fits); the m
     // Lloyd loops then run on narrow subDim-slice projections as
     // independent concurrent jobs (the r16 Par overlap, which hides
     // the per-action latency that dominates the fit at serving scale —
     // removing it measured q182/q185 1.25× in a paired window).
     //
-    // The r16 FUSED round ([[KMeansRel.fitCentroidsSubspaces]], kept
-    // as the spec's cross-check comparator) was REVERTED on r17 probe
+    // The r16 FUSED round (one m-subspace cell aggregate per Lloyd
+    // round, since deleted from the engine) was REVERTED on r17 probe
     // evidence (ScaleProbe r17, staged-parquet corpus, one JVM per
     // entry so no entry rides another's warmup): it evaluates an
     // m-wide array of assignment expressions per row — a projection

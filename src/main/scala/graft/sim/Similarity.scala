@@ -154,11 +154,6 @@ object Similarity {
     array_min(array(scored.toIndexedSeq: _*)).getField("i")
   }
 
-  /** IVF approximate top-k: search only the `nprobe` cells nearest the
-    * probe (cell choice is a driver-side computation over the tiny
-    * centroid table), exact cosine re-rank inside them. At scale the
-    * corpus is stored partitioned by cell, so a probe reads
-    * ~nprobe/nlist of the data. */
   /** The `nprobe` cells nearest the probe vector, ranked by the SAME
     * expanded-distance formula (‖c‖² − 2⟨p,c⟩, left-to-right folds) as
     * [[ivfCell]] — not by Σ(x−y)²: the two are equal in exact
@@ -178,6 +173,11 @@ object Similarity {
       .toIndexedSeq
   }
 
+  /** IVF approximate top-k: search only the `nprobe` cells nearest the
+    * probe (cell choice is a driver-side computation over the tiny
+    * centroid table), exact cosine re-rank inside them. At scale the
+    * corpus is stored partitioned by cell, so a probe reads
+    * ~nprobe/nlist of the data. */
   def ivfTopK(vectors: DataFrame, idCol: String, vecCol: String,
       probe: DataFrame, k: Int, model: IvfModel, nprobe: Int): DataFrame = {
     val pv = probe.select(col(vecCol).cast("array<double>"))
@@ -497,21 +497,6 @@ object Similarity {
           (-col("__sid")).as("nt"))).as("cluster"))
   }
 
-  /** Approximate k-nearest-neighbor JOIN: for every query vector, the
-    * k most-cosine-similar corpus vectors, searched ONLY inside the
-    * query's seed cell — the batch-retrieval face of [[annTopK]]
-    * (thousands of probes amortized into one equi-join instead of one
-    * scan per probe). Both sides bucketize against the CORPUS's seed
-    * exemplars, so a query always lands where its candidates live;
-    * per-query ranking runs on [[graft.functions.BoundedTopKAgg]]
-    * (≤ k rows per buffer). Recall is what the cell geometry gives —
-    * measure it with [[graft.ml.Metrics.recallAtK]]; raise nClusters
-    * to trade recall for Σ m_c² pair work.
-    *
-    * @return (qIdCol, nn_id, cosine DESC-ranked to 6 places, rn 1..k);
-    *         a query that is also in the corpus matches itself at
-    *         rank 1 — filter `qIdCol =!= nn_id` downstream if
-    *         self-matches are unwanted. */
   /** Salted form of the intra-cell pair join `left ⋈ right ON
     * cluster`: the cluster key has only nClusters distinct values, so
     * a plain equi-join shuffles every row into ≤ nClusters reduce
@@ -531,21 +516,11 @@ object Similarity {
     * the work. Replication multiplies left-side shuffle bytes by
     * `slices` — the standard salting trade; keep the smaller relation
     * on the left. */
-  /** [[joinSaltedByCluster]]'s slice-count sentinel: derive from
-    * `defaultParallelism / nClusters` (scale-adaptive — collapses to
-    * the unsalted join when the clusters alone spread the work).
-    * Callers pass an explicit count to pin the layout (or 1 to force
-    * the unsalted plan — the ScaleProbe comparator). */
-  val SaltAuto: Int = 0
-
   private def joinSaltedByCluster(left: DataFrame, right: DataFrame,
-      rightSliceKey: String, nClusters: Int,
-      saltSlices: Int = SaltAuto): DataFrame = {
-    val slices =
-      if (saltSlices > 0) saltSlices
-      else math.max(1,
-        left.sparkSession.sparkContext.defaultParallelism /
-          math.max(1, nClusters))
+      rightSliceKey: String, nClusters: Int): DataFrame = {
+    val slices = math.max(1,
+      left.sparkSession.sparkContext.defaultParallelism /
+        math.max(1, nClusters))
     if (slices <= 1) left.join(right, Seq("cluster"))
     else {
       val lS = left.withColumn("__slice",
@@ -556,10 +531,24 @@ object Similarity {
     }
   }
 
+  /** Approximate k-nearest-neighbor JOIN: for every query vector, the
+    * k most-cosine-similar corpus vectors, searched ONLY inside the
+    * query's seed cell — the batch-retrieval face of [[annTopK]]
+    * (thousands of probes amortized into one equi-join instead of one
+    * scan per probe). Both sides bucketize against the CORPUS's seed
+    * exemplars, so a query always lands where its candidates live;
+    * per-query ranking runs on [[graft.functions.BoundedTopKAgg]]
+    * (≤ k rows per buffer). Recall is what the cell geometry gives —
+    * measure it with [[graft.ml.Metrics.recallAtK]]; raise nClusters
+    * to trade recall for Σ m_c² pair work.
+    *
+    * @return (qIdCol, nn_id, cosine DESC-ranked to 6 places, rn 1..k);
+    *         a query that is also in the corpus matches itself at
+    *         rank 1 — filter `qIdCol =!= nn_id` downstream if
+    *         self-matches are unwanted. */
   def knnJoin(queries: DataFrame, qIdCol: String,
       corpus: DataFrame, cIdCol: String, vecCol: String,
-      nClusters: Int, k: Int, nCoarse: Int = CoarseAuto,
-      saltSlices: Int = SaltAuto): DataFrame = {
+      nClusters: Int, k: Int, nCoarse: Int = CoarseAuto): DataFrame = {
     val seeds = seedsOf(corpus, cIdCol, vecCol, nClusters)
     val nc = resolveNCoarse(nClusters, nCoarse)
     def assign(v: DataFrame, id: String) =
@@ -570,7 +559,7 @@ object Similarity {
     val ca = corpus.join(assign(corpus, cIdCol), Seq(cIdCol))
       .select(col("cluster"), col(cIdCol).as("nn_id"),
         col(vecCol).as("__vc"))
-    val cand = joinSaltedByCluster(qa, ca, "nn_id", nClusters, saltSlices)
+    val cand = joinSaltedByCluster(qa, ca, "nn_id", nClusters)
       .withColumn("__c", cosine(col("__vq"), col("__vc")))
       .filter(col("__c").isNotNull)
     graft.features.Features.topKPerGroupBounded(cand, qIdCol,
@@ -599,14 +588,14 @@ object Similarity {
     */
   def hardNegatives(vectors: DataFrame, idCol: String, vecCol: String,
       labelCol: String, nClusters: Int, k: Int,
-      nCoarse: Int = CoarseAuto, saltSlices: Int = SaltAuto): DataFrame = {
+      nCoarse: Int = CoarseAuto): DataFrame = {
     val cells = seedAssign(vectors, idCol, vecCol, nClusters, nCoarse)
     val withC = vectors.join(cells, Seq(idCol))
     val a = withC.select(col("cluster"), col(idCol),
       col(vecCol).as("__va"), col(labelCol).as("__la"))
     val b = withC.select(col("cluster"), col(idCol).as("neg_id"),
       col(vecCol).as("__vb"), col(labelCol).as("__lb"))
-    val cand = joinSaltedByCluster(a, b, "neg_id", nClusters, saltSlices)
+    val cand = joinSaltedByCluster(a, b, "neg_id", nClusters)
       .filter(col("__la") =!= col("__lb")) // null labels fall out here
       .withColumn("__c", cosine(col("__va"), col("__vb")))
       .filter(col("__c").isNotNull)

@@ -27,4 +27,23 @@ class RegistrySpec extends AnyFunSuite {
       assert(e.getMessage.contains("aggnav, asof"), e.getMessage)
     }
   }
+
+  test("the query-name filters select known names and reject typos") {
+    val known = Queries.all.keySet
+    val v = "SPARK_GRAFT_ONLY"
+    assert(Queries.onlyNames(v, known, Map.empty) === None)
+    assert(Queries.onlyNames(v, known,
+      Map(v -> " q01_pricing,q03_star ,")) ===
+      Some(Set("q01_pricing", "q03_star")))
+    val e = intercept[IllegalArgumentException](Queries.onlyNames(v, known,
+      Map(v -> "q01_pricing,q01_pricng,q3_star")))
+    assert(e.getMessage.contains("SPARK_GRAFT_ONLY names unknown: " +
+      "q01_pricng, q3_star"), e.getMessage)
+    // Bench's filter is the same helper over its own 97 names: a real
+    // query that is not benched is unknown there
+    assert(known("q02_filter") && !Queries.benchNames.contains("q02_filter"))
+    intercept[IllegalArgumentException](Queries.onlyNames(
+      "SPARK_GRAFT_BENCH_ONLY", Queries.benchNames,
+      Map("SPARK_GRAFT_BENCH_ONLY" -> "q02_filter")))
+  }
 }

@@ -4,53 +4,28 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Curation chain operator: persistStages is a pure performance knob
-  * (bit-identical output), and the composed operator equals the
-  * hand-inlined chain it replaced. */
+/** Curation chain operator: the scratch+pins path is a pure
+  * performance choice (bit-identical to lineage), and the composed
+  * operator equals the hand-inlined chain it replaced. */
 class CurationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val docs = TestSpark.table("documents")
   private val weights = Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1)
 
-  private def run(persist: Boolean, scratch: Option[String] = None) =
+  private def run() =
     Curation.curate(docs, "doc_id", "text", "lang", "n_chars",
       threshold = 0.9, minQuality = 0.3,
       benchmark = docs.filter(col("doc_id") < 10), decontaminateN = 4,
       weights = weights, budget = 40000L,
-      corpusPredicate = col("doc_id") >= 10,
-      persistStages = persist, scratchDir = scratch)
-
-  test("persistStages = true is bit-identical to the lineage default") {
-    val a = run(persist = false).select("doc_id").collect()
-      .map(_.getLong(0)).sorted.toSeq
-    val b = run(persist = true).select("doc_id").collect()
-      .map(_.getLong(0)).sorted.toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
-  }
-
-  test("scratchDir parquet signature stage is bit-identical too") {
-    val dir = java.nio.file.Files.createTempDirectory("cur_scratch")
-    try {
-      val a = run(persist = false).select("doc_id").collect()
-        .map(_.getLong(0)).sorted.toSeq
-      val c = run(persist = true, Some(dir.toString)).select("doc_id")
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(a === c)
-      assert(a.nonEmpty)
-      // the scratch stage actually wrote parquet (not the cache path)
-      assert(new java.io.File(s"$dir/near_dup_sigs").exists())
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
+      corpusPredicate = col("doc_id") >= 10)
 
   test("auto scratch: stats-gated, bit-identical, temp dir cleaned up") {
     // knob-free default on the benchmark-sized fixture: the Catalyst
     // estimate sits far under ScratchAutoBytes, so the chain stays on
     // lineage — no temp scratch directory is ever created
     val before = tempScratchDirs()
-    val a = run(persist = false).select("doc_id").collect()
+    val a = run().select("doc_id").collect()
       .map(_.getLong(0)).sorted.toSeq
     assert(tempScratchDirs() === before,
       "small chain must not take the auto-scratch path")
@@ -81,7 +56,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("export profile shards every accepted doc exactly once") {
-    val accepted = run(persist = false)
+    val accepted = run()
     val profile = Curation.exportProfile(accepted, "doc_id", "n_chars", 8)
       .collect()
     assert(profile.map(_.getLong(1)).sum === accepted.count())

@@ -26,38 +26,29 @@ class KMeansRelSpec extends AnyFunSuite {
     rows.toDF("id", "v")
   }
 
-  test("fused subspace fit equals m independent per-slice fits " +
-      "bit-for-bit (the Pq.fit r16 optimization contract)") {
-    // real embeddings, m=4 subspaces, 2 Lloyd rounds: the fused
-    // single-scan rounds must reproduce each per-subspace fit exactly
-    // — seeds (one full-vector draw, sliced), assignments, and the
-    // grid-rounded decimal cell means
+  test("Pq.fit equals m independent per-slice fits bit-for-bit") {
+    // real embeddings, m=4 subspaces, 2 Lloyd rounds: the production
+    // path (one shared full-vector seed draw, sliced, + Par-overlapped
+    // per-subspace Lloyd loops) must reproduce each independent
+    // per-slice fit exactly — seeds, assignments, and the grid-rounded
+    // decimal cell means
     val (m, kCodes, iters) = (4, 8, 2)
     val dim = vecs.select(size(col("embedding"))).head().getInt(0)
     val subDim = dim / m
-    val fused = KMeansRel.fitCentroidsSubspaces(
-      vecs, "vec_id", "embedding", m, subDim, kCodes, iters)
     val separate = (0 until m).map { s =>
       val sub = vecs.select(col("vec_id"),
         slice(col("embedding").cast("array<double>"),
           s * subDim + 1, subDim).as("__sub"))
       KMeansRel.fitCentroids(sub, "vec_id", "__sub", kCodes, iters)
     }
-    assert(fused.length == m)
-    (0 until m).foreach { s =>
-      assert(fused(s).map(_.toSeq).toSeq == separate(s).map(_.toSeq).toSeq,
-        s"subspace $s codebooks diverge")
-    }
-    // ... and the PRODUCTION path (r17: shared full-vector seed draw +
-    // Par-overlapped per-subspace Lloyd loops) closes the equivalence
-    // chain: Pq.fit ≡ fused ≡ m independent fits, codebook for codebook
     val prod = graft.sim.Pq.fit(vecs, "vec_id", "embedding",
       m, kCodes, iters)
     assert(prod.subDim == subDim)
+    assert(prod.books.length == m)
     (0 until m).foreach { s =>
       assert(prod.books(s).map(_.toSeq).toSeq ==
-        fused(s).map(_.toSeq).toSeq,
-        s"subspace $s: production Pq.fit diverges from the fused fit")
+        separate(s).map(_.toSeq).toSeq,
+        s"subspace $s: Pq.fit diverges from the independent fit")
     }
   }
 

@@ -10,6 +10,19 @@ class SimilaritySpec extends AnyFunSuite {
 
   private lazy val emb = TestSpark.table("embeddings")
 
+  // driver-side replay material for the in-cell brute-force checks
+  private lazy val vecs: Map[Long, Array[Double]] =
+    emb.select($"vec_id", $"embedding".cast("array<double>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+  private def cells(nClusters: Int): Map[Long, Long] =
+    Similarity.seedAssign(emb, "vec_id", "embedding", nClusters)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def cos(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
+    d / (math.sqrt(na) * math.sqrt(nb))
+  }
+
   test("cosine of a vector with itself is 1") {
     val self = emb.limit(5)
       .select(round(Similarity.cosine($"embedding", $"embedding"), 6).as("c"))
@@ -200,10 +213,14 @@ class SimilaritySpec extends AnyFunSuite {
     assert(vals.toSeq === again.toSeq)
   }
 
-  test("knnJoin: self-match at rank 1, in-cell brute-force parity") {
+  /** knnJoin at `nClusters`, checked: every query matches itself at
+    * rank 1, and brute force within the same cells reproduces the
+    * rank-2 pick. Returns the collected frame (its executed plan is
+    * the final one). */
+  private def knnJoinParity(nClusters: Int): org.apache.spark.sql.DataFrame = {
     val queries = emb.filter($"vec_id" % 25 === 0)
     val got = Similarity.knnJoin(queries, "vec_id", emb, "vec_id",
-      "embedding", nClusters = 4, k = 3)
+      "embedding", nClusters = nClusters, k = 3)
     val rows = got.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     // every query matches itself first at cosine 1.0
@@ -211,28 +228,25 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r1.length === queries.count())
     assert(r1.forall { case (q, n, c, _) => q == n && c == 1.0 })
     // brute-force within the same cells reproduces the rank-2 pick
-    val cells = Similarity.seedAssign(emb, "vec_id", "embedding", 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val vecs = emb.select($"vec_id", $"embedding".cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
+    val cell = cells(nClusters)
     rows.filter(_._4 == 2L).foreach { case (q, n, c, _) =>
       val best = vecs.keys
-        .filter(o => o != q && cells(o) == cells(q))
+        .filter(o => o != q && cell(o) == cell(q))
         .map(o => (-cos(vecs(q), vecs(o)), o)).min
       assert(best._2 == n || math.abs(-best._1 - c) < 1e-9,
         s"query $q: got $n want ${best._2}")
     }
+    got
   }
 
-  test("hardNegatives: never same-label, matches in-cluster brute force") {
+  /** hardNegatives at `nClusters`, checked: never same-label, dense
+    * ranks, and brute force inside the same cells agrees on the top
+    * pick. Returns the collected frame. */
+  private def hardNegativesParity(
+      nClusters: Int): org.apache.spark.sql.DataFrame = {
     val k = 5
     val got = Similarity.hardNegatives(emb, "vec_id", "embedding", "label",
-      nClusters = 4, k = k)
+      nClusters = nClusters, k = k)
     val labels = emb.select($"vec_id", $"label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val rows = got.collect()
@@ -244,23 +258,41 @@ class SimilaritySpec extends AnyFunSuite {
       rs.map(_._3).sorted.toSeq == (1L to rs.length.toLong)
     })
     // brute-force replay inside the same cells agrees on the top pick
-    val cells = Similarity.seedAssign(emb, "vec_id", "embedding", 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val vecs = emb.select($"vec_id", $"embedding".cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
+    val cell = cells(nClusters)
     val top = rows.filter(_._3 == 1L).map(t => t._1 -> t._2).toMap
     top.foreach { case (a, n) =>
-      val best = vecs.keys.filter(o => o != a && cells(o) == cells(a) &&
+      val best = vecs.keys.filter(o => o != a && cell(o) == cell(a) &&
           labels(o) != labels(a))
         .map(o => (-cos(vecs(a), vecs(o)), o)).minOption
       assert(best.exists(_._2 == n) ||
         best.exists { case (c, o) => cos(vecs(a), vecs(n)) >= -c - 1e-12 },
         s"anchor $a: got $n want ${best.map(_._2)}")
+    }
+    got
+  }
+
+  test("knnJoin: self-match at rank 1, in-cell brute-force parity") {
+    knnJoinParity(4)
+  }
+
+  test("hardNegatives: never same-label, matches in-cluster brute force") {
+    hardNegativesParity(4)
+  }
+
+  test("2 clusters at 4 cores take the salted join: __slice key, in-cell parity") {
+    // slices = defaultParallelism / nClusters = 4 / 2, so both joins
+    // run the salted branch — at nClusters >= 4 (every other test and
+    // Verify query) local[4] collapses it to the plain cluster join
+    assert(spark.sparkContext.defaultParallelism / 2 === 2)
+    val plans = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    Seq(knnJoinParity(2), hardNegativesParity(2)).foreach { got =>
+      val plan = got.queryExecution.executedPlan
+      val joinKeys = plans.collect(plan) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+          j.leftKeys.flatMap(_.references.map(_.name)).toSet
+      }
+      assert(joinKeys.contains(Set("cluster", "__slice")), plan.toString)
     }
   }
 
