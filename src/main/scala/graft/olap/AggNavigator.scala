@@ -2,7 +2,7 @@ package graft.olap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, StructField, StructType}
 
 /** Mondrian-style AGGREGATE NAVIGATION — the serving-layer feature the
   * reference's OLAP stack ships as "aggregate tables" (Mondrian reads
@@ -112,13 +112,29 @@ object AggNavigator {
 
   /** A registered aggregate table: its grain, its materialized size
     * (the navigator's cost model, same as Mondrian's row-count
-    * heuristic), where it lives, and its grain columns' types
-    * (captured from the written frame at register/refresh time so the
-    * serving path never re-reads parquet footers just to type a null
-    * level slot). */
+    * heuristic), where it lives, and the schema of the frame the
+    * engine wrote there — captured at register/registerShared/refresh
+    * (after a refresh that is the widened `decimal(38,2)` partials, as
+    * written) and made nullable, exactly as a parquet read reports it.
+    * Every engine read of the table goes through [[read]], which hands
+    * Spark this schema, so no read pays a footer-inference job; grain
+    * column types (MDX slicer typing, null level slots) come from it
+    * too. The engine wrote the schema, so it needs no invalidation. */
   final case class AggTable(name: String, grain: Seq[String], rows: Long,
-      path: String,
-      grainTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty)
+      path: String, schema: StructType) {
+    /** The stored table, planned without touching its files. */
+    def read(spark: SparkSession): DataFrame =
+      spark.read.schema(schema).parquet(path)
+    /** The grain columns, typed as written. */
+    def grainFields: Seq[StructField] =
+      schema.filter(f => grain.contains(f.name))
+  }
+
+  /** The schema a parquet read of `written`'s output reports: the
+    * same fields, all nullable (file sources never trust writer
+    * nullability). */
+  private def asRead(written: DataFrame): StructType =
+    org.apache.spark.sql.graft.Bridge.asNullable(written.schema)
 
   final case class Registry(spark: SparkSession, measures: Seq[Measure],
       aggs: Seq[AggTable]) {
@@ -153,10 +169,8 @@ object AggNavigator {
       val path = s"$root/agg_$name"
       val partials = partialsFor(fact, grain, measures)
       partials.write.mode("overwrite").parquet(path)
-      val rows = spark.read.parquet(path).count()
-      AggTable(name, grain, rows, path,
-        partials.schema.filter(f => grain.contains(f.name))
-          .map(f => f.name -> f.dataType).toMap)
+      val written = AggTable(name, grain, 0L, path, asRead(partials))
+      written.copy(rows = written.read(spark).count())
     }
     Registry(spark, measures, aggs)
   }
@@ -235,9 +249,7 @@ object AggNavigator {
         .select((grain ++ pNames).map(col): _*)
       carved.write.mode("overwrite").parquet(path)
       AggTable(name, grain,
-        gidRows.getOrElse(gidOf(allLevels, grain), 0L), path,
-        carved.schema.filter(f => grain.contains(f.name))
-          .map(f => f.name -> f.dataType).toMap)
+        gidRows.getOrElse(gidOf(allLevels, grain), 0L), path, asRead(carved))
     }
     Registry(spark, measures, aggs)
   }
@@ -254,7 +266,12 @@ object AggNavigator {
     * ([[graft.sources.Warehouse.publish]]), so a concurrent navigated
     * drill reads the old committed table or the new one, never a
     * half-written directory. Returns the refreshed registry (row
-    * counts re-measured — they are the navigator's cost model).
+    * counts re-measured — they are the navigator's cost model — and
+    * each rewritten table's schema taken from the frame it wrote: the
+    * re-summed decimal partials widen, e.g. `decimal(28,2)` to
+    * `decimal(38,2)`). Serve from the returned registry only: the one
+    * passed in still describes the replaced files, and a read through
+    * it fails on a widened column instead of narrowing it.
     *
     * REPLAY SAFETY: pass the source's batch identity as `batchId`
     * when deliveries are at-least-once (foreachBatch retries, a crash
@@ -333,10 +350,10 @@ object AggNavigator {
       if (alreadyApplied)
         // rows stay the navigator's cost model even on the skip path —
         // a stale pre-absorb count would let `choose` mis-rank tables
-        agg.copy(rows = spark.read.parquet(agg.path).count())
+        agg.copy(rows = agg.read(spark).count())
       else {
         val fold = reg.measures.flatMap(_.combine)
-        val merged = spark.read.parquet(agg.path)
+        val merged = agg.read(spark)
           .unionByName(deltaPartials(agg))
           .groupBy(agg.grain.map(col): _*).agg(fold.head, fold.tail: _*)
         graft.sources.Warehouse.publish(spark, agg.path) { tmp =>
@@ -357,14 +374,15 @@ object AggNavigator {
               id.toString), true).close()
           }
         }
-        agg.copy(rows = spark.read.parquet(agg.path).count())
+        val written = agg.copy(schema = asRead(merged))
+        written.copy(rows = written.read(spark).count())
       }
     }
     reg.copy(aggs = aggs)
   }
 
   /** Persist the registry's metadata — grains, row counts (the cost
-    * model), table paths, grain column types — as one JSON relation
+    * model), table paths, table schemas — as one JSON relation
     * under `root/registry_meta`. Measures are CODE, not data: the
     * caller re-supplies them at [[load]], the same way a Mondrian
     * schema file defines measures while the database holds the
@@ -372,9 +390,9 @@ object AggNavigator {
     * immediately — without this, a restart loses `choose`'s cost
     * model and every grain definition, and the only recovery is a
     * full re-register (one fact scan per registry it didn't need).
-    * Grain types travel as parallel (column, DataType.json) arrays —
-    * inference-proof, unlike a JSON map (which the reader would
-    * re-infer as a row-dependent struct). The write rides
+    * Each table's schema travels as one `DataType.json` string —
+    * inference-proof, unlike a nested JSON value (which the reader
+    * would re-infer as a row-dependent struct). The write rides
     * [[graft.sources.Warehouse.publish]]'s atomic rename-swap: a
     * crash mid-save leaves the PREVIOUS metadata intact — an in-place
     * overwrite would corrupt exactly the serving-restart path this
@@ -382,11 +400,8 @@ object AggNavigator {
   def save(reg: Registry, root: String): Unit = {
     import reg.spark.implicits._
     val meta = reg.aggs.zipWithIndex.map { case (a, i) =>
-      val (tCols, tJson) = a.grainTypes.toSeq.sortBy(_._1)
-        .map { case (k, v) => (k, v.json) }.unzip
-      (i, a.name, a.grain, a.rows, a.path, tCols, tJson)
-    }.toDF("idx", "name", "grain", "rows", "path",
-        "grain_type_cols", "grain_type_json")
+      (i, a.name, a.grain, a.rows, a.path, a.schema.json)
+    }.toDF("idx", "name", "grain", "rows", "path", "schema")
     graft.sources.Warehouse.publish(reg.spark, s"$root/registry_meta") {
       tmp => meta.coalesce(1).write.mode("overwrite").json(tmp)
     }
@@ -398,18 +413,17 @@ object AggNavigator {
     * catches a mismatch loudly). */
   def load(spark: SparkSession, measures: Seq[Measure],
       root: String): Registry = {
-    val aggs = spark.read.json(s"$root/registry_meta")
-      .orderBy(col("idx")).collect().toSeq.map { r =>
-      val tCols = r.getAs[scala.collection.Seq[String]]("grain_type_cols")
-      val tJson = r.getAs[scala.collection.Seq[String]]("grain_type_json")
+    val meta = spark.read.json(s"$root/registry_meta")
+    require(meta.columns.contains("schema"),
+      s"$root/registry_meta has no 'schema' column (columns: " +
+        s"${meta.columns.mkString(", ")}) — re-save the registry")
+    val aggs = meta.orderBy(col("idx")).collect().toSeq.map { r =>
       AggTable(
         r.getAs[String]("name"),
         r.getAs[scala.collection.Seq[String]]("grain").toSeq,
         r.getAs[Long]("rows"),
         r.getAs[String]("path"),
-        tCols.zip(tJson).map { case (k, v) =>
-          k -> org.apache.spark.sql.types.DataType.fromJson(v)
-        }.toMap)
+        DataType.fromJson(r.getAs[String]("schema")).asInstanceOf[StructType])
     }
     Registry(spark, measures, aggs)
   }
@@ -559,7 +573,7 @@ object AggNavigator {
     val want = fact.agg(direct.head, direct.tail: _*).head()
     val rows = reg.aggs.map { agg =>
       val merged = reg.measures.map(_.merge)
-      val got = reg.spark.read.parquet(agg.path)
+      val got = agg.read(reg.spark)
         .agg(merged.head, merged.tail: _*).head()
       val ok = reg.measures.indices.forall(i => want.get(i) == got.get(i))
       (agg.name, agg.rows, ok)
@@ -595,7 +609,7 @@ object AggNavigator {
     reg.choose((groupCols ++ slicerCols).distinct) match {
       case Some(agg) =>
         val merged = reg.measures.map(_.merge)
-        slicers.foldLeft(reg.spark.read.parquet(agg.path))(_.filter(_))
+        slicers.foldLeft(agg.read(reg.spark))(_.filter(_))
           .groupBy(groupCols.map(col): _*).agg(merged.head, merged.tail: _*)
       case None =>
         val direct = reg.measures.map(_.direct)
@@ -615,22 +629,22 @@ object AggNavigator {
     * LITERAL per set, first level = most significant bit, exactly
     * Spark's/SQL's GROUPING() weighting, so the result is
     * hash-comparable with a `GROUP BY GROUPING SETS` oracle. Level
-    * types for the null slots come from the grain types captured at
-    * register/refresh time — no parquet footer reads on the serving
-    * path, and a fully-routed member space never touches the fact
-    * lineage. */
+    * types for the null slots come from the rollups' written schemas,
+    * and each set reads its rollup through [[AggTable.read]] with that
+    * schema: building a fully-routed member space starts no Spark job
+    * and never touches the fact lineage. */
   def navigateSets(reg: Registry, fact: => DataFrame,
       allLevels: Seq[String], sets: Seq[Seq[String]],
       slicers: Seq[Column] = Nil, slicerCols: Seq[String] = Nil)
       : DataFrame = {
     require(sets.nonEmpty, "need at least one member set")
-    val levelType: Map[String, org.apache.spark.sql.types.DataType] =
-      reg.aggs.flatMap(_.grainTypes).toMap
+    val levelType: Map[String, DataType] =
+      reg.aggs.flatMap(_.grainFields).map(f => f.name -> f.dataType).toMap
     // a level carried by NO rollup: its null slots must still be
     // typed (NullType won't write to parquet), and only the fact
     // knows the type — resolved lazily so a fully-covered member
     // space never touches the fact lineage
-    lazy val factType: Map[String, org.apache.spark.sql.types.DataType] =
+    lazy val factType: Map[String, DataType] =
       fact.schema.map(f => f.name -> f.dataType).toMap
     val branches = sets.map { groupCols =>
       val gid = gidOf(allLevels, groupCols)

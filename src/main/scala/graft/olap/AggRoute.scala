@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPl
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** TRANSPARENT aggregate-table rewrite for plain SQL — the half of
   * Mondrian's aggregate-navigation contract that [[AggNavigator]]
@@ -79,8 +78,7 @@ object AggRoute {
       direct: Expression, dataType: org.apache.spark.sql.types.DataType,
       measure: AggNavigator.Measure)
 
-  private final case class Route(reg: AggNavigator.Registry,
-      sigs: Seq[Sig], aggSchemas: Map[String, StructType])
+  private final case class Route(reg: AggNavigator.Registry, sigs: Seq[Sig])
 
   /** Path-keyed routing table (the key is the scan's own root-path
     * string, extracted from an analyzed read of the fact so it
@@ -88,11 +86,11 @@ object AggRoute {
   private val routes =
     new java.util.concurrent.ConcurrentHashMap[String, Route]()
 
-  /** The root path a `spark.read.parquet(path)` scan resolves to —
+  /** The root path the scan of `path` (read as `df`) resolves to —
     * registration and match must agree on qualification ('file:/…'),
     * so both sides derive it the same way: from the relation. */
-  private def scanRoot(spark: SparkSession, path: String): String = {
-    val rel = spark.read.parquet(path).queryExecution.analyzed
+  private def scanRoot(df: DataFrame, path: String): String = {
+    val rel = df.queryExecution.analyzed
       .collectFirst { case r: LogicalRelation => r }
       .getOrElse(throw new IllegalArgumentException(
         s"'$path' did not resolve to a file relation"))
@@ -112,19 +110,22 @@ object AggRoute {
 
   /** Attach `reg`'s rollups to the fact table at `factPath`: every
     * eligible `spark.sql` aggregate over that path is rewritten onto
-    * the smallest covering rollup from now on. Measure signatures are
-    * extracted from an OPTIMIZED probe plan so they sit at the same
-    * fixpoint the user's expressions reach when the rule compares
-    * them; rollup schemas are captured once so the serving path never
-    * re-reads parquet footers. Re-routing the same path (after a
-    * refresh changed row counts) replaces the entry; the path is
-    * detached while signatures re-extract, so the probe itself can
-    * never be answered from a rollup. */
+    * the smallest covering rollup from now on. The fact is read once
+    * (its one footer-inference job is the whole cost of a route): the
+    * routing key and the measure signatures both come from that
+    * frame. Signatures are extracted from an OPTIMIZED probe plan so
+    * they sit at the same fixpoint the user's expressions reach when
+    * the rule compares them. Rewritten plans scan each rollup with
+    * its [[AggNavigator.AggTable.schema]] from `reg`, so a routed
+    * query reads no footer — and a route answers from the registry it
+    * was given: re-route with the registry a refresh returns (new row
+    * counts, widened partial types). Re-routing the same path replaces
+    * the entry; the path is detached while signatures re-extract, so
+    * the probe itself can never be answered from a rollup. */
   def route(factPath: String, reg: AggNavigator.Registry): Unit = {
-    val spark = reg.spark
-    val key = scanRoot(spark, factPath)
+    val fact = reg.spark.read.parquet(factPath)
+    val key = scanRoot(fact, factPath)
     routes.remove(key)
-    val fact = spark.read.parquet(factPath)
     val sigs = reg.measures.map { m =>
       val plan = fact.groupBy().agg(m.direct).queryExecution.optimizedPlan
       val e = plan.collectFirst {
@@ -139,15 +140,13 @@ object AggRoute {
       "measures " + dup.values.flatten.map(_.name).toSeq.sorted
         .mkString("[", ", ", "]") +
         " share one direct expression — the rewrite could not pick one")
-    val aggSchemas = reg.aggs.map(a =>
-      a.name -> spark.read.parquet(a.path).schema).toMap
-    routes.put(key, Route(reg, sigs, aggSchemas)): Unit
+    routes.put(key, Route(reg, sigs)): Unit
   }
 
   /** Detach the fact at `factPath` — subsequent queries plan against
     * the fact again. */
   def unroute(spark: SparkSession, factPath: String): Unit =
-    routes.remove(scanRoot(spark, factPath)): Unit
+    routes.remove(scanRoot(spark.read.parquet(factPath), factPath)): Unit
 
   /** Detach every routed fact (test teardown, bulk re-registration). */
   def clear(): Unit = routes.clear()
@@ -262,8 +261,7 @@ object AggRoute {
     }
     // ---- build the replacement: rollup scan → filters → merge ----
     val spark = route.reg.spark
-    val base = spark.read.schema(route.aggSchemas(table.name))
-      .parquet(table.path)
+    val base = table.read(spark)
     val byName: Map[String, Attribute] = base.queryExecution.analyzed
       .output.map(a => a.name.toLowerCase(Locale.ROOT) -> a).toMap
     def onRollup(e: Expression): Expression = e.transformUp {

@@ -340,7 +340,7 @@ object Mdx {
     // silently null out — out-of-range integers, malformed dates,
     // non-numeric decimals, garbled booleans — is a NAMED error here
     // instead of a silently empty drill. The type comes from the
-    // REGISTRY's captured grain types when the cube is routed and a
+    // REGISTRY's written rollup schemas when the cube is routed and a
     // rollup carries the level (so a partials-served sliced drill
     // never constructs the fact lineage, not even for its schema);
     // only a level no rollup carries falls back to the fact schema —
@@ -355,15 +355,13 @@ object Mdx {
         // 'Anio' must find column 'anio' exactly as col() would
         val resolver = spark.sessionState.analyzer.resolver
         val tz = spark.sessionState.conf.sessionLocalTimeZone
-        val grainTypes: Seq[(String, org.apache.spark.sql.types.DataType)] =
-          ref.registry.toSeq.flatMap(_.aggs.flatMap(_.grainTypes))
+        val grainFields = ref.registry.toSeq.flatMap(_.aggs.flatMap(_.grainFields))
         lazy val factSchema = memoRef.fact().schema
         p.slicers.map { m =>
           resolve(m.hierarchy, m.level): Unit
-          val (colName, dt) = grainTypes
-            .find { case (n, _) => resolver(n, m.level) }
-            .orElse(factSchema.find(f => resolver(f.name, m.level))
-              .map(f => f.name -> f.dataType))
+          val (colName, dt) = grainFields.find(f => resolver(f.name, m.level))
+            .orElse(factSchema.find(f => resolver(f.name, m.level)))
+            .map(f => f.name -> f.dataType)
             .getOrElse(throw new IllegalArgumentException(
               s"slicer level '[${m.level}]' is not a column of cube " +
                 s"'${p.cube}' (columns: " +

@@ -280,8 +280,14 @@ object Warehouse {
     // publish by RENAME-SWAP, not delete-then-rename: the old dir moves
     // aside in one atomic rename and the new one moves in with the
     // next, so the no-directory window is two metadata ops, not a
-    // recursive delete; the displaced dir is removed last (open readers
-    // of its files survive the unlink, POSIX semantics)
+    // recursive delete; the displaced dir is removed last. This is NOT
+    // safe for Spark readers: a plan lists `p/part-*` when it is
+    // planned and its tasks open those files later BY PATH, so once
+    // the swap moves them aside (before the delete, even) a reader
+    // planned against the old dir fails — perfbench/NOTES.md, Findings,
+    // records it as FAILED_READ_FILE.FILE_NOT_EXIST in 3 of 20 reads
+    // beside a refresh. ROADMAP item 2 replaces this with immutable
+    // generation dirs.
     val old = new org.apache.hadoop.fs.Path(parent,
       displacedPrefix(p.getName) + java.util.UUID.randomUUID().toString)
     val existed = fs.exists(p)

@@ -22,6 +22,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .expression(c)
 
+  /** `schema` with every field nullable, nested types included — what
+    * a file-source read reports for data written with `schema`
+    * (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Drain the async listener bus (`private[spark]`) — profiling
     * tooling needs a real barrier before reading listener state; a
     * sleep races late events (ADVICE r16). */

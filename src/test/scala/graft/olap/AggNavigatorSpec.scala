@@ -1,7 +1,9 @@
 package graft.olap
 
 import graft.TestSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,6 +55,28 @@ class AggNavigatorSpec extends AnyFunSuite {
   private def rows(df: DataFrame, keys: Seq[String]): Seq[Seq[Any]] =
     df.orderBy(keys.map(col): _*).collect().toSeq.map(_.toSeq)
 
+  /** Each table's recorded schema is the one a plain parquet read of
+    * its files infers — what lets every engine read skip inference. */
+  private def assertSchemasAsRead(reg: AggNavigator.Registry): Unit =
+    for (a <- reg.aggs)
+      assert(a.schema === spark.read.parquet(a.path).schema,
+        s"recorded schema of ${a.name} differs from its files")
+
+  /** `body`'s result and the Spark jobs started while it ran (the
+    * listener bus drained on both sides). */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    Bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(l)
+    try { val out = body; Bridge.waitListenerBusEmpty(sc); (out, n.get) }
+    finally sc.removeSparkListener(l)
+  }
+
   test("routed answers are bit-identical to the direct fact aggregate") {
     for (groupCols <- Seq(Seq("y"), Seq("y", "m"), Seq("status"),
         Seq("prio"), Seq("status", "prio"))) {
@@ -90,6 +114,13 @@ class AggNavigatorSpec extends AnyFunSuite {
     }
     // cost model re-measured: refreshed tables carry post-append counts
     assert(incr.aggs.map(_.rows) === full.aggs.map(_.rows))
+    // the refresh re-sums stored decimal partials, widening them; the
+    // registry records the type as written, not the registered one
+    assertSchemasAsRead(incr)
+    val sumType = (r: AggNavigator.Registry) =>
+      r.aggs.head.schema("__p_sum_avg_price").dataType
+    assert(sumType(full) === org.apache.spark.sql.types.DecimalType(28, 2))
+    assert(sumType(incr) === org.apache.spark.sql.types.DecimalType(38, 2))
   }
 
   test("sketch distinct-count: routed estimate EQUALS the direct estimate") {
@@ -209,7 +240,8 @@ class AggNavigatorSpec extends AnyFunSuite {
     val shared = AggNavigator.registerShared(fact, grains, ms, rootB)
     assert(shared.aggs.map(a => (a.name, a.grain, a.rows)) ===
       sep.aggs.map(a => (a.name, a.grain, a.rows)))
-    assert(shared.aggs.map(_.grainTypes) === sep.aggs.map(_.grainTypes))
+    assertSchemasAsRead(sep)
+    assertSchemasAsRead(shared)
     for ((a, b) <- sep.aggs.zip(shared.aggs)) {
       val left = spark.read.parquet(a.path)
       val cols = left.columns.sorted.toSeq
@@ -310,7 +342,8 @@ class AggNavigatorSpec extends AnyFunSuite {
     val loaded = AggNavigator.load(spark, measures, root)
     assert(loaded.aggs.map(a => (a.name, a.grain, a.rows, a.path)) ===
       reg0.aggs.map(a => (a.name, a.grain, a.rows, a.path)))
-    assert(loaded.aggs.map(_.grainTypes) === reg0.aggs.map(_.grainTypes))
+    assert(loaded.aggs.map(_.schema) === reg0.aggs.map(_.schema))
+    assertSchemasAsRead(loaded)
     var built = false
     for (groupCols <- Seq(Seq("y"), Seq("status")))
       assert(rows(AggNavigator.navigate(loaded, { built = true; fact },
@@ -328,6 +361,53 @@ class AggNavigatorSpec extends AnyFunSuite {
           .agg(measures.map(_.direct).head, measures.map(_.direct).tail: _*),
           groupCols))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  test("load of a registry_meta without the schema column fails naming it") {
+    val root = java.nio.file.Files.createTempDirectory("aggnav_oldmeta").toString
+    import spark.implicits._
+    // the earlier layout: grain types as parallel arrays, no schema
+    Seq((0, "yearly", Seq("y"), 3L, s"$root/agg_yearly", Seq("y"),
+      Seq("\"integer\""))).toDF("idx", "name", "grain", "rows", "path",
+      "grain_type_cols", "grain_type_json")
+      .write.json(s"$root/registry_meta")
+    val e = intercept[IllegalArgumentException](
+      AggNavigator.load(spark, measures, root))
+    assert(e.getMessage.contains("'schema'"), e.getMessage)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  test("routed navigate, navigateSets and sliced Mdx.run build with 0 Spark jobs; AggRoute.route costs 1") {
+    val root = java.nio.file.Files.createTempDirectory("aggnav_jobs").toString
+    val factPath = s"$root/fact"
+    fact.write.parquet(factPath)
+    val staged = spark.read.parquet(factPath)
+    val reg = AggNavigator.registerShared(staged,
+      Seq("ym" -> Seq("y", "m"), "status" -> Seq("status")), measures, root)
+    var built = false
+    def factOf = { built = true; staged }
+    try {
+      val (nav, navJobs) = withJobs(AggNavigator.navigate(reg, factOf, Seq("y")))
+      assert(navJobs === 0)
+      assert(rows(nav, Seq("y")) === rows(staged.groupBy(col("y"))
+        .agg(measures.map(_.direct).head, measures.map(_.direct).tail: _*),
+        Seq("y")))
+      assert(withJobs(AggNavigator.navigateSets(reg, factOf,
+        Seq("y", "m", "status"), Seq(Seq("y", "m"), Seq("status"), Nil)))._2
+        === 0)
+      val mdx =
+        """SELECT {[Measures].[n]} ON COLUMNS,
+          | {[fecha].[m].Members} ON ROWS
+          |FROM [orders] WHERE ([fecha].[y].[1996])""".stripMargin
+      assert(withJobs(Mdx.run(mdx,
+        Map("orders" -> CubeQuery.CubeRef(() => factOf, registry = Some(reg))),
+        Map("orders" -> Seq(Cube.Hierarchy("fecha", Seq("y", "m"))))))._2 === 0)
+      assert(!built, "routed reads must not construct the fact lineage")
+      assert(withJobs(AggRoute.route(factPath, reg))._2 === 1)
+    } finally {
+      AggRoute.unroute(spark, factPath)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
   }
 
   test("audit passes fresh/refreshed tables and catches a stale one") {
