@@ -46,6 +46,16 @@ object AggNavigator {
     def combine: Seq[Column]
   }
 
+  /** The type an exact decimal-sum partial is STORED at: the fixed
+    * point of Spark's sum widening (`decimal(p,s)` sums to
+    * `decimal(min(38, p+10), s)`), so [[Measure.combine]] — a sum of
+    * stored sums — writes back exactly the type it read, and a table's
+    * schema never changes after registration. Widening an exact
+    * decimal is lossless, and the merge already summed to this type,
+    * so served answers are unchanged. */
+  private def storedSum(dt: DecimalType): DecimalType =
+    DecimalType(DecimalType.MAX_PRECISION, dt.scale)
+
   /** count(*) — partial is a long count, merge is its sum. */
   final case class CountAll(name: String) extends Measure {
     def direct: Column = count(lit(1)).as(name)
@@ -67,7 +77,7 @@ object AggNavigator {
       round(sum(col(column).cast(dt)).cast("double") / count(col(column)),
         scale).as(name)
     def partials: Seq[Column] = Seq(
-      sum(col(column).cast(dt)).as(s"__p_sum_$name"),
+      sum(col(column).cast(dt)).cast(storedSum(dt)).as(s"__p_sum_$name"),
       count(col(column)).as(s"__p_cnt_$name"))
     def merge: Column =
       round(sum(col(s"__p_sum_$name")).cast("double") /
@@ -81,7 +91,8 @@ object AggNavigator {
   final case class ExactSum(name: String, column: String,
       dt: DecimalType = DecimalType(18, 2)) extends Measure {
     def direct: Column = sum(col(column).cast(dt)).cast("double").as(name)
-    def partials: Seq[Column] = Seq(sum(col(column).cast(dt)).as(s"__p_sum_$name"))
+    def partials: Seq[Column] =
+      Seq(sum(col(column).cast(dt)).cast(storedSum(dt)).as(s"__p_sum_$name"))
     def merge: Column = sum(col(s"__p_sum_$name")).cast("double").as(name)
     def combine: Seq[Column] =
       Seq(sum(col(s"__p_sum_$name")).as(s"__p_sum_$name"))
@@ -114,8 +125,10 @@ object AggNavigator {
     * (the navigator's cost model, same as Mondrian's row-count
     * heuristic), where it lives, and the schema of the frame the
     * engine wrote there — captured at register/registerShared/refresh
-    * (after a refresh that is the widened `decimal(38,2)` partials, as
-    * written) and made nullable, exactly as a parquet read reports it.
+    * and made nullable, exactly as a parquet read reports it. Every
+    * partial is stored at the type its refresh fold produces (see
+    * `storedSum`), so a refresh rewrites the same schema and a
+    * registry from before it still reads the new files.
     * Every engine read of the table goes through [[read]], which hands
     * Spark this schema, so no read pays a footer-inference job; grain
     * column types (MDX slicer typing, null level slots) come from it
@@ -263,15 +276,17 @@ object AggNavigator {
     * decimal sums add; HLL sketches union) — exactly the q207
     * member-set merge argument, applied to the whole registry. Each
     * rewrite publishes via atomic rename-swap
-    * ([[graft.sources.Warehouse.publish]]), so a concurrent navigated
-    * drill reads the old committed table or the new one, never a
-    * half-written directory. Returns the refreshed registry (row
-    * counts re-measured — they are the navigator's cost model — and
-    * each rewritten table's schema taken from the frame it wrote: the
-    * re-summed decimal partials widen, e.g. `decimal(28,2)` to
-    * `decimal(38,2)`). Serve from the returned registry only: the one
-    * passed in still describes the replaced files, and a read through
-    * it fails on a widened column instead of narrowing it.
+    * ([[graft.sources.Warehouse.publish]]), so no reader ever lists a
+    * half-written directory. That is not full reader isolation: a
+    * drill planned before the swap and run after it can fail with
+    * FILE_NOT_EXIST, because Spark lists files at planning time and
+    * opens them later (see `Warehouse.installBuilt`, ROADMAP item 2).
+    * Returns the refreshed registry: row counts re-measured (they are
+    * the navigator's cost model) and each table's schema taken from
+    * the planned fold. The fold is type-stable (partials are stored at
+    * their combine type), so that schema equals the one passed in,
+    * and a registry from before the refresh still reads the new files
+    * — only its row counts are stale.
     *
     * REPLAY SAFETY: pass the source's batch identity as `batchId`
     * when deliveries are at-least-once (foreachBatch retries, a crash
@@ -291,7 +306,8 @@ object AggNavigator {
     * table with its marker (retry skips) — exactly-once by
     * construction, no audit-only window. The skip path re-measures
     * `rows` from the committed table so a replayed batch still returns
-    * the registry with the cost model the navigator ranks by. Omit
+    * the registry with the cost model the navigator ranks by — also
+    * when the retry is handed the registry from before the crash. Omit
     * batchId only for one-shot batch use (ledger then stays empty). */
   def refresh(reg: Registry, delta: DataFrame,
       batchId: Option[Long] = None): Registry = {
@@ -346,16 +362,11 @@ object AggNavigator {
     val aggs = graft.operators.Par.mapSeq(reg.aggs) { agg =>
       val ledger = new org.apache.hadoop.fs.Path(s"${agg.path}/_applied")
       val fs = ledger.getFileSystem(conf)
-      val alreadyApplied = applied(agg.name)
-      if (alreadyApplied)
-        // rows stay the navigator's cost model even on the skip path —
-        // a stale pre-absorb count would let `choose` mis-rank tables
-        agg.copy(rows = agg.read(spark).count())
-      else {
-        val fold = reg.measures.flatMap(_.combine)
-        val merged = agg.read(spark)
-          .unionByName(deltaPartials(agg))
-          .groupBy(agg.grain.map(col): _*).agg(fold.head, fold.tail: _*)
+      val fold = reg.measures.flatMap(_.combine)
+      val merged = agg.read(spark)
+        .unionByName(deltaPartials(agg))
+        .groupBy(agg.grain.map(col): _*).agg(fold.head, fold.tail: _*)
+      if (!applied(agg.name))
         graft.sources.Warehouse.publish(spark, agg.path) { tmp =>
           merged.write.parquet(tmp)
           // the ledger rides the swap: carry every prior marker (they
@@ -374,9 +385,13 @@ object AggNavigator {
               id.toString), true).close()
           }
         }
-        val written = agg.copy(schema = asRead(merged))
-        written.copy(rows = written.read(spark).count())
-      }
+      // both paths describe the committed files: the fold's schema is
+      // the stored one (a replayed batch skips the publish, but the
+      // planned merge still types its table), and rows stay the
+      // navigator's cost model even on the skip path — a stale
+      // pre-absorb count would let `choose` mis-rank tables
+      val written = agg.copy(schema = asRead(merged))
+      written.copy(rows = written.read(spark).count())
     }
     reg.copy(aggs = aggs)
   }

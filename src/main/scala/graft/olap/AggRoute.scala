@@ -117,9 +117,10 @@ object AggRoute {
     * they sit at the same fixpoint the user's expressions reach when
     * the rule compares them. Rewritten plans scan each rollup with
     * its [[AggNavigator.AggTable.schema]] from `reg`, so a routed
-    * query reads no footer — and a route answers from the registry it
-    * was given: re-route with the registry a refresh returns (new row
-    * counts, widened partial types). Re-routing the same path replaces
+    * query reads no footer. A refresh never changes those schemas
+    * (partials are stored at their fold type), so a route stays valid
+    * across refreshes; re-route with the registry a refresh returns to
+    * rank by its new row counts. Re-routing the same path replaces
     * the entry; the path is detached while signatures re-extract, so
     * the probe itself can never be answered from a rollup. */
   def route(factPath: String, reg: AggNavigator.Registry): Unit = {

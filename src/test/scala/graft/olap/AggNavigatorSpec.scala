@@ -85,6 +85,8 @@ class AggNavigatorSpec extends AnyFunSuite {
         .agg(measures.map(_.direct).head, measures.map(_.direct).tail: _*)
       assert(rows(routed, groupCols) === rows(direct, groupCols),
         s"route for $groupCols diverged from the direct aggregate")
+      // stored partial types never leak into what a measure serves
+      assert(routed.schema.map(_.dataType) === direct.schema.map(_.dataType))
     }
   }
 
@@ -104,8 +106,8 @@ class AggNavigatorSpec extends AnyFunSuite {
     val base = fact.filter(col("y") < 1997)
     val delta = fact.filter(col("y") >= 1997)
     val grains = Seq("ym" -> Seq("y", "m"), "status" -> Seq("status"))
-    val incr = AggNavigator.refresh(
-      AggNavigator.register(base, grains, measures, r1), delta)
+    val reg0 = AggNavigator.register(base, grains, measures, r1)
+    val incr = AggNavigator.refresh(reg0, delta)
     val full = AggNavigator.register(fact, grains, measures, r2)
     for (groupCols <- Seq(Seq("y"), Seq("y", "m"), Seq("status"))) {
       assert(rows(AggNavigator.navigate(incr, fact, groupCols), groupCols) ===
@@ -114,13 +116,14 @@ class AggNavigatorSpec extends AnyFunSuite {
     }
     // cost model re-measured: refreshed tables carry post-append counts
     assert(incr.aggs.map(_.rows) === full.aggs.map(_.rows))
-    // the refresh re-sums stored decimal partials, widening them; the
-    // registry records the type as written, not the registered one
+    // the refresh re-sums stored decimal partials; they are stored at
+    // the type that fold produces, so the files keep the registered
+    // schema and the pre-refresh registry still describes them
     assertSchemasAsRead(incr)
-    val sumType = (r: AggNavigator.Registry) =>
-      r.aggs.head.schema("__p_sum_avg_price").dataType
-    assert(sumType(full) === org.apache.spark.sql.types.DecimalType(28, 2))
-    assert(sumType(incr) === org.apache.spark.sql.types.DecimalType(38, 2))
+    assert(incr.aggs.map(_.schema) === reg0.aggs.map(_.schema))
+    assert(incr.aggs.map(_.schema) === full.aggs.map(_.schema))
+    assert(full.aggs.head.schema("__p_sum_avg_price").dataType ===
+      org.apache.spark.sql.types.DecimalType(38, 2))
   }
 
   test("sketch distinct-count: routed estimate EQUALS the direct estimate") {
@@ -213,6 +216,31 @@ class AggNavigatorSpec extends AnyFunSuite {
     // table 2 absorbed it exactly once → consistent
     assert(!verdicts(after.aggs.head.name) && verdicts(after.aggs(1).name),
       s"marker must skip exactly the marked table: $verdicts")
+  }
+
+  test("a retry handed the pre-refresh registry serves and audits like the rebuild") {
+    // at-least-once after a crash part-way through the registry: the
+    // crashed refresh returned nothing, so the retry holds only the
+    // registry it started from, while table files already moved on
+    val base = fact.filter(col("y") < 1997)
+    val b7 = fact.filter(col("y") >= 1997)
+    val grains = Seq("yearly" -> Seq("y"), "status" -> Seq("status"))
+    val reg0 = AggNavigator.register(base, grains, measures,
+      java.nio.file.Files.createTempDirectory("aggnav_retry").toString)
+    val once = AggNavigator.refresh(reg0, b7, Some(7L))
+    val retried = AggNavigator.refresh(reg0, b7, Some(7L))
+    assertSchemasAsRead(retried)
+    assert(retried.aggs.map(_.rows) === once.aggs.map(_.rows))
+    val full = AggNavigator.register(fact, grains, measures,
+      java.nio.file.Files.createTempDirectory("aggnav_retry_full").toString)
+    // the retried registry, and the stale one itself, read the
+    // refreshed files and answer like the rebuild
+    for (r <- Seq(retried, reg0); groupCols <- Seq(Seq("y"), Seq("status"))) {
+      assert(rows(AggNavigator.navigate(r, fact, groupCols), groupCols) ===
+        rows(AggNavigator.navigate(full, fact, groupCols), groupCols),
+        s"route for $groupCols diverged from rebuild")
+      assert(AggNavigator.audit(r, fact).collect().forall(_.getBoolean(2)))
+    }
   }
 
   test("registerShared ≡ register bit-for-bit (sketch bytes included) from ONE fact scan") {
