@@ -7347,16 +7347,17 @@ object Queries {
     * denormalized view (orders ⋈ customer) laid out by a 16-way bucket
     * of the dim key; an SCD1 segment overwrite for ~1% of customers
     * (custkey % 97 = 0) maps to its affected buckets, and ONLY those
-    * partitions are recomputed and swapped in via dynamic-partition
-    * overwrite ([[graft.etl.ViewRefresh]]). Untouched partitions keep
-    * their exact files (ViewRefreshSpec asserts byte-identity); the
-    * oracle is the full recompute with the update applied — so the
-    * partition-scoped refresh must land the view in exactly the
-    * all-rewrite state. Write amplification is (affected buckets)/16
-    * — ≈c/16 for c ≪ 16 changed keys, degrading gracefully to a full
-    * rewrite for bulk deltas (the fixture's ~15 random keys touch
-    * most buckets; the win case is the small delivery — see the
-    * module doc's B·(1−(1−1/B)^c) arithmetic). */
+    * buckets are recomputed and published as a new snapshot generation
+    * behind a manifest commit ([[graft.etl.ViewRefresh.refreshSnapshot]]).
+    * Untouched buckets keep their generation dirs and files
+    * (ViewRefreshSpec asserts it); the oracle is the full recompute
+    * with the update applied — so the partition-scoped refresh must
+    * land the view in exactly the all-rewrite state. Write
+    * amplification is (affected buckets)/16 — ≈c/16 for c ≪ 16 changed
+    * keys, degrading gracefully to a full rewrite for bulk deltas (the
+    * fixture's ~15 random keys touch most buckets; the win case is the
+    * small delivery — see the module doc's B·(1−(1−1/B)^c)
+    * arithmetic). */
   def q215ViewRefresh(s: SparkSession, dir: String): DataFrame = {
     import graft.etl.ViewRefresh
     val root = java.nio.file.Files.createTempDirectory("q215_view").toString
@@ -7371,7 +7372,7 @@ object Queries {
             col("c_mktsegment"))
       val dimV1 = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      ViewRefresh.materialize(view(dimV1), col("c_custkey"), n, path)
+      ViewRefresh.materializeSnapshot(view(dimV1), col("c_custkey"), n, path)
       // the SCD1 delta: ~1% of customers change segment
       val dimV2 = dimV1.withColumn("c_mktsegment",
         when(col("c_custkey") % 97 === 0, lit("UPDATED"))
@@ -7379,13 +7380,9 @@ object Queries {
       val changed = dimV1.filter(col("c_custkey") % 97 === 0)
         .select(col("c_custkey"))
       val buckets = ViewRefresh.affectedBuckets(changed, col("c_custkey"), n)
-      // isolated = true: the affected partitions install by atomic
-      // rename-swap (the Warehouse.publish idiom per bucket), so a
-      // concurrent reader sees committed partitions only — same rows,
-      // same hash as the dynamic-overwrite path, stronger isolation
-      ViewRefresh.refresh(view(dimV2), col("c_custkey"), n, buckets, path,
-        isolated = true)
-      localized(s.read.parquet(path)
+      ViewRefresh.refreshSnapshot(view(dimV2), col("c_custkey"), n, buckets,
+        path)
+      localized(ViewRefresh.readSnapshot(s, path)
         .groupBy(col("c_mktsegment").as("segment"))
         .agg(count(lit(1)).as("n_orders"),
           dsum(col("o_totalprice")).as("revenue")))

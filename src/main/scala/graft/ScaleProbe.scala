@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *  - `r13lookup`: band-index lookup alone at the key cap, across
   *    partition counts
   *  - `r14`: shared-scan agg registration, drill-across
-  *  - `r15`: closure maintenance, budget advisor, refresh isolation
+  *  - `r15`: closure maintenance, budget advisor, snapshot view refresh
   *  - `r17`: salted cluster join at 4 fixed clusters; PQ fit
   *    (production, independent per-slice, shared-seed sequential)
   *  - `flagship`: q36 / q64 / q87 / q11 / q91
@@ -1259,7 +1259,7 @@ object ScaleProbe {
     // maintenance: absorb a 1M-row append vs rebuilding everything
     val delta = synth(1000000L, rows)
     t0 = System.nanoTime()
-    AggNavigator.refresh(reg, delta)
+    val refreshed = AggNavigator.refresh(reg, delta)
     val refreshSec = (System.nanoTime() - t0) / 1e9
     val deltaPath = tmp("aggnav_delta")
     delta.write.mode("overwrite").parquet(deltaPath)
@@ -1271,7 +1271,7 @@ object ScaleProbe {
       f""""drill_direct_sec":${direct.map(_._1).min}%.3f,""" +
       f""""drill_routed_sec":${routed.map(_._1).min}%.3f,""" +
       f""""refresh_sec":$refreshSec%.2f,"rebuild_sec":$rebuildSec%.2f,""" +
-      s""""agg_rows":${reg.aggs.map(a => s""""${a.name}":${a.rows}""")
+      s""""agg_rows":${refreshed.aggs.map(a => s""""${a.name}":${a.rows}""")
         .mkString("{", ",", "}")},"replication":$k}""")
   }
 
@@ -1363,11 +1363,9 @@ object ScaleProbe {
     * should WIDEN with the corpus; (b) the budget advisor's greedy
     * selection layer beside plain advise — same single grouping-sets
     * fact pass on a k×1M fact, the driver-side knapsack must price at
-    * ~zero; (c) the refresh-isolation ladder at c=3 changed keys on a
-    * k×1M-row view, B=64: dynamic overwrite vs per-bucket rename swap
-    * vs snapshot generations — the three isolation levels should cost
-    * within noise of each other (all write the same ~3 buckets; the
-    * swap/manifest overhead is metadata). */
+    * ~zero; (c) a snapshot view refresh at c=3 changed keys on a
+    * k×1M-row view, B=64 (writes ~3 buckets; the manifest commit is
+    * metadata). */
   private def r15Probes(spark: SparkSession, dir: String, k: Int): Unit = {
     import graft.operators.Hierarchy
     import graft.olap.AggNavigator
@@ -1438,7 +1436,7 @@ object ScaleProbe {
     val adviseSec = adviseRuns.map(_._1).min
     val adviseBudgetSec = adviseRuns.map(_._2).min
 
-    // ----- (c) the refresh-isolation ladder at c=3 -----
+    // ----- (c) snapshot view refresh at c=3 -----
     val b = 64
     val dimPath = tmp("r15_dim")
     spark.range(100000L).selectExpr("id as k",
@@ -1455,25 +1453,13 @@ object ScaleProbe {
       when(col("k") < 3L, lit("UPDATED")).otherwise(col("seg")))
     val buckets = ViewRefresh.affectedBuckets(
       dim.filter(col("k") < 3L).select(col("k")), col("k"), b)
-    val pathDyn = tmp("r15_vdyn") + "/view"
-    val pathIso = tmp("r15_viso") + "/view"
     val pathSnap = tmp("r15_vsnap") + "/view"
-    ViewRefresh.materialize(view(dim), col("k"), b, pathDyn)
-    ViewRefresh.materialize(view(dim), col("k"), b, pathIso)
     ViewRefresh.materializeSnapshot(view(dim), col("k"), b, pathSnap)
-    val ladder = (1 to 2).map { _ =>
-      val tA = System.nanoTime()
-      ViewRefresh.refresh(view(updated), col("k"), b, buckets, pathDyn)
-      val a = secs(tA)
-      val tB = System.nanoTime()
-      ViewRefresh.refresh(view(updated), col("k"), b, buckets, pathIso,
-        isolated = true)
-      val bS = secs(tB)
-      val tC = System.nanoTime()
+    val snapRuns = (1 to 2).map { _ =>
+      val tS = System.nanoTime()
       ViewRefresh.refreshSnapshot(view(updated), col("k"), b, buckets,
         pathSnap)
-      val c = secs(tC)
-      (a, bS, c)
+      secs(tS)
     }
     println(f"""[probe] {"closure_nodes":$nNodes,"closure_pairs":$pairCount,""" +
       f""""closure_build_sec":$closureBuildSec%.2f,""" +
@@ -1483,17 +1469,15 @@ object ScaleProbe {
       f""""advise_sec":$adviseSec%.2f,""" +
       f""""advise_budget_sec":$adviseBudgetSec%.2f,""" +
       f""""refresh_buckets":${buckets.size},""" +
-      f""""refresh_dynamic_sec":${ladder.map(_._1).min}%.2f,""" +
-      f""""refresh_isolated_sec":${ladder.map(_._2).min}%.2f,""" +
-      f""""refresh_snapshot_sec":${ladder.map(_._3).min}%.2f,""" +
+      f""""refresh_snapshot_sec":${snapRuns.min}%.2f,""" +
       s""""replication":$k}""")
   }
 
   /** View-refresh probe: prices the write-amplification claim on a
     * k×1M-row denormalized view over a 100k-key dim at B=64 buckets —
-    * full materialize vs partition-scoped refresh at c=3 (the
-    * fix-one-customer case) and c=1000 (bulk delta, most buckets
-    * touched, should approach the rewrite). */
+    * full materializeSnapshot vs partition-scoped refreshSnapshot at
+    * c=3 (the fix-one-customer case) and c=1000 (bulk delta, most
+    * buckets touched, should approach the rewrite). */
   private def viewRefreshProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
     import graft.etl.ViewRefresh
@@ -1513,7 +1497,7 @@ object ScaleProbe {
     def view(d: DataFrame): DataFrame = fact.join(broadcast(d), Seq("k"))
     val path = tmp("vr_view") + "/view"
     var t0 = System.nanoTime()
-    ViewRefresh.materialize(view(dim), col("k"), b, path)
+    ViewRefresh.materializeSnapshot(view(dim), col("k"), b, path)
     val materializeSec = (System.nanoTime() - t0) / 1e9
     val results = Seq(3L, 1000L).map { c =>
       val updated = dim.withColumn("seg",
@@ -1521,7 +1505,7 @@ object ScaleProbe {
       val changed = dim.filter(col("k") < c).select(col("k"))
       val buckets = ViewRefresh.affectedBuckets(changed, col("k"), b)
       t0 = System.nanoTime()
-      ViewRefresh.refresh(view(updated), col("k"), b, buckets, path)
+      ViewRefresh.refreshSnapshot(view(updated), col("k"), b, buckets, path)
       val sec = (System.nanoTime() - t0) / 1e9
       f""""c$c":{"buckets":${buckets.size},"refresh_sec":$sec%.2f}"""
     }

@@ -3,21 +3,29 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Warehouse
-
 /** Partition-scoped maintenance of a materialized DENORMALIZED view
   * under dimension updates — the backfill problem every star schema
   * hits: an SCD1 attribute overwrite (a customer changes segment, a
   * product is re-categorized) invalidates the denormalized rows of
   * JUST the affected dim members, but a naive refresh rewrites the
-  * whole view. Here the view is laid out partitioned by a BUCKET of
-  * the dim key, so a dim delta maps to a bounded set of partitions:
-  * recompute the join for those buckets only and swap them in —
-  * either with a dynamic-partition overwrite or, reader-isolated,
-  * with a per-partition atomic rename swap ([[refresh]]'s `isolated`
-  * flag). Readers of untouched partitions never see a file change
-  * (ViewRefreshSpec asserts the untouched files are byte-identical
-  * after a refresh).
+  * whole view. Here the view's rows are grouped by a BUCKET of the dim
+  * key, so a dim delta maps to a bounded set of buckets: recompute the
+  * join for those buckets only and publish them as a new generation.
+  *
+  * ONE PUBLISH PROTOCOL. A view is a set of immutable per-bucket
+  * generation directories under [[SnapDir]] plus numbered manifests
+  * mapping each bucket to its current generation; the highest manifest
+  * is the committed snapshot. [[materializeSnapshot]] builds it,
+  * [[refreshSnapshot]] writes the affected buckets as new generation
+  * dirs and commits a new manifest, [[readSnapshot]] reads the
+  * committed one, [[readSnapshotAsOf]] an older one, and
+  * [[vacuumSnapshot]] deletes what no retained manifest references
+  * past a horizon. A refresh never renames, rewrites or deletes a file
+  * a published manifest references, so a concurrent reader sees the
+  * old snapshot or the new one and never a missing file — the
+  * reader isolation the reference's serving store gets from
+  * PostgreSQL's MVCC (`docker-compose.yaml:3-18`). Untouched buckets
+  * keep their generation dirs and files (ViewRefreshSpec asserts it).
   *
   * What is saved, honestly: the WRITE. c randomly-hashed changed keys
   * touch B·(1−(1−1/B)^c) of B buckets — ≈c buckets while c ≪ B, all
@@ -34,12 +42,12 @@ import graft.sources.Warehouse
   * LAYOUT TRUST MODEL. A view frame may CARRY a [[BucketCol]] column
   * (from a [[materializeSource]] layout); trusting it blindly is how
   * refreshes corrupt views — a source bucketed on a different key or
-  * a different bucket count silently swaps the wrong partitions or
+  * a different bucket count silently replaces the wrong buckets or
   * drops rows. Three defenses, all loud:
-  *  - [[materialize]]/[[materializeSource]] stamp the layout's bucket
-  *    count into a `_graft_layout.json` sidecar; [[refresh]] requires
-  *    the view table's sidecar to match its `nBuckets` argument.
-  *  - [[refresh]] scopes the recompute by the COMPUTED bucket
+  *  - [[materializeSnapshot]] commits the bucket count as a manifest
+  *    header; [[refreshSnapshot]] requires it to match its `nBuckets`
+  *    argument.
+  *  - [[refreshSnapshot]] scopes the recompute by the COMPUTED bucket
   *    expression by default — the true affected-row set regardless of
   *    what the carried column claims — and REQUIRES carried ==
   *    computed over every scoped row (a carried column from a finer,
@@ -62,13 +70,14 @@ object ViewRefresh {
 
   val BucketCol = "pbucket"
 
-  /** Layout sidecar file name — lives beside the partition dirs; the
-    * leading underscore keeps it invisible to parquet readers. */
+  /** Layout sidecar file name of a [[materializeSource]] layout — lives
+    * beside its partition dirs; the leading underscore keeps it
+    * invisible to parquet readers. */
   val LayoutFile = "_graft_layout.json"
 
   /** The partition-bucket expression — MUST be identical at
     * materialize and refresh time, or a refresh writes rows into a
-    * different partition than the stale copy it means to replace. */
+    * different bucket than the stale copy it means to replace. */
   def bucketOf(key: Column, nBuckets: Int): Column =
     pmod(hash(key), lit(nBuckets))
 
@@ -88,7 +97,7 @@ object ViewRefresh {
     df.hint("rebalance", col(bucket))
 
   /** Stamp the layout contract beside the data (metadata-only; the
-    * refresh handshake reads it back). */
+    * `sourceLayout` handshake reads it back). */
   private def writeLayout(spark: SparkSession, path: String,
       nBuckets: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(path, LayoutFile)
@@ -123,52 +132,18 @@ object ViewRefresh {
         "bucket count"))))
   }
 
-  /** Initial build: the view rows, laid out by dim-key bucket. A
-    * carried [[BucketCol]] is verified row-for-row IN the write pass
-    * (no second scan of the view lineage); absent, the bucket is
-    * computed. Stamps the layout sidecar. */
-  def materialize(view: DataFrame, key: Column, nBuckets: Int,
-      path: String): Unit = {
-    requireNotSnapshotView(view.sparkSession, path, "materialize")
-    val bucketed =
-      if (view.columns.contains(BucketCol))
-        view.withColumn(BucketCol, guardedBucket(col(BucketCol), key, nBuckets))
-      else view.withColumn(BucketCol, bucketOf(key, nBuckets))
-    clusterByBucket(bucketed, BucketCol)
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(path)
-    writeLayout(view.sparkSession, path, nBuckets)
-  }
-
-  /** Guard shared by the NON-snapshot write paths: a snapshot view's
-    * root sidecar passes [[requireStampedLayout]] (the same file), so
-    * without this check a plain [[refresh]] would "succeed" by
-    * writing `pbucket=` dirs beside [[SnapDir]] that [[readSnapshot]]
-    * never serves — a silently ineffective refresh that ALSO breaks
-    * the direct-read-fails-loudly property (the root would now carry
-    * readable partition dirs). Mirrors [[refreshSnapshot]]'s
-    * not-a-snapshot guard in the other direction. */
-  private def requireNotSnapshotView(spark: SparkSession, path: String,
-      op: String): Unit = {
-    val snap = new org.apache.hadoop.fs.Path(path, SnapDir)
-    val fs = snap.getFileSystem(spark.sessionState.newHadoopConf())
-    require(listManifests(fs, snap).isEmpty,
-      s"$path is a SNAPSHOT view (a committed $SnapDir manifest " +
-        s"exists) — $op would write partition dirs readSnapshot never " +
-        "serves; use materializeSnapshot/refreshSnapshot, or delete " +
-        "the table to convert it to a plain layout")
-  }
-
   /** Co-bucketed SOURCE layout: write a fact (or any view input)
     * partitioned by the bucket of ITS copy of the dim key — the same
     * `pmod(hash(key), n)` as the view layout. A view built from this
     * layout carries `pbucket` from the scan through the join, so a
-    * [[refresh]] that declares `sourceLayout` = this path scopes on
-    * the carried column and the bucket filter lands on the source
-    * scan as a PARTITION filter: the refresh then READS ~c/B of the
-    * fact instead of scanning it all and discarding (B−c)/B post-join
-    * — the scan-side half of the write-amplification win documented
-    * above, and the one that dominates at 100 TB. The stamped sidecar
-    * is what lets the refresh TRUST the carried column. */
+    * [[refreshSnapshot]] that declares `sourceLayout` = this path
+    * scopes on the carried column and the bucket filter lands on the
+    * source scan as a PARTITION filter: the refresh then READS ~c/B of
+    * the fact instead of scanning it all and discarding (B−c)/B
+    * post-join — the scan-side half of the write-amplification win
+    * documented above, and the one that dominates at 100 TB. The
+    * stamped sidecar is what lets the refresh TRUST the carried
+    * column. */
   def materializeSource(fact: DataFrame, factKey: Column, nBuckets: Int,
       path: String): Unit = {
     clusterByBucket(fact.withColumn(BucketCol, bucketOf(factKey, nBuckets)),
@@ -184,115 +159,6 @@ object ViewRefresh {
       nBuckets: Int): Seq[Int] =
     changedKeys.select(bucketOf(key, nBuckets).as(BucketCol)).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-
-  /** Refresh: recompute `view` (already joined against the UPDATED
-    * dimension) restricted to the affected buckets, and replace only
-    * those partitions.
-    *
-    * SCOPING. By default the affected rows are selected by the
-    * COMPUTED bucket expression — sound whatever the view frame
-    * carries. When `sourceLayout` names a [[materializeSource]] path
-    * whose sidecar matches `nBuckets` AND the frame carries
-    * [[BucketCol]], scoping uses the carried partition column instead,
-    * which PRUNES the source scan to the affected partitions (the
-    * fast path). Either way, every scoped row is REQUIRED to satisfy
-    * carried == computed when a carried column is present — under
-    * computed scoping this sees exactly the rows a mismatched layout
-    * would misplace or silently exclude, so a wrong-key, finer or
-    * coarser source layout fails loudly instead of corrupting the
-    * view; under carried scoping the sidecar handshake has already
-    * pinned the bucket count, and the row check still catches a
-    * wrong-key layout.
-    *
-    * DELETION correctness: only partitions PRESENT in the written
-    * frame get replaced — an affected bucket whose recomputed content
-    * is now EMPTY (its only member was deleted / dropped by the
-    * view's inner join) would silently keep its stale files. Those
-    * buckets are detected (one distinct over the already-bucket-
-    * filtered rows, bounded by nBuckets) and emptied explicitly.
-    *
-    * READER ISOLATION. `isolated = false` swaps files via dynamic-
-    * partition overwrite + a raw delete of emptied buckets — cheap,
-    * but a reader scanning a replaced partition mid-refresh can see
-    * missing-file errors (the usual dynamic-overwrite isolation
-    * level). `isolated = true` builds ALL affected partitions in one
-    * write into a hidden temp sibling, then installs each with the
-    * atomic rename-swap of [[graft.sources.Warehouse.publish]]
-    * (emptied buckets swap in an empty directory — zero rows to any
-    * reader, no vanishing-directory window): a concurrent reader of
-    * any partition sees the old committed files or the new ones,
-    * never a torn directory — the PostgreSQL-reader isolation the
-    * reference's serving store gets from MVCC
-    * (`docker-compose.yaml:3-18`), at the cost of two metadata
-    * renames per affected bucket. */
-  def refresh(view: DataFrame, key: Column, nBuckets: Int,
-      buckets: Seq[Int], path: String,
-      sourceLayout: Option[String] = None,
-      isolated: Boolean = false): Unit = {
-    val spark = view.sparkSession
-    requireNotSnapshotView(spark, path, "refresh")
-    requireStampedLayout(spark, path, nBuckets)
-    val scoped = scopedVerified(view, key, nBuckets, buckets, sourceLayout)
-    try {
-      if (isolated) refreshInstall(spark, scoped, buckets, path)
-      else {
-        Warehouse.overwritePartitions(clusterByBucket(scoped, BucketCol),
-          path, Seq(BucketCol))
-        val written = scoped.select(col(BucketCol)).distinct()
-          .collect().map(_.getInt(0)).toSet
-        val emptied = buckets.filterNot(written)
-        if (emptied.nonEmpty) {
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          emptied.foreach { b =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b"),
-              true): Unit
-          }
-        }
-      }
-    } finally scoped.unpersist(): Unit
-  }
-
-  /** The isolated swap: ONE write job builds every affected partition
-    * under a dot-prefixed temp sibling inside the table dir (invisible
-    * to readers — FileIndex skips dot paths), then each affected
-    * bucket — including ones whose rebuild came back EMPTY — installs
-    * by atomic rename-swap. Untouched partitions are never renamed,
-    * so their files stay byte-identical; an emptied bucket becomes an
-    * empty directory (zero rows — partition discovery reads values
-    * from FILE paths, so an empty dir contributes nothing) rather
-    * than a deleted one, keeping any concurrent lister clear of
-    * vanishing directories. */
-  private def refreshInstall(spark: SparkSession, scoped: DataFrame,
-      buckets: Seq[Int], path: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(base)
-    // sweep debris from CRASHED isolated refreshes (a kill between the
-    // temp write and the finally, or inside installBuilt's swap) —
-    // the same 24h horizon as Warehouse.commitVia's sweep: a fresh
-    // dot-dir may belong to a concurrent refresh mid-write
-    val staleBefore = System.currentTimeMillis() - 24L * 60 * 60 * 1000
-    fs.listStatus(base).foreach { st =>
-      val n = st.getPath.getName
-      if ((n.startsWith(".refresh-tmp-") ||
-          (n.startsWith(s".$BucketCol=") && n.contains(Warehouse.OldTag))) &&
-          st.getModificationTime < staleBefore)
-        fs.delete(st.getPath, true): Unit
-    }
-    val tmpRoot = new org.apache.hadoop.fs.Path(base,
-      ".refresh-tmp-" + java.util.UUID.randomUUID().toString)
-    try {
-      clusterByBucket(scoped, BucketCol).write.partitionBy(BucketCol)
-        .mode("overwrite").parquet(tmpRoot.toString)
-      buckets.foreach { b =>
-        val built = new org.apache.hadoop.fs.Path(tmpRoot, s"$BucketCol=$b")
-        if (!fs.exists(built)) fs.mkdirs(built) // emptied bucket → empty dir
-        Warehouse.installBuilt(fs,
-          new org.apache.hadoop.fs.Path(base, s"$BucketCol=$b"), built)
-      }
-    } finally fs.delete(tmpRoot, true): Unit
-  }
 
   /** The affected-rows frame, persisted, with the module doc's LAYOUT
     * TRUST MODEL applied: computed-bucket scoping by default,
@@ -313,10 +179,8 @@ object ViewRefresh {
       true
     }
     val computed = bucketOf(key, nBuckets)
-    // pinned across the verify, the write and the bucket census:
-    // recomputing the view for each would multiply the refresh's join
-    // work, and reading the census from the table AFTER the write
-    // would see the stale partition it exists to detect. The pruned
+    // pinned across the verify and the write: recomputing the view
+    // for each would multiply the refresh's join work. The pruned
     // filter ALSO admits NULL carried buckets (an outer-join view can
     // carry NULL on unmatched rows; both disjuncts are partition
     // predicates, so pruning survives) — the verify below then rejects
@@ -346,10 +210,10 @@ object ViewRefresh {
         // bucket COUNT but not the KEY: a wrong-key layout with the
         // same count can park affected rows in partitions OUTSIDE the
         // carried scope — those rows never enter `scoped`, the check
-        // above is vacuous for them, and the rebuilt partitions would
+        // above is vacuous for them, and the rebuilt buckets would
         // silently OMIT them (row loss), or, when the whole scope came
-        // back empty, the emptied-bucket path would DELETE live
-        // partitions. Probe the complement on EVERY pruned refresh:
+        // back empty, the new manifest would DROP every affected
+        // bucket. Probe the complement on EVERY pruned refresh:
         // any row whose computed bucket is affected but whose carried
         // bucket is not proves the carried column does not track this
         // key. Cost: a scan of the complement partitions, column-
@@ -376,82 +240,8 @@ object ViewRefresh {
     }
   }
 
-  /** The table-sidecar handshake, FAIL-CLOSED: a refresh against a
-    * table with no `_graft_layout.json` is refused — an unverifiable
-    * bucket count silently writing rows into partitions different
-    * from the stale copies they should replace is exactly the
-    * corruption class this module exists to make loud. Tables
-    * materialized before the sidecar existed adopt it explicitly via
-    * [[stampLayout]] (a human assertion of the legacy layout). */
-  private def requireStampedLayout(spark: SparkSession, path: String,
-      nBuckets: Int): Unit =
-    readLayout(spark, path) match {
-      case Some(stamped) =>
-        require(stamped == nBuckets,
-          s"view table at $path was materialized with $stamped buckets, " +
-            s"refresh called with $nBuckets — refusing to swap " +
-            "mismatched partitions")
-      case None =>
-        throw new IllegalArgumentException(
-          s"view table at $path carries no $LayoutFile sidecar — " +
-            "re-materialize, or assert the legacy layout explicitly " +
-            "with ViewRefresh.stampLayout(spark, path, nBuckets, key)")
-    }
-
-  /** Explicitly stamp a PRE-EXISTING table's layout sidecar — the
-    * adoption path for tables materialized before the sidecar existed.
-    * The caller names the bucket count AND the bucket key, and the
-    * stamp verifies the claim against the DATA: every stored row's
-    * partition value must equal `bucketOf(key, nBuckets)` (one scan,
-    * column-pruned to the key + partition column). The cheap
-    * range check alone (every dir value in [0, nBuckets)) cannot see
-    * a FINER claimed count — 64 asserted over a real 32-bucket layout
-    * passes it, and later refreshes would swap mod-64 partitions
-    * misaligned with the stored mod-32 dirs, serving stale duplicate
-    * rows beside their refreshed copies. The row verify catches that,
-    * and a wrong-key claim, before the sidecar exists to be trusted. */
-  def stampLayout(spark: SparkSession, path: String, nBuckets: Int,
-      key: Column): Unit = {
-    stampRangeCheck(spark, path, nBuckets)
-    val mismatched = spark.read.parquet(path)
-      .filter(!(col(BucketCol) <=> bucketOf(key, nBuckets)))
-      .limit(1).count()
-    require(mismatched == 0,
-      s"cannot stamp nBuckets=$nBuckets: stored rows' $BucketCol " +
-        s"partition values do not equal bucketOf(key, $nBuckets) — " +
-        "the claimed layout (count or key) does not match the data")
-    writeLayout(spark, path, nBuckets)
-  }
-
-  /** [[stampLayout]] WITHOUT the row verify — for adopters that no
-    * longer know the bucket key expression. UNCHECKED beyond the
-    * range face: a FINER count than the real layout (any multiple)
-    * passes and later corrupts refreshes with stale duplicates —
-    * prefer the keyed overload wherever the key is known. */
-  def stampLayoutUnchecked(spark: SparkSession, path: String,
-      nBuckets: Int): Unit = {
-    stampRangeCheck(spark, path, nBuckets)
-    writeLayout(spark, path, nBuckets)
-  }
-
-  /** The metadata face of the stamp: every partition-dir value in
-    * [0, nBuckets) — catches a coarser claimed count without a scan. */
-  private def stampRangeCheck(spark: SparkSession, path: String,
-      nBuckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val outOfRange = fs.listStatus(p).map(_.getPath.getName).collect {
-      case n if n.startsWith(s"$BucketCol=") &&
-        n.stripPrefix(s"$BucketCol=").forall(_.isDigit) =>
-        n.stripPrefix(s"$BucketCol=").toInt
-    }.filter(_ >= nBuckets)
-    require(outOfRange.isEmpty,
-      s"cannot stamp nBuckets=$nBuckets: partition dirs " +
-        s"${outOfRange.sorted.mkString(",")} lie outside [0, $nBuckets)")
-  }
-
   // =====================================================================
-  // SNAPSHOT-ISOLATED views — reader-error-free refresh on a plain FS
+  // Generation publish: manifests, reads, time travel, vacuum
   // =====================================================================
 
   /** Hidden root holding a snapshot view's generation dirs and
@@ -462,29 +252,27 @@ object ViewRefresh {
     * [[readSnapshot]]. */
   val SnapDir = "_snap"
 
-  /** Schema sidecar inside [[SnapDir]] — typed empty reads. */
-  val SchemaFile = "_schema.json"
-
   // generation dirs carry a per-publisher run id (see
-  // publishGeneration's race note); the suffix is optional in the
-  // regex so pre-r15-format dirs still vacuum
-  private val genDirRe = s"""$BucketCol=(\\d+)-g(\\d+)(?:-[0-9a-f]{8})?""".r
+  // publishGeneration's race note)
+  private val genDirRe = s"""$BucketCol=(\\d+)-g(\\d+)-[0-9a-f]{8}""".r
   private val manifestRe = """v(\d{1,18})""".r
 
-  /** SNAPSHOT layout: per-bucket IMMUTABLE generation directories plus
-    * numbered manifest files mapping each bucket to its current
-    * generation; the HIGHEST-numbered manifest is the committed
-    * snapshot (a manifest appears atomically via temp-write + rename).
-    * A [[refreshSnapshot]] writes NEW generation dirs and publishes a
-    * new manifest — it never renames, rewrites or deletes anything a
-    * published manifest references, so a concurrent [[readSnapshot]]
-    * can never hit a vanished file: the list-then-open race that makes
-    * ANY in-place layout (dynamic overwrite, rename swap) throw
-    * occasionally under concurrency is gone by construction. Old
+  /** Initial build (or full rebuild): the view rows as per-bucket
+    * IMMUTABLE generation directories plus a numbered manifest mapping
+    * each bucket to its generation; the HIGHEST-numbered manifest is
+    * the committed snapshot (a manifest appears atomically via
+    * temp-write + rename). A carried [[BucketCol]] is verified
+    * row-for-row IN the write pass (no second scan of the view
+    * lineage); absent, the bucket is computed. A [[refreshSnapshot]]
+    * never renames, rewrites or deletes anything a published manifest
+    * references, so a concurrent [[readSnapshot]] can never hit a
+    * vanished file: the list-then-open race that makes any in-place
+    * layout throw occasionally under concurrency (Spark plans against
+    * listed paths and opens them later) is gone by construction. Old
     * generations accumulate until [[vacuumSnapshot]] removes the
-    * unreferenced ones past a horizon — exactly the
-    * manifest-plus-vacuum contract of the table formats built for this
-    * problem (Iceberg/Delta), reduced to the one-table case.
+    * unreferenced ones past a horizon — exactly the manifest-plus-vacuum
+    * contract of the table formats built for this problem
+    * (Iceberg/Delta), reduced to the one-table case.
     *
     * ATOMIC METADATA: the bucket count and the schema ride IN the
     * manifest as header lines, so the layout contract commits in the
@@ -492,10 +280,8 @@ object ViewRefresh {
     * before the commit changes nothing a later refresh could trust
     * wrongly (the r15 review's stamp-before-commit hazard: a root
     * sidecar asserting a bucket count the committed snapshot doesn't
-    * have). The root `_graft_layout.json` and `_schema.json` sidecars
-    * are still written AFTER a successful commit — convenience copies
-    * for tooling and the pre-header fallback, never the authority
-    * when a manifest header exists.
+    * have). Both headers are required: a manifest missing either is
+    * corrupt.
     *
     * Concurrent publishers are serialized by `coordinator` — the
     * default [[PublishCoordinator.SameJvm]] covers one JVM; pass a
@@ -509,20 +295,6 @@ object ViewRefresh {
     val base = new org.apache.hadoop.fs.Path(path)
     val snap = new org.apache.hadoop.fs.Path(base, SnapDir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    // REVERSE guard of [[requireNotSnapshotView]]: converting a PLAIN
-    // bucketed layout in place would leave its root `pbucket=` dirs
-    // readable by a direct parquet read beside the hidden SnapDir —
-    // two divergent versions of the table, the stale one served to
-    // exactly the readers the snapshot design promises to fail loudly
-    if (fs.exists(base)) {
-      val plainDirs = fs.listStatus(base).map(_.getPath.getName)
-        .filter(_.startsWith(s"$BucketCol="))
-      require(plainDirs.isEmpty,
-        s"$path holds a PLAIN bucketed layout (${plainDirs.length} " +
-          s"$BucketCol= partition dirs) — materializeSnapshot would " +
-          "leave them readable beside the snapshot; delete the table " +
-          "first to convert it")
-    }
     fs.mkdirs(snap)
     val bucketed =
       if (view.columns.contains(BucketCol))
@@ -541,34 +313,25 @@ object ViewRefresh {
       publishGeneration(spark, fs, snap, bucketed, gen,
         replacedBuckets = prior.keys.toSeq, prior = prior,
         nBuckets = nBuckets, schemaJson = bucketed.schema.json)
-      // post-commit convenience sidecars (authority is the manifest
-      // header): a crash between the commit and here leaves them
-      // stale/absent, which no handshake trusts over the header
-      writeLayout(spark, path, nBuckets)
-      writeSchemaSidecar(fs, snap, bucketed.schema.json)
     }
   }
 
-  /** The `_schema.json` convenience sidecar (pre-header fallback for
-    * empty reads) — temp-write + rename, post-commit only. */
-  private def writeSchemaSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      snap: org.apache.hadoop.fs.Path, schemaJson: String): Unit = {
-    val schemaTmp = new org.apache.hadoop.fs.Path(snap,
-      ".schema-tmp-" + java.util.UUID.randomUUID().toString)
-    val out = fs.create(schemaTmp, true)
-    out.write(schemaJson.getBytes("UTF-8")); out.close()
-    val schemaP = new org.apache.hadoop.fs.Path(snap, SchemaFile)
-    fs.delete(schemaP, false)
-    if (!fs.rename(schemaTmp, schemaP))
-      throw new java.io.IOException(s"failed to publish schema $schemaP")
-  }
-
-  /** Partition-scoped refresh of a [[materializeSnapshot]] view: the
-    * same scoping/verification as [[refresh]], but the affected
-    * buckets land as NEW generation dirs behind a new manifest —
-    * readers of the previous snapshot keep every file they can list.
-    * An affected bucket whose recompute came back empty simply leaves
-    * the new manifest (deletion correctness without touching disk).
+  /** Partition-scoped refresh of a [[materializeSnapshot]] view:
+    * recompute `view` (already joined against the UPDATED dimension)
+    * restricted to the affected `buckets`, and publish those buckets as
+    * NEW generation dirs behind a new manifest — readers of the
+    * previous snapshot keep every file they can list. An affected
+    * bucket whose recompute came back empty (its only member was
+    * deleted) simply leaves the new manifest (deletion correctness
+    * without touching disk).
+    *
+    * SCOPING follows the module doc's LAYOUT TRUST MODEL: by default
+    * the affected rows are selected by the COMPUTED bucket expression;
+    * when `sourceLayout` names a [[materializeSource]] path whose
+    * sidecar matches `nBuckets` AND the frame carries [[BucketCol]],
+    * scoping uses the carried column instead, which PRUNES the source
+    * scan to the affected partitions. Either way every scoped row must
+    * satisfy carried == computed when a carried column is present.
     *
     * CONCURRENT WRITERS within one JVM are SERIALIZED by a per-path
     * publish lock spanning generation choice through manifest commit
@@ -592,7 +355,7 @@ object ViewRefresh {
     val base = new org.apache.hadoop.fs.Path(path)
     val snap = new org.apache.hadoop.fs.Path(base, SnapDir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    requireSnapshotLayout(spark, fs, snap, path, nBuckets): Unit
+    requireSnapshotLayout(fs, snap, path, nBuckets): Unit
     val scoped = scopedVerified(view, key, nBuckets, buckets, sourceLayout)
     // generation choice + publish under the lock: the CURRENT
     // manifest is re-read inside (handshake included — a serialized
@@ -602,36 +365,29 @@ object ViewRefresh {
     // predecessor's commit) instead of both publishing against the
     // same stale prior
     try coordinator.withLock(fs, base) {
-      val (gen, cur) = requireSnapshotLayout(spark, fs, snap, path, nBuckets)
+      val (gen, cur) = requireSnapshotLayout(fs, snap, path, nBuckets)
       publishGeneration(spark, fs, snap, scoped, gen + 1L,
         replacedBuckets = buckets, prior = cur.dirs,
-        nBuckets = nBuckets,
-        schemaJson = cur.schemaJson.getOrElse(scoped.schema.json))
+        nBuckets = nBuckets, schemaJson = cur.schemaJson)
     }
     finally scoped.unpersist(): Unit
   }
 
-  /** The snapshot-side layout handshake: the committed manifest's
-    * `#nBuckets` header is the AUTHORITY (it rode the same atomic
-    * rename as the data mapping, so it can never disagree with what
-    * the snapshot actually holds); pre-header manifests (no
-    * `#nBuckets` line) fall back to the root sidecar via
-    * [[requireStampedLayout]]. Returns the current (gen, manifest). */
-  private def requireSnapshotLayout(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, snap: org.apache.hadoop.fs.Path,
-      path: String, nBuckets: Int): (Long, Manifest) = {
+  /** The layout handshake: the committed manifest's `#nBuckets`
+    * header is the AUTHORITY (it rode the same atomic rename as the
+    * data mapping, so it can never disagree with what the snapshot
+    * actually holds). Returns the current (gen, manifest). */
+  private def requireSnapshotLayout(fs: org.apache.hadoop.fs.FileSystem,
+      snap: org.apache.hadoop.fs.Path, path: String,
+      nBuckets: Int): (Long, Manifest) = {
     val (gen, m) = currentManifest(fs, snap).getOrElse(
       throw new IllegalArgumentException(
         s"$path is not a snapshot view (no $SnapDir manifest) — " +
           "materializeSnapshot first"))
-    m.nBuckets match {
-      case Some(stamped) =>
-        require(stamped == nBuckets,
-          s"snapshot view at $path was materialized with $stamped " +
-            s"buckets (manifest header), refresh called with $nBuckets " +
-            "— refusing to publish mismatched partitions")
-      case None => requireStampedLayout(spark, path, nBuckets)
-    }
+    require(m.nBuckets == nBuckets,
+      s"snapshot view at $path was materialized with ${m.nBuckets} " +
+        s"buckets (manifest header), refresh called with $nBuckets " +
+        "— refusing to publish mismatched partitions")
     (gen, m)
   }
 
@@ -726,19 +482,17 @@ object ViewRefresh {
     finally in.close()
   }
 
-  /** Manifest header tags (r16): layout metadata committed in the
-    * same atomic rename as the bucket mapping. `#`-prefixed lines are
-    * headers; both parsers skip unknown ones, so the format extends
-    * without breaking old readers of new files OR new readers of
-    * pre-header files (whose nBuckets/schema are simply None,
-    * handled by the sidecar fallbacks). */
+  /** Manifest header tags: layout metadata committed in the same
+    * atomic rename as the bucket mapping. `#`-prefixed lines are
+    * headers; both are required, and both parsers skip unknown ones,
+    * so the format extends without breaking readers. */
   private val HeaderBuckets = "#nBuckets"
   private val HeaderSchema = "#schema"
 
   /** One committed manifest: header metadata + bucket → generation
-    * dir. `nBuckets`/`schemaJson` are None for pre-header files. */
-  private final case class Manifest(nBuckets: Option[Int],
-      schemaJson: Option[String], dirs: Map[Int, String])
+    * dir. */
+  private final case class Manifest(nBuckets: Int, schemaJson: String,
+      dirs: Map[Int, String])
 
   /** Parse one manifest file. Malformed lines throw a NAMED error
     * (the read path must be loud; the GC path uses
@@ -752,19 +506,22 @@ object ViewRefresh {
     * count, non-digit or overlong bucket (digits-only guard, then
     * `toIntOption` for overflow; signed forms are corrupt too) —
     * throws the named corrupt-manifest error, never a raw
-    * NumberFormatException. A malformed `#nBuckets` header is equally
-    * corrupt (a refresh trusting a garbled count would publish
-    * misaligned partitions). */
+    * NumberFormatException. A missing or malformed `#nBuckets` header
+    * is equally corrupt (a refresh trusting a garbled count would
+    * publish misaligned partitions), and so is a missing `#schema`. */
   private def parseManifest(body: String, name: String): Manifest = {
     val lines = body.split("\n").iterator.map(_.trim)
       .filter(_.nonEmpty).toSeq
-    val nBuckets = lines.find(_.startsWith(HeaderBuckets + " ")).map { l =>
-      l.stripPrefix(HeaderBuckets + " ").trim.toIntOption.filter(_ > 0)
+    def header(tag: String): String =
+      lines.find(_.startsWith(tag + " ")).map(_.stripPrefix(tag + " "))
         .getOrElse(throw new IllegalArgumentException(
-          s"corrupt snapshot manifest $name: bad header '$l'"))
-    }
-    val schema = lines.find(_.startsWith(HeaderSchema + " "))
-      .map(_.stripPrefix(HeaderSchema + " "))
+          s"corrupt snapshot manifest $name: missing header $tag"))
+    val count = header(HeaderBuckets)
+    val nBuckets = count.trim.toIntOption.filter(_ > 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"corrupt snapshot manifest $name: bad header " +
+          s"'$HeaderBuckets $count'"))
+    val schema = header(HeaderSchema)
     val dirs = lines.filterNot(_.startsWith("#")).map { line =>
       val parts = line.split(" ", 2)
       val bucket =
@@ -842,7 +599,7 @@ object ViewRefresh {
     val snap = new org.apache.hadoop.fs.Path(path, SnapDir)
     val fs = snap.getFileSystem(spark.sessionState.newHadoopConf())
     currentManifest(fs, snap, Some(gen)) match {
-      case Some((_, m)) => readManifestDirs(spark, fs, path, m)
+      case Some((_, m)) => readManifestDirs(spark, path, m)
       case None =>
         val avail = snapshotGenerations(spark, path)
         throw new IllegalArgumentException(
@@ -861,34 +618,22 @@ object ViewRefresh {
     val fs = snap.getFileSystem(spark.sessionState.newHadoopConf())
     val (_, m) = currentManifest(fs, snap).getOrElse(
       throw new IllegalArgumentException(s"$path is not a snapshot view"))
-    readManifestDirs(spark, fs, path, m)
+    readManifestDirs(spark, path, m)
   }
 
-  private def readManifestDirs(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      m: Manifest): DataFrame = {
-    val snap = new org.apache.hadoop.fs.Path(path, SnapDir)
+  private def readManifestDirs(spark: SparkSession, path: String,
+      m: Manifest): DataFrame =
     if (m.dirs.isEmpty) {
       // every member legitimately deleted: a readable zero-row table,
-      // not an error — parity with what the dynamic/isolated layouts
-      // serve in the same state. The type comes from the manifest's
-      // own schema header (committed with the mapping); pre-header
-      // manifests fall back to the `_schema.json` sidecar.
-      val schemaJson = m.schemaJson.getOrElse {
-        val schemaP = new org.apache.hadoop.fs.Path(snap, SchemaFile)
-        require(fs.exists(schemaP),
-          s"snapshot view at $path has no live buckets and neither a " +
-            s"manifest schema header nor a $SchemaFile sidecar")
-        readFully(fs, schemaP)
-      }
+      // not an error. The type comes from the manifest's own schema
+      // header (committed with the mapping).
       val schema = org.apache.spark.sql.types.DataType
-        .fromJson(schemaJson)
+        .fromJson(m.schemaJson)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     } else
       spark.read.parquet(m.dirs.values.map(d => s"$path/$SnapDir/$d").toSeq: _*)
-  }
 
   /** Garbage-collect old manifests and the generation dirs nothing
     * SURVIVING references, once older than `horizonMs` (the horizon

@@ -16,15 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Warehouse {
 
-  /** Marker segment of a DISPLACED directory mid-publish: the old
-    * version of `p` moves aside as `.<name>.old-<uuid>` during
-    * [[installBuilt]]'s rename-swap. ONE definition — the stale
-    * sweeps in [[commitVia]] and [[graft.etl.ViewRefresh]] match on
-    * it, so a rename here must not be able to strand their debris. */
-  private[graft] val OldTag = ".old-"
-
-  private[graft] def displacedPrefix(name: String): String =
-    s".$name$OldTag"
+  /** Prefix of a DISPLACED directory mid-publish: the old version of
+    * `p` moves aside as `.<name>.old-<uuid>` during [[installBuilt]]'s
+    * rename-swap. ONE definition — [[commitVia]]'s stale sweep matches
+    * on it, so a rename here must not be able to strand its debris. */
+  private def displacedPrefix(name: String): String = s".$name.old-"
 
   /** Write `df` as a bucketed (and optionally date/id-partitioned)
     * parquet table. `sortBy` the bucket key so bucket files are
@@ -204,26 +200,6 @@ object Warehouse {
     overlapping.toDouble / (n.toLong * (n - 1) / 2).toDouble
   }
 
-  /** Dynamic-partition overwrite: write `df` partitioned by
-    * `partitionCols`, replacing ONLY the partitions present in `df` —
-    * the incremental-backfill staple (re-run one day without touching
-    * the other 3,650). Plain `mode(overwrite)` + `partitionBy` would
-    * TRUNCATE THE WHOLE TABLE first (static mode, Spark's default) —
-    * the classic destroyed-warehouse footgun this wrapper exists to
-    * make impossible: the dynamic mode is set on THIS write only, not
-    * session-wide. Readers of untouched partitions are unaffected;
-    * readers of a replaced partition see the usual file-level swap
-    * (for stronger isolation, write to a new path and [[publish]]). */
-  def overwritePartitions(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    require(partitionCols.nonEmpty, "need at least one partition column")
-    df.write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-  }
-
   /** Public face of [[commitVia]]: build a new version of `path` in a
     * hidden temp sibling via `writeTo`, publish by atomic rename-swap.
     * The snapshot-maintenance primitive for anything that rewrites a
@@ -269,12 +245,10 @@ object Warehouse {
   }
 
   /** Atomically install an ALREADY-BUILT directory at `p` — the
-    * rename-swap tail of [[commitVia]], exposed for callers that build
-    * several sibling directories in one job and then swap each in
-    * (per-partition publish, [[graft.etl.ViewRefresh]]'s isolated
-    * refresh). `tmp` must be on the same filesystem as `p`; it is
-    * consumed by the swap. */
-  private[graft] def installBuilt(fs: org.apache.hadoop.fs.FileSystem,
+    * rename-swap tail of [[commitVia]] ([[publish]], [[compact]],
+    * [[cached]], [[cachedPartitioned]]). `tmp` must be on the same
+    * filesystem as `p`; it is consumed by the swap. */
+  private def installBuilt(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, tmp: org.apache.hadoop.fs.Path): Unit = {
     val parent = p.getParent
     // publish by RENAME-SWAP, not delete-then-rename: the old dir moves

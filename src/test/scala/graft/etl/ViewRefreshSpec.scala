@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Partition-scoped view refresh: untouched partitions keep their
-  * exact files; the refreshed view equals the full recompute. */
+/** Partition-scoped view refresh on snapshot generations: untouched
+  * buckets keep their generation dirs and files; the refreshed view
+  * equals the full recompute. */
 class ViewRefreshSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -22,20 +23,32 @@ class ViewRefreshSpec extends AnyFunSuite {
       .select(col("o_orderkey"), col("o_totalprice"), col("c_custkey"),
         col("c_mktsegment"))
 
-  // files per partition dir: name → (length, mtime)
-  private def fileState(path: String): Map[String, Map[String, (Long, Long)]] = {
-    val base = new java.io.File(path)
-    base.listFiles().filter(f => f.isDirectory &&
-      f.getName.startsWith(s"${ViewRefresh.BucketCol}=")).map { d =>
-      d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> ((f.length(), f.lastModified()))).toMap
+  // the committed manifest's bucket → generation dir mapping, read
+  // from disk (the highest-numbered manifest, header lines skipped)
+  private def liveGenerations(path: String): Map[Int, String] = {
+    val snap = new java.io.File(path, ViewRefresh.SnapDir)
+    val latest = snap.listFiles().filter(f => f.isFile &&
+      f.getName.matches("v\\d+")).maxBy(_.getName)
+    val body = new String(java.nio.file.Files.readAllBytes(latest.toPath),
+      "UTF-8")
+    body.split("\n").filterNot(l => l.isEmpty || l.startsWith("#")).map {
+      l => val Array(b, d) = l.split(" ", 2); b.toInt -> d
     }.toMap
   }
+
+  // per live bucket: its generation dir and files, name → (length, mtime)
+  private def fileState(path: String)
+      : Map[Int, (String, Map[String, (Long, Long)])] =
+    liveGenerations(path).map { case (b, dir) =>
+      val d = new java.io.File(s"$path/${ViewRefresh.SnapDir}/$dir")
+      b -> (dir -> d.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> ((f.length(), f.lastModified()))).toMap)
+    }
 
   test("refresh rewrites only the affected buckets, byte-identically elsewhere") {
     val root = java.nio.file.Files.createTempDirectory("vr_spec").toString
     val path = s"$root/view"
-    ViewRefresh.materialize(view(dimV1), col("c_custkey"), n, path)
+    ViewRefresh.materializeSnapshot(view(dimV1), col("c_custkey"), n, path)
     val before = fileState(path)
 
     val dimV2 = dimV1.withColumn("c_mktsegment",
@@ -46,17 +59,24 @@ class ViewRefreshSpec extends AnyFunSuite {
     val buckets = ViewRefresh.affectedBuckets(changed, col("c_custkey"), n)
     assert(buckets.nonEmpty && buckets.size < n,
       s"fixture must leave some buckets untouched, got $buckets")
-    ViewRefresh.refresh(view(dimV2), col("c_custkey"), n, buckets, path)
+    ViewRefresh.refreshSnapshot(view(dimV2), col("c_custkey"), n, buckets,
+      path)
     val after = fileState(path)
 
-    val touched = buckets.map(b => s"${ViewRefresh.BucketCol}=$b").toSet
-    for ((dir, files) <- before if !touched.contains(dir))
-      assert(after(dir) === files, s"untouched partition $dir changed")
-    assert(touched.forall(d => after(d) != before(d)),
-      "affected partitions should have been rewritten")
+    assert(after.keySet === before.keySet)
+    for ((b, state) <- before if !buckets.contains(b))
+      assert(after(b) === state, s"untouched bucket $b changed")
+    assert(buckets.forall(b => after(b)._1 != before(b)._1),
+      "affected buckets should have been published as new generations")
+    // the previous generation's dirs are still on disk (no vacuum ran):
+    // a reader of the old snapshot keeps every file it listed
+    buckets.foreach { b =>
+      assert(new java.io.File(
+        s"$path/${ViewRefresh.SnapDir}/${before(b)._1}").isDirectory)
+    }
 
     // the refreshed view IS the full recompute
-    val got = spark.read.parquet(path)
+    val got = ViewRefresh.readSnapshot(spark, path)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n"), sum(col("o_totalprice").cast("decimal(18,2)"))
         .as("rev"))
@@ -67,6 +87,7 @@ class ViewRefreshSpec extends AnyFunSuite {
         .as("rev"))
       .orderBy("c_mktsegment").collect().toSeq.map(_.toSeq)
     assert(got === want)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("co-bucketed source layout: the refresh filter prunes the fact SCAN, cost scales with affected buckets") {
@@ -81,7 +102,8 @@ class ViewRefreshSpec extends AnyFunSuite {
         .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("o_totalprice"), col("c_custkey"),
           col("c_mktsegment"), col(ViewRefresh.BucketCol))
-    ViewRefresh.materialize(viewFrom(dimV1), col("c_custkey"), n, path)
+    ViewRefresh.materializeSnapshot(viewFrom(dimV1), col("c_custkey"), n,
+      path)
 
     val dimV2 = dimV1.withColumn("c_mktsegment",
       when(col("c_custkey") === 1, lit("UPDATED"))
@@ -123,9 +145,9 @@ class ViewRefreshSpec extends AnyFunSuite {
     // and the refresh through the carried column lands the same state
     // as a full recompute — the carried-scoped fast path is EARNED by
     // declaring the co-bucketed source, whose sidecar pins the count
-    ViewRefresh.refresh(viewFrom(dimV2), col("c_custkey"), n, buckets, path,
-      sourceLayout = Some(factPath))
-    val got = spark.read.parquet(path)
+    ViewRefresh.refreshSnapshot(viewFrom(dimV2), col("c_custkey"), n, buckets,
+      path, sourceLayout = Some(factPath))
+    val got = ViewRefresh.readSnapshot(spark, path)
       .groupBy("c_mktsegment").agg(count(lit(1)).as("cnt"))
       .orderBy("c_mktsegment").collect().map(r => r.getString(0) -> r.getLong(1))
     val want = view(dimV2)
@@ -138,16 +160,18 @@ class ViewRefreshSpec extends AnyFunSuite {
   test("a carried bucket column from a MISMATCHED layout fails the refresh loudly") {
     val root = java.nio.file.Files.createTempDirectory("vr_mismatch").toString
     val path = s"$root/view"
-    ViewRefresh.materialize(view(dimV1), col("c_custkey"), n, path)
+    ViewRefresh.materializeSnapshot(view(dimV1), col("c_custkey"), n, path)
     // the source was bucketed on the WRONG key (orderkey, not the dim
-    // key) — refreshing through that carried column would swap wrong
-    // partitions; the verify pass must reject it instead
+    // key) — refreshing through that carried column would replace the
+    // wrong buckets; the verify pass must reject it instead
     val wrong = view(dimV1).withColumn(ViewRefresh.BucketCol,
       ViewRefresh.bucketOf(col("o_orderkey"), n))
     val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(wrong, col("c_custkey"), n, Seq(0, 1), path)
+      ViewRefresh.refreshSnapshot(wrong, col("c_custkey"), n, Seq(0, 1), path)
     }
     assert(e.getMessage.contains("bucketed on a different key"))
+    assert(ViewRefresh.snapshotGenerations(spark, path) === Seq(1L),
+      "a refused refresh must not publish")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -161,33 +185,38 @@ class ViewRefreshSpec extends AnyFunSuite {
     def v(d: org.apache.spark.sql.DataFrame) = factsT.join(d, Seq("k"))
     val root = java.nio.file.Files.createTempDirectory("vr_del").toString
     val path = s"$root/view"
-    ViewRefresh.materialize(v(dimA), col("k"), nb, path)
-    assert(spark.read.parquet(path).filter(col("k") === 2L).count() === 2)
+    ViewRefresh.materializeSnapshot(v(dimA), col("k"), nb, path)
+    assert(ViewRefresh.readSnapshot(spark, path)
+      .filter(col("k") === 2L).count() === 2)
     // member k=2 is DELETED from the dimension: the inner join drops
-    // its rows, its bucket's recomputed content is empty — dynamic
-    // overwrite alone would keep the stale files
+    // its rows, its bucket's recomputed content is empty — the refresh
+    // writes nothing for it, so only leaving the manifest removes it
     val dimB = dimA.filter(col("k") =!= 2L)
     val changed = Seq(Tuple1(2L)).toDF("k")
     val buckets = ViewRefresh.affectedBuckets(changed, col("k"), nb)
-    ViewRefresh.refresh(v(dimB), col("k"), nb, buckets, path)
-    val left = spark.read.parquet(path)
+    ViewRefresh.refreshSnapshot(v(dimB), col("k"), nb, buckets, path)
+    val left = ViewRefresh.readSnapshot(spark, path)
     assert(left.filter(col("k") === 2L).count() === 0,
       "deleted member's rows must not survive the refresh")
     assert(left.count() === 2)
+    assert(buckets.forall(b => !liveGenerations(path).contains(b)),
+      "the emptied bucket must leave the manifest")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("a FINER carried layout (multiple of nBuckets) is caught — computed scoping sees the rows carried scoping would exclude") {
     val root = java.nio.file.Files.createTempDirectory("vr_finer").toString
     val path = s"$root/view"
-    ViewRefresh.materialize(view(dimV1), col("c_custkey"), n, path)
+    ViewRefresh.materializeSnapshot(view(dimV1), col("c_custkey"), n, path)
     // the ADVICE scenario: carried = pmod(hash, 2n) — rows whose carried
     // value is in [n, 2n) have a TRUE bucket in [0, n); a carried-scoped
-    // refresh would silently drop them from the rewritten partitions.
+    // refresh would silently drop them from the rewritten buckets.
     // Computed scoping selects them, and the disagreement check fires.
     val finer = view(dimV1).withColumn(ViewRefresh.BucketCol,
       ViewRefresh.bucketOf(col("c_custkey"), 2 * n))
     val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(finer, col("c_custkey"), n, (0 until n), path)
+      ViewRefresh.refreshSnapshot(finer, col("c_custkey"), n, (0 until n),
+        path)
     }
     assert(e.getMessage.contains("disagrees with bucketOf"))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -195,128 +224,30 @@ class ViewRefreshSpec extends AnyFunSuite {
 
   test("materialize verifies a carried bucket column in the write pass") {
     val root = java.nio.file.Files.createTempDirectory("vr_matguard").toString
+    val path = s"$root/view"
     val wrong = view(dimV1).withColumn(ViewRefresh.BucketCol,
       ViewRefresh.bucketOf(col("o_orderkey"), n))
     val e = intercept[Exception] {
-      ViewRefresh.materialize(wrong, col("c_custkey"), n, s"$root/view")
+      ViewRefresh.materializeSnapshot(wrong, col("c_custkey"), n, path)
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("disagrees with bucketOf")),
       s"want the in-pass guard message, got: ${messages(e)}")
+    assert(ViewRefresh.snapshotGenerations(spark, path).isEmpty,
+      "a failed build must not commit a manifest")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("refresh refuses a bucket count that contradicts the table's layout sidecar") {
     val root = java.nio.file.Files.createTempDirectory("vr_sidecar").toString
     val path = s"$root/view"
-    ViewRefresh.materialize(view(dimV1), col("c_custkey"), n, path)
-    assert(ViewRefresh.readLayout(spark, path) === Some(n))
+    ViewRefresh.materializeSnapshot(view(dimV1), col("c_custkey"), n, path)
     val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(view(dimV1), col("c_custkey"), 2 * n,
+      ViewRefresh.refreshSnapshot(view(dimV1), col("c_custkey"), 2 * n,
         Seq(0), path)
     }
-    assert(e.getMessage.contains("materialized with"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  test("isolated refresh: untouched partitions byte-identical, emptied bucket serves zero rows, result equals full recompute") {
-    import spark.implicits._
-    val nb = 64
-    val dimA = Seq((1L, "A"), (2L, "B"), (3L, "C")).toDF("k", "seg")
-    val factsT = Seq((1L, 10.0), (2L, 20.0), (2L, 21.0), (3L, 30.0))
-      .toDF("k", "amount")
-    def v(d: DataFrame) = factsT.join(d, Seq("k"))
-    val root = java.nio.file.Files.createTempDirectory("vr_iso").toString
-    val path = s"$root/view"
-    ViewRefresh.materialize(v(dimA), col("k"), nb, path)
-    val before = fileState(path)
-    // k=2 deleted (bucket emptied), k=3 re-segmented (bucket rewritten)
-    val dimB = dimA.filter(col("k") =!= 2L).withColumn("seg",
-      when(col("k") === 3L, lit("Z")).otherwise(col("seg")))
-    val changed = Seq(Tuple1(2L), Tuple1(3L)).toDF("k")
-    val buckets = ViewRefresh.affectedBuckets(changed, col("k"), nb)
-    ViewRefresh.refresh(v(dimB), col("k"), nb, buckets, path,
-      isolated = true)
-    val after = fileState(path)
-    val touched = buckets.map(b => s"${ViewRefresh.BucketCol}=$b").toSet
-    for ((dir, files) <- before if !touched.contains(dir))
-      assert(after(dir) === files, s"untouched partition $dir changed")
-    val got = spark.read.parquet(path).orderBy("k", "amount")
-      .collect().map(r => (r.getAs[Long]("k"), r.getAs[Double]("amount"),
-        r.getAs[String]("seg"))).toSeq
-    assert(got === Seq((1L, 10.0, "A"), (3L, 30.0, "Z")))
-    // no stray non-hidden dirs beyond the partition layout
-    val stray = new java.io.File(path).listFiles().filter(f =>
-      !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
-        !f.getName.startsWith(s"${ViewRefresh.BucketCol}="))
-    assert(stray.isEmpty, s"stray entries: ${stray.map(_.getName).toSeq}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  test("isolated refresh: a concurrent reader never observes a torn partition") {
-    import spark.implicits._
-    val nb = 8
-    val root = java.nio.file.Files.createTempDirectory("vr_conc").toString
-    val path = s"$root/view"
-    val dims = Seq(
-      Seq((1L, "A"), (2L, "B"), (3L, "C")).toDF("k", "seg"),
-      Seq((1L, "A2"), (2L, "B2"), (3L, "C2")).toDF("k", "seg"))
-    val factsT = (1L to 3L).flatMap(k => (1 to 40).map(i =>
-      (k, k * 100.0 + i))).toDF("k", "amount")
-    def v(d: DataFrame) = factsT.join(broadcast(d), Seq("k"))
-    ViewRefresh.materialize(v(dims(0)), col("k"), nb, path)
-    val buckets = ViewRefresh.affectedBuckets(dims(0).select("k"),
-      col("k"), nb)
-
-    // every VALID state has all 120 rows and a single-suffix segment
-    // set — a torn partition (half old, half new, or missing files
-    // turned into lost rows) breaks one of the invariants. The
-    // list-then-open race of a plain filesystem (no manifest) can
-    // surface a benign FileNotFound between a listing and the swap;
-    // the reader retries it and COUNTS it — torn DATA is what must
-    // never appear.
-    @volatile var stop = false
-    val torn = new java.util.concurrent.atomic.AtomicLong
-    val raced = new java.util.concurrent.atomic.AtomicLong
-    val reader = new Thread(() => {
-      while (!stop) {
-        try {
-          val rows = spark.read.parquet(path)
-            .groupBy("seg").agg(count(lit(1)).as("n")).collect()
-          val total = rows.map(_.getLong(1)).sum
-          val segs = rows.map(_.getString(0)).toSet
-          val consistent = total == 120 &&
-            (segs == Set("A", "B", "C") || segs == Set("A2", "B2", "C2") ||
-              // per-partition atomicity: a cross-bucket MIX of the two
-              // committed versions is a documented valid state
-              segs.forall(s => Set("A", "B", "C", "A2", "B2", "C2")(s)))
-          if (!consistent) torn.incrementAndGet(): Unit
-        } catch {
-          case _: org.apache.spark.SparkException |
-               _: java.io.FileNotFoundException =>
-            raced.incrementAndGet(): Unit
-        }
-      }
-    })
-    reader.start()
-    try {
-      (1 to 10).foreach { i =>
-        ViewRefresh.refresh(v(dims(i % 2)), col("k"), nb, buckets, path,
-          isolated = true)
-      }
-    } finally {
-      stop = true
-      reader.join(30000)
-    }
-    assert(torn.get() === 0, s"reader observed ${torn.get()} torn states")
-    // the rename swap guarantees ATOMICITY (no torn data), not
-    // availability: a reader that listed files just before a swap can
-    // still fail its open (the plain-FS list-then-open race). That
-    // race is bounded, retried, and CLOSED ENTIRELY by the snapshot
-    // variant below — which is why refreshSnapshot exists.
-    assert(raced.get() < 10 * nb,
-      s"list/open race hit ${raced.get()} times")
+    assert(e.getMessage.contains(s"materialized with $n"))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -397,7 +328,7 @@ class ViewRefreshSpec extends AnyFunSuite {
   test("a NULL carried bucket is a loud disagreement, not a silent Hive-default row") {
     val root = java.nio.file.Files.createTempDirectory("vr_null").toString
     val path = s"$root/view"
-    ViewRefresh.materialize(view(dimV1), col("c_custkey"), n, path)
+    ViewRefresh.materializeSnapshot(view(dimV1), col("c_custkey"), n, path)
     // an outer-join view can carry NULL pbucket on unmatched rows;
     // non-null-safe =!= would let them slip through the verify and
     // land in __HIVE_DEFAULT_PARTITION__
@@ -408,34 +339,10 @@ class ViewRefreshSpec extends AnyFunSuite {
       dimV1.filter(col("c_custkey") === 1L).select("c_custkey"),
       col("c_custkey"), n)
     val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(withNull, col("c_custkey"), n, buckets, path)
+      ViewRefresh.refreshSnapshot(withNull, col("c_custkey"), n, buckets,
+        path)
     }
     assert(e.getMessage.contains("disagrees"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  test("refresh is FAIL-CLOSED on a table without a layout sidecar; stampLayout is the adoption path") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("vr_legacy").toString
-    val path = s"$root/view"
-    // a legacy table: correct layout, but written before the sidecar
-    val legacy = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "amount")
-    legacy.withColumn(ViewRefresh.BucketCol,
-        ViewRefresh.bucketOf(col("k"), n))
-      .write.partitionBy(ViewRefresh.BucketCol).parquet(path)
-    val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(legacy, col("k"), n, Seq(0), path)
-    }
-    assert(e.getMessage.contains("no _graft_layout.json sidecar"))
-    // claiming a COARSER count than the dirs on disk is rejected
-    intercept[IllegalArgumentException] {
-      ViewRefresh.stampLayout(spark, path, 1, col("k"))
-    }
-    // the human assertion of the true layout unlocks refresh
-    ViewRefresh.stampLayout(spark, path, n, col("k"))
-    ViewRefresh.refresh(legacy, col("k"), n,
-      ViewRefresh.affectedBuckets(legacy.select("k"), col("k"), n), path)
-    assert(spark.read.parquet(path).count() === 2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -458,15 +365,17 @@ class ViewRefreshSpec extends AnyFunSuite {
     // the sidecar handshake alone cannot see it
     ViewRefresh.materializeSource(facts2.select("k", "wrong", "amt"),
       col("wrong"), nb, srcPath)
-    ViewRefresh.materialize(facts2.select("k", "amt"), col("k"), nb, path)
+    ViewRefresh.materializeSnapshot(facts2.select("k", "amt"), col("k"), nb,
+      path)
     val carriedWrong = spark.read.parquet(srcPath) // carries wrong-key pbucket
     val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(carriedWrong, col("k"), nb, buckets, path,
+      ViewRefresh.refreshSnapshot(carriedWrong, col("k"), nb, buckets, path,
         sourceLayout = Some(srcPath))
     }
     assert(e.getMessage.contains("does not match this key"))
-    // and the table's partitions were NOT deleted as "emptied"
-    assert(spark.read.parquet(path).count() === 2)
+    // and no manifest dropped the buckets as "emptied"
+    assert(ViewRefresh.snapshotGenerations(spark, path) === Seq(1L))
+    assert(ViewRefresh.readSnapshot(spark, path).count() === 2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -691,7 +600,6 @@ class ViewRefreshSpec extends AnyFunSuite {
     val path = s"$root/view"
     val v8 = Seq((1L, "a"), (2L, "a"), (3L, "a")).toDF("k", "tag")
     ViewRefresh.materializeSnapshot(v8, col("k"), 8, path)
-    assert(ViewRefresh.readLayout(spark, path) === Some(8))
     // a REBUILD at a NEW bucket count that fails during the data
     // write (mid-write crash surrogate: a row-level raise_error) —
     // under the r15 layout the sidecar was already stamped 16 at this
@@ -703,11 +611,8 @@ class ViewRefreshSpec extends AnyFunSuite {
     intercept[Exception] {
       ViewRefresh.materializeSnapshot(poison, col("k"), 16, path)
     }
-    // the commit never happened: the authority (manifest header) and
-    // the convenience sidecar BOTH still say 8
-    assert(ViewRefresh.readLayout(spark, path) === Some(8),
-      "a failed rebuild must not have re-stamped the sidecar")
-    // refresh at the crashed rebuild's count is REFUSED...
+    // the commit never happened, so the manifest header still says 8:
+    // a refresh at the crashed rebuild's count is REFUSED...
     val e = intercept[IllegalArgumentException] {
       ViewRefresh.refreshSnapshot(v8, col("k"), 16,
         ViewRefresh.affectedBuckets(v8.select("k"), col("k"), 16), path)
@@ -723,54 +628,12 @@ class ViewRefreshSpec extends AnyFunSuite {
     // a SUCCESSFUL rebuild at 16 commits count+data in one rename;
     // the handshake flips with it
     ViewRefresh.materializeSnapshot(v8, col("k"), 16, path)
-    assert(ViewRefresh.readLayout(spark, path) === Some(16))
     intercept[IllegalArgumentException] {
       ViewRefresh.refreshSnapshot(v8, col("k"), 8, Seq(0), path)
     }
     ViewRefresh.refreshSnapshot(v8, col("k"), 16,
       ViewRefresh.affectedBuckets(v8.select("k"), col("k"), 16), path)
     assert(ViewRefresh.readSnapshot(spark, path).count() === 3)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  test("plain refresh()/materialize() REFUSE a snapshot-view path (no silently-unserved partition dirs)") {
-    import spark.implicits._
-    val nb = 8
-    val root = java.nio.file.Files.createTempDirectory("vr_snapguard").toString
-    val path = s"$root/view"
-    val v1 = Seq((1L, "a"), (2L, "a")).toDF("k", "tag")
-    ViewRefresh.materializeSnapshot(v1, col("k"), nb, path)
-    // the r15 hole: the root sidecar passes requireStampedLayout, so
-    // a plain refresh "succeeded" by writing pbucket= dirs beside
-    // _snap that readSnapshot never serves — and that break the
-    // direct-read-fails-loudly property
-    val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(v1, col("k"), nb,
-        ViewRefresh.affectedBuckets(v1.select("k"), col("k"), nb), path)
-    }
-    assert(e.getMessage.contains("SNAPSHOT view"))
-    val e2 = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(v1, col("k"), nb, Seq(0), path, isolated = true)
-    }
-    assert(e2.getMessage.contains("SNAPSHOT view"))
-    val e3 = intercept[IllegalArgumentException] {
-      ViewRefresh.materialize(v1, col("k"), nb, path)
-    }
-    assert(e3.getMessage.contains("SNAPSHOT view"))
-    // nothing was written; a direct parquet read still fails loudly
-    assert(ViewRefresh.readSnapshot(spark, path).count() === 2)
-    intercept[Exception] { spark.read.parquet(path).count() }
-    // ...and the REVERSE guard: materializeSnapshot on a PLAIN layout
-    // would leave the old root pbucket= dirs readable beside _snap —
-    // two divergent versions of the table
-    val plainPath = s"$root/plain"
-    ViewRefresh.materialize(v1, col("k"), nb, plainPath)
-    val e4 = intercept[IllegalArgumentException] {
-      ViewRefresh.materializeSnapshot(v1, col("k"), nb, plainPath)
-    }
-    assert(e4.getMessage.contains("PLAIN bucketed layout"))
-    assert(spark.read.parquet(plainPath).count() === 2,
-      "the refused conversion must leave the plain table untouched")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -806,85 +669,61 @@ class ViewRefreshSpec extends AnyFunSuite {
     }.get
     val rows = Seq((k1, k1, 1.0), (k2, w2, 2.0)).toDF("k", "wrong", "amt")
     ViewRefresh.materializeSource(rows, col("wrong"), nb, srcPath)
-    ViewRefresh.materialize(rows.select("k", "amt"), col("k"), nb, path)
+    ViewRefresh.materializeSnapshot(rows.select("k", "amt"), col("k"), nb,
+      path)
     val carriedWrong = spark.read.parquet(srcPath)
     val buckets = Seq(b1, b2)
     val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refresh(carriedWrong, col("k"), nb, buckets, path,
+      ViewRefresh.refreshSnapshot(carriedWrong, col("k"), nb, buckets, path,
         sourceLayout = Some(srcPath))
     }
     assert(e.getMessage.contains("would DROP rows") &&
       e.getMessage.contains("does not match this key"))
-    // no partition was swapped or emptied under the failed refresh
-    assert(spark.read.parquet(path).count() === 2)
+    // no generation was published under the failed refresh
+    assert(ViewRefresh.snapshotGenerations(spark, path) === Seq(1L))
+    assert(ViewRefresh.readSnapshot(spark, path).count() === 2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
-  test("stampLayout's keyed row verify catches a FINER claimed count and a wrong-key claim; stampLayoutUnchecked documents the hole") {
-    import spark.implicits._
-    val n8 = 8
-    val root = java.nio.file.Files.createTempDirectory("vr_stamp").toString
-    val path = s"$root/table"
-    // 200 keys — a finer/wrong-key claim agreeing with every stored
-    // row's mod-8 value by hash coincidence is impossible at this size
-    val legacy = (1L to 200L).map(k => (k, k * 1.5)).toDF("k", "amount")
-    legacy.withColumn(ViewRefresh.BucketCol,
-        ViewRefresh.bucketOf(col("k"), n8))
-      .write.partitionBy(ViewRefresh.BucketCol).parquet(path)
-    // 16 over a real 8-bucket layout passes the dir-range face (every
-    // mod-8 value lies in [0, 16)) — the ADVICE r15 hole; the keyed
-    // verify reads the rows and rejects it
-    val finer = intercept[IllegalArgumentException] {
-      ViewRefresh.stampLayout(spark, path, 2 * n8, col("k"))
-    }
-    assert(finer.getMessage.contains("does not match the data"))
-    // wrong KEY at the right count: also caught by the row verify
-    intercept[IllegalArgumentException] {
-      ViewRefresh.stampLayout(spark, path, n8, col("amount"))
-    }
-    // the unchecked face still stamps (the caller owns the risk)...
-    ViewRefresh.stampLayoutUnchecked(spark, path, n8)
-    assert(ViewRefresh.readLayout(spark, path) === Some(n8))
-    // ...and the keyed face stamps the true layout
-    new java.io.File(path, ViewRefresh.LayoutFile).delete()
-    ViewRefresh.stampLayout(spark, path, n8, col("k"))
-    assert(ViewRefresh.readLayout(spark, path) === Some(n8))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  test("pre-header (legacy) manifests still read and refresh via the sidecar fallback") {
+  test("a manifest missing its #nBuckets or #schema header is a named corrupt-manifest error") {
     import spark.implicits._
     val nb = 8
-    val root = java.nio.file.Files.createTempDirectory("vr_legacyman").toString
+    val root = java.nio.file.Files.createTempDirectory("vr_noheader").toString
     val path = s"$root/view"
     val v1 = Seq((1L, "a"), (2L, "a")).toDF("k", "tag")
     ViewRefresh.materializeSnapshot(v1, col("k"), nb, path)
-    // strip the r16 header lines — the on-disk shape every pre-r16
-    // manifest has (mapping lines + root sidecar only)
-    val snap = new org.apache.hadoop.fs.Path(s"$path/${ViewRefresh.SnapDir}")
-    val fs = snap.getFileSystem(spark.sessionState.newHadoopConf())
-    val mf = new org.apache.hadoop.fs.Path(snap, f"v${1L}%018d")
+    // rewritten through the Hadoop FS so its checksum file follows
+    val mf = new org.apache.hadoop.fs.Path(
+      s"$path/${ViewRefresh.SnapDir}/${f"v${1L}%018d"}")
+    val fs = mf.getFileSystem(spark.sessionState.newHadoopConf())
+    def write(text: String): Unit = {
+      val out = fs.create(mf, true)
+      out.write(text.getBytes("UTF-8")); out.close()
+    }
     val body = {
       val in = fs.open(mf)
       try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       finally in.close()
     }
-    val stripped = body.split("\n").filterNot(_.startsWith("#")).mkString("\n")
-    val out = fs.create(mf, true)
-    out.write(stripped.getBytes("UTF-8")); out.close()
-    assert(ViewRefresh.readSnapshot(spark, path).count() === 2)
-    // the refresh handshake falls back to the root sidecar...
-    ViewRefresh.refreshSnapshot(Seq((1L, "b"), (2L, "b")).toDF("k", "tag"),
-      col("k"), nb,
-      ViewRefresh.affectedBuckets(v1.select("k"), col("k"), nb), path)
-    assert(ViewRefresh.readSnapshot(spark, path)
-      .filter(col("tag") === "b").count() === 2)
-    // ...and the NEW manifest carries headers, so a wrong-count
-    // refresh is now refused by the manifest itself
-    val e = intercept[IllegalArgumentException] {
-      ViewRefresh.refreshSnapshot(v1, col("k"), 2 * nb, Seq(0), path)
+    Seq("#nBuckets", "#schema").foreach { tag =>
+      // the header-less shape: mapping lines intact, one header dropped
+      write(body.split("\n").filterNot(_.startsWith(tag + " ")).mkString("\n"))
+      val read = intercept[IllegalArgumentException] {
+        ViewRefresh.readSnapshot(spark, path)
+      }
+      assert(read.getMessage.contains("corrupt snapshot manifest") &&
+        read.getMessage.contains(s"missing header $tag"), read.getMessage)
+      val refresh = intercept[IllegalArgumentException] {
+        ViewRefresh.refreshSnapshot(v1, col("k"), nb,
+          ViewRefresh.affectedBuckets(v1.select("k"), col("k"), nb), path)
+      }
+      assert(refresh.getMessage.contains("corrupt snapshot manifest"))
+      assert(ViewRefresh.snapshotGenerations(spark, path) === Seq(1L),
+        "a refresh over a corrupt manifest must not publish")
     }
-    assert(e.getMessage.contains("manifest header"))
+    // the intact manifest reads again
+    write(body)
+    assert(ViewRefresh.readSnapshot(spark, path).count() === 2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

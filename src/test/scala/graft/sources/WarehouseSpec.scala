@@ -189,23 +189,6 @@ class WarehouseSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$tmp/z").count() === total)
   }
 
-  test("overwritePartitions replaces only the written partitions") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("dynpart").toString + "/t"
-    val full = Seq(("2024-01-01", 1L), ("2024-01-01", 2L),
-      ("2024-01-02", 3L), ("2024-01-03", 4L)).toDF("day", "v")
-    Warehouse.overwritePartitions(full, tmp, Seq("day"))
-    // re-run ONE day with corrected data
-    val redo = Seq(("2024-01-02", 30L), ("2024-01-02", 31L)).toDF("day", "v")
-    Warehouse.overwritePartitions(redo, tmp, Seq("day"))
-    // partition inference types day as DATE on read — compare as string
-    val got = spark.read.parquet(tmp)
-      .select(col("day").cast("string").as("day"), col("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got === Set(("2024-01-01", 1L), ("2024-01-01", 2L),
-      ("2024-01-02", 30L), ("2024-01-02", 31L), ("2024-01-03", 4L)))
-  }
-
   test("layoutReport: clustered layout shows disjoint ranges, random layout overlaps") {
     val li = TestSpark.table("lineitem").select("l_orderkey", "l_extendedprice")
     val tmp = java.nio.file.Files.createTempDirectory("layout").toString
