@@ -1,23 +1,12 @@
 #!/bin/bash
 # Run graft.Bench outside sbt (frees the sbt lock for compiles).
 # Usage: scripts/bench.sh <sfDir> <outJson> [onlyCsv] [xmx]
+# xmx defaults to half of this host's memory.
 set -euo pipefail
+source "$(dirname "$0")/jvm.sh"
 DIR=${1:-/root/testdata/sf0.1}
 OUT=${2:-/tmp/bench_out.json}
 ONLY=${3:-}
-XMX=${4:-48g}
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | paste -sd:)"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-OPENS="$OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
-OPENS="$OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
-OPENS="$OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
-OPENS="$OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-ENVV=(env SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_BENCH_OUT="$OUT")
-if [ -n "$ONLY" ]; then ENVV+=(SPARK_GRAFT_BENCH_ONLY="$ONLY"); fi
-exec "${ENVV[@]}" java -Xmx"$XMX" $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Bench
+export SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_BENCH_OUT="$OUT"
+if [ -n "$ONLY" ]; then export SPARK_GRAFT_BENCH_ONLY="$ONLY"; fi
+graft_java "$GRAFT_ROOT" "${4:-}" graft.Bench

@@ -8,49 +8,40 @@
 # a swing that brackets an UNTOUCHED control query is noise, and one
 # that doesn't is the change.
 #
-# Usage: scripts/paired_bench.sh <baseRef> <onlyCsv> [sfDir] [rounds]
+# Usage: scripts/paired_bench.sh <baseRef> <onlyCsv> [sfDir] [rounds] [xmx]
 #   baseRef  git ref of the pre-change tip (e.g. HEAD~1, a round tag)
 #   onlyCsv  comma-separated bench query names — include at least one
 #            UNTOUCHED control query to expose the window's noise floor
+#   sfDir    scale-factor dir to bench (default sf0.1)
+#   rounds   old/new alternations, min-of-rounds per side (default 3)
+#   xmx      heap of each Bench JVM (default half of this host's memory)
 set -euo pipefail
+source "$(dirname "$0")/jvm.sh"
 BASE=${1:?base git ref}
 ONLY=${2:?comma-separated query names (include an untouched control)}
 DIR=${3:-/root/testdata/sf0.1}
 ROUNDS=${4:-3}
-XMX=${5:-48g}
+XMX=${5:-}
 
 WT=$(mktemp -d /tmp/paired_wt.XXXXXX)
 TMPD=$(mktemp -d /tmp/paired_out.XXXXXX)
 git worktree add --detach "$WT" "$BASE" >/dev/null
 trap 'git worktree remove --force "$WT" >/dev/null 2>&1 || true; rm -rf "$TMPD"' EXIT
 # compile BOTH sides: the new side too, or an edited-but-unbuilt
-# /root/repo silently benchmarks stale classes as "new"
-echo "[paired] building new tip (/root/repo) ..." >&2
-(cd /root/repo && sbt -batch compile >"$TMPD/build_new.log" 2>&1) || {
+# checkout silently benchmarks stale classes as "new"
+echo "[paired] building new tip ($GRAFT_ROOT) ..." >&2
+(cd "$GRAFT_ROOT" && sbt -batch compile >"$TMPD/build_new.log" 2>&1) || {
   echo "[paired] new-tip build FAILED:" >&2; tail -20 "$TMPD/build_new.log" >&2; exit 1; }
 echo "[paired] building $BASE in $WT ..." >&2
 (cd "$WT" && sbt -batch compile >"$TMPD/build_old.log" 2>&1) || {
   echo "[paired] old-tip build FAILED:" >&2; tail -20 "$TMPD/build_old.log" >&2; exit 1; }
 
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-OPENS="$OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
-OPENS="$OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
-OPENS="$OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
-OPENS="$OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-
 # NOTE: a query the change under review ADDED does not exist on the
 # old tip — Bench rejects unknown SPARK_GRAFT_BENCH_ONLY names loudly.
 # Pair only queries both tips share; bench new-only queries separately.
 run_bench() { # $1 = repo root, $2 = out json
-  CP="$1/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | paste -sd:)"
-  env SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_BENCH_OUT="$2" \
-      SPARK_GRAFT_BENCH_ONLY="$ONLY" \
-    java -Xmx"$XMX" $OPENS -Dspark.ui.enabled=false \
-      -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.Bench \
+  SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_BENCH_OUT="$2" \
+      SPARK_GRAFT_BENCH_ONLY="$ONLY" graft_java "$1" "$XMX" graft.Bench \
       >"$2.log" 2>&1 || {
         echo "[paired] bench run FAILED ($2):" >&2
         tail -15 "$2.log" >&2; exit 1; }
@@ -60,7 +51,7 @@ for i in $(seq "$ROUNDS"); do
   echo "[paired] round $i/$ROUNDS old..." >&2
   run_bench "$WT" "$TMPD/old_$i.json"
   echo "[paired] round $i/$ROUNDS new..." >&2
-  run_bench /root/repo "$TMPD/new_$i.json"
+  run_bench "$GRAFT_ROOT" "$TMPD/new_$i.json"
 done
 
 python3 - "$TMPD" "$ROUNDS" <<'EOF'

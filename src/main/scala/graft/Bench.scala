@@ -50,8 +50,9 @@ object Bench {
 
     // SPARK_GRAFT_BENCH_ONLY=q36_esi_etl,... isolates queries under the
     // same protocol (warmup + min-of-3) — for profiling, not the driver
-    val names = Queries.onlyNames("SPARK_GRAFT_BENCH_ONLY", Queries.benchNames)
-      .fold(Queries.benchNames)(Queries.benchNames.filter)
+    val benched = Queries.registry.filter(_.bench).map(_.name)
+    val names = Queries.onlyNames("SPARK_GRAFT_BENCH_ONLY", benched)
+      .fold(benched)(benched.filter)
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       names.foreach(run(_, warmDir)) // untimed
     // one untimed pass on the TARGET dir too: codegen/JIT warm on the

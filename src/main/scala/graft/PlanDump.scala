@@ -11,14 +11,12 @@ package graft
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, namesCsv) = args.take(4)
+    val names = queryNames(namesCsv)
     val spark = Sessions.local(Sessions.cpus(32))
-    val names =
-      if (namesCsv == "all") Queries.benchNames
-      else namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {
-        val df = Queries.all(name)(spark, sfDir)
+        val df = SparkEntry.queries(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
@@ -31,4 +29,10 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** The queries `namesCsv` names, `all` being the benched ones. An
+    * unknown name fails here, before the session is built. */
+  private[graft] def queryNames(namesCsv: String): Seq[String] =
+    if (namesCsv == "all") Queries.registry.filter(_.bench).map(_.name)
+    else Queries.names("PlanDump", namesCsv, SparkEntry.queries.keySet)
 }

@@ -18,7 +18,9 @@ object ProfileQuery {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name = args(1)
+    // resolved before the session: a typo fails without building one
+    val Seq(name) =
+      Queries.names("ProfileQuery", args(1), SparkEntry.queries.keySet)
     val passes = if (args.length > 2) args(2).toInt else 2
     val spark = Sessions.local(Sessions.cpus(32))
 
@@ -72,7 +74,7 @@ object ProfileQuery {
       lock.synchronized { jobs.clear(); starts.clear()
         stageOfJob.clear(); agg.clear() }
       val t0 = System.nanoTime()
-      val df = Queries.all(name)(spark, sfDir)
+      val df = SparkEntry.queries(name)(spark, sfDir)
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()

@@ -11,6 +11,13 @@ import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.text.TextOps
 
+/** One declared query: `build` makes its frame from a session and a
+  * fixture dir, `oracleSql` is the DuckDB SQL the driver replays
+  * against that frame, and `bench` puts it in [[Bench]]'s timed set. */
+final case class QuerySpec(name: String,
+    build: (SparkSession, String) => DataFrame, oracleSql: String,
+    bench: Boolean = false)
+
 /** The engine's declared query surface: one entry per implemented
   * operator family from SURVEY.md §2 (+ the training-data-pipeline
   * extensions), each paired with ANSI SQL the driver replays in DuckDB.
@@ -6616,6 +6623,24 @@ object Queries {
     Cube.Hierarchy("sexo", Seq("sex_migr")),
     Cube.Hierarchy("ocupacion", Seq("ocu_migr")))
 
+  /** The movement count and mean age every q203 face serves. */
+  private def q203Measures: Seq[Column] = Seq(
+    count(col("id_persona")).as("cantidad_movimientos"),
+    round(dmean(col("edad")), 6).as("promedio_edades"))
+
+  /** The q203 cube over `measures`; each read builds the fact. */
+  private def q203Cube(s: SparkSession, dir: String,
+      measures: Seq[Column] = q203Measures): graft.olap.CubeQuery.CubeRef =
+    graft.olap.CubeQuery.CubeRef(() => q203Wide(s, dir), measures = measures)
+
+  /** The MDX catalog and schema that name the q203 cube `movimientos`. */
+  private def q203Catalog(s: SparkSession, dir: String,
+      measures: Seq[Column] = q203Measures)
+      : Map[String, graft.olap.CubeQuery.CubeRef] =
+    Map("movimientos" -> q203Cube(s, dir, measures))
+
+  private val q203Schema = Map("movimientos" -> q203Hierarchies)
+
   private def q203Order(df: DataFrame): DataFrame =
     df.orderBy(col("gid") +: (col("fact") +:
       q203Levels.map(c => col(c).asc_nulls_first)): _*)
@@ -6626,9 +6651,7 @@ object Queries {
     // call by construction); the unchanged oracle hash certifies
     // result identity through the declarative layer
     q203Order(graft.olap.CubeQuery.run(graft.olap.CubeQuery.Query(
-      cube = graft.olap.CubeQuery.CubeRef(() => q203Wide(s, dir),
-        measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-          round(dmean(col("edad")), 6).as("promedio_edades"))),
+      cube = q203Cube(s, dir),
       hierarchies = q203Hierarchies,
       always = Seq("fact"))))
 
@@ -8108,12 +8131,8 @@ object Queries {
     * (`[fecha].[anio_movi].Members` → the `anio_movi` grain), the
     * slicer value typing, or the measure selection breaks the hash. */
   def q229Mdx(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-        round(dmean(col("edad")), 6).as("promedio_edades"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir)
     val mdx =
       """SELECT {[Measures].[cantidad_movimientos],
         |        [Measures].[promedio_edades]} ON COLUMNS,
@@ -8121,7 +8140,7 @@ object Queries {
         |                 {[transporte].[via_tran].Members}) ON ROWS
         |FROM [movimientos]
         |WHERE ([sexo].[sex_migr].[M])""".stripMargin
-    Mdx.run(mdx, catalog, schema).orderBy("anio_movi", "via_tran")
+    Mdx.run(mdx, catalog, q203Schema).orderBy("anio_movi", "via_tran")
   }
 
   val q229Sql: String =
@@ -8153,9 +8172,7 @@ object Queries {
   def q230CubeSql(s: SparkSession, dir: String): DataFrame = {
     import graft.olap.CubeQuery
     CubeQuery.registerSql(s, "cube_movimientos", CubeQuery.Query(
-      cube = CubeQuery.CubeRef(() => q203Wide(s, dir),
-        measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-          round(dmean(col("edad")), 6).as("promedio_edades"))),
+      cube = q203Cube(s, dir),
       hierarchies = q203Hierarchies,
       always = Seq("fact")))
     // gid 255 = the (fact, anio_movi, mes_movi) set: dia..ocu (8
@@ -8192,12 +8209,8 @@ object Queries {
     * union→sets lowering, the gid bit arithmetic and the single-pass
     * plan must all agree to hash. */
   def q231MdxSets(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-        round(dmean(col("edad")), 6).as("promedio_edades"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir)
     val mdx =
       """SELECT {[Measures].[cantidad_movimientos],
         |        [Measures].[promedio_edades]} ON COLUMNS,
@@ -8205,7 +8218,7 @@ object Queries {
         |        [transporte].[via_tran].Members,
         |        [nacionalidad].[nac_migr].Members} ON ROWS
         |FROM [movimientos]""".stripMargin
-    Mdx.run(mdx, catalog, schema)
+    Mdx.run(mdx, catalog, q203Schema)
       .orderBy(col("gid"), col("anio_movi").asc_nulls_first,
         col("via_tran").asc_nulls_first, col("nac_migr").asc_nulls_first)
   }
@@ -8242,12 +8255,8 @@ object Queries {
     * from the same aggregate — the WITH parse, the reference rewrite,
     * the gate, and the projection must all agree to hash. */
   def q232MdxCalc(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-        round(dmean(col("edad")), 6).as("promedio_edades"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir)
     val mdx =
       """WITH MEMBER [Measures].[carga_estimada] AS
         | 'round([Measures].[cantidad_movimientos]
@@ -8257,7 +8266,7 @@ object Queries {
         |        [Measures].[carga_estimada]} ON COLUMNS,
         |       {[transporte].[via_tran].Members} ON ROWS
         |FROM [movimientos]""".stripMargin
-    Mdx.run(mdx, catalog, schema).orderBy("via_tran")
+    Mdx.run(mdx, catalog, q203Schema).orderBy("via_tran")
   }
 
   val q232Sql: String =
@@ -8286,17 +8295,15 @@ object Queries {
     * aggregate — the parse, the selected-measure scoping and the
     * post-agg filter must agree to hash. */
   def q233MdxNonempty(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-        sum(when(col("edad") === 80, 1)).cast("long").as("octogenarios"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir,
+      Seq(count(col("id_persona")).as("cantidad_movimientos"),
+        sum(when(col("edad") === 80, 1)).cast("long").as("octogenarios")))
     val mdx =
       """SELECT {[Measures].[octogenarios]} ON COLUMNS,
         |       NON EMPTY {[fecha].[dia_movi].Members} ON ROWS
         |FROM [movimientos]""".stripMargin
-    Mdx.run(mdx, catalog, schema)
+    Mdx.run(mdx, catalog, q203Schema)
       .orderBy("anio_movi", "mes_movi", "dia_movi")
   }
 
@@ -8327,12 +8334,8 @@ object Queries {
     * the level — so the parse, the literal merge, the typed cast and
     * the post-agg selection must all agree to hash. */
   def q234MdxMembers(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-        round(dmean(col("edad")), 6).as("promedio_edades"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir)
     val mdx =
       """SELECT {[Measures].[cantidad_movimientos],
         |        [Measures].[promedio_edades]} ON COLUMNS,
@@ -8340,7 +8343,7 @@ object Queries {
         |                  [fecha].[anio_movi].[1996]},
         |                 {[transporte].[via_tran].Members}) ON ROWS
         |FROM [movimientos]""".stripMargin
-    Mdx.run(mdx, catalog, schema).orderBy("anio_movi", "via_tran")
+    Mdx.run(mdx, catalog, q203Schema).orderBy("anio_movi", "via_tran")
   }
 
   val q234Sql: String =
@@ -8368,12 +8371,8 @@ object Queries {
     * part of the contract. The oracle replays the same rank with
     * ORDER BY … DESC / tie-break / LIMIT. */
   def q235MdxTopcount(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-        round(dmean(col("edad")), 6).as("promedio_edades"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir)
     val mdx =
       """SELECT {[Measures].[cantidad_movimientos],
         |        [Measures].[promedio_edades]} ON COLUMNS,
@@ -8381,7 +8380,7 @@ object Queries {
         |                          {[nacionalidad].[nac_migr].Members}),
         |                5, [Measures].[cantidad_movimientos]) ON ROWS
         |FROM [movimientos]""".stripMargin
-    Mdx.run(mdx, catalog, schema)
+    Mdx.run(mdx, catalog, q203Schema)
   }
 
   val q235Sql: String =
@@ -8408,12 +8407,8 @@ object Queries {
     * composition order and both post-agg operators must agree to
     * hash, row order included. */
   def q236MdxFilterOrder(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"),
-        round(dmean(col("edad")), 6).as("promedio_edades"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir)
     val mdx =
       """SELECT {[Measures].[cantidad_movimientos],
         |        [Measures].[promedio_edades]} ON COLUMNS,
@@ -8422,7 +8417,7 @@ object Queries {
         |                    '[Measures].[cantidad_movimientos] >= 1000'),
         |             [Measures].[promedio_edades], BDESC) ON ROWS
         |FROM [movimientos]""".stripMargin
-    Mdx.run(mdx, catalog, schema)
+    Mdx.run(mdx, catalog, q203Schema)
   }
 
   val q236Sql: String =
@@ -8451,11 +8446,9 @@ object Queries {
     * cell predicate over the natural-key CTE: the parse, the
     * coordinate typing and the projection must agree to hash. */
   def q237MdxDrillthrough(s: SparkSession, dir: String): DataFrame = {
-    import graft.olap.{CubeQuery, Mdx}
-    val catalog = Map("movimientos" -> CubeQuery.CubeRef(
-      () => q203Wide(s, dir),
-      measures = Seq(count(col("id_persona")).as("cantidad_movimientos"))))
-    val schema = Map("movimientos" -> q203Hierarchies)
+    import graft.olap.Mdx
+    val catalog = q203Catalog(s, dir,
+      Seq(count(col("id_persona")).as("cantidad_movimientos")))
     val mdx =
       """DRILLTHROUGH
         |SELECT {[Measures].[cantidad_movimientos]} ON COLUMNS,
@@ -8464,7 +8457,7 @@ object Queries {
         |WHERE ([fecha].[anio_movi].[1995], [sexo].[sex_migr].[F])
         |RETURN [anio_movi], [via_tran], [sex_migr], [nac_migr], [edad]"""
         .stripMargin
-    Mdx.run(mdx, catalog, schema)
+    Mdx.run(mdx, catalog, q203Schema)
       .orderBy(col("nac_migr"), col("edad").asc_nulls_first)
   }
 
@@ -8576,14 +8569,13 @@ object Queries {
         q214Grains, q214Measures, root)
       val catalog = Map("movimientos" -> CubeQuery.CubeRef(
         () => s.read.parquet(staged), registry = Some(reg)))
-      val schema = Map("movimientos" -> q203Hierarchies)
       val mdx =
         """SELECT {[Measures].[cantidad_movimientos],
           |        [Measures].[promedio_edades]} ON COLUMNS,
           |       {[fecha].[mes_movi].Members} ON ROWS
           |FROM [movimientos]
           |WHERE ([fecha].[anio_movi].[1995])""".stripMargin
-      val routed = Mdx.run(mdx, catalog, schema)
+      val routed = Mdx.run(mdx, catalog, q203Schema)
       val scans = routed.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           r.relation match {
@@ -8704,657 +8696,338 @@ object Queries {
   // Wiring
   // ===================================================================
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing" -> (q01Pricing _),
-    "q02_filter" -> (q02Filter _),
-    "q03_star" -> (q03Star _),
-    "q04_rollup" -> (q04Rollup _),
-    "q05_topk" -> (q05TopK _),
-    "q06_union" -> (q06Union _),
-    "q07_dim" -> (q07Dim _),
-    "q08_router" -> (q08Router _),
-    "q09_valuemap" -> (q09ValueMap _),
-    "q10_normalize" -> (q10Normalize _),
-    "q11_window_topk" -> (q11WindowTopK _),
-    "q12_dateparts" -> (q12DateParts _),
-    "q13_events_window" -> (q13EventsWindow _),
-    "q14_zscore" -> (q14ZScore _),
-    "q15_class_weights" -> (q15ClassWeights _),
-    "q16_label_encode" -> (q16LabelEncode _),
-    "q17_exact_dedup" -> (q17ExactDedup _),
-    "q18_jaccard" -> (q18Jaccard _),
-    "q19_langid" -> (q19LangId _),
-    "q20_quality" -> (q20Quality _),
-    "q21_rolling_hash" -> (q21RollingHash _),
-    "q22_cosine_topk" -> (q22CosineTopK _),
-    "q23_minhash_dup" -> (q23MinhashDup _),
-    "q24_simhash_dup" -> (q24SimhashDup _),
-    "q25_embed_dup" -> (q25EmbedDup _),
-    "q26_dateseq" -> (q26DateSeq _),
-    "q30_cube_drill" -> (q30CubeDrill _),
-    "q31_sessionize" -> (q31Sessionize _),
-    "q32_media_meta" -> (q32MediaMeta _),
-    "q27_ann_topk" -> (q27AnnTopK _),
-    "q28_minhash_sig" -> (q28MinhashSig _),
-    "q29_simhash_sig" -> (q29SimhashSig _),
-    "q33_fuzzy" -> (q33Fuzzy _),
-    "q34_impute" -> (q34Impute _),
-    "q35_onehot" -> (q35OneHot _),
-    "q36_esi_etl" -> (q36EsiEtl _),
-    "q37_unmapped" -> (q37Unmapped _),
-    "q38_distinct" -> (q38Distinct _),
-    "q39_cube" -> (q39Cube _),
-    "q40_running" -> (q40Running _),
-    "q41_asof" -> (q41AsOf _),
-    "q42_json" -> (q42Json _),
-    "q43_sample" -> (q43Sample _),
-    "q44_ivf_topk" -> (q44IvfTopK _),
-    "q45_range" -> (q45Range _),
-    "q46_forecast" -> (q46Forecast _),
-    "q47_dim_append" -> (q47DimAppend _),
-    "q48_group_sample" -> (q48GroupSample _),
-    "q49_percentile" -> (q49Percentile _),
-    "q50_string_agg" -> (q50StringAgg _),
-    "q51_pivot" -> (q51Pivot _),
-    "q52_ann_indexed" -> (q52AnnIndexed _),
-    "q53_ivf_indexed" -> (q53IvfIndexed _),
-    "q54_class_report" -> (q54ClassReport _),
-    "q55_curation" -> (q55Curation _),
-    "q56_vocab" -> (q56Vocab _),
-    "q57_quantize" -> (q57Quantize _),
-    "q58_tensor_prep" -> (q58TensorPrep _),
-    "q59_boilerplate" -> (q59Boilerplate _),
-    "q60_decontaminate" -> (q60Decontaminate _),
-    "q61_repetition" -> (q61Repetition _),
-    "q62_redact" -> (q62Redact _),
-    "q63_pack" -> (q63Pack _),
-    "q64_dup_clusters" -> (q64DupClusters _),
-    "q65_approx_distinct" -> (q65ApproxDistinct _),
-    "q66_bpe_pairs" -> (q66BpePairs _),
-    "q67_lm_score" -> (q67LmScore _),
-    "q68_profile" -> (q68Profile _),
-    "q69_ffill" -> (q69Ffill _),
-    "q70_chunk" -> (q70Chunk _),
-    "q71_scd2" -> (q71Scd2 _),
-    "q72_setops" -> (q72SetOps _),
-    "q73_delta" -> (q73Delta _),
-    "q74_outliers" -> (q74Outliers _),
-    "q75_folds" -> (q75Folds _),
-    "q76_weighted_sample" -> (q76WeightedSample _),
-    "q77_entropy" -> (q77Entropy _),
-    "q78_tfidf" -> (q78Tfidf _),
-    "q79_binning" -> (q79Binning _),
-    "q80_chi2" -> (q80Chi2 _),
-    "q81_corr" -> (q81Corr _),
-    "q82_incr_agg" -> (q82IncrAgg _),
-    "q83_approx_quantile" -> (q83ApproxQuantile _),
-    "q84_funnel" -> (q84Funnel _),
-    "q85_cohort" -> (q85Cohort _),
-    "q86_rolling_anomaly" -> (q86RollingAnomaly _),
-    "q87_topk_native" -> (q87TopKNative _),
-    "q88_hll_merge" -> (q88HllMerge _),
-    "q89_transitions" -> (q89Transitions _),
-    "q90_scd_lookup" -> (q90ScdLookup _),
-    "q91_cdc_merge" -> (q91CdcMerge _),
-    "q92_unpivot" -> (q92Unpivot _),
-    "q93_heavy_hitters" -> (q93HeavyHitters _),
-    "q94_domain_mix" -> (q94DomainMix _),
-    "q95_histogram" -> (q95Histogram _),
-    "q96_vocab_hh" -> (q96VocabHeavyHitters _),
-    "q97_rolling_dau" -> (q97RollingDau _),
-    "q98_pagerank" -> (q98PageRank _),
-    "q99_fixed_sample" -> (q99FixedSample _),
-    "q100_skyline" -> (q100Skyline _),
-    "q101_overlap" -> (q101Overlap _),
-    "q102_snapshot_diff" -> (q102SnapshotDiff _),
-    "q103_bloom_semi" -> (q103BloomSemi _),
-    "q104_hll_intersect" -> (q104HllIntersect _),
-    "q105_event_paths" -> (q105EventPaths _),
-    "q106_quality" -> (q106Quality _),
-    "q107_jaro_winkler" -> (q107JaroWinkler _),
-    "q108_inverted_index" -> (q108InvertedIndex _),
-    "q109_sample_bounded" -> (q109SampleBounded _),
-    "q110_hierarchy" -> (q110Hierarchy _),
-    "q111_resample" -> (q111Resample _),
-    "q112_cross_dup" -> (q112CrossDup _),
-    "q114_trend" -> (q114Trend _),
-    "q113_winsorize" -> (q113Winsorize _),
-    "q115_gaps" -> (q115Gaps _),
-    "q116_mutual_info" -> (q116MutualInfo _),
-    "q117_centroids" -> (q117Centroids _),
-    "q118_brand_pairs" -> (q118BrandPairs _),
-    "q119_hll_rolling_dau" -> (q119HllRollingDau _),
-    "q120_triangles" -> (q120Triangles _),
-    "q121_abc" -> (q121AbcAnalysis _),
-    "q122_linkage" -> (q122Linkage _),
-    "q123_bfs" -> (q123Bfs _),
-    "q124_sorted_neighborhood" -> (q124SortedNeighborhood _),
-    "q125_top_movers" -> (q125TopMovers _),
-    "q126_winsorize_group" -> (q126WinsorizeGroup _),
-    "q127_novelty" -> (q127Novelty _),
-    "q128_growth_curve" -> (q128GrowthCurve _),
-    "q129_share_of_parent" -> (q129ShareOfParent _),
-    "q130_lift" -> (q130Lift _),
-    "q131_ari" -> (q131Ari _),
-    "q132_roc" -> (q132Roc _),
-    "q133_auc" -> (q133Auc _),
-    "q134_roc_per_class" -> (q134RocPerClass _),
-    "q135_regression_report" -> (q135Regression _),
-    "q136_confusion" -> (q136Confusion _),
-    "q137_funnel" -> (q137Funnel _),
-    "q138_retention" -> (q138Retention _),
-    "q139_transitions" -> (q139Transitions _),
-    "q140_mad_outliers" -> (q140MadOutliers _),
-    "q141_twap" -> (q141Twap _),
-    "q142_golden_record" -> (q142Golden _),
-    "q143_calibration" -> (q143Calibration _),
-    "q144_gini" -> (q144Gini _),
-    "q145_basket" -> (q145Basket _),
-    "q146_cusum" -> (q146Cusum _),
-    "q147_approx_quantile" -> (q147ApproxQuantile _),
-    "q148_gini_by_group" -> (q148GiniByGroup _),
-    "q149_time_to_convert" -> (q149TimeToConvert _),
-    "q150_rfm" -> (q150Rfm _),
-    "q151_rank_percentile" -> (q151RankPercentile _),
-    "q152_token_mixture" -> (q152TokenMixture _),
-    "q153_cluster_rep" -> (q153ClusterRep _),
-    "q154_containment" -> (q154Containment _),
-    "q155_rank_normalize" -> (q155RankNormalize _),
-    "q156_dsir" -> (q156Dsir _),
-    "q157_dup_chunks" -> (q157DupChunks _),
-    "q158_semantic_dup" -> (q158SemanticDup _),
-    "q159_shards" -> (q159Shards _),
-    "q160_kmeans" -> (q160Kmeans _),
-    "q161_hard_negatives" -> (q161HardNegatives _),
-    "q162_vocab_coverage" -> (q162VocabCoverage _),
-    "q163_winnow" -> (q163Winnow _),
-    "q164_ann_recall" -> (q164AnnRecall _),
-    "q165_corpus_health" -> (q165CorpusHealth _),
-    "q166_gopher_rules" -> (q166GopherRules _),
-    "q167_knn_join" -> (q167KnnJoin _),
-    "q168_kanonymity" -> (q168Kanonymity _),
-    "q169_skew_profile" -> (q169SkewProfile _),
-    "q170_fk_discovery" -> (q170FkDiscovery _),
-    "q171_psi" -> (q171Psi _),
-    "q172_target_encode" -> (q172TargetEncode _),
-    "q173_asof_native" -> (q173AsofNative _),
-    "q174_hard_negatives_coarse" -> (q174HardNegativesCoarse _),
-    "q175_bpe_encode" -> (q175BpeEncode _),
-    "q176_bpe_pack" -> (q176BpePack _),
-    "q177_curation_pipeline" -> (q177CurationPipeline _),
-    "q178_media_dhash" -> (q178MediaDhash _),
-    "q179_stream_scd_enrich" -> (q179StreamScdEnrich _),
-    "q180_oracle_canary" -> (q180OracleCanary _),
-    "q181_span_dedup" -> (q181SpanDedup _),
-    "q182_pq_topk" -> (q182PqTopK _),
-    "q183_perplexity" -> (q183Perplexity _),
-    "q184_stream_neardup" -> (q184StreamNearDupIngest _),
-    "q185_pq_sample" -> (q185PqSampleTopK _),
-    "q186_media_dhash_png" -> (q186MediaDhashPng _),
-    "q187_signature_dedup" -> (q187SignatureDedup _),
-    "q188_audio_energy" -> (q188AudioEnergy _),
-    "q189_video_frames" -> (q189VideoFrames _),
-    "q190_video_dedup" -> (q190VideoDedup _),
-    "q191_audio_dedup" -> (q191AudioDedup _),
-    "q192_stream_asof_compact" -> (q192StreamAsofCompact _),
-    "q193_stream_decontam" -> (q193StreamDecontamIngest _),
-    "q194_asof_forward" -> (q194AsofForward _),
-    "q195_asof_tolerance" -> (q195AsofTolerance _),
-    "q196_lsh_tune" -> (q196LshTune _),
-    "q197_source_gate" -> (q197SourceGate _),
-    "q198_asof_fwd_native" -> (q198AsofFwdNative _),
-    "q199_zorder" -> (q199Zorder _),
-    "q200_zorder3" -> (q200Zorder3 _),
-    "q201_zorder_wide" -> (q201ZorderWide _),
-    "q202_sigfetch_dedup" -> (q202SigFetchDedup _),
-    "q203_cube_serve" -> (q203CubeServe _),
-    "q204_sigindex_dedup" -> (q204SigIndexDedup _),
-    "q205_attribution" -> (q205Attribution _),
-    "q206_ab_welch" -> (q206AbWelch _),
-    "q207_cube_incr" -> (q207CubeIncr _),
-    "q208_snapshot_grid" -> (q208SnapshotGrid _),
-    "q209_cube_topk" -> (q209CubeTopK _),
-    "q210_accum_snapshot" -> (q210AccumSnapshot _),
-    "q211_time_decay" -> (q211TimeDecay _),
-    "q212_semi_additive" -> (q212SemiAdditive _),
-    "q213_bridge_alloc" -> (q213BridgeAlloc _),
-    "q214_agg_nav" -> (q214AggNav _),
-    "q215_view_refresh" -> (q215ViewRefresh _),
-    "q216_late_dim" -> (q216LateDim _),
-    "q217_agg_refresh" -> (q217AggRefresh _),
-    "q218_nav_sets" -> (q218NavSets _),
-    "q219_drill_across" -> (q219DrillAcross _),
-    "q220_drill_navigated" -> (q220DrillNavigated _),
-    "q221_drill_across3" -> (q221DrillAcross3 _),
-    "q222_agg_advisor" -> (q222AggAdvisor _),
-    "q223_drill_through" -> (q223DrillThrough _),
-    "q224_closure_rollup" -> (q224ClosureRollup _),
-    "q225_agg_budget" -> (q225AggBudget _),
-    "q226_closure_move" -> (q226ClosureMove _),
-    "q227_closure_ops" -> (q227ClosureOps _),
-    "q228_cube_json" -> (q228CubeJson _),
-    "q229_mdx" -> (q229Mdx _),
-    "q230_cube_sql" -> (q230CubeSql _),
-    "q231_mdx_sets" -> (q231MdxSets _),
-    "q232_mdx_calc" -> (q232MdxCalc _),
-    "q233_mdx_nonempty" -> (q233MdxNonempty _),
-    "q234_mdx_members" -> (q234MdxMembers _),
-    "q235_mdx_topcount" -> (q235MdxTopcount _),
-    "q236_mdx_filter_order" -> (q236MdxFilterOrder _),
-    "q237_mdx_drillthrough" -> (q237MdxDrillthrough _),
-    "q238_agg_route" -> (q238AggRoute _),
-    "q239_mdx_routed_slicer" -> (q239MdxRoutedSlicer _),
+  /** Every declared query, each named once, in one list; `bench`
+    * marks the 97 that [[Bench]] times. [[SparkEntry]]'s maps derive
+    * from it, so its names must be unique (RegistrySpec checks). */
+  val registry: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_pricing", q01Pricing, q01Sql, bench = true),
+    QuerySpec("q02_filter", q02Filter, q02Sql),
+    QuerySpec("q03_star", q03Star, q03Sql, bench = true),
+    QuerySpec("q04_rollup", q04Rollup, q04Sql, bench = true),
+    QuerySpec("q05_topk", q05TopK, q05Sql),
+    QuerySpec("q06_union", q06Union, q06Sql),
+    QuerySpec("q07_dim", q07Dim, q07Sql),
+    QuerySpec("q08_router", q08Router, q08Sql),
+    QuerySpec("q09_valuemap", q09ValueMap, q09Sql),
+    QuerySpec("q10_normalize", q10Normalize, q10Sql),
+    // bench: the collect_list top-k, beside q87's bounded heap
+    QuerySpec("q11_window_topk", q11WindowTopK, q11Sql, bench = true),
+    QuerySpec("q12_dateparts", q12DateParts, q12Sql),
+    QuerySpec("q13_events_window", q13EventsWindow, q13Sql, bench = true),
+    QuerySpec("q14_zscore", q14ZScore, q14Sql),
+    QuerySpec("q15_class_weights", q15ClassWeights, q15Sql),
+    QuerySpec("q16_label_encode", q16LabelEncode, q16Sql),
+    QuerySpec("q17_exact_dedup", q17ExactDedup, q17Sql, bench = true),
+    QuerySpec("q18_jaccard", q18Jaccard, q18Sql),
+    QuerySpec("q19_langid", q19LangId, q19Sql),
+    QuerySpec("q20_quality", q20Quality, q20Sql),
+    QuerySpec("q21_rolling_hash", q21RollingHash, q21Sql, bench = true),
+    QuerySpec("q22_cosine_topk", q22CosineTopK, q22Sql, bench = true),
+    QuerySpec("q23_minhash_dup", q23MinhashDup, q23Sql, bench = true),
+    QuerySpec("q24_simhash_dup", q24SimhashDup, q24Sql),
+    QuerySpec("q25_embed_dup", q25EmbedDup, q25Sql),
+    QuerySpec("q26_dateseq", q26DateSeq, q26Sql),
+    QuerySpec("q30_cube_drill", q30CubeDrill, q30Sql),
+    QuerySpec("q31_sessionize", q31Sessionize, q31Sql),
+    QuerySpec("q32_media_meta", q32MediaMeta, q32Sql),
+    // bench: the scan ANN, beside q52's indexed probe
+    QuerySpec("q27_ann_topk", q27AnnTopK, q27Sql, bench = true),
+    QuerySpec("q28_minhash_sig", q28MinhashSig, q28Sql),
+    QuerySpec("q29_simhash_sig", q29SimhashSig, q29Sql),
+    QuerySpec("q33_fuzzy", q33Fuzzy, q33Sql),
+    QuerySpec("q34_impute", q34Impute, q34Sql),
+    QuerySpec("q35_onehot", q35OneHot, q35Sql),
+    QuerySpec("q36_esi_etl", q36EsiEtl, q36Sql, bench = true),
+    QuerySpec("q37_unmapped", q37Unmapped, q37Sql),
+    QuerySpec("q38_distinct", q38Distinct, q38Sql),
+    QuerySpec("q39_cube", q39Cube, q39Sql),
+    QuerySpec("q40_running", q40Running, q40Sql),
+    // bench: the window as-of join, beside q173's native node
+    QuerySpec("q41_asof", q41AsOf, q41Sql, bench = true),
+    QuerySpec("q42_json", q42Json, q42Sql),
+    QuerySpec("q43_sample", q43Sample, q43Sql),
+    QuerySpec("q44_ivf_topk", q44IvfTopK, q44Sql),
+    QuerySpec("q45_range", q45Range, q45Sql),
+    QuerySpec("q46_forecast", q46Forecast, q46Sql),
+    QuerySpec("q47_dim_append", q47DimAppend, q47Sql),
+    QuerySpec("q48_group_sample", q48GroupSample, q48Sql),
+    QuerySpec("q49_percentile", q49Percentile, q49Sql),
+    QuerySpec("q50_string_agg", q50StringAgg, q50Sql),
+    QuerySpec("q51_pivot", q51Pivot, q51Sql),
+    // bench: the first pass builds the index; min-of-3 reports
+    // the pruned probe
+    QuerySpec("q52_ann_indexed", q52AnnIndexed, q52Sql, bench = true),
+    QuerySpec("q53_ivf_indexed", q53IvfIndexed, q53Sql, bench = true),
+    QuerySpec("q54_class_report", q54ClassReport, q54Sql),
+    QuerySpec("q55_curation", q55Curation, q55Sql),
+    QuerySpec("q56_vocab", q56Vocab, q56Sql),
+    QuerySpec("q57_quantize", q57Quantize, q57Sql),
+    QuerySpec("q58_tensor_prep", q58TensorPrep, q58Sql, bench = true),
+    QuerySpec("q59_boilerplate", q59Boilerplate, q59Sql),
+    QuerySpec("q60_decontaminate", q60Decontaminate, q60Sql, bench = true),
+    QuerySpec("q61_repetition", q61Repetition, q61Sql),
+    QuerySpec("q62_redact", q62Redact, q62Sql),
+    QuerySpec("q63_pack", q63Pack, q63Sql, bench = true),
+    QuerySpec("q64_dup_clusters", q64DupClusters, q64Sql, bench = true),
+    QuerySpec("q65_approx_distinct", q65ApproxDistinct, q65Sql),
+    QuerySpec("q66_bpe_pairs", q66BpePairs, q66Sql),
+    QuerySpec("q67_lm_score", q67LmScore, q67Sql),
+    QuerySpec("q68_profile", q68Profile, q68Sql),
+    QuerySpec("q69_ffill", q69Ffill, q69Sql),
+    QuerySpec("q70_chunk", q70Chunk, q70Sql),
+    QuerySpec("q71_scd2", q71Scd2, q71Sql, bench = true),
+    QuerySpec("q72_setops", q72SetOps, q72Sql),
+    QuerySpec("q73_delta", q73Delta, q73Sql),
+    QuerySpec("q74_outliers", q74Outliers, q74Sql),
+    QuerySpec("q75_folds", q75Folds, q75Sql),
+    QuerySpec("q76_weighted_sample", q76WeightedSample, q76Sql),
+    QuerySpec("q77_entropy", q77Entropy, q77Sql),
+    QuerySpec("q78_tfidf", q78Tfidf, q78Sql),
+    QuerySpec("q79_binning", q79Binning, q79Sql),
+    QuerySpec("q80_chi2", q80Chi2, q80Sql),
+    QuerySpec("q81_corr", q81Corr, q81Sql),
+    QuerySpec("q82_incr_agg", q82IncrAgg, q82Sql),
+    QuerySpec("q83_approx_quantile", q83ApproxQuantile, q83Sql),
+    QuerySpec("q84_funnel", q84Funnel, q84Sql),
+    QuerySpec("q85_cohort", q85Cohort, q85Sql),
+    QuerySpec("q86_rolling_anomaly", q86RollingAnomaly, q86Sql),
+    // bench: the bounded-heap top-k, beside q11
+    QuerySpec("q87_topk_native", q87TopKNative, q87Sql, bench = true),
+    QuerySpec("q88_hll_merge", q88HllMerge, q88Sql),
+    QuerySpec("q89_transitions", q89Transitions, q89Sql),
+    QuerySpec("q90_scd_lookup", q90ScdLookup, q90Sql),
+    QuerySpec("q91_cdc_merge", q91CdcMerge, q91Sql, bench = true),
+    QuerySpec("q92_unpivot", q92Unpivot, q92Sql),
+    QuerySpec("q93_heavy_hitters", q93HeavyHitters, q93Sql),
+    QuerySpec("q94_domain_mix", q94DomainMix, q94Sql),
+    QuerySpec("q95_histogram", q95Histogram, q95Sql),
+    QuerySpec("q96_vocab_hh", q96VocabHeavyHitters, q96Sql),
+    QuerySpec("q97_rolling_dau", q97RollingDau, q97Sql),
+    QuerySpec("q98_pagerank", q98PageRank, q98Sql),
+    QuerySpec("q99_fixed_sample", q99FixedSample, q99Sql),
+    QuerySpec("q100_skyline", q100Skyline, q100Sql, bench = true),
+    QuerySpec("q101_overlap", q101Overlap, q101Sql),
+    QuerySpec("q102_snapshot_diff", q102SnapshotDiff, q102Sql),
+    QuerySpec("q103_bloom_semi", q103BloomSemi, q103Sql, bench = true),
+    QuerySpec("q104_hll_intersect", q104HllIntersect, q104Sql),
+    QuerySpec("q105_event_paths", q105EventPaths, q105Sql),
+    QuerySpec("q106_quality", q106Quality, q106Sql),
+    QuerySpec("q107_jaro_winkler", q107JaroWinkler, q107Sql),
+    QuerySpec("q108_inverted_index", q108InvertedIndex, q108Sql, bench = true),
+    QuerySpec("q109_sample_bounded", q109SampleBounded, q109Sql),
+    QuerySpec("q110_hierarchy", q110Hierarchy, q110Sql, bench = true),
+    QuerySpec("q111_resample", q111Resample, q111Sql),
+    QuerySpec("q112_cross_dup", q112CrossDup, q112Sql, bench = true),
+    QuerySpec("q114_trend", q114Trend, q114Sql),
+    QuerySpec("q113_winsorize", q113Winsorize, q113Sql),
+    QuerySpec("q115_gaps", q115Gaps, q115Sql),
+    QuerySpec("q116_mutual_info", q116MutualInfo, q116Sql),
+    QuerySpec("q117_centroids", q117Centroids, q117Sql),
+    QuerySpec("q118_brand_pairs", q118BrandPairs, q118Sql),
+    QuerySpec("q119_hll_rolling_dau", q119HllRollingDau, q119Sql, bench = true),
+    QuerySpec("q120_triangles", q120Triangles, q120Sql),
+    QuerySpec("q121_abc", q121AbcAnalysis, q121Sql),
+    QuerySpec("q122_linkage", q122Linkage, q122Sql, bench = true),
+    QuerySpec("q123_bfs", q123Bfs, q123Sql),
+    QuerySpec("q124_sorted_neighborhood", q124SortedNeighborhood,
+      q124Sql, bench = true),
+    QuerySpec("q125_top_movers", q125TopMovers, q125Sql),
+    QuerySpec("q126_winsorize_group", q126WinsorizeGroup, q126Sql),
+    QuerySpec("q127_novelty", q127Novelty, q127Sql),
+    QuerySpec("q128_growth_curve", q128GrowthCurve, q128Sql),
+    QuerySpec("q129_share_of_parent", q129ShareOfParent, q129Sql),
+    QuerySpec("q130_lift", q130Lift, q130Sql),
+    QuerySpec("q131_ari", q131Ari, q131Sql),
+    QuerySpec("q132_roc", q132Roc, q132Sql),
+    QuerySpec("q133_auc", q133Auc, q133Sql),
+    QuerySpec("q134_roc_per_class", q134RocPerClass, q134Sql),
+    QuerySpec("q135_regression_report", q135Regression, q135Sql),
+    QuerySpec("q136_confusion", q136Confusion, q136Sql),
+    // bench: the analytics surface (q137-q150)
+    QuerySpec("q137_funnel", q137Funnel, q137Sql, bench = true),
+    QuerySpec("q138_retention", q138Retention, q138Sql),
+    QuerySpec("q139_transitions", q139Transitions, q139Sql, bench = true),
+    QuerySpec("q140_mad_outliers", q140MadOutliers, q140Sql, bench = true),
+    // bench: chunked time series; the chunk stitching's overhead
+    // stays visible (q141, q146)
+    QuerySpec("q141_twap", q141Twap, q141Sql, bench = true),
+    QuerySpec("q142_golden_record", q142Golden, q142Sql),
+    QuerySpec("q143_calibration", q143Calibration, q143Sql),
+    QuerySpec("q144_gini", q144Gini, q144Sql, bench = true),
+    QuerySpec("q145_basket", q145Basket, q145Sql, bench = true),
+    QuerySpec("q146_cusum", q146Cusum, q146Sql, bench = true),
+    QuerySpec("q147_approx_quantile", q147ApproxQuantile, q147Sql),
+    QuerySpec("q148_gini_by_group", q148GiniByGroup, q148Sql),
+    QuerySpec("q149_time_to_convert", q149TimeToConvert, q149Sql),
+    QuerySpec("q150_rfm", q150Rfm, q150Sql, bench = true),
+    QuerySpec("q151_rank_percentile", q151RankPercentile, q151Sql),
+    QuerySpec("q152_token_mixture", q152TokenMixture, q152Sql),
+    QuerySpec("q153_cluster_rep", q153ClusterRep, q153Sql),
+    // bench: the curation and similarity surface (q154-q163)
+    QuerySpec("q154_containment", q154Containment, q154Sql, bench = true),
+    QuerySpec("q155_rank_normalize", q155RankNormalize, q155Sql),
+    QuerySpec("q156_dsir", q156Dsir, q156Sql, bench = true),
+    QuerySpec("q157_dup_chunks", q157DupChunks, q157Sql, bench = true),
+    QuerySpec("q158_semantic_dup", q158SemanticDup, q158Sql),
+    QuerySpec("q159_shards", q159Shards, q159Sql),
+    QuerySpec("q160_kmeans", q160Kmeans, q160Sql, bench = true),
+    QuerySpec("q161_hard_negatives", q161HardNegatives, q161Sql, bench = true),
+    QuerySpec("q162_vocab_coverage", q162VocabCoverage, q162Sql),
+    QuerySpec("q163_winnow", q163Winnow, q163Sql, bench = true),
+    QuerySpec("q164_ann_recall", q164AnnRecall, q164Sql),
+    QuerySpec("q165_corpus_health", q165CorpusHealth, q165Sql),
+    QuerySpec("q166_gopher_rules", q166GopherRules, q166Sql),
+    QuerySpec("q167_knn_join", q167KnnJoin, q167Sql),
+    QuerySpec("q168_kanonymity", q168Kanonymity, q168Sql),
+    QuerySpec("q169_skew_profile", q169SkewProfile, q169Sql),
+    QuerySpec("q170_fk_discovery", q170FkDiscovery, q170Sql),
+    QuerySpec("q171_psi", q171Psi, q171Sql),
+    QuerySpec("q172_target_encode", q172TargetEncode, q172Sql),
+    // bench: the native as-of node, beside q41's window
+    QuerySpec("q173_asof_native", q173AsofNative, q173Sql, bench = true),
+    QuerySpec("q174_hard_negatives_coarse", q174HardNegativesCoarse, q174Sql),
+    QuerySpec("q175_bpe_encode", q175BpeEncode, q175Sql),
+    // bench: BPE encode with weighted join-back and token-accurate
+    // packing
+    QuerySpec("q176_bpe_pack", q176BpePack, q176Sql, bench = true),
+    // bench: the end-to-end curation chain
+    QuerySpec("q177_curation_pipeline", q177CurationPipeline,
+      q177Sql, bench = true),
+    QuerySpec("q178_media_dhash", q178MediaDhash, q178Sql),
+    // the streaming path must reproduce the batch point-in-time
+    // answer, so it shares q90's oracle
+    QuerySpec("q179_stream_scd_enrich", q179StreamScdEnrich, q90Sql),
+    QuerySpec("q180_oracle_canary", q180OracleCanary, q180Sql),
+    // bench: exact substring dedup (two-stage hash screen)
+    QuerySpec("q181_span_dedup", q181SpanDedup, q181Sql, bench = true),
+    // bench: product-quantized ANN (sub-fits + ADC scan)
+    QuerySpec("q182_pq_topk", q182PqTopK, q182Sql, bench = true),
+    // bench: the bigram perplexity gate
+    QuerySpec("q183_perplexity", q183Perplexity, q183Sql, bench = true),
+    // not benched: a stream face's wall is temp-dir and trigger
+    // lifecycle, not operator cost (q184, q193)
+    QuerySpec("q184_stream_neardup", q184StreamNearDupIngest, q184Sql),
+    // bench: the sampled PQ fit, beside q182's full fit
+    QuerySpec("q185_pq_sample", q185PqSampleTopK, q185Sql, bench = true),
+    // bench: real PNG encode/decode riding the scan
+    QuerySpec("q186_media_dhash_png", q186MediaDhashPng, q186Sql, bench = true),
+    // bench: dedup from stored signatures, beside q23's from-text
+    // form; it must reproduce that path, so it shares q23's oracle
+    QuerySpec("q187_signature_dedup", q187SignatureDedup, q23Sql, bench = true),
+    // bench: real WAV encode/decode riding the scan
+    QuerySpec("q188_audio_energy", q188AudioEnergy, q188Sql, bench = true),
+    // bench: container split + per-frame PNG decode + dHash
+    QuerySpec("q189_video_frames", q189VideoFrames, q189Sql, bench = true),
+    // bench: clip-level video dedup (per-frame Hamming blocking)
+    QuerySpec("q190_video_dedup", q190VideoDedup, q190Sql, bench = true),
+    // bench: audio near-dup through the real WAV codec
+    QuerySpec("q191_audio_dedup", q191AudioDedup, q191Sql, bench = true),
+    // the compacted stream face must land q41's batch answer
+    QuerySpec("q192_stream_asof_compact", q192StreamAsofCompact, q192Sql),
+    QuerySpec("q193_stream_decontam", q193StreamDecontamIngest, q193Sql),
+    // bench: the as-of variants riding q41's merge plan
+    QuerySpec("q194_asof_forward", q194AsofForward, q194Sql, bench = true),
+    QuerySpec("q195_asof_tolerance", q195AsofTolerance, q195Sql, bench = true),
+    // not benched: the tuner grid is constant-sized
+    QuerySpec("q196_lsh_tune", q196LshTune, q196Sql),
+    // bench: the source-level gate
+    QuerySpec("q197_source_gate", q197SourceGate, q197Sql, bench = true),
+    // bench: the native forward as-of, beside q194's window
+    QuerySpec("q198_asof_fwd_native", q198AsofFwdNative, q198Sql, bench = true),
+    // bench: z-order layout over the biggest fixture table
+    QuerySpec("q199_zorder", q199Zorder, q199Sql, bench = true),
+    QuerySpec("q200_zorder3", q200Zorder3, q200Sql, bench = true),
+    // bench: the overflow-guarded wide-span z-order; the guard's
+    // shifts stay visibly free
+    QuerySpec("q201_zorder_wide", q201ZorderWide, q201Sql, bench = true),
+    // bench: the signature-store fetch path, beside q187's semi
+    // join and q23's from-text form (all three share q23's oracle)
+    QuerySpec("q202_sigfetch_dedup", q202SigFetchDedup, q23Sql, bench = true),
+    // bench: both cubes' whole member space in one grouping-sets
+    // pass
+    QuerySpec("q203_cube_serve", q203CubeServe, q203Sql, bench = true),
+    // bench: the BandIndex point-lookup face, beside q202's scan
+    QuerySpec("q204_sigindex_dedup", q204SigIndexDedup, q23Sql, bench = true),
+    // bench: cheap aggregates, benched so regressions show
+    QuerySpec("q205_attribution", q205Attribution, q205Sql, bench = true),
+    QuerySpec("q206_ab_welch", q206AbWelch, q206Sql, bench = true),
+    // bench: incremental cube maintenance, beside q203's recompute
+    QuerySpec("q207_cube_incr", q207CubeIncr, q207Sql, bench = true),
+    // bench: the periodic-snapshot fact
+    QuerySpec("q208_snapshot_grid", q208SnapshotGrid, q208Sql, bench = true),
+    // bench: top-k per cube member (grouping sets x bounded heap)
+    QuerySpec("q209_cube_topk", q209CubeTopK, q209Sql, bench = true),
+    // bench: the accumulating-snapshot fact
+    QuerySpec("q210_accum_snapshot", q210AccumSnapshot, q210Sql, bench = true),
+    // bench: time-decay attribution (q205's join, no windows)
+    QuerySpec("q211_time_decay", q211TimeDecay, q211Sql, bench = true),
+    // bench: semi-additive snapshot aggregation
+    QuerySpec("q212_semi_additive", q212SemiAdditive, q212Sql, bench = true),
+    // bench: weighted bridge allocation (exact integer credits)
+    QuerySpec("q213_bridge_alloc", q213BridgeAlloc, q213Sql, bench = true),
+    QuerySpec("q214_agg_nav", q214AggNav, q214Sql, bench = true),
+    QuerySpec("q215_view_refresh", q215ViewRefresh, q215Sql, bench = true),
+    QuerySpec("q216_late_dim", q216LateDim, q216Sql, bench = true),
+    QuerySpec("q217_agg_refresh", q217AggRefresh, q217Sql, bench = true),
+    QuerySpec("q218_nav_sets", q218NavSets, q218Sql, bench = true),
+    // bench: cross-cube drill-across
+    QuerySpec("q219_drill_across", q219DrillAcross, q219Sql, bench = true),
+    // bench: drill-across from the navigator, beside q219, so
+    // the registry build's fixed cost shows against the fact scans
+    QuerySpec("q220_drill_navigated", q220DrillNavigated,
+      q220Sql, bench = true),
+    QuerySpec("q221_drill_across3", q221DrillAcross3, q221Sql, bench = true),
+    QuerySpec("q222_agg_advisor", q222AggAdvisor, q222Sql, bench = true),
+    QuerySpec("q223_drill_through", q223DrillThrough, q223Sql, bench = true),
+    QuerySpec("q224_closure_rollup", q224ClosureRollup, q224Sql, bench = true),
+    // bench: the budget advisor; the driver-side greedy stays
+    // visibly free beside q222
+    QuerySpec("q225_agg_budget", q225AggBudget, q225Sql, bench = true),
+    // bench: incremental closure maintenance, beside q224's
+    // rebuild
+    QuerySpec("q226_closure_move", q226ClosureMove, q226Sql, bench = true),
+    // bench: the full incremental closure lifecycle
+    QuerySpec("q227_closure_ops", q227ClosureOps, q227Sql, bench = true),
+    // bench: the JSON wire path
+    QuerySpec("q228_cube_json", q228CubeJson, q228Sql, bench = true),
+    // bench: the text faces (MDX, and q230's SQL view) beside
+    // q203's direct member space
+    QuerySpec("q229_mdx", q229Mdx, q229Sql, bench = true),
+    QuerySpec("q230_cube_sql", q230CubeSql, q230Sql, bench = true),
+    // bench: MDX set union lowered to one grouping-sets pass
+    QuerySpec("q231_mdx_sets", q231MdxSets, q231Sql, bench = true),
+    // bench: the WITH MEMBER post-agg projection
+    QuerySpec("q232_mdx_calc", q232MdxCalc, q232Sql, bench = true),
+    QuerySpec("q233_mdx_nonempty", q233MdxNonempty, q233Sql),
+    QuerySpec("q234_mdx_members", q234MdxMembers, q234Sql),
+    // bench: TOPCOUNT stays a TakeOrdered decoration
+    QuerySpec("q235_mdx_topcount", q235MdxTopcount, q235Sql, bench = true),
+    QuerySpec("q236_mdx_filter_order", q236MdxFilterOrder, q236Sql),
+    QuerySpec("q237_mdx_drillthrough", q237MdxDrillthrough, q237Sql),
+    // bench: the SQL-to-rollup rewrite, beside q214's navigator
+    QuerySpec("q238_agg_route", q238AggRoute, q238Sql, bench = true),
+    // bench: the routed sliced drill stays dim-sized
+    QuerySpec("q239_mdx_routed_slicer", q239MdxRoutedSlicer,
+      q239Sql, bench = true),
   )
 
-  val oracles: Map[String, String] = Map(
-    "q01_pricing" -> q01Sql,
-    "q02_filter" -> q02Sql,
-    "q03_star" -> q03Sql,
-    "q04_rollup" -> q04Sql,
-    "q05_topk" -> q05Sql,
-    "q06_union" -> q06Sql,
-    "q07_dim" -> q07Sql,
-    "q08_router" -> q08Sql,
-    "q09_valuemap" -> q09Sql,
-    "q10_normalize" -> q10Sql,
-    "q11_window_topk" -> q11Sql,
-    "q12_dateparts" -> q12Sql,
-    "q13_events_window" -> q13Sql,
-    "q14_zscore" -> q14Sql,
-    "q15_class_weights" -> q15Sql,
-    "q16_label_encode" -> q16Sql,
-    "q17_exact_dedup" -> q17Sql,
-    "q18_jaccard" -> q18Sql,
-    "q19_langid" -> q19Sql,
-    "q20_quality" -> q20Sql,
-    "q21_rolling_hash" -> q21Sql,
-    "q22_cosine_topk" -> q22Sql,
-    "q23_minhash_dup" -> q23Sql,
-    "q24_simhash_dup" -> q24Sql,
-    "q25_embed_dup" -> q25Sql,
-    "q26_dateseq" -> q26Sql,
-    "q27_ann_topk" -> q27Sql,
-    "q28_minhash_sig" -> q28Sql,
-    "q29_simhash_sig" -> q29Sql,
-    "q30_cube_drill" -> q30Sql,
-    "q31_sessionize" -> q31Sql,
-    "q32_media_meta" -> q32Sql,
-    "q33_fuzzy" -> q33Sql,
-    "q34_impute" -> q34Sql,
-    "q35_onehot" -> q35Sql,
-    "q36_esi_etl" -> q36Sql,
-    "q37_unmapped" -> q37Sql,
-    "q38_distinct" -> q38Sql,
-    "q39_cube" -> q39Sql,
-    "q40_running" -> q40Sql,
-    "q41_asof" -> q41Sql,
-    "q42_json" -> q42Sql,
-    "q43_sample" -> q43Sql,
-    "q44_ivf_topk" -> q44Sql,
-    "q45_range" -> q45Sql,
-    "q46_forecast" -> q46Sql,
-    "q47_dim_append" -> q47Sql,
-    "q48_group_sample" -> q48Sql,
-    "q49_percentile" -> q49Sql,
-    "q50_string_agg" -> q50Sql,
-    "q51_pivot" -> q51Sql,
-    "q52_ann_indexed" -> q52Sql,
-    "q53_ivf_indexed" -> q53Sql,
-    "q54_class_report" -> q54Sql,
-    "q55_curation" -> q55Sql,
-    "q56_vocab" -> q56Sql,
-    "q57_quantize" -> q57Sql,
-    "q58_tensor_prep" -> q58Sql,
-    "q59_boilerplate" -> q59Sql,
-    "q60_decontaminate" -> q60Sql,
-    "q61_repetition" -> q61Sql,
-    "q62_redact" -> q62Sql,
-    "q63_pack" -> q63Sql,
-    "q64_dup_clusters" -> q64Sql,
-    "q65_approx_distinct" -> q65Sql,
-    "q66_bpe_pairs" -> q66Sql,
-    "q67_lm_score" -> q67Sql,
-    "q68_profile" -> q68Sql,
-    "q69_ffill" -> q69Sql,
-    "q70_chunk" -> q70Sql,
-    "q71_scd2" -> q71Sql,
-    "q72_setops" -> q72Sql,
-    "q73_delta" -> q73Sql,
-    "q74_outliers" -> q74Sql,
-    "q75_folds" -> q75Sql,
-    "q76_weighted_sample" -> q76Sql,
-    "q77_entropy" -> q77Sql,
-    "q78_tfidf" -> q78Sql,
-    "q79_binning" -> q79Sql,
-    "q80_chi2" -> q80Sql,
-    "q81_corr" -> q81Sql,
-    "q82_incr_agg" -> q82Sql,
-    "q83_approx_quantile" -> q83Sql,
-    "q84_funnel" -> q84Sql,
-    "q85_cohort" -> q85Sql,
-    "q86_rolling_anomaly" -> q86Sql,
-    "q87_topk_native" -> q87Sql,
-    "q88_hll_merge" -> q88Sql,
-    "q89_transitions" -> q89Sql,
-    "q90_scd_lookup" -> q90Sql,
-    "q91_cdc_merge" -> q91Sql,
-    "q92_unpivot" -> q92Sql,
-    "q93_heavy_hitters" -> q93Sql,
-    "q94_domain_mix" -> q94Sql,
-    "q95_histogram" -> q95Sql,
-    "q96_vocab_hh" -> q96Sql,
-    "q97_rolling_dau" -> q97Sql,
-    "q98_pagerank" -> q98Sql,
-    "q99_fixed_sample" -> q99Sql,
-    "q100_skyline" -> q100Sql,
-    "q101_overlap" -> q101Sql,
-    "q102_snapshot_diff" -> q102Sql,
-    "q103_bloom_semi" -> q103Sql,
-    "q104_hll_intersect" -> q104Sql,
-    "q105_event_paths" -> q105Sql,
-    "q106_quality" -> q106Sql,
-    "q107_jaro_winkler" -> q107Sql,
-    "q108_inverted_index" -> q108Sql,
-    "q109_sample_bounded" -> q109Sql,
-    "q110_hierarchy" -> q110Sql,
-    "q111_resample" -> q111Sql,
-    "q112_cross_dup" -> q112Sql,
-    "q114_trend" -> q114Sql,
-    "q113_winsorize" -> q113Sql,
-    "q115_gaps" -> q115Sql,
-    "q116_mutual_info" -> q116Sql,
-    "q117_centroids" -> q117Sql,
-    "q118_brand_pairs" -> q118Sql,
-    "q119_hll_rolling_dau" -> q119Sql,
-    "q120_triangles" -> q120Sql,
-    "q121_abc" -> q121Sql,
-    "q122_linkage" -> q122Sql,
-    "q123_bfs" -> q123Sql,
-    "q124_sorted_neighborhood" -> q124Sql,
-    "q125_top_movers" -> q125Sql,
-    "q126_winsorize_group" -> q126Sql,
-    "q127_novelty" -> q127Sql,
-    "q128_growth_curve" -> q128Sql,
-    "q129_share_of_parent" -> q129Sql,
-    "q130_lift" -> q130Sql,
-    "q131_ari" -> q131Sql,
-    "q132_roc" -> q132Sql,
-    "q133_auc" -> q133Sql,
-    "q134_roc_per_class" -> q134Sql,
-    "q135_regression_report" -> q135Sql,
-    "q136_confusion" -> q136Sql,
-    "q137_funnel" -> q137Sql,
-    "q138_retention" -> q138Sql,
-    "q139_transitions" -> q139Sql,
-    "q140_mad_outliers" -> q140Sql,
-    "q141_twap" -> q141Sql,
-    "q142_golden_record" -> q142Sql,
-    "q143_calibration" -> q143Sql,
-    "q144_gini" -> q144Sql,
-    "q145_basket" -> q145Sql,
-    "q146_cusum" -> q146Sql,
-    "q147_approx_quantile" -> q147Sql,
-    "q148_gini_by_group" -> q148Sql,
-    "q149_time_to_convert" -> q149Sql,
-    "q150_rfm" -> q150Sql,
-    "q151_rank_percentile" -> q151Sql,
-    "q152_token_mixture" -> q152Sql,
-    "q153_cluster_rep" -> q153Sql,
-    "q154_containment" -> q154Sql,
-    "q155_rank_normalize" -> q155Sql,
-    "q156_dsir" -> q156Sql,
-    "q157_dup_chunks" -> q157Sql,
-    "q158_semantic_dup" -> q158Sql,
-    "q159_shards" -> q159Sql,
-    "q160_kmeans" -> q160Sql,
-    "q161_hard_negatives" -> q161Sql,
-    "q162_vocab_coverage" -> q162Sql,
-    "q163_winnow" -> q163Sql,
-    "q164_ann_recall" -> q164Sql,
-    "q165_corpus_health" -> q165Sql,
-    "q166_gopher_rules" -> q166Sql,
-    "q167_knn_join" -> q167Sql,
-    "q168_kanonymity" -> q168Sql,
-    "q169_skew_profile" -> q169Sql,
-    "q170_fk_discovery" -> q170Sql,
-    "q171_psi" -> q171Sql,
-    "q172_target_encode" -> q172Sql,
-    "q173_asof_native" -> q173Sql,
-    "q174_hard_negatives_coarse" -> q174Sql,
-    "q175_bpe_encode" -> q175Sql,
-    "q176_bpe_pack" -> q176Sql,
-    "q177_curation_pipeline" -> q177Sql,
-    "q178_media_dhash" -> q178Sql,
-    // the streaming path must reproduce the BATCH point-in-time answer
-    // — that is the claim — so it shares q90's oracle verbatim
-    "q179_stream_scd_enrich" -> q90Sql,
-    "q180_oracle_canary" -> q180Sql,
-    "q181_span_dedup" -> q181Sql,
-    "q182_pq_topk" -> q182Sql,
-    "q183_perplexity" -> q183Sql,
-    "q184_stream_neardup" -> q184Sql,
-    "q185_pq_sample" -> q185Sql,
-    "q186_media_dhash_png" -> q186Sql,
-    // stored-signature dedup must reproduce the text path bit-for-bit,
-    // so it shares q23's exact O(n²) Jaccard oracle verbatim
-    "q187_signature_dedup" -> q23Sql,
-    "q188_audio_energy" -> q188Sql,
-    "q189_video_frames" -> q189Sql,
-    "q190_video_dedup" -> q190Sql,
-    "q191_audio_dedup" -> q191Sql,
-    // the compacted stream face must land exactly q41's batch answer
-    "q192_stream_asof_compact" -> q192Sql,
-    "q193_stream_decontam" -> q193Sql,
-    "q194_asof_forward" -> q194Sql,
-    "q195_asof_tolerance" -> q195Sql,
-    "q196_lsh_tune" -> q196Sql,
-    "q197_source_gate" -> q197Sql,
-    "q198_asof_fwd_native" -> q198Sql,
-    "q199_zorder" -> q199Sql,
-    "q200_zorder3" -> q200Sql,
-    "q201_zorder_wide" -> q201Sql,
-    "q202_sigfetch_dedup" -> q23Sql,
-    "q203_cube_serve" -> q203Sql,
-    "q204_sigindex_dedup" -> q23Sql,
-    "q205_attribution" -> q205Sql,
-    "q206_ab_welch" -> q206Sql,
-    "q207_cube_incr" -> q207Sql,
-    "q208_snapshot_grid" -> q208Sql,
-    "q209_cube_topk" -> q209Sql,
-    "q210_accum_snapshot" -> q210Sql,
-    "q211_time_decay" -> q211Sql,
-    "q212_semi_additive" -> q212Sql,
-    "q213_bridge_alloc" -> q213Sql,
-    "q214_agg_nav" -> q214Sql,
-    "q215_view_refresh" -> q215Sql,
-    "q216_late_dim" -> q216Sql,
-    "q217_agg_refresh" -> q217Sql,
-    "q218_nav_sets" -> q218Sql,
-    "q219_drill_across" -> q219Sql,
-    "q220_drill_navigated" -> q220Sql,
-    "q221_drill_across3" -> q221Sql,
-    "q222_agg_advisor" -> q222Sql,
-    "q223_drill_through" -> q223Sql,
-    "q224_closure_rollup" -> q224Sql,
-    "q225_agg_budget" -> q225Sql,
-    "q226_closure_move" -> q226Sql,
-    "q227_closure_ops" -> q227Sql,
-    "q228_cube_json" -> q228Sql,
-    "q229_mdx" -> q229Sql,
-    "q230_cube_sql" -> q230Sql,
-    "q231_mdx_sets" -> q231Sql,
-    "q232_mdx_calc" -> q232Sql,
-    "q233_mdx_nonempty" -> q233Sql,
-    "q234_mdx_members" -> q234Sql,
-    "q235_mdx_topcount" -> q235Sql,
-    "q236_mdx_filter_order" -> q236Sql,
-    "q237_mdx_drillthrough" -> q237Sql,
-    "q238_agg_route" -> q238Sql,
-    "q239_mdx_routed_slicer" -> q239Sql,
-  )
+  /** The names in the comma-separated list `csv`, in order: the one
+    * name filter behind Verify's `SPARK_GRAFT_ONLY`, Bench's
+    * `SPARK_GRAFT_BENCH_ONLY` and the tools' query arguments. A name
+    * outside `known` fails, listed under `label`, so a typo never
+    * silently selects nothing and fails before any session exists. */
+  private[graft] def names(label: String, csv: String,
+      known: Iterable[String]): Seq[String] = {
+    val picked = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val unknown = picked.toSet -- known
+    require(unknown.isEmpty,
+      s"$label names unknown: ${unknown.toSeq.sorted.mkString(", ")}")
+    picked
+  }
 
-  /** Headline queries for the per-round benchmark. q27 vs q52 exposes
-    * the scan-vs-indexed ANN gap (q52's first pass builds the index;
-    * min-of-3 reports the steady-state pruned probe); q11 vs q87 the
-    * collect_list-vs-bounded-heap top-k gap. */
-  val benchNames: Seq[String] = Seq(
-    "q01_pricing", "q03_star", "q04_rollup", "q11_window_topk",
-    "q13_events_window", "q17_exact_dedup", "q21_rolling_hash",
-    "q22_cosine_topk", "q23_minhash_dup", "q27_ann_topk",
-    "q36_esi_etl", "q52_ann_indexed", "q53_ivf_indexed",
-    "q58_tensor_prep", "q60_decontaminate", "q63_pack",
-    "q64_dup_clusters", "q71_scd2", "q87_topk_native",
-    "q91_cdc_merge", "q100_skyline", "q103_bloom_semi",
-    "q108_inverted_index", "q110_hierarchy", "q112_cross_dup",
-    "q119_hll_rolling_dau", "q122_linkage", "q124_sorted_neighborhood",
-    // round-4 analytics surface — benched so funnel/basket/Gini/MAD/RFM
-    // regressions are visible round-over-round
-    "q137_funnel", "q139_transitions", "q140_mad_outliers",
-    "q144_gini", "q145_basket", "q150_rfm",
-    // round-5/6 curation + similarity surface
-    "q154_containment", "q156_dsir", "q157_dup_chunks",
-    "q160_kmeans", "q161_hard_negatives", "q163_winnow",
-    // q41 vs q173 exposes the window-vs-native as-of join gap
-    "q41_asof", "q173_asof_native",
-    // round-6: the chunked time-series paths (TWAP lead, CUSUM
-    // two-phase prefix) — benched so the chunk stitching's overhead
-    // stays visible round-over-round
-    "q141_twap", "q146_cusum",
-    // round-7: BPE tokenizer apply (vocab-collapsed encode + weighted
-    // join-back + token-accurate packing) and the end-to-end curation
-    // pipeline (the north-star chain a training-data user ships)
-    "q176_bpe_pack", "q177_curation_pipeline",
-    // round-7: exact substring dedup (two-stage hash screen) and
-    // product-quantized ANN (4 sub-fits + ADC scan) — both new
-    // operator families, benched from birth
-    "q181_span_dedup", "q182_pq_topk", "q183_perplexity",
-    // round-8: sampled-fit PQ (the production fit shape, benched
-    // against q182's full fit), the real-codec media paths (PNG
-    // encode/decode, WAV encode/decode riding the scan), and
-    // stored-signature dedup (benched against q23's from-text form)
-    "q185_pq_sample", "q186_media_dhash_png", "q187_signature_dedup",
-    "q188_audio_energy",
-    // round-9: the concatenated-frame video face (container split +
-    // real per-frame PNG decode + dHash riding the scan) and
-    // clip-level video dedup (per-frame Hamming blocking + exact
-    // verify + per-pair frame counting)
-    "q189_video_frames", "q190_video_dedup",
-    // round-9: audio near-dup (energy-gradient fingerprint through the
-    // real WAV codec + Hamming blocking)
-    "q191_audio_dedup",
-    // round-9: the as-of variant family (forward scan, toleranced
-    // lookback — both ride q41's merge plan) and the source-level gate
-    // (q196's tuner grid is constant-sized — not worth a bench slot;
-    // q193's stream face follows q184 out of the bench: its wall is
-    // temp-dir and trigger lifecycle, not operator cost)
-    "q194_asof_forward", "q195_asof_tolerance", "q197_source_gate",
-    // q198 vs q194 exposes the native-vs-window forward as-of gap,
-    // the way q173 rides beside q41
-    "q198_asof_fwd_native",
-    // round-9: z-order layout stats over the biggest fixture table —
-    // one range exchange + a grouped pass; benched so the clustering
-    // path's cost stays visible (2-D mask ladder and 3-D bit build)
-    "q199_zorder", "q200_zorder3",
-    // round-10: the wide-span (overflow-guarded pre-shift) z-order
-    // regime — benched so the guard's extra shift arithmetic stays
-    // visibly free
-    "q201_zorder_wide",
-    // round-10: the signature-store fetch path (bloom + id-sorted
-    // store, collected-IN pushdown verify fetch) benched beside q187's
-    // semi-join form and q23's from-text form — the three ways the
-    // same pairs can be produced, so the fetch's fixed costs (candidate
-    // materialization, the collect) stay visible against the scan it
-    // saves
-    "q202_sigfetch_dedup",
-    // round-11: the whole Mondrian member space (both cubes, every
-    // hierarchy prefix, both measures) in ONE grouping-sets pass —
-    // benched so the Expand+partial-agg trade stays visible beside
-    // q36's single-slice form
-    "q203_cube_serve",
-    // round-11: the banded candidate face answered by the executor-
-    // resident point-lookup index (BandIndex) — benched beside q202's
-    // scan-candidate form so the index's build+probe fixed costs stay
-    // visible against the face scan they remove
-    "q204_sigindex_dedup",
-    // round-11: the one-pass Mondrian member space and the analytics
-    // sweep's two additions — cheap aggregates, benched from birth so
-    // regressions stay visible
-    "q205_attribution", "q206_ab_welch",
-    // round-13: incremental cube maintenance (benched beside q203's
-    // full recompute so the merge's saving stays measured), the
-    // periodic-snapshot fact (union+ffill as-of per period grid), and
-    // top-k per cube member (grouping sets × bounded heap)
-    "q207_cube_incr", "q208_snapshot_grid", "q209_cube_topk",
-    // round-13: the accumulating-snapshot fact (milestone min/max +
-    // key join) and time-decay attribution (q205's join, no windows)
-    "q210_accum_snapshot", "q211_time_decay",
-    // round-13: semi-additive snapshot aggregation (rides q208's
-    // machinery + one broadcast dim) and weighted bridge allocation
-    // (two hash aggregates + two equi-joins, exact integer credits)
-    "q212_semi_additive", "q213_bridge_alloc", "q214_agg_nav",
-    "q215_view_refresh", "q216_late_dim", "q217_agg_refresh",
-    "q218_nav_sets",
-    // round-14: cross-cube drill-across (two grain-sized aggregates +
-    // one conformed full-outer merge) and its navigator-served form
-    // (two dim-sized parquet reads per drill, zero fact bytes) —
-    // benched from birth, q220 beside q219 so the registry build's
-    // fixed cost stays visible against the fact scans it removes
-    "q219_drill_across", "q220_drill_navigated", "q221_drill_across3",
-    "q222_agg_advisor", "q223_drill_through", "q224_closure_rollup",
-    // round-15: the budget-constrained advisor (same single fact pass
-    // as q222 plus driver-side greedy — benched so the selection layer
-    // stays visibly free)
-    "q225_agg_budget",
-    // round-15: incremental closure maintenance (closure build + three
-    // dim-sized joins, benched beside q224's rebuild-and-rollup)
-    "q226_closure_move",
-    // round-15: the full incremental closure lifecycle (move + leaf
-    // insert + subtree delete chained — three dim-sized maintenance
-    // joins on top of q226's build)
-    "q227_closure_ops",
-    // round-15: the JSON wire path (parse + slicer push + conformed
-    // merge — benched so the binding layer stays visibly free)
-    "q228_cube_json",
-    // round-16: the two TEXT faces — MDX (parse + level-prefix grain +
-    // slicer, lowering to the plain drill plan) and the registered
-    // SQL view over the member space (GROUPING SETS pass + gid filter
-    // through spark.sql) — benched from birth so the language layers
-    // stay visibly free beside q203's direct member space
-    "q229_mdx", "q230_cube_sql",
-    // round-16: the MDX set-union → explicit-sets lowering (one
-    // GROUPING SETS pass for several grains) — benched beside q203's
-    // full member space so the subset face stays visibly cheaper
-    "q231_mdx_sets",
-    // round-16: the WITH MEMBER path (gated post-agg projection) —
-    // benched so the calc-member layer stays visibly free beside the
-    // plain drill it decorates
-    "q232_mdx_calc",
-    // round-16: the rank-n set-function path (post-agg sort + limit
-    // with the deterministic tie-break) — benched so TOPCOUNT stays
-    // a TakeOrdered decoration, never a second aggregate
-    "q235_mdx_topcount",
-    // round-16: the transparent SQL→rollup rewrite (register + route +
-    // a literal SQL drill served from agg parquet) — benched beside
-    // q214's navigator so the Catalyst-rule door costs the same as
-    // the method-call door
-    "q238_agg_route",
-    // round-16: the routed SLICED drill (WHERE slicer commuted onto
-    // stored partials) — benched so sliced serving stays dim-sized,
-    // never a fact fallback
-    "q239_mdx_routed_slicer")
-
-  /** The names the comma-separated environment variable `envVar`
-    * selects out of `known` (None when it is unset) — the one
-    * name filter behind Bench's `SPARK_GRAFT_BENCH_ONLY` and Verify's
-    * `SPARK_GRAFT_ONLY`. A name outside `known` fails, so a typo never
-    * silently selects nothing. */
+  /** The names the environment variable `envVar` selects out of
+    * `known`; None when it is unset. */
   private[graft] def onlyNames(envVar: String, known: Iterable[String],
       env: Map[String, String] = sys.env): Option[Set[String]] =
-    env.get(envVar).map { spec =>
-      val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val unknown = names -- known
-      require(unknown.isEmpty,
-        s"$envVar names unknown: ${unknown.toSeq.sorted.mkString(", ")}")
-      names
-    }
+    env.get(envVar).map(names(envVar, _, known).toSet)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale probe: times operator families on a k× union-replicated
@@ -11,15 +11,22 @@ import org.apache.spark.sql.functions._
   * whose cost is linear-ish in rows at 10× has no hidden
   * quadratic/driver bottleneck waiting at 1000×.
   *
-  * Sets (see [[sets]]; `r3` when none is named):
+  * Sets (see [[sets]]; `r3` when none is named). Each operator call
+  * is timed by one entry on one corpus; text corpora are salted by
+  * [[salt]] alone, so replicas never pair by construction.
   *  - `r3`: skyline, bloom semi join, hierarchy, inverted index, cross
-  *    near-dup, gaps, and the round-4 operators
-  *  - `r5`: exact-rank percentiles, budget mix, containment
-  *  - `r6`: KMeans, hard negatives, winnow, chunk dups, DSIR, vocabulary
-  *  - `r7`: the dedup/ANN third decade plus the q177 curation chain
+  *    near-dup (unsalted replicas), gaps, and the round-4 operators
+  *    (two-level cumsum, AUC, basket rules, MAD, Gini)
+  *  - `r5`: exact-rank percentiles, budget mix
+  *  - `r6`: KMeans, hard negatives (exact and coarse), winnow, chunk
+  *    dups, DSIR, vocabulary coverage
+  *  - `r7`: MinHash LSH, cross dup, semantic dup, kNN join,
+  *    containment (skipped at k ≥ 1000)
   *  - `r7b`: span dedup, PQ / IVF-ADC, bigram perplexity
-  *  - `r8`: sampled PQ fit, bloom-gated decontamination
-  *  - `r9`: the stored-signature dedup faces
+  *  - `r8`: full vs sampled PQ fit, sampled-PQ ADC, bloom-gated
+  *    decontamination
+  *  - `r9`: signature build+store, dedup from stored signatures,
+  *    cross dedup against them (the text path is r7's `minhash_lsh`)
   *  - `r13`: band-index partition sweep (pruned lookup), restart
   *    rebuild, replay stability
   *  - `r13lookup`: band-index lookup alone at the key cap, across
@@ -32,9 +39,10 @@ import org.apache.spark.sql.functions._
   *  - `events`: the events operator family
   *  - `asof`: as-of join, window vs native node, both directions
   *  - `zorder`: Z-order stats and clustering
-  *  - `curationcmp`: curation chain, one storage path per JVM
-  *    (`SPARK_GRAFT_CURATION_MODE`: `lineage`, the default, or `auto`)
-  *  - `curationstages`: curation chain, one entry per stage
+  *  - `curationcmp`: `Curation.curate` (the q177 chain), one storage
+  *    path per JVM (`SPARK_GRAFT_CURATION_MODE`: `lineage`, the
+  *    default, or `auto`)
+  *  - `curationstages`: the curation chain, one entry per stage
   *  - `sigfetch`: signature-store fetch vs the lazy semi join
   *  - `aggnav`: agg-table registration, routed drill, refresh
   *  - `viewrefresh`: partition-scoped view refresh vs materialize
@@ -162,20 +170,25 @@ object ScaleProbe {
     report(k, results)
   }
 
+  /** The one text salt: `text` with a `<mark><rep>` token after every
+    * 2 words. With MinHash's 3-token shingles every shingle then holds
+    * a salt, so copies under different `rep` share no shingle and
+    * their signatures are fully divergent. Sparser salt leaves bands
+    * whose minima come from unsalted shingles colliding across
+    * replicas, and the candidate set grows ~C(k,2) per doc: a corpus
+    * artifact, not an operator cost. */
+  private def salt(rep: Column, mark: String = "zzr"): Column =
+    regexp_replace(col("text"), lit("((\\S+\\s+){2})"),
+      concat(lit("$1" + mark), rep, lit(" ")))
+
   /** Salted explode-replication for TEXT: the [[replicateExplode]]
-    * id-offset plus a replica-unique salt token every 2 words, so with
-    * 3-token shingles every shingle contains a salt and replica
-    * MinHash/containment signatures are fully divergent — the probe
-    * measures the operator's scaling, not C(k,2) collisions between
-    * identical replicas (the flagship salting, explode-form for the
-    * 1000× decade where a k-way union's plan alone takes minutes). */
+    * id-offset plus the [[salt]] of each replica's index, one scan and
+    * one plan node for any k. */
   private def replicateTextSalted(df: DataFrame, k: Int): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     df.withColumn("__rep", explode(sequence(lit(0L), lit(k.toLong - 1L))))
       .withColumn("doc_id", col("doc_id") + col("__rep") * lit(100000000L))
-      .withColumn("text", regexp_replace(col("text"),
-        lit("((\\S+\\s+){2})"),
-        concat(lit("$1zzr"), col("__rep"), lit(" "))))
+      .withColumn("text", salt(col("__rep")))
       .drop("__rep")
       .repartition(parts)
   }
@@ -379,9 +392,9 @@ object ScaleProbe {
     * batch faces across corpus decades: signature build+store (the
     * one-time ingest cost), dedup entirely from the store
     * ([[graft.dedup.Dedup.nearDupPairsFromSignatures]] — q187's
-    * shape) vs the text path on the same corpus, and incremental
-    * cross-dedup of a half-corpus batch against the other half's
-    * STORED signatures ([[graft.dedup.Dedup
+    * shape) vs the text path (r7's `minhash_lsh`, same corpus), and
+    * incremental cross-dedup of a half-corpus batch against the other
+    * half's STORED signatures ([[graft.dedup.Dedup
     * .crossNearDupPairsVsSignatures]] — the DocStream steady state).
     * The claim to certify: per-row cost of the stored paths holds
     * ≤~1 across decades, and the stored dedup never re-shingles
@@ -398,10 +411,6 @@ object ScaleProbe {
           dedup.Dedup.nearDupSignatures(docsK, "doc_id", "text")
             .write.mode("overwrite").parquet(sigDir)
           spark.read.parquet(sigDir).count()
-        },
-        timeEntry("neardup_text") {
-          dedup.Dedup.nearDupPairs(docsK, "doc_id", "text",
-            threshold = 0.9).count()
         },
         timeEntry("neardup_from_sigs") {
           dedup.Dedup.nearDupPairsFromSignatures(
@@ -603,7 +612,7 @@ object ScaleProbe {
       .mkString("[probe] {", ",", "}"))
 
   /** Round-7: the dedup/ANN family's third probe decade (the verdict's
-    * missing evidence tier) plus the q177 end-to-end curation chain.
+    * missing evidence tier); `curationcmp` times the q177 chain.
     * Cluster counts scale with the corpus (constant expected cell
     * size) — at 1000× that pushes nClusters past the CoarseAuto
     * threshold, so these probes ALSO evidence that the default now
@@ -644,26 +653,6 @@ object ScaleProbe {
           embK.filter(col("vec_id") % 50 === 0), "vec_id",
           embK, "vec_id", "embedding", nClusters = 8 * k, k = 3).count()
       },
-      timeEntry("curation_pipeline") {
-        // the q177 chain at k× volume: budget scales with the corpus
-        val d1 = dedup.Dedup.dropExactDups(docsK, "doc_id", "text")
-        val d2 = dedup.Dedup.dropNearDups(d1, "doc_id",
-          dedup.Dedup.nearDupPairs(d1, "doc_id", "text", threshold = 0.9))
-        val d3 = d2.filter(
-          round(text.TextOps.qualityScore(col("text")), 6) >= 0.3)
-        val d4 = text.Decontaminate.decontaminate(
-          d3.filter(col("doc_id") >= 10),
-          docsK.filter(col("doc_id") < 10), "doc_id", "text", n = 4)
-        val d5 = features.Features.budgetMixSample(
-          d4.select("doc_id", "lang", "n_chars"),
-          "lang", "doc_id", "n_chars",
-          Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1),
-          budget = 40000L * k)
-        d5.withColumn("shard", operators.Shards.shardCol("doc_id", 8))
-          .groupBy(col("shard"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
-          .count()
-      },
       // containment runs LAST: its candidate distinct is the set's
       // largest scratch consumer. At the 1000× decade the probe
       // SKIPS it outright: this salted corpus is all-pairs-dense
@@ -679,6 +668,11 @@ object ScaleProbe {
       if (k >= 1000)
         Some(""""containment":{"skipped":"single-box disk: all-pairs-dense candidates ~300GB scratch at this decade"}""")
       else timeEntry("containment") {
+        // default df cap (1000): this synthetic corpus builds its
+        // containment pairs from shared sentence templates, so the
+        // hot-shingle tail IS the signal here — the cap bounds Σ df²
+        // while keeping the pairs (cap 100 finds 0 rows 50× faster;
+        // real corpora sit between)
         dedup.Dedup.containmentPairs(docsK, "doc_id", "text",
           threshold = 0.8).count()
       })
@@ -875,18 +869,14 @@ object ScaleProbe {
 
   /** Round-5 operators at arbitrary replication: ExactRank percentiles
     * on FEW-HUGE groups (its design point — 3 groups × 6M rows per
-    * replica decade), budget mixture sampling, and inverted-index
-    * containment (docs salted as in [[flagship]]). */
+    * replica decade) and budget mixture sampling. Containment is
+    * timed once, in [[r7Probes]]. */
   private def r5Probes(spark: SparkSession, dir: String, k: Int): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val liK = replicate(Tables.load(spark, dir, "lineitem"),
       Seq("l_orderkey"), k).persist(lvl)
-    val docsK = (0 until k).map { i =>
-      Tables.load(spark, dir, "documents")
-        .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        .withColumn("text",
-          regexp_replace(col("text"), "((\\S+\\s+){2})", s"$$1zzr$i "))
-    }.reduce(_ unionByName _).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
     Seq(liK, docsK).foreach(_.count())
 
     val results = Seq(
@@ -903,15 +893,6 @@ object ScaleProbe {
           "lang", "doc_id", "n_chars",
           Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1),
           budget = 40000L * k).count()
-      },
-      timeEntry("containment") {
-        // default df cap (1000): this synthetic corpus builds its
-        // containment pairs from shared sentence templates, so the
-        // hot-shingle tail IS the signal here — the cap bounds Σ df²
-        // while keeping the pairs (cap 100 finds 0 rows 50× faster;
-        // real corpora sit between)
-        dedup.Dedup.containmentPairs(docsK, "doc_id", "text",
-          threshold = 0.8).count()
       })
 
     report(k, results)
@@ -1007,16 +988,9 @@ object ScaleProbe {
     * and 100 and compare per-row cost (a flat ratio means one more
     * decade holds no constant-factor cliff).
     *
-    * Documents are SALTED per replica (a replica marker token injected
-    * every 2 words — dense enough that EVERY 3-token MinHash shingle
-    * carries one): union-replication alone would make each doc's
-    * k copies mutual near-dups, growing the q64 pair relation
-    * quadratically in k BY CONSTRUCTION — a corpus artifact, not an
-    * operator cost. Sparser salt is not enough: bands whose minima
-    * come from unsalted shingles still collide ACROSS replicas and
-    * the candidate set grows ~C(k,2)/doc. Dense salting keeps replica
-    * signatures fully divergent so the probe measures the operator's
-    * scaling, not the synthetic corpus's.
+    * Documents are [[salt]]ed per replica: plain replication would
+    * make each doc's k copies mutual near-dups, growing the q64 pair
+    * relation quadratically in k by construction.
     *
     * Usage: `sbt "runMain graft.ScaleProbe /root/testdata/sf0.1 100 flagship"`
     * (set SPARK_DRIVER_MEM=48g for 100×). */
@@ -1027,18 +1001,8 @@ object ScaleProbe {
       Seq("o_orderkey", "o_custkey"), k).persist(lvl)
     val liK = replicate(Tables.load(spark, dir, "lineitem"),
       Seq("l_orderkey"), k).persist(lvl)
-    // salt density matters: with the 3-token shingles used by MinHash,
-    // a salt token every 2 words puts one in EVERY shingle, so replica
-    // signatures are fully divergent — sparser salt leaves bands whose
-    // minima come from unsalted shingles colliding ACROSS replicas,
-    // and the candidate set grows ~C(k,2)/doc (corpus artifact, was
-    // the q64 "super-linearity" at 100×)
-    val docsK = (0 until k).map { i =>
-      Tables.load(spark, dir, "documents")
-        .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        .withColumn("text",
-          regexp_replace(col("text"), "((\\S+\\s+){2})", s"$$1zzr$i "))
-    }.reduce(_ unionByName _).persist(lvl)
+    val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
+      .persist(lvl)
     Seq(ordersK, liK, docsK).foreach(_.count()) // materialize outside timings
 
     val results = Seq(
@@ -1131,8 +1095,7 @@ object ScaleProbe {
       val batch = Tables.load(spark, dir, "documents")
         .select("doc_id", "text").limit(2000)
         .withColumn("doc_id", col("doc_id") + lit(7700000000L))
-        .withColumn("text", regexp_replace(col("text"),
-          "((\\S+\\s+){2})", "$1zzr3 ")).persist(lvl)
+        .withColumn("text", salt(lit(3))).persist(lvl)
       batch.count()
       val storedDocs = spark.read.parquet(plainDir).count()
       val fsConf = spark.sessionState.newHadoopConf()
@@ -1560,8 +1523,7 @@ object ScaleProbe {
       val storedDocs = stored.count()
       val batch = docs.limit(2000)
         .withColumn("doc_id", col("doc_id") + lit(7700000000L))
-        .withColumn("text", regexp_replace(col("text"),
-          "((\\S+\\s+){2})", "$1zzr3 ")).persist(lvl)
+        .withColumn("text", salt(lit(3))).persist(lvl)
       batch.count()
       // (b) restart rebuild at the store's stats-sized partitioning
       val t0 = System.nanoTime()
@@ -1594,8 +1556,7 @@ object ScaleProbe {
       (0 until 8).foreach { i =>
         val wave = docs
           .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-          .withColumn("text", regexp_replace(col("text"),
-            "((\\S+\\s+){2})", s"$$1zzw$i "))
+          .withColumn("text", salt(lit(i), "zzw"))
         streaming.DocStream.processBatch(spark, wave, i.toLong, "doc_id",
           "text", 0.9, sink, name, compactEvery = 8, bandIndexBytes = 0L,
           bandIndexMaxBytes = Long.MaxValue)
@@ -1736,8 +1697,7 @@ object ScaleProbe {
     val fs = p.getFileSystem(fsConf)
     (0 until k).foreach { i =>
       docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        .withColumn("text",
-          regexp_replace(col("text"), "((\\S+\\s+){2})", s"$$1zzr$i "))
+        .withColumn("text", salt(lit(i)))
         .coalesce(1).write.mode("append").parquet(src)
       fs.listStatus(p)
         .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
@@ -1895,8 +1855,7 @@ object ScaleProbe {
     val dsStamped = scala.collection.mutable.Set[String]()
     (0 until k).foreach { i =>
       docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        .withColumn("text",
-          regexp_replace(col("text"), "((\\S+\\s+){2})", s"$$1zzr$i "))
+        .withColumn("text", salt(lit(i)))
         .coalesce(1).write.mode("append").parquet(dsSrc)
       stampWave(dsSrc, i, dsStamped)
     }

@@ -8,9 +8,12 @@ object SparkEntry {
     * router → star-joined cube cell. */
   def entry(spark: SparkSession): DataFrame =
     Queries.q36EsiEtl(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** One entry per implemented operator from SURVEY.md §2, by name,
+    * from [[Queries.registry]]. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Queries.registry.map(q => q.name -> q.build).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracles
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    Queries.registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -621,19 +621,19 @@ object ViewRefresh {
     readManifestDirs(spark, path, m)
   }
 
+  /** The manifest's generation dirs, read with the schema its header
+    * committed: no footer inference, so building the frame starts no
+    * Spark job. Every member deleted is a typed zero-row table. */
   private def readManifestDirs(spark: SparkSession, path: String,
-      m: Manifest): DataFrame =
-    if (m.dirs.isEmpty) {
-      // every member legitimately deleted: a readable zero-row table,
-      // not an error. The type comes from the manifest's own schema
-      // header (committed with the mapping).
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(m.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      m: Manifest): DataFrame = {
+    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    if (m.dirs.isEmpty)
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    } else
-      spark.read.parquet(m.dirs.values.map(d => s"$path/$SnapDir/$d").toSeq: _*)
+    else spark.read.schema(schema)
+      .parquet(m.dirs.values.map(d => s"$path/$SnapDir/$d").toSeq: _*)
+  }
 
   /** Garbage-collect old manifests and the generation dirs nothing
     * SURVIVING references, once older than `horizonMs` (the horizon

@@ -11,7 +11,7 @@ class PlanSpec extends AnyFunSuite {
   private val sf = TestSpark.sf
 
   private def planOf(name: String): String =
-    Queries.all(name)(spark, sf).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   test("q02: both the range predicate and the equality reach the parquet scan") {
     val plan = planOf("q02_filter")
@@ -76,7 +76,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q91: CDC merge anti-probes the snapshot — AQE broadcasts the change keys") {
-    val df = Queries.all("q91_cdc_merge")(spark, sf)
+    val df = SparkEntry.queries("q91_cdc_merge")(spark, sf)
     df.collect() // materialize so AQE's FINAL plan is inspectable
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("LeftAnti"), plan)
@@ -89,7 +89,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q93: heavy-hitter verify pass pushes the candidate In-filter to the scan") {
-    val df = Queries.all("q93_heavy_hitters")(spark, sf)
+    val df = SparkEntry.queries("q93_heavy_hitters")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     // phase 2 reads only candidate rows: the isin probe must reach the
     // parquet scan as a pushed In filter on user_id

@@ -177,7 +177,7 @@ class SigStoreSpec extends AnyFunSuite {
 
   test("the q202 face localizes — its finally deletes the store the " +
       "distributed fallback plan would still need") {
-    val out = graft.Queries.all("q202_sigfetch_dedup")(spark, TestSpark.sf)
+    val out = graft.SparkEntry.queries("q202_sigfetch_dedup")(spark, TestSpark.sf)
     assert(out.queryExecution.logical.collectLeaves().forall(
       _.isInstanceOf[
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),

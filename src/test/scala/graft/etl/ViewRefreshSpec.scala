@@ -1,7 +1,9 @@
 package graft.etl
 
 import graft.TestSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -396,6 +398,51 @@ class ViewRefreshSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("tag"))).toSet
     assert(got === Set((3L, "rebuilt")),
       "the rebuild must supersede the refreshed generations")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran (the
+    * listener bus drained on both sides). */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    Bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(l)
+    try { val out = body; Bridge.waitListenerBusEmpty(sc); (out, n.get) }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("snapshot reads build with 0 jobs from the manifest schema, as an inferring read would type them") {
+    val root = java.nio.file.Files.createTempDirectory("vr_schema").toString
+    val path = s"$root/view"
+    ViewRefresh.materializeSnapshot(view(dimV1), col("c_custkey"), n, path)
+    val gen1 = liveGenerations(path)
+    val dimV2 = dimV1.withColumn("c_mktsegment",
+      when(col("c_custkey") % 13 === 0, lit("UPDATED"))
+        .otherwise(col("c_mktsegment")))
+    ViewRefresh.refreshSnapshot(view(dimV2), col("c_custkey"), n,
+      ViewRefresh.affectedBuckets(dimV1.filter(col("c_custkey") % 13 === 0)
+        .select(col("c_custkey")), col("c_custkey"), n), path)
+    val gen2 = liveGenerations(path)
+    assert(gen2 !== gen1)
+    // fewer than 32 dirs: the listing stays on the driver, so any job
+    // here would be footer inference
+    assert(gen2.size < 32)
+    def inferred(gen: Map[Int, String]): DataFrame = spark.read.parquet(
+      gen.values.map(d => s"$path/${ViewRefresh.SnapDir}/$d").toSeq: _*)
+    for ((read, gen) <- Seq(
+        (() => ViewRefresh.readSnapshot(spark, path), gen2),
+        (() => ViewRefresh.readSnapshotAsOf(spark, path, 1L), gen1))) {
+      val (df, jobs) = withJobs(read())
+      assert(jobs === 0, "building a snapshot read started Spark jobs")
+      val want = inferred(gen)
+      assert(df.schema === want.schema)
+      assert(df.exceptAll(want).isEmpty && want.exceptAll(df).isEmpty)
+    }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
