@@ -1057,19 +1057,21 @@ object ScaleProbe {
     * signatures of k salted replicas, written in BOTH layouts: plain
     * parquet (the pre-r10 `_sig` shape — no bloom, unsorted) and the
     * `Dedup.writeSignatures` store layout (bloom on id, id-sorted row
-    * groups). One batch carrying replica-3's salt (every batch doc
-    * exact-matches its stored replica-3 twin and is a mere LSH
-    * candidate elsewhere) cross-dedups against each store via the
-    * lazy plan and the fetched pushdown plan — min-of-3 wall, after
-    * one warm-up scan per store so all modes are measured against a
-    * warm page cache (the comparison is decode work saved by
-    * row-group skipping, not cold IO; TaskMetrics input bytes read 0
-    * for these `file://` scans, so decode work is evidenced by the
-    * fetch scan's numOutputRows entries instead). The four modes must
+    * groups). One batch carrying the last replica's salt, k − 1, which
+    * exists for every k ≥ 1 (every batch doc exact-matches its stored
+    * twin in that replica and is a mere LSH candidate elsewhere)
+    * cross-dedups against each store via the lazy plan and the
+    * fetched pushdown plan — min-of-3 wall, after one warm-up scan
+    * per store so all modes are measured against a warm page cache
+    * (the comparison is decode work saved by row-group skipping, not
+    * cold IO; TaskMetrics input bytes read 0 for these `file://`
+    * scans, so decode work is evidenced by the fetch scan's
+    * numOutputRows entries instead). The four modes must
     * agree on the matched-pair count: fetched_plain isolates the PLAN
     * change (pushdown without the layout's indexes — bloom absent,
     * min/max useless), fetched_store adds the layout, which is where
-    * the decoded rows collapse to O(candidates). */
+    * the decoded rows collapse to O(candidates). A zero count agrees
+    * vacuously, so `pair_counts_agree` also needs it non-zero. */
   private def sigFetchProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1095,7 +1097,7 @@ object ScaleProbe {
       val batch = Tables.load(spark, dir, "documents")
         .select("doc_id", "text").limit(2000)
         .withColumn("doc_id", col("doc_id") + lit(7700000000L))
-        .withColumn("text", salt(lit(3))).persist(lvl)
+        .withColumn("text", salt(lit(k - 1))).persist(lvl)
       batch.count()
       val storedDocs = spark.read.parquet(plainDir).count()
       val fsConf = spark.sessionState.newHadoopConf()
@@ -1113,11 +1115,11 @@ object ScaleProbe {
       println(s"[probe-entry] store sizes: plain=${diskMb(plainDir)}MB, " +
         s"store=${diskMb(storeDir)}MB")
       // decode-work evidence: rows the sh-face scan DECODES for a
-      // 2000-id fetch (the batch docs' stored replica-3 twins) — on
+      // 2000-id fetch (the batch docs' stored replica k−1 twins) — on
       // the plain layout random id spread defeats row-group stats; on
       // the store layout bloom + sorted min/max skip everything else
       val twinIds = batch.select((col("doc_id") - lit(7700000000L)
-        + lit(300000000L)).as("id")).collect().map(_.getLong(0)).toSeq
+        + lit((k - 1) * 100000000L)).as("id")).collect().map(_.getLong(0)).toSeq
       Seq("plain" -> plainDir, "store" -> storeDir).foreach { case (n, d) =>
         val q = spark.read.parquet(d)
           .filter(col("id").isin(twinIds: _*)).select("id", "sh")
@@ -1171,7 +1173,7 @@ object ScaleProbe {
       val counts = results.map(_._2).distinct
       println(results.map(_._1).mkString("[probe] {", ",",
         f""","index_build_sec":$idxBuildSec%.2f""" +
-          s""","pair_counts_agree":${counts.size == 1},""" +
+          s""","pair_counts_agree":${counts.size == 1 && counts.head > 0},""" +
           s""""stored_docs":$storedDocs,"replication":$k}"""))
     } finally Seq(plainDir, storeDir).foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
@@ -1484,7 +1486,9 @@ object ScaleProbe {
     * (a) PARTITION SWEEP: per-batch indexed cross-dedup wall as the
     * index's partition count grows. Each partition hash-screens the
     * key array (~ns/key, no array access) and searches only its own
-    * ~K/P keys; claim: the wall stays flat as P grows.
+    * ~K/P keys; claim: the wall stays flat as P grows. The batch
+    * carries replica k − 1's salt, so it has stored twins for every
+    * k ≥ 1, and every P must find the same non-zero pair count.
     *
     * (b) RESTART REBUILD: `BandIndex.build` wall over the full store —
     * the cold-start a restarted sink pays per generation before its
@@ -1523,7 +1527,7 @@ object ScaleProbe {
       val storedDocs = stored.count()
       val batch = docs.limit(2000)
         .withColumn("doc_id", col("doc_id") + lit(7700000000L))
-        .withColumn("text", salt(lit(3))).persist(lvl)
+        .withColumn("text", salt(lit(k - 1))).persist(lvl)
       batch.count()
       // (b) restart rebuild at the store's stats-sized partitioning
       val t0 = System.nanoTime()
@@ -1542,11 +1546,13 @@ object ScaleProbe {
           ((System.nanoTime() - s) / 1e9, n)
         }
         idx.unpersist()
-        f""""p$p":{"pruned_sec":${shots.map(_._1).min}%.2f,""" +
-          s""""pairs":${shots.head._2}}"""
+        (f""""p$p":{"pruned_sec":${shots.map(_._1).min}%.2f,""" +
+          s""""pairs":${shots.head._2}}""", shots.head._2)
       }
-      println(sweep.mkString("""[probe] {"prune_sweep":{""", ",",
+      val counts = sweep.map(_._2).distinct
+      println(sweep.map(_._1).mkString("""[probe] {"prune_sweep":{""", ",",
         f"""},"rebuild_sec":$rebuildSec%.2f,"index_rows":$idxRows,""" +
+          s""""pair_counts_agree":${counts.size == 1 && counts.head > 0},""" +
           s""""stored_docs":$storedDocs,"replication":$k}"""))
       // (c) replay stability: 8 committed waves fold into gen=0, one
       // more batch commits, then 40 replays of it — constant corpus,

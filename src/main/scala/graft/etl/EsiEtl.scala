@@ -15,7 +15,7 @@ import graft.olap.StarSchema
   * tables and broadcast-joined back, and a null-safe router splits rows
   * into the two fact tables. PDI's per-row JDBC CombinationLookups
   * collapse into five tiny dimension builds — no row-at-a-time
-  * round-trips, and the fact stream is touched exactly once.
+  * round-trips, and each CSV row is parsed exactly once per load.
   */
 object EsiEtl {
 
@@ -92,8 +92,12 @@ object EsiEtl {
     ("dim_fecha", Seq("fecha_completa", "anio_movi", "mes_movi", "dia_movi"),
       "id_fecha"))
 
+  /** The star schema as frames. `stream` is the persisted narrow
+    * relation the dims and both facts were derived from; [[save]]
+    * releases it. A warehouse read back by [[load]] carries none. */
   final case class Warehouse(dims: Map[String, DataFrame],
-      factInmigrante: DataFrame, factEmigrante: DataFrame)
+      factInmigrante: DataFrame, factEmigrante: DataFrame,
+      stream: Option[DataFrame] = None)
 
   /** Build the full star schema from a cleaned frame: five dimension
     * builds, broadcast FK resolution in one pass over the stream, then
@@ -108,11 +112,20 @@ object EsiEtl {
     * full stream five times; at 100 TB that's five full passes instead
     * of one. The per-set result is dim-sized (small by definition) and
     * each dim is carved out of it by `grouping_id`.
+    *
+    * The probe and both facts read ONE persisted narrow projection of
+    * `cleaned`: the router column, the measure and the dim keys. The
+    * probe's action builds it, so the scan + cleaning chain runs once
+    * per load; the facts' FK joins and the router's two branches
+    * (Router.split's caller duty) read it back. The caller releases it
+    * through [[save]].
     */
   def buildWarehouse(cleaned: DataFrame,
       maxDriverDimRows: Long = 2000000L): Warehouse = {
     val keyCols = dimSpecs.flatMap(_._2).distinct
-    val distincts = cleaned
+    val stream = cleaned.select((Seq("tip_movi", "edad") ++ keyCols).map(col): _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val distincts = stream
       .groupingSets(dimSpecs.map(_._2.map(col)), keyCols.map(col): _*)
       .agg(grouping_id().cast("long").as("__gid"))
     def gidOf(keys: Seq[String]): Long =
@@ -130,12 +143,12 @@ object EsiEtl {
     // GUARDRAIL: the contract is checked, not assumed — and for free.
     // The collect is capped at maxDriverDimRows + 1: a result UNDER the
     // cap IS the complete key set (the limit never truncated), so the
-    // normal path pays exactly one action and no cache; a result AT the
-    // cap proves a jumbo key set, and the build falls back to the
-    // distributed SurrogateKeys.assignIds path (sort + zipWithIndex,
-    // same id semantics) instead of silently OOMing the driver — the
-    // one aggregate recompute there is the price of the rare case, not
-    // the common one.
+    // normal path pays exactly one action and no key-set cache; a
+    // result AT the cap proves a jumbo key set, and the build falls
+    // back to the distributed SurrogateKeys.assignIds path (sort +
+    // zipWithIndex, same id semantics) instead of silently OOMing the
+    // driver — the one aggregate recompute there is the price of the
+    // rare case, not the common one.
     val spark = cleaned.sparkSession
     // overflow-safe: clamp BEFORE the +1 (maxDriverDimRows near
     // Long.MaxValue must mean "driver path whenever collectable", not
@@ -192,26 +205,21 @@ object EsiEtl {
         val schema = StructType(
           keys.map(k => distincts.schema(keyIdx(k))) :+
             StructField(id, LongType, nullable = false))
+        // one partition: a local relation splits into up to
+        // defaultParallelism slices, i.e. that many part files per dim
+        // write and tasks per broadcast, for a few hundred rows
         name -> spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .coalesce(1)
       }.toMap
       built
     }
-    val resolved = dimSpecs.foldLeft(cleaned) { case (acc, (name, keys, id)) =>
+    val resolved = dimSpecs.foldLeft(stream) { case (acc, (name, keys, id)) =>
       SurrogateKeys.resolve(acc, dims(name), keys, id)
     }
     val factCols = Seq("tip_movi", "edad") ++ dimSpecs.map(_._3)
-    // persist before the router: both branches (and their union in the
-    // wide extract) would otherwise re-run the scan + cleaning chain +
-    // five FK joins once EACH — Router.split's documented caller duty.
-    // The persisted projection is just the FK ids + measure, narrow.
-    // It is the only cache a load leaves: CsvSource caches nothing, so
-    // this persist reads the CSV again after the dim probe did — the
-    // files are parsed twice by design, which costs less than caching
-    // the parsed scan (a cache build per file).
-    val facts = resolved.select(factCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (in, out) = Router.split(facts, col("tip_movi") === "entrada")
-    Warehouse(dims, in.drop("tip_movi"), out.drop("tip_movi"))
+    val (in, out) = Router.split(resolved.select(factCols.map(col): _*),
+      col("tip_movi") === "entrada")
+    Warehouse(dims, in.drop("tip_movi"), out.drop("tip_movi"), Some(stream))
   }
 
   /** The ML wide-table extract (FIXTURES §3): both facts star-joined to
@@ -234,14 +242,19 @@ object EsiEtl {
 
   /** Warehouse parquet persistence — partitioned by nothing for dims,
     * the facts by `id_fecha`-derived year would be the 100 TB layout;
-    * here a plain snappy parquet per table (A7/A8 analog). */
+    * here a plain snappy parquet per table (A7/A8 analog). The seven
+    * writes are independent (disjoint paths, one shared cached input),
+    * so they run concurrently, the two facts submitted first as the
+    * longest; the warehouse's `stream` is released once they finish or
+    * one fails. */
   def save(wh: Warehouse, dir: String): Unit = {
-    wh.dims.foreach { case (name, df) =>
-      df.write.mode("overwrite").option("compression", "snappy")
+    val facts = Seq("fact_inmigrante" -> wh.factInmigrante,
+      "fact_emigrante" -> wh.factEmigrante)
+    try graft.operators.Par.mapSeq(facts ++ wh.dims.toSeq) { case (name, df) =>
+      val w = df.write.mode("overwrite")
+      (if (wh.dims.contains(name)) w.option("compression", "snappy") else w)
         .parquet(s"$dir/$name")
-    }
-    wh.factInmigrante.write.mode("overwrite").parquet(s"$dir/fact_inmigrante")
-    wh.factEmigrante.write.mode("overwrite").parquet(s"$dir/fact_emigrante")
+    } finally wh.stream.foreach(_.unpersist())
   }
 
   def load(spark: SparkSession, dir: String): Warehouse =

@@ -26,18 +26,25 @@ object CsvSource {
 
   /** Typed scan of one CSV file in PERMISSIVE mode; malformed rows keep
     * their raw line in [[corruptCol]]. */
-  def scan(spark: SparkSession, spec: FileSpec, schema: StructType): DataFrame = {
+  def scan(spark: SparkSession, spec: FileSpec, schema: StructType): DataFrame =
+    scanGroup(spark, Seq(spec), schema)
+
+  /** One PERMISSIVE scan over files that share `(encoding, sep)`: the
+    * reader skips each file's own header line, so a group reads as the
+    * union of its per-file scans. */
+  private def scanGroup(spark: SparkSession, specs: Seq[FileSpec],
+      schema: StructType): DataFrame = {
     val withCorrupt = StructType(schema.fields :+
       StructField(corruptCol, StringType, nullable = true))
     spark.read
       .option("header", "true")
-      .option("encoding", spec.encoding)
-      .option("sep", spec.sep)
+      .option("encoding", specs.head.encoding)
+      .option("sep", specs.head.sep)
       .option("quote", "\"")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
       .schema(withCorrupt)
-      .csv(spec.path)
+      .csv(specs.map(_.path): _*)
   }
 
   /** The reference's `rowFixer`: a malformed row's raw line holds the
@@ -94,10 +101,16 @@ object CsvSource {
     df.select(row.as("__r")).where(col("__r").isNotNull).select(col("__r.*"))
   }
 
-  /** Scan + repair + per-file lineage union — the A1/G1 shape: all
-    * files in one logical plan, schemas identical by construction. */
+  /** Scan + repair of every file in one logical plan, schemas identical
+    * by construction — the A1/G1 shape. Files that share
+    * `(encoding, sep)` are one multi-path scan, so the reference's six
+    * yearly files (two formats besides the common one) are three union
+    * branches, in the order each format first appears. */
   def scanAll(spark: SparkSession, specs: Seq[FileSpec],
-      schema: StructType): DataFrame =
-    specs.map(spec => repair(scan(spark, spec, schema), schema, spec.sep))
+      schema: StructType): DataFrame = {
+    val groups = specs.groupBy(s => (s.encoding, s.sep))
+    specs.map(s => (s.encoding, s.sep)).distinct
+      .map(g => repair(scanGroup(spark, groups(g), schema), schema, g._2))
       .reduce(_.unionByName(_))
+  }
 }

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 
 import graft.TestSpark
 import graft.sources.CsvSource
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end ETL parity spec on a reference-shaped fixture
@@ -28,7 +30,8 @@ class EsiEtlSpec extends AnyFunSuite {
       via, "turismo", "Ecuador", "sa", "america", "Quito", "Ecuador", "sa",
       "america", jef, pro, can, "clase", ocu, edad, "").mkString(",")
 
-  private lazy val fixtureDir: String = {
+  /** The three fixture files in a new temp dir; returns their specs. */
+  private def writeFixture(): Seq[CsvSource.FileSpec] = {
     val dir = Files.createTempDirectory("esi_fixture").toString
     // 2018: UTF-8, comma; includes sentinel age + accented via + unmapped ocu
     Files.write(Paths.get(s"$dir/esi_2018.csv"),
@@ -51,20 +54,21 @@ class EsiEtlSpec extends AnyFunSuite {
     Files.write(Paths.get(s"$dir/ESI_2020.csv"),
       (Seq(header, goodLine, brokenLine).mkString("\n"))
         .getBytes(Charset.forName("ISO-8859-1")))
-    dir
+    Seq(CsvSource.FileSpec(s"$dir/esi_2018.csv"),
+      CsvSource.FileSpec(s"$dir/esi_2021.csv", sep = ";"),
+      CsvSource.FileSpec(s"$dir/ESI_2020.csv", encoding = "ISO-8859-1"))
   }
 
-  private lazy val raw = CsvSource.scanAll(spark, Seq(
-    CsvSource.FileSpec(s"$fixtureDir/esi_2018.csv"),
-    CsvSource.FileSpec(s"$fixtureDir/esi_2021.csv", sep = ";"),
-    CsvSource.FileSpec(s"$fixtureDir/ESI_2020.csv", encoding = "ISO-8859-1")),
-    EsiEtl.esiSchema)
+  /** Data lines in the fixture files (headers excluded). */
+  private val fixtureLines = 8
+
+  private lazy val raw = CsvSource.scanAll(spark, writeFixture(), EsiEtl.esiSchema)
 
   private lazy val cleaned = EsiEtl.clean(raw).cache()
   private lazy val wh = EsiEtl.buildWarehouse(cleaned)
 
   test("scanAll reads all files incl. repaired wrong-arity row") {
-    assert(raw.count() === 8) // 4 + 2 + 2 (broken row repaired)
+    assert(raw.count() === fixtureLines) // 4 + 2 + 2 (broken row repaired)
     assert(raw.filter($"anio_movi" === 2020).count() === 2)
     // ISO-8859-1 accents survived
     assert(raw.filter($"nac_migr" === "Perú").count() === 1)
@@ -139,6 +143,60 @@ class EsiEtlSpec extends AnyFunSuite {
     assert(wide.columns.toSet === expected) // edad + ocu_class omitted
     assert(wide.count() === 8)
     assert(wide.filter($"source_fact" === "fact_emigrante").count() === 3)
+  }
+
+  /** `body`'s result and the input records its tasks read (the
+    * listener bus drained on both sides). */
+  private def withRecordsRead[T](body: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          n.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
+    }
+    Bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(l)
+    try { val out = body; Bridge.waitListenerBusEmpty(sc); (out, n.get) }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("a load parses each CSV line once, releases its cache and saves the frames it built") {
+    // fresh paths: a plan over the suite's files would be served from
+    // the cached `cleaned` and parse no CSV at all
+    val specs = writeFixture()
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val (built, buildRead) = withRecordsRead(EsiEtl.buildWarehouse(
+      EsiEtl.clean(CsvSource.scanAll(spark, specs, EsiEtl.esiSchema))))
+    val cachedIds = sc.getPersistentRDDs.keySet -- rddsBefore
+    assert(cachedIds.size === 1, "the narrow relation is the load's one cache")
+    val cachedParts = sc.getRDDStorageInfo.filter(i => cachedIds(i.id))
+      .map(_.numCachedPartitions).sum
+    assert(cachedParts > 0)
+    // a cache read counts one record per column batch, one batch per
+    // partition here. The probe parses every line once while AQE
+    // materializes the cache as its own stage, then reads it back
+    assert(buildRead === fixtureLines + cachedParts)
+    val dir = Files.createTempDirectory("esi_wh_once").toString
+    val (_, saveRead) = withRecordsRead(EsiEtl.save(built, dir))
+    // the save parses nothing: each fact write reads the cache once
+    assert(saveRead === 2L * cachedParts)
+    assert(sc.getPersistentRDDs.keySet === rddsBefore)
+    val loaded = EsiEtl.load(spark, dir)
+    val pairs = EsiEtl.dimSpecs.map { case (n, _, _) => (n, built.dims(n), loaded.dims(n)) } ++
+      Seq(("fact_inmigrante", built.factInmigrante, loaded.factInmigrante),
+        ("fact_emigrante", built.factEmigrante, loaded.factEmigrante))
+    pairs.foreach { case (name, frame, saved) =>
+      assert(frame.exceptAll(saved).isEmpty && saved.exceptAll(frame).isEmpty,
+        s"$name as saved differs from its frame")
+    }
+    assert(loaded.factInmigrante.count() + loaded.factEmigrante.count() === fixtureLines)
+    // driver-built dims are one partition: one part file per table
+    EsiEtl.dimSpecs.foreach { case (n, _, _) =>
+      val parts = new java.io.File(s"$dir/$n").list().filter(_.startsWith("part-"))
+      assert(parts.length === 1, s"$n part files: ${parts.mkString(",")}")
+    }
   }
 
   test("save/load round-trip preserves the warehouse") {

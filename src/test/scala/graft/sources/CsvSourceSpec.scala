@@ -107,6 +107,37 @@ class CsvSourceSpec extends AnyFunSuite {
     assert(all.count() === mixedRows.size)
   }
 
+  test("scanAll scans once per (encoding, sep) group, rows as the per-file union") {
+    val specs = Seq(
+      // first UTF-8 comma file: a wrapped repairable row and an
+      // unrecoverable one
+      CsvSource.FileSpec(write(Seq("name,city,n", "ana,quito,1",
+        "\"bob,\"\"guayaquil, sur\"\",2\"", "\"just-two,fields\""))),
+      CsvSource.FileSpec(write(Seq("name;city;n", "rosa;tena;5")),
+        sep = ";"),
+      CsvSource.FileSpec(write(Seq("name,city,n", "ñuño,cañar,3"),
+        "ISO-8859-1"), encoding = "ISO-8859-1"),
+      // second UTF-8 comma file, after the other formats: joins the first
+      CsvSource.FileSpec(write(Seq("name,city,n", "eva,ambato,4", "ana,quito,1"))))
+    val grouped = CsvSource.scanAll(spark, specs, schema)
+    val perFile = specs.map(s =>
+      CsvSource.repair(CsvSource.scan(spark, s, schema), schema, s.sep))
+      .reduce(_.unionByName(_))
+    // same multiset (the duplicate ana row counts twice on both sides)
+    assert(grouped.exceptAll(perFile).isEmpty && perFile.exceptAll(grouped).isEmpty)
+    val got = grouped.collect().map(r => (r.getString(0), r.getString(1), r.get(2)))
+    assert(got.length === 6)
+    assert(got.toSet === Set[(String, String, Any)](("ana", "quito", 1),
+      ("bob", "guayaquil, sur", 2), ("rosa", "tena", 5), ("ñuño", "cañar", 3),
+      ("eva", "ambato", 4)))
+    // each file's header line is skipped, none read as data
+    assert(!got.exists(_._1 == "name"))
+    val scans = grouped.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+    }
+    assert(scans.size === 3, "one scan per (encoding, sep) group")
+  }
+
   test("scanAll caches nothing") {
     // a file no other test scans, so any cache entry for it is this scan's
     val spec = CsvSource.FileSpec(write(Seq(
