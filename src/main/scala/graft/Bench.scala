@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Per-round benchmark: runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line. Results are forced
   * through the `noop` sink (full computation of every output column —
@@ -32,29 +34,13 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val spark = Sessions.local(Sessions.cpus(32))
 
-    // a failed query must NOT fold its (short) elapsed time into the
-    // metric — a regression would read as a speedup; report a large
-    // sentinel so breakage inflates the tracked number instead
-    val FailedSentinel = 1e6
-    def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED on $dir: ${e.getMessage}")
-        FailedSentinel
-      }
-    }
-
     // SPARK_GRAFT_BENCH_ONLY=q36_esi_etl,... isolates queries under the
     // same protocol (warmup + min-of-3) — for profiling, not the driver
     val benched = Queries.registry.filter(_.bench).map(_.name)
     val names = Queries.onlyNames("SPARK_GRAFT_BENCH_ONLY", benched)
       .fold(benched)(benched.filter)
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      names.foreach(run(_, warmDir)) // untimed
+      names.foreach(run(spark, _, warmDir, "warm")) // untimed
     // one untimed pass on the TARGET dir too: codegen/JIT warm on the
     // small dir above, but the target files' page-cache first touch
     // and footer reads still landed on pass 1 of whichever query ran
@@ -62,7 +48,7 @@ object Bench {
     // ≥5 on sub-2s minimums for exactly that reason. One target-dir
     // execution per query moves the first-touch cost out of the timed
     // window entirely.
-    names.foreach(run(_, sfDir)) // untimed
+    names.foreach(run(spark, _, sfDir, "target")) // untimed
     // three timed passes, per-query minimum: the host shows bursty
     // co-tenant noise (identical binaries vary 2-3×), and min-of-N is
     // the standard steady-state estimator under asymmetric noise.
@@ -73,7 +59,7 @@ object Bench {
         .shuffle(names.toVector)
       order.map { n =>
         System.gc() // untimed breather: don't bill one query's garbage
-        n -> run(n, sfDir)
+        n -> run(spark, n, sfDir, s"timed$pass")._1
       }.toMap
     }
     val results = names.map(n => n -> passes.map(_(n)).min)
@@ -127,4 +113,27 @@ object Bench {
     println(json)
     System.out.flush()
   }
+
+  /** A failed query's time: a regression must not read as a speedup,
+    * so breakage inflates the tracked number instead. */
+  private val FailedSentinel = 1e6
+
+  /** One run of query `name` on `dir` in a [[Trace]] window labelled
+    * `<name>/<phase>`: the seconds its build and noop sink took
+    * (FailedSentinel on failure), then `clearCache`, untimed. A
+    * relation the run persisted would otherwise serve the next run of
+    * the same plan from memory, and the bench would time a cache hit. */
+  private[graft] def run(spark: SparkSession, name: String, dir: String,
+      phase: String): (Double, Trace.Window) =
+    Trace.window(spark, s"$name/$phase") {
+      val t0 = System.nanoTime()
+      try {
+        SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED on $dir: ${e.getMessage}")
+        FailedSentinel
+      } finally spark.catalog.clearCache()
+    }
 }

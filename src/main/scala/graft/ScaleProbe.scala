@@ -5,8 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Scale probe: times operator families on a k× union-replicated
   * corpus (ids offset per replica so key cardinality scales too). Each
-  * timed entry prints a `[probe-entry]` fragment as it lands, and each
-  * set ends with one `[probe] {...,"replication":k}` JSON line. The
+  * timed entry runs in a [[Trace]] window labelled `<set>/<entry>` and
+  * prints a `[probe-entry]` fragment as it lands: `sec`, `rows` (or
+  * `err`), `spill_mb`, `disk_spill_mb`, `peak_task_mem_mb`, `jobs` and
+  * `input_records`. Each set ends with one
+  * `[probe] {...,"replication":k}` JSON line; the streaming sets take
+  * their per-batch walls from their window and add its `jobs` and
+  * `input_records` to that line. The
   * point is the SHAPE of the growth, not absolute numbers: an operator
   * whose cost is linear-ish in rows at 10× has no hidden
   * quadratic/driver bottleneck waiting at 1000×.
@@ -110,13 +115,13 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val k = if (args.length > 1) args(1).toInt else 10
-    val run = set(if (args.length > 2) args(2) else "r3")
+    probeSet = if (args.length > 2) args(2) else "r3"
+    val run = set(probeSet)
     // a real cluster sizes shuffle partitions with the data — let the
     // probe do the same, so partition-starvation spill (fixed 32 lanes
     // under 100× volume) is distinguishable from algorithmic blowup
     val parts = if (args.length > 3) Some(args(3).toInt) else None
     val spark = Sessions.local(Sessions.cpus(32), parts)
-    Telemetry.ensure(spark)
     run(spark, dir, k)
     spark.stop()
   }
@@ -128,7 +133,6 @@ object ScaleProbe {
     * choice, not a data-volume knob; its cost is rows × k per round
     * regardless). */
   private def r6Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val embK = replicate(Tables.load(spark, dir, "embeddings"),
       Seq("vec_id"), k).persist(lvl)
     val docsK = replicate(Tables.load(spark, dir, "documents"),
@@ -220,7 +224,6 @@ object ScaleProbe {
     * probes: nlist is a recall dial, not a data-size dial, and the
     * probe measures the pruned-scan slope. */
   private def r7bProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
       .persist(lvl)
     val embK = replicateVecSalted(Tables.load(spark, dir, "embeddings"), k)
@@ -345,7 +348,6 @@ object ScaleProbe {
     * per code, not a fixed fraction), and the reason fit cost should
     * be ~FLAT across decades while encode scales per-row ~1. */
   private def r8Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
       .persist(lvl)
     val embK = replicateVecSalted(Tables.load(spark, dir, "embeddings"), k)
@@ -400,7 +402,6 @@ object ScaleProbe {
     * ≤~1 across decades, and the stored dedup never re-shingles
     * (its cost tracks the text path minus the shingle build). */
   private def r9Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
       .persist(lvl)
     docsK.count()
@@ -446,7 +447,6 @@ object ScaleProbe {
     val mode = sys.env.getOrElse("SPARK_GRAFT_CURATION_MODE", "lineage")
     require(modes.contains(mode), s"unknown SPARK_GRAFT_CURATION_MODE " +
       s"'$mode'; valid modes: ${modes.mkString(", ")}")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
       .persist(lvl)
     docsK.count()
@@ -498,7 +498,6 @@ object ScaleProbe {
     * lineage-vs-scratch head-to-head can't give. */
   private def curationStageProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
       .persist(lvl)
     docsK.count()
@@ -535,64 +534,30 @@ object ScaleProbe {
     report(k, Seq(r1, r2s, r2a, r2b, r4, r5))
   }
 
-  /** Task-metrics telemetry for the probe entries: cumulative spill
-    * counters plus a per-window max of task peak execution memory.
-    * The r9 curation-chain cold shots spanned 2.2× on the documented
-    * memory-occupancy band with no data attributing WHERE the memory
-    * pressure lands — these columns attribute it per stage (the
-    * VERDICT r9 "chain-variance attribution" ask). Listener-based, so
-    * the timed work is untouched. */
-  private object Telemetry
-      extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    val windowPeakTaskMem = new AtomicLong
-    @volatile private var registered = false
-    def ensure(spark: SparkSession): Unit = synchronized {
-      if (!registered) {
-        spark.sparkContext.addSparkListener(this)
-        registered = true
-      }
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        windowPeakTaskMem.accumulateAndGet(m.peakExecutionMemory,
-          math.max(_, _))
-      }
-    }
-  }
+  /** The set `main` runs: the first part of each window's label. */
+  @volatile private var probeSet = "r3"
 
   /** Per-entry timer that PRINTS each fragment as it lands and turns
     * an entry's failure into an "err" fragment instead of losing the
     * whole set — a probe decade whose last entry exhausts this box's
     * shuffle disk (containment at 1000×) must still report the
-    * entries that finished. Each fragment carries the window's spill
-    * deltas and max task-peak memory (see [[Telemetry]]). An entry
+    * entries that finished. The entry runs in a [[Trace]] window
+    * labelled `<set>/<entry>`; its fragment carries the window's
+    * spill, max task-peak memory, jobs and input records. An entry
     * left out of `SPARK_GRAFT_PROBE_ONLY` is not run: None. */
   private def timeEntry(name: String)(f: => Long): Option[String] =
     if (!probeOnly.forall(_.contains(name))) None
     else {
-      val mem0 = Telemetry.memSpill.get()
-      val disk0 = Telemetry.diskSpill.get()
-      Telemetry.windowPeakTaskMem.set(0L)
-      val s = System.nanoTime()
-      val result = try Right(f) catch { case e: Throwable => Left(e) }
-      val sec = (System.nanoTime() - s) / 1e9
-      // the window's last task-end events are still on the async bus
-      org.apache.spark.sql.graft.Bridge
-        .waitListenerBusEmpty(SparkSession.active.sparkContext)
-      def mb(b: Long): Long = b / (1024 * 1024)
+      val (result, w) = Trace.window(SparkSession.active, s"$probeSet/$name") {
+        try Right(f) catch { case e: Throwable => Left(e) }
+      }
       val outcome = result.fold(
         e => s""""err":"${e.getClass.getSimpleName}"""", n => s""""rows":$n""")
-      val frag = f""""$name":{"sec":$sec%.2f,$outcome,""" +
-        s""""spill_mb":${mb(Telemetry.memSpill.get() - mem0)},""" +
-        s""""disk_spill_mb":${mb(Telemetry.diskSpill.get() - disk0)},""" +
-        s""""peak_task_mem_mb":${mb(Telemetry.windowPeakTaskMem.get())}}"""
+      val frag = f""""$name":{"sec":${w.ms / 1e3}%.2f,$outcome,""" +
+        s""""spill_mb":${mb(w.memorySpillBytes)},""" +
+        s""""disk_spill_mb":${mb(w.diskSpillBytes)},""" +
+        s""""peak_task_mem_mb":${mb(w.peakTaskMemBytes)},""" +
+        s"""${counts(w)}}"""
       println(s"[probe-entry] $frag")
       // not a listener wait: the pause gives the ContextCleaner time to
       // delete the shuffle files of the DAG the GC just released
@@ -600,6 +565,12 @@ object ScaleProbe {
       Thread.sleep(2000)
       Some(frag)
     }
+
+  private def mb(b: Long): Long = b / (1024 * 1024)
+
+  /** A window's job and input-record counts as JSON members. */
+  private def counts(w: Trace.Window): String =
+    s""""jobs":${w.jobs.size},"input_records":${w.inputRecords}"""
 
   private val probeOnly: Option[Set[String]] =
     sys.env.get("SPARK_GRAFT_PROBE_ONLY")
@@ -610,6 +581,56 @@ object ScaleProbe {
   private def report(k: Int, frags: Seq[Option[String]]): Unit =
     println((frags.flatten :+ s""""replication":$k""")
       .mkString("[probe] {", ",", "}"))
+
+  /** The storage level of every relation a probe pins. */
+  private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `f`'s wall seconds and its result. */
+  private def timed[T](f: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = f
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+
+  /** The aggnav / r14 synthetic fact: ids `[offset, offset + n)` as
+    * year, month, status, priority and price. */
+  private def synthFact(spark: SparkSession, n: Long, offset: Long): DataFrame =
+    spark.range(offset, offset + n).selectExpr(
+      "cast(1990 + id % 8 as int) as y",
+      "cast(1 + (id / 8) % 12 as int) as m",
+      "case cast(id % 3 as int) when 0 then 'O' when 1 then 'F' " +
+        "else 'P' end as status",
+      "concat('p-', cast(id % 5 as string)) as prio",
+      "cast(id % 100000 as double) / 100.0 as price")
+
+  /** A fresh source dir holding `k` waves, one file each, whose mtimes
+    * fix their arrival order (the q184 idiom): wave `i` is `wave(i)`. */
+  private def waveSource(spark: SparkSession, prefix: String, k: Int)
+      (wave: Int => DataFrame): String = {
+    val src = tmp(prefix)
+    val p = new org.apache.hadoop.fs.Path(src)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val stamped = scala.collection.mutable.Set[String]()
+    (0 until k).foreach { i =>
+      wave(i).coalesce(1).write.mode("append").parquet(src)
+      fs.listStatus(p)
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
+        .foreach(s => if (stamped.add(s.getPath.getName))
+          fs.setTimes(s.getPath, 1600000000000L + i * 1000L, -1))
+    }
+    src
+  }
+
+  /** The number of partition and generation dirs under a sink. */
+  private def liveDirs(spark: SparkSession, sink: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(sink)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .count(n => n.startsWith("batch_id=") || n.startsWith("gen="))
+  }
 
   /** Round-7: the dedup/ANN family's third probe decade (the verdict's
     * missing evidence tier); `curationcmp` times the q177 chain.
@@ -624,7 +645,6 @@ object ScaleProbe {
     // probe's DAG eagerly once timed (outside the timed window), and
     // prints each fragment as it lands: a decade whose LAST entry
     // dies on disk still reports the entries that finished.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
       .persist(lvl)
     val embK = replicateVecSalted(Tables.load(spark, dir, "embeddings"), k)
@@ -691,7 +711,6 @@ object ScaleProbe {
     * output the count cannot prune (unlike the as-of probe's window).
     */
   private def eventsProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // props dropped before persist: no probe reads it, and the
     // free-text payload would dominate the cached bytes at 1000×
     val evK = replicate(
@@ -797,7 +816,6 @@ object ScaleProbe {
     * materializing the unioned sort, so its working set per task is
     * O(right-rows-per-key), not O(union). */
   private def asofProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // drop props before persisting: the free-text payload is dead
     // weight for the join and dominates the cached bytes at 1000×
     val evK = replicate(
@@ -848,7 +866,6 @@ object ScaleProbe {
     * entries are one pass + one exchange — the decade ratio per row
     * must stay ~flat. */
   private def zorderProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val li = replicate(
       Tables.load(spark, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey"),
@@ -872,7 +889,6 @@ object ScaleProbe {
     * replica decade) and budget mixture sampling. Containment is
     * timed once, in [[r7Probes]]. */
   private def r5Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val liK = replicate(Tables.load(spark, dir, "lineitem"),
       Seq("l_orderkey"), k).persist(lvl)
     val docsK = replicateTextSalted(Tables.load(spark, dir, "documents"), k)
@@ -995,7 +1011,6 @@ object ScaleProbe {
     * Usage: `sbt "runMain graft.ScaleProbe /root/testdata/sf0.1 100 flagship"`
     * (set SPARK_DRIVER_MEM=48g for 100×). */
   private def flagship(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     val ordersK = replicate(Tables.load(spark, dir, "orders"),
       Seq("o_orderkey", "o_custkey"), k).persist(lvl)
@@ -1009,17 +1024,20 @@ object ScaleProbe {
       timeEntry("q36_etl") {
         // the benched pipeline minus the driver-sort edge: warehouse
         // build + broadcast FK resolution + router + star join + cube agg
+        // the warehouse's persisted stream is released once counted, so
+        // the later entries do not run beside it
         val wh = graft.etl.EsiEtl.buildWarehouse(
           graft.etl.EsiEtl.clean(Queries.q36RawFromOrders(ordersK)))
         val facts = wh.factInmigrante.withColumn("fact", lit("inmigrante"))
           .unionByName(wh.factEmigrante.withColumn("fact", lit("emigrante")))
-        facts
+        try facts
           .join(broadcast(wh.dims("dim_transporte")), Seq("id_transporte"))
           .join(broadcast(wh.dims("dim_persona")), Seq("id_persona"))
           .join(broadcast(wh.dims("dim_fecha")), Seq("id_fecha"))
           .groupBy(col("fact"), col("mes_movi"), col("via_tran"), col("sex_migr"))
           .agg(count(lit(1)).as("cnt"))
           .count()
+        finally wh.stream.foreach(_.unpersist())
       },
       timeEntry("q64_dup_clusters") {
         val pairs = dedup.Dedup.nearDupPairs(docsK, "doc_id", "text",
@@ -1074,8 +1092,6 @@ object ScaleProbe {
     * vacuously, so `pair_counts_agree` also needs it non-zero. */
   private def sigFetchProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val plainDir = tmp("sigprobe_plain")
     val storeDir = tmp("sigprobe_store")
     try {
@@ -1132,11 +1148,7 @@ object ScaleProbe {
       def mode(name: String, store: String,
           f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
           : (String, Long) = {
-        val shots = (1 to 3).map { _ =>
-          val s = System.nanoTime()
-          val n = f(spark.read.parquet(store)).count()
-          ((System.nanoTime() - s) / 1e9, n)
-        }
+        val shots = (1 to 3).map(_ => timed(f(spark.read.parquet(store)).count()))
         val frag = f""""$name":{"sec":${shots.map(_._1).min}%.2f,""" +
           shots.map(s => f"${s._1}%.2f").mkString(""""shots":[""", ",", "],") +
           s""""pairs":${shots.head._2}}"""
@@ -1148,9 +1160,8 @@ object ScaleProbe {
       // compactEvery batches), so it is timed separately and the
       // per-shot measurements probe the BUILT index — the ingest
       // steady-state shape
-      val tIdx = System.nanoTime()
-      val bandIdx = dedup.BandIndex.build(spark.read.parquet(storeDir))
-      val idxBuildSec = (System.nanoTime() - tIdx) / 1e9
+      val (idxBuildSec, bandIdx) =
+        timed(dedup.BandIndex.build(spark.read.parquet(storeDir)))
       println(f"""[probe-entry] "index_build":{"sec":$idxBuildSec%.2f,""" +
         s""""rows":${bandIdx.indexedRows}}""")
       val results = Seq(
@@ -1188,18 +1199,9 @@ object ScaleProbe {
     * so the speedup is never of a wrong answer. */
   private def aggNavProbes(spark: SparkSession, dir: String, k: Int): Unit = {
     import graft.olap.AggNavigator
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val rows = k.toLong * 1000000L
-    def synth(n: Long, offset: Long): DataFrame =
-      spark.range(offset, offset + n).selectExpr(
-        "cast(1990 + id % 8 as int) as y",
-        "cast(1 + (id / 8) % 12 as int) as m",
-        "case cast(id % 3 as int) when 0 then 'O' when 1 then 'F' " +
-          "else 'P' end as status",
-        "concat('p-', cast(id % 5 as string)) as prio",
-        "cast(id % 100000 as double) / 100.0 as price")
     val factPath = tmp("aggnav_fact")
-    synth(rows, 0L).write.mode("overwrite").parquet(factPath)
+    synthFact(spark, rows, 0L).write.mode("overwrite").parquet(factPath)
     def fact = spark.read.parquet(factPath)
     val measures = Seq[AggNavigator.Measure](
       AggNavigator.CountAll("n"),
@@ -1207,14 +1209,10 @@ object ScaleProbe {
       AggNavigator.ExactSum("revenue", "price"))
     val grains = Seq("ym" -> Seq("y", "m"), "yearly" -> Seq("y"),
       "status_prio" -> Seq("status", "prio"))
-    var t0 = System.nanoTime()
-    val reg = AggNavigator.register(fact, grains, measures, tmp("aggnav_aggs"))
-    val registerSec = (System.nanoTime() - t0) / 1e9
-    def shot(df: => DataFrame): (Double, Seq[Seq[Any]]) = {
-      val s = System.nanoTime()
-      val r = df.orderBy("y").collect().toSeq.map(_.toSeq)
-      ((System.nanoTime() - s) / 1e9, r)
-    }
+    val (registerSec, reg) =
+      timed(AggNavigator.register(fact, grains, measures, tmp("aggnav_aggs")))
+    def shot(df: => DataFrame): (Double, Seq[Seq[Any]]) =
+      timed(df.orderBy("y").collect().toSeq.map(_.toSeq))
     val direct = (1 to 3).map(_ => shot(fact.groupBy(col("y"))
       .agg(measures.map(_.direct).head, measures.map(_.direct).tail: _*)))
     val routed = (1 to 3).map(_ =>
@@ -1222,16 +1220,13 @@ object ScaleProbe {
     require(direct.head._2 == routed.head._2,
       "routed drill diverged from the direct aggregate")
     // maintenance: absorb a 1M-row append vs rebuilding everything
-    val delta = synth(1000000L, rows)
-    t0 = System.nanoTime()
-    val refreshed = AggNavigator.refresh(reg, delta)
-    val refreshSec = (System.nanoTime() - t0) / 1e9
+    val delta = synthFact(spark, 1000000L, rows)
+    val (refreshSec, refreshed) = timed(AggNavigator.refresh(reg, delta))
     val deltaPath = tmp("aggnav_delta")
     delta.write.mode("overwrite").parquet(deltaPath)
-    t0 = System.nanoTime()
-    AggNavigator.register(fact.unionByName(spark.read.parquet(deltaPath)),
-      grains, measures, tmp("aggnav_aggs2"))
-    val rebuildSec = (System.nanoTime() - t0) / 1e9
+    val (rebuildSec, _) = timed(AggNavigator.register(
+      fact.unionByName(spark.read.parquet(deltaPath)),
+      grains, measures, tmp("aggnav_aggs2")))
     println(f"""[probe] {"fact_rows":$rows,"register_sec":$registerSec%.2f,""" +
       f""""drill_direct_sec":${direct.map(_._1).min}%.3f,""" +
       f""""drill_routed_sec":${routed.map(_._1).min}%.3f,""" +
@@ -1248,18 +1243,9 @@ object ScaleProbe {
     * virtual-cube serving claim, priced. */
   private def r14Probes(spark: SparkSession, dir: String, k: Int): Unit = {
     import graft.olap.{AggNavigator, DrillAcross}
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val rows = k.toLong * 1000000L
-    def synth(n: Long, offset: Long): DataFrame =
-      spark.range(offset, offset + n).selectExpr(
-        "cast(1990 + id % 8 as int) as y",
-        "cast(1 + (id / 8) % 12 as int) as m",
-        "case cast(id % 3 as int) when 0 then 'O' when 1 then 'F' " +
-          "else 'P' end as status",
-        "concat('p-', cast(id % 5 as string)) as prio",
-        "cast(id % 100000 as double) / 100.0 as price")
     val factPath = tmp("r14_fact")
-    synth(rows, 0L).write.mode("overwrite").parquet(factPath)
+    synthFact(spark, rows, 0L).write.mode("overwrite").parquet(factPath)
     def fact = spark.read.parquet(factPath)
     val measures = Seq[AggNavigator.Measure](
       AggNavigator.CountAll("n"),
@@ -1275,11 +1261,6 @@ object ScaleProbe {
     // bursts on single-shot timings, and min-of-N with interleaving
     // is the same estimator the bench uses.
     fact.write.format("noop").mode("overwrite").save()
-    def timed(f: => AggNavigator.Registry): (Double, AggNavigator.Registry) = {
-      val t0 = System.nanoTime()
-      val r = f
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
     val runs = (1 to 2).map { _ =>
       (timed(AggNavigator.register(fact, grains, measures, tmp("r14_sep"))),
         timed(AggNavigator.registerShared(fact, grains, measures,
@@ -1294,18 +1275,15 @@ object ScaleProbe {
       "shared build diverged from the per-grain build")
     // cross-cube side: a second fact at the same conformed grain
     val factBPath = tmp("r14_factb")
-    synth(rows, rows).write.mode("overwrite").parquet(factBPath)
+    synthFact(spark, rows, rows).write.mode("overwrite").parquet(factBPath)
     def factB = spark.read.parquet(factBPath)
     val measuresB = Seq[AggNavigator.Measure](
       AggNavigator.CountAll("nb"),
       AggNavigator.ExactSum("rev_b", "price"))
     val regB = AggNavigator.registerShared(factB,
       Seq("ym" -> Seq("y", "m")), measuresB, tmp("r14_aggb"))
-    def shot(df: => DataFrame): (Double, Seq[Seq[Any]]) = {
-      val s = System.nanoTime()
-      val r = df.orderBy("y", "m").collect().toSeq.map(_.toSeq)
-      ((System.nanoTime() - s) / 1e9, r)
-    }
+    def shot(df: => DataFrame): (Double, Seq[Seq[Any]]) =
+      timed(df.orderBy("y", "m").collect().toSeq.map(_.toSeq))
     val direct = (1 to 3).map(_ => shot(DrillAcross.drillAcross(
       fact, measures.map(_.direct), factB, measuresB.map(_.direct),
       Seq("y", "m"))))
@@ -1335,8 +1313,6 @@ object ScaleProbe {
     import graft.operators.Hierarchy
     import graft.olap.AggNavigator
     import graft.etl.ViewRefresh
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
     // ----- (a) closure: incremental move vs full rebuild -----
     val nNodes = k.toLong * 100000L
@@ -1347,22 +1323,16 @@ object ScaleProbe {
     def nodes = spark.read.parquet(nodesPath)
     def movedNodes = nodes.withColumn("parent",
       when(col("node") === 7L, lit(123L)).otherwise(col("parent")))
-    var t0 = System.nanoTime()
     val clPath = tmp("r15_cl")
-    Hierarchy.closure(nodes, "node", "parent")
-      .write.mode("overwrite").parquet(clPath)
-    val closureBuildSec = secs(t0)
+    val (closureBuildSec, _) = timed(Hierarchy.closure(nodes, "node", "parent")
+      .write.mode("overwrite").parquet(clPath))
     def clStored = spark.read.parquet(clPath)
     val pairCount = clStored.count()
     // min-of-2, alternating: incremental move vs full rebuild (both
     // forced by count — serve-time cost, no write skew)
     val moveRuns = (1 to 2).map { _ =>
-      val tA = System.nanoTime()
-      val mc = Hierarchy.closureMove(clStored, 7L, 123L).count()
-      val a = secs(tA)
-      val tB = System.nanoTime()
-      val rc = Hierarchy.closure(movedNodes, "node", "parent").count()
-      val b = secs(tB)
+      val (a, mc) = timed(Hierarchy.closureMove(clStored, 7L, 123L).count())
+      val (b, rc) = timed(Hierarchy.closure(movedNodes, "node", "parent").count())
       require(mc == rc,
         s"incremental move ($mc pairs) diverged from rebuild ($rc)")
       (a, b)
@@ -1390,13 +1360,9 @@ object ScaleProbe {
       Seq("prio"), Seq("y", "status"), Seq("status", "prio"),
       Seq("y", "m", "status"))
     val adviseRuns = (1 to 2).map { _ =>
-      val tA = System.nanoTime()
-      AggNavigator.advise(fact, candidates, workload).collect()
-      val a = secs(tA)
-      val tB = System.nanoTime()
-      AggNavigator.adviseBudget(fact, candidates, workload, 200L).collect()
-      val b = secs(tB)
-      (a, b)
+      (timed(AggNavigator.advise(fact, candidates, workload).collect())._1,
+        timed(AggNavigator.adviseBudget(fact, candidates, workload, 200L)
+          .collect())._1)
     }
     val adviseSec = adviseRuns.map(_._1).min
     val adviseBudgetSec = adviseRuns.map(_._2).min
@@ -1421,10 +1387,8 @@ object ScaleProbe {
     val pathSnap = tmp("r15_vsnap") + "/view"
     ViewRefresh.materializeSnapshot(view(dim), col("k"), b, pathSnap)
     val snapRuns = (1 to 2).map { _ =>
-      val tS = System.nanoTime()
-      ViewRefresh.refreshSnapshot(view(updated), col("k"), b, buckets,
-        pathSnap)
-      secs(tS)
+      timed(ViewRefresh.refreshSnapshot(view(updated), col("k"), b, buckets,
+        pathSnap))._1
     }
     println(f"""[probe] {"closure_nodes":$nNodes,"closure_pairs":$pairCount,""" +
       f""""closure_build_sec":$closureBuildSec%.2f,""" +
@@ -1446,7 +1410,6 @@ object ScaleProbe {
   private def viewRefreshProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
     import graft.etl.ViewRefresh
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val rows = k.toLong * 1000000L
     val b = 64
     val dimPath = tmp("vr_dim")
@@ -1461,17 +1424,15 @@ object ScaleProbe {
     def fact = spark.read.parquet(factPath)
     def view(d: DataFrame): DataFrame = fact.join(broadcast(d), Seq("k"))
     val path = tmp("vr_view") + "/view"
-    var t0 = System.nanoTime()
-    ViewRefresh.materializeSnapshot(view(dim), col("k"), b, path)
-    val materializeSec = (System.nanoTime() - t0) / 1e9
+    val (materializeSec, _) =
+      timed(ViewRefresh.materializeSnapshot(view(dim), col("k"), b, path))
     val results = Seq(3L, 1000L).map { c =>
       val updated = dim.withColumn("seg",
         when(col("k") < c, lit("UPDATED")).otherwise(col("seg")))
       val changed = dim.filter(col("k") < c).select(col("k"))
       val buckets = ViewRefresh.affectedBuckets(changed, col("k"), b)
-      t0 = System.nanoTime()
-      ViewRefresh.refreshSnapshot(view(updated), col("k"), b, buckets, path)
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, _) =
+        timed(ViewRefresh.refreshSnapshot(view(updated), col("k"), b, buckets, path))
       f""""c$c":{"buckets":${buckets.size},"refresh_sec":$sec%.2f}"""
     }
     println(results.mkString(
@@ -1501,10 +1462,9 @@ object ScaleProbe {
     * own partition), so storage memory and the persisted-RDD count
     * must stay FLAT — any climb is per-batch leaked state. The
     * pre-r13 lookup broadcasts leaked exactly here, one pair per
-    * replayed/normal batch. */
+    * replayed/normal batch. Each sample follows a listener-bus drain;
+    * `stays` lists the RDDs still persisted after a final GC pause. */
   private def r13Probes(spark: SparkSession, dir: String, k: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val storeDir = tmp("r13_store")
     val sinkBase = tmp("r13_sink")
     try {
@@ -1530,20 +1490,16 @@ object ScaleProbe {
         .withColumn("text", salt(lit(k - 1))).persist(lvl)
       batch.count()
       // (b) restart rebuild at the store's stats-sized partitioning
-      val t0 = System.nanoTime()
-      val idx0 = dedup.BandIndex.build(stored)
-      val rebuildSec = (System.nanoTime() - t0) / 1e9
+      val (rebuildSec, idx0) = timed(dedup.BandIndex.build(stored))
       val idxRows = idx0.indexedRows
       idx0.unpersist()
       // (a) the partition-count sweep
       val sweep = Seq(1, 8, 32, 128).map { p =>
         val idx = dedup.BandIndex.build(stored, numParts = p)
         val shots = (1 to 3).map { _ =>
-          val s = System.nanoTime()
-          val n = dedup.Dedup.crossNearDupPairsVsSignaturesIndexed(batch,
+          timed(dedup.Dedup.crossNearDupPairsVsSignaturesIndexed(batch,
             "doc_id", "text", stored, idx, None, 0.9,
-            smallRelationBytes = 0L).count()
-          ((System.nanoTime() - s) / 1e9, n)
+            smallRelationBytes = 0L).count())
         }
         idx.unpersist()
         (f""""p$p":{"pruned_sec":${shots.map(_._1).min}%.2f,""" +
@@ -1580,8 +1536,21 @@ object ScaleProbe {
         streaming.DocStream.processBatch(spark, batch, 8L, "doc_id",
           "text", 0.9, sink, name, compactEvery = 8, bandIndexBytes = 0L,
           bandIndexMaxBytes = Long.MaxValue)
+        org.apache.spark.sql.graft.Bridge
+          .waitListenerBusEmpty(spark.sparkContext)
         (usedStorageMb(), spark.sparkContext.getPersistentRDDs.size)
       }
+      // each RDD still persisted after the last replay and a GC pause
+      // (the ContextCleaner releases an unreachable localCheckpoint
+      // only after a GC), with the call site that created it
+      System.gc()
+      Thread.sleep(2000)
+      val stays = spark.sparkContext.getPersistentRDDs.toSeq.sortBy(_._1)
+        .map { case (id, rdd) =>
+          val site = rdd.toString.replaceAll("\\s+", " ")
+            .replace("\\", "/").replace("\"", "'")
+          s"""{"id":$id,"rdd":"${site.take(120)}"}"""
+        }
       streaming.DocStream.invalidateIndex(sink)
       val mem = samples.map(_._1)
       val rdds = samples.map(_._2)
@@ -1590,6 +1559,7 @@ object ScaleProbe {
       println(s"""[probe] {"replay_stability":{""" +
         s""""storage_mb":${mem.mkString("[", ",", "]")},""" +
         s""""persistent_rdds":${rdds.mkString("[", ",", "]")},""" +
+        s""""stays":${stays.mkString("[", ",", "]")},""" +
         f""""first10_avg_mb":$firstQ%.1f,"last10_avg_mb":$lastQ%.1f,""" +
         f""""drift":${lastQ / math.max(firstQ, 1.0)}%.3f}}""")
     } finally {
@@ -1609,7 +1579,6 @@ object ScaleProbe {
     * as P grows. */
   private def r13LookupProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val storeDir = tmp("r13l_store")
     try {
       val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
@@ -1646,11 +1615,7 @@ object ScaleProbe {
         .collect().map(r => (r.getInt(0), r.getLong(1)))
       val sweep = Seq(1, 8, 32, 128).map { p =>
         val idx = dedup.BandIndex.build(stored, numParts = p)
-        val shots = (1 to 3).map { _ =>
-          val s = System.nanoTime()
-          val n = idx.lookup(spark, keys).count()
-          ((System.nanoTime() - s) / 1e9, n)
-        }
+        val shots = (1 to 3).map(_ => timed(idx.lookup(spark, keys).count()))
         idx.unpersist()
         f""""p$p":{"pruned_sec":${shots.map(_._1).min}%.2f,""" +
           s""""rows":${shots.head._2}}"""
@@ -1675,59 +1640,22 @@ object ScaleProbe {
     * semantics — compaction moves bytes, never changes the corpus). */
   private def streamCompactProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val fsConf = spark.sessionState.newHadoopConf()
-    val times = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        times.synchronized {
-          times += ((e.progress.batchId,
-            e.progress.durationMs.get("triggerExecution").toDouble / 1000.0))
-        }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    def tmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
-    val docs = Tables.load(spark, dir, "documents")
-      .select("doc_id", "text", "lang", "n_chars")
-    val src = tmp("probe_dsc_src")
     val sink = tmp("probe_dsc_sink") + "/accepted"
-    val cp = tmp("probe_dsc_cp")
-    val stamped = scala.collection.mutable.Set[String]()
-    val p = new org.apache.hadoop.fs.Path(src)
-    val fs = p.getFileSystem(fsConf)
-    (0 until k).foreach { i =>
-      docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        .withColumn("text", salt(lit(i)))
-        .coalesce(1).write.mode("append").parquet(src)
-      fs.listStatus(p)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .foreach(s => if (stamped.add(s.getPath.getName))
-          fs.setTimes(s.getPath, 1600000000000L + i * 1000L, -1))
-    }
-    streaming.DocStream.nearDupIngestStream(spark, src, docs,
-      "doc_id", "text", 0.9, sink, "probe_dsc", Some(cp),
-      maxFilesPerTrigger = Some(1), compactEvery = 8).awaitTermination()
-    val accepted = streaming.DocStream.accepted(spark, sink, docs).count()
-    val sinkPath = new org.apache.hadoop.fs.Path(sink)
-    val liveDirs = fs.listStatus(sinkPath).filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .count(n => n.startsWith("batch_id=") || n.startsWith("gen="))
-    // drain the async listener bus so every progress event has landed
-    org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
-    spark.streams.removeListener(listener)
-    val ts = times.synchronized { times.toSeq }.sortBy(_._1).map(_._2)
-    val third = math.max(ts.length / 3, 1)
-    val mid = ts.slice(third, 2 * third)
-    val flat = if (mid.isEmpty || mid.sum == 0) -1.0
-      else ts.takeRight(third).sum / third / (mid.sum / mid.length)
-    val arr = ts.map(t => f"$t%.2f").mkString("[", ",", "]")
-    println(f"""[probe] {"near_dup_ingest_compacting":{"batches":$arr,"flatness":$flat%.2f},"live_dirs":$liveDirs,"accepted":$accepted,"replication":$k}""")
+    val (accepted, w) =
+      Trace.window(spark, "streamcompact/near_dup_ingest_compacting") {
+        val docs = Tables.load(spark, dir, "documents")
+          .select("doc_id", "text", "lang", "n_chars")
+        val src = waveSource(spark, "probe_dsc_src", k)(i => docs
+          .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
+          .withColumn("text", salt(lit(i))))
+        streaming.DocStream.nearDupIngestStream(spark, src, docs,
+          "doc_id", "text", 0.9, sink, "probe_dsc", Some(tmp("probe_dsc_cp")),
+          maxFilesPerTrigger = Some(1), compactEvery = 8).awaitTermination()
+        streaming.DocStream.accepted(spark, sink, docs).count()
+      }
+    println(s"""[probe] {"near_dup_ingest_compacting":${batchesJson(w.batches)},""" +
+      s""""live_dirs":${liveDirs(spark, sink)},"accepted":$accepted,""" +
+      s"""${counts(w)},"replication":$k}""")
   }
 
   /** The EVENT sink's 200-batch lifecycle probe — the DocStream
@@ -1745,67 +1673,30 @@ object ScaleProbe {
     * mid-third flatness, live dirs, and the conserved row count. */
   private def eventCompactProbes(spark: SparkSession, dir: String,
       k: Int): Unit = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val fsConf = spark.sessionState.newHadoopConf()
-    val times = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        times.synchronized {
-          times += ((e.progress.batchId,
-            e.progress.durationMs.get("triggerExecution").toDouble / 1000.0))
-        }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    def tmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
-    val ev = Tables.events(spark, dir)
-      .select("event_id", "user_id", "ts", "event_type", "value")
-    val right = ev.filter(col("event_type") === "error")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("event_id")).as("err_id"),
-        max_by(col("value"), col("event_id")).as("err_value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    right.count()
-    val src = tmp("probe_evc_src")
     val sink = tmp("probe_evc_sink") + "/enriched"
-    val cp = tmp("probe_evc_cp")
-    val stamped = scala.collection.mutable.Set[String]()
-    val p = new org.apache.hadoop.fs.Path(src)
-    val fs = p.getFileSystem(fsConf)
-    (0 until k).foreach { i =>
-      ev.withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
-        .coalesce(1).write.mode("append").parquet(src)
-      fs.listStatus(p)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .foreach(s => if (stamped.add(s.getPath.getName))
-          fs.setTimes(s.getPath, 1600000000000L + i * 1000L, -1))
-    }
-    streaming.EventStream.asOfEnrichForeachBatch(spark, src, ev, right,
-      "user_id", "ts", Seq("err_id", "err_value"), "err_id", sink, cp,
-      compactEvery = 8, maxFilesPerTrigger = Some(1)).awaitTermination()
-    val enrichedSchema = graft.operators.AsOfJoin.asOf(ev, right,
-      "user_id", "ts", Seq("err_id", "err_value"), "err_id")
-    val rows = streaming.EventStream.enriched(spark, sink, enrichedSchema)
-      .count()
-    val sinkPath = new org.apache.hadoop.fs.Path(sink)
-    val liveDirs = fs.listStatus(sinkPath).filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .count(n => n.startsWith("batch_id=") || n.startsWith("gen="))
-    // drain the async listener bus so every progress event has landed
-    org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
-    spark.streams.removeListener(listener)
-    val ts = times.synchronized { times.toSeq }.sortBy(_._1).map(_._2)
-    val third = math.max(ts.length / 3, 1)
-    val mid = ts.slice(third, 2 * third)
-    val flat = if (mid.isEmpty || mid.sum == 0) -1.0
-      else ts.takeRight(third).sum / third / (mid.sum / mid.length)
-    val arr = ts.map(t => f"$t%.2f").mkString("[", ",", "]")
-    println(f"""[probe] {"asof_enrich_compacting":{"batches":$arr,"flatness":$flat%.2f},"live_dirs":$liveDirs,"rows":$rows,"replication":$k}""")
+    val (rows, w) =
+      Trace.window(spark, "eventcompact/asof_enrich_compacting") {
+        val ev = Tables.events(spark, dir)
+          .select("event_id", "user_id", "ts", "event_type", "value")
+        val right = ev.filter(col("event_type") === "error")
+          .groupBy(col("user_id"), col("ts"))
+          .agg(max(col("event_id")).as("err_id"),
+            max_by(col("value"), col("event_id")).as("err_value"))
+          .persist(lvl)
+        right.count()
+        val src = waveSource(spark, "probe_evc_src", k)(i => ev
+          .withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L)))
+        streaming.EventStream.asOfEnrichForeachBatch(spark, src, ev, right,
+          "user_id", "ts", Seq("err_id", "err_value"), "err_id", sink,
+          tmp("probe_evc_cp"), compactEvery = 8,
+          maxFilesPerTrigger = Some(1)).awaitTermination()
+        val enrichedSchema = graft.operators.AsOfJoin.asOf(ev, right,
+          "user_id", "ts", Seq("err_id", "err_value"), "err_id")
+        streaming.EventStream.enriched(spark, sink, enrichedSchema).count()
+      }
+    println(s"""[probe] {"asof_enrich_compacting":${batchesJson(w.batches)},""" +
+      s""""live_dirs":${liveDirs(spark, sink)},"rows":$rows,""" +
+      s"""${counts(w)},"replication":$k}""")
   }
 
   /** Round-8 streaming probes: PER-BATCH wall vs batch index for the
@@ -1821,122 +1712,78 @@ object ScaleProbe {
     * re-shingled per batch) slopes linearly here. `flatness` =
     * mean(last third)/mean(second third) — ~1 flat, ~k/2 linear. */
   private def streamProbes(spark: SparkSession, dir: String, k: Int): Unit = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val fsConf = spark.sessionState.newHadoopConf()
-    val times =
-      scala.collection.mutable.ArrayBuffer[(String, Long, Double)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        times.synchronized {
-          times += ((e.progress.name, e.progress.batchId,
-            e.progress.durationMs.get("triggerExecution").toDouble / 1000.0))
-        }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
+    val (accepted, w) = Trace.window(spark, "streams/all") {
+      // --- near-dup ingest: the O(accepted) catcher ---------------------
+      val docs = Tables.load(spark, dir, "documents")
+        .select("doc_id", "text", "lang", "n_chars")
+      val dsSrc = waveSource(spark, "probe_docstream_src", k)(i => docs
+        .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
+        .withColumn("text", salt(lit(i))))
+      val dsSink = tmp("probe_docstream_sink") + "/accepted"
+      val dsCp = tmp("probe_docstream_cp")
+      streaming.DocStream.nearDupIngestStream(spark, dsSrc, docs,
+        "doc_id", "text", 0.9, dsSink, "probe_docstream", Some(dsCp),
+        maxFilesPerTrigger = Some(1)).awaitTermination()
+      val accepted = streaming.DocStream.accepted(spark, dsSink, docs).count()
 
-    def tmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
-    // explicit mod-time stamps fix batch arrival order (the q184 idiom)
-    def stampWave(dirPath: String, wave: Int,
-        stamped: scala.collection.mutable.Set[String]): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dirPath)
-      val fs = p.getFileSystem(fsConf)
-      fs.listStatus(p)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .foreach(s => if (stamped.add(s.getPath.getName))
-          fs.setTimes(s.getPath, 1600000000000L + wave * 1000L, -1))
+      // --- the same ingest with ONLINE DECONTAMINATION ------------------
+      // (q193 family): per batch adds batch-gram hashing + a broadcast
+      // join against the constant bench set — the per-batch wall must
+      // stay as flat as the plain ingest's
+      val dcSink = tmp("probe_docstream_dc_sink") + "/accepted"
+      val dcCp = tmp("probe_docstream_dc_cp")
+      streaming.DocStream.nearDupIngestStream(spark, dsSrc, docs,
+        "doc_id", "text", 0.9, dcSink, "probe_docstream_dc", Some(dcCp),
+        maxFilesPerTrigger = Some(1),
+        bench = Some(docs.filter(col("doc_id") % 97 === 0)),
+        benchGramN = 13).awaitTermination()
+
+      // --- stateless SCD2 enrichment (q179 family) ----------------------
+      val ordSrc = Tables.load(spark, dir, "orders").filter(col("o_custkey") < 5000)
+        .select("o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate")
+      val scdDim = etl.Scd.scd2FromChangeLog(ordSrc,
+        keyCols = Seq("o_custkey"), attrCols = Seq("o_orderpriority"),
+        orderCols = Seq("o_orderdate", "o_orderkey"))
+        .select(col("o_custkey"), col("o_orderpriority").as("state"),
+          col("valid_from"), col("valid_to"), col("version"))
+      val facts = ordSrc.select(col("o_orderkey"), col("o_custkey"),
+        col("o_orderdate").as("ts"))
+      val scdSrc = waveSource(spark, "probe_scd_src", k)(i => facts
+        .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 100000000L)))
+      streaming.EventStream.scdEnrichStream(spark, scdSrc, facts, scdDim,
+        key = "o_custkey", ts = "ts", attrs = Seq("state", "version"),
+        queryName = "probe_scd",
+        maxFilesPerTrigger = Some(1)).awaitTermination()
+
+      // --- stateful sketch aggregation (heavy hitters) ------------------
+      val hhFacts = ordSrc.select(col("o_orderkey"),
+        col("o_orderpriority").as("grp"), (col("o_custkey") % 1000).as("item"))
+      val hhSrc = waveSource(spark, "probe_hh_src", k)(i => hhFacts
+        .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 100000000L)))
+      streaming.EventStream.heavyHittersStream(spark, hhSrc, hhFacts,
+        groupCol = "grp", itemCol = "item", capacity = 32,
+        queryName = "probe_hh",
+        maxFilesPerTrigger = Some(1)).awaitTermination()
+      accepted
     }
 
-    // --- near-dup ingest: the O(accepted) catcher ---------------------
-    val docs = Tables.load(spark, dir, "documents")
-      .select("doc_id", "text", "lang", "n_chars")
-    val dsSrc = tmp("probe_docstream_src")
-    val dsSink = tmp("probe_docstream_sink") + "/accepted"
-    val dsCp = tmp("probe_docstream_cp")
-    val dsStamped = scala.collection.mutable.Set[String]()
-    (0 until k).foreach { i =>
-      docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        .withColumn("text", salt(lit(i)))
-        .coalesce(1).write.mode("append").parquet(dsSrc)
-      stampWave(dsSrc, i, dsStamped)
-    }
-    streaming.DocStream.nearDupIngestStream(spark, dsSrc, docs,
-      "doc_id", "text", 0.9, dsSink, "probe_docstream", Some(dsCp),
-      maxFilesPerTrigger = Some(1)).awaitTermination()
-    val accepted = streaming.DocStream.accepted(spark, dsSink, docs).count()
-
-    // --- the same ingest with ONLINE DECONTAMINATION ------------------
-    // (q193 family): per batch adds batch-gram hashing + a broadcast
-    // join against the constant bench set — the per-batch wall must
-    // stay as flat as the plain ingest's
-    val dcSink = tmp("probe_docstream_dc_sink") + "/accepted"
-    val dcCp = tmp("probe_docstream_dc_cp")
-    streaming.DocStream.nearDupIngestStream(spark, dsSrc, docs,
-      "doc_id", "text", 0.9, dcSink, "probe_docstream_dc", Some(dcCp),
-      maxFilesPerTrigger = Some(1),
-      bench = Some(docs.filter(col("doc_id") % 97 === 0)),
-      benchGramN = 13).awaitTermination()
-
-    // --- stateless SCD2 enrichment (q179 family) ----------------------
-    val ordSrc = Tables.load(spark, dir, "orders").filter(col("o_custkey") < 5000)
-      .select("o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate")
-    val scdDim = etl.Scd.scd2FromChangeLog(ordSrc,
-      keyCols = Seq("o_custkey"), attrCols = Seq("o_orderpriority"),
-      orderCols = Seq("o_orderdate", "o_orderkey"))
-      .select(col("o_custkey"), col("o_orderpriority").as("state"),
-        col("valid_from"), col("valid_to"), col("version"))
-    val facts = ordSrc.select(col("o_orderkey"), col("o_custkey"),
-      col("o_orderdate").as("ts"))
-    val scdSrc = tmp("probe_scd_src")
-    val scdStamped = scala.collection.mutable.Set[String]()
-    (0 until k).foreach { i =>
-      facts.withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 100000000L))
-        .coalesce(1).write.mode("append").parquet(scdSrc)
-      stampWave(scdSrc, i, scdStamped)
-    }
-    streaming.EventStream.scdEnrichStream(spark, scdSrc, facts, scdDim,
-      key = "o_custkey", ts = "ts", attrs = Seq("state", "version"),
-      queryName = "probe_scd",
-      maxFilesPerTrigger = Some(1)).awaitTermination()
-
-    // --- stateful sketch aggregation (heavy hitters) ------------------
-    val hhFacts = ordSrc.select(col("o_orderkey"),
-      col("o_orderpriority").as("grp"), (col("o_custkey") % 1000).as("item"))
-    val hhSrc = tmp("probe_hh_src")
-    val hhStamped = scala.collection.mutable.Set[String]()
-    (0 until k).foreach { i =>
-      hhFacts.withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 100000000L))
-        .coalesce(1).write.mode("append").parquet(hhSrc)
-      stampWave(hhSrc, i, hhStamped)
-    }
-    streaming.EventStream.heavyHittersStream(spark, hhSrc, hhFacts,
-      groupCol = "grp", itemCol = "item", capacity = 32,
-      queryName = "probe_hh",
-      maxFilesPerTrigger = Some(1)).awaitTermination()
-
-    // drain the async listener bus so every progress event has landed
-    org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
-    spark.streams.removeListener(listener)
-    val byName = times.synchronized { times.toSeq }
-      .groupBy(_._1).map { case (n, ts) =>
-        n -> ts.sortBy(_._2).map(_._3)
-      }
-    def flatness(ts: Seq[Double]): Double = {
-      val third = math.max(ts.length / 3, 1)
-      val mid = ts.slice(third, 2 * third)
-      val last = ts.takeRight(third)
-      if (mid.isEmpty || mid.sum == 0) -1.0 else last.sum / third / (mid.sum / mid.length)
-    }
-    val json = byName.toSeq.sortBy(_._1).map { case (n, ts) =>
-      val arr = ts.map(t => f"$t%.2f").mkString("[", ",", "]")
-      f""""$n":{"batches":$arr,"flatness":${flatness(ts)}%.2f}"""
+    val json = w.batches.groupBy(_.query).toSeq.sortBy(_._1).map {
+      case (n, bs) => s""""$n":${batchesJson(bs)}"""
     }.mkString("{", ",",
-      s""","accepted":$accepted,"replication":$k}""")
+      s""","accepted":$accepted,${counts(w)},"replication":$k}""")
     println(s"[probe] $json")
+  }
+
+  /** A stream's per-batch walls in seconds, in batch order, and their
+    * flatness, mean(last third) / mean(middle third): ~1 flat, ~k/2
+    * linear. */
+  private def batchesJson(bs: Seq[Trace.Batch]): String = {
+    val ts = bs.sortBy(_.id).map(_.ms / 1000.0)
+    val third = math.max(ts.length / 3, 1)
+    val mid = ts.slice(third, 2 * third)
+    val flat = if (mid.isEmpty || mid.sum == 0) -1.0
+      else ts.takeRight(third).sum / third / (mid.sum / mid.length)
+    val arr = ts.map(t => f"$t%.2f").mkString("[", ",", "]")
+    f"""{"batches":$arr,"flatness":$flat%.2f}"""
   }
 }

@@ -3,11 +3,9 @@ package graft.etl
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
-import graft.TestSpark
+import graft.{TestSpark, Trace}
 import graft.sources.CsvSource
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end ETL parity spec on a reference-shaped fixture
@@ -145,30 +143,16 @@ class EsiEtlSpec extends AnyFunSuite {
     assert(wide.filter($"source_fact" === "fact_emigrante").count() === 3)
   }
 
-  /** `body`'s result and the input records its tasks read (the
-    * listener bus drained on both sides). */
-  private def withRecordsRead[T](body: => T): (T, Long) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicLong
-    val l = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          n.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
-    }
-    Bridge.waitListenerBusEmpty(sc)
-    sc.addSparkListener(l)
-    try { val out = body; Bridge.waitListenerBusEmpty(sc); (out, n.get) }
-    finally sc.removeSparkListener(l)
-  }
-
   test("a load parses each CSV line once, releases its cache and saves the frames it built") {
     // fresh paths: a plan over the suite's files would be served from
     // the cached `cleaned` and parse no CSV at all
     val specs = writeFixture()
     val sc = spark.sparkContext
     val rddsBefore = sc.getPersistentRDDs.keySet
-    val (built, buildRead) = withRecordsRead(EsiEtl.buildWarehouse(
-      EsiEtl.clean(CsvSource.scanAll(spark, specs, EsiEtl.esiSchema))))
+    val (built, buildWin) = Trace.window(spark, "esi/build")(
+      EsiEtl.buildWarehouse(EsiEtl.clean(
+        CsvSource.scanAll(spark, specs, EsiEtl.esiSchema))))
+    val buildRead = buildWin.inputRecords
     val cachedIds = sc.getPersistentRDDs.keySet -- rddsBefore
     assert(cachedIds.size === 1, "the narrow relation is the load's one cache")
     val cachedParts = sc.getRDDStorageInfo.filter(i => cachedIds(i.id))
@@ -179,7 +163,8 @@ class EsiEtlSpec extends AnyFunSuite {
     // materializes the cache as its own stage, then reads it back
     assert(buildRead === fixtureLines + cachedParts)
     val dir = Files.createTempDirectory("esi_wh_once").toString
-    val (_, saveRead) = withRecordsRead(EsiEtl.save(built, dir))
+    val saveRead = Trace.window(spark, "esi/save")(EsiEtl.save(built, dir))
+      ._2.inputRecords
     // the save parses nothing: each fact write reads the cache once
     assert(saveRead === 2L * cachedParts)
     assert(sc.getPersistentRDDs.keySet === rddsBefore)

@@ -1,9 +1,7 @@
 package graft.etl
 
-import graft.TestSpark
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{TestSpark, Trace}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -401,21 +399,6 @@ class ViewRefreshSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
-  /** `body`'s result and the Spark jobs started while it ran (the
-    * listener bus drained on both sides). */
-  private def withJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
-    }
-    Bridge.waitListenerBusEmpty(sc)
-    sc.addSparkListener(l)
-    try { val out = body; Bridge.waitListenerBusEmpty(sc); (out, n.get) }
-    finally sc.removeSparkListener(l)
-  }
-
   test("snapshot reads build with 0 jobs from the manifest schema, as an inferring read would type them") {
     val root = java.nio.file.Files.createTempDirectory("vr_schema").toString
     val path = s"$root/view"
@@ -437,8 +420,8 @@ class ViewRefreshSpec extends AnyFunSuite {
     for ((read, gen) <- Seq(
         (() => ViewRefresh.readSnapshot(spark, path), gen2),
         (() => ViewRefresh.readSnapshotAsOf(spark, path, 1L), gen1))) {
-      val (df, jobs) = withJobs(read())
-      assert(jobs === 0, "building a snapshot read started Spark jobs")
+      val (df, w) = Trace.window(spark, "snapshot/read")(read())
+      assert(w.jobs.size === 0, "building a snapshot read started Spark jobs")
       val want = inferred(gen)
       assert(df.schema === want.schema)
       assert(df.exceptAll(want).isEmpty && want.exceptAll(df).isEmpty)

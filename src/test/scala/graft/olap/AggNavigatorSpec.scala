@@ -1,9 +1,7 @@
 package graft.olap
 
-import graft.TestSpark
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{TestSpark, Trace}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,21 +59,6 @@ class AggNavigatorSpec extends AnyFunSuite {
     for (a <- reg.aggs)
       assert(a.schema === spark.read.parquet(a.path).schema,
         s"recorded schema of ${a.name} differs from its files")
-
-  /** `body`'s result and the Spark jobs started while it ran (the
-    * listener bus drained on both sides). */
-  private def withJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
-    }
-    Bridge.waitListenerBusEmpty(sc)
-    sc.addSparkListener(l)
-    try { val out = body; Bridge.waitListenerBusEmpty(sc); (out, n.get) }
-    finally sc.removeSparkListener(l)
-  }
 
   test("routed answers are bit-identical to the direct fact aggregate") {
     for (groupCols <- Seq(Seq("y"), Seq("y", "m"), Seq("status"),
@@ -415,23 +398,28 @@ class AggNavigatorSpec extends AnyFunSuite {
     var built = false
     def factOf = { built = true; staged }
     try {
-      val (nav, navJobs) = withJobs(AggNavigator.navigate(reg, factOf, Seq("y")))
-      assert(navJobs === 0)
+      val (nav, navWin) = Trace.window(spark, "routed/navigate")(
+        AggNavigator.navigate(reg, factOf, Seq("y")))
+      assert(navWin.jobs.size === 0)
       assert(rows(nav, Seq("y")) === rows(staged.groupBy(col("y"))
         .agg(measures.map(_.direct).head, measures.map(_.direct).tail: _*),
         Seq("y")))
-      assert(withJobs(AggNavigator.navigateSets(reg, factOf,
-        Seq("y", "m", "status"), Seq(Seq("y", "m"), Seq("status"), Nil)))._2
-        === 0)
+      val (_, setsWin) = Trace.window(spark, "routed/navigateSets")(
+        AggNavigator.navigateSets(reg, factOf, Seq("y", "m", "status"),
+          Seq(Seq("y", "m"), Seq("status"), Nil)))
+      assert(setsWin.jobs.size === 0)
       val mdx =
         """SELECT {[Measures].[n]} ON COLUMNS,
           | {[fecha].[m].Members} ON ROWS
           |FROM [orders] WHERE ([fecha].[y].[1996])""".stripMargin
-      assert(withJobs(Mdx.run(mdx,
+      val (_, mdxWin) = Trace.window(spark, "routed/mdx")(Mdx.run(mdx,
         Map("orders" -> CubeQuery.CubeRef(() => factOf, registry = Some(reg))),
-        Map("orders" -> Seq(Cube.Hierarchy("fecha", Seq("y", "m"))))))._2 === 0)
+        Map("orders" -> Seq(Cube.Hierarchy("fecha", Seq("y", "m"))))))
+      assert(mdxWin.jobs.size === 0)
       assert(!built, "routed reads must not construct the fact lineage")
-      assert(withJobs(AggRoute.route(factPath, reg))._2 === 1)
+      val (_, routeWin) = Trace.window(spark, "routed/route")(
+        AggRoute.route(factPath, reg))
+      assert(routeWin.jobs.size === 1)
     } finally {
       AggRoute.unroute(spark, factPath)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
