@@ -116,7 +116,7 @@ object Bench {
 
   /** A failed query's time: a regression must not read as a speedup,
     * so breakage inflates the tracked number instead. */
-  private val FailedSentinel = 1e6
+  private[graft] val FailedSentinel = 1e6
 
   /** One run of query `name` on `dir` in a [[Trace]] window labelled
     * `<name>/<phase>`: the seconds its build and noop sink took

@@ -865,16 +865,11 @@ object Queries {
   }
 
   /** The deterministic ESI-shaped stream q36 derives from orders. */
-  private def q36Raw(s: SparkSession, dir: String): DataFrame =
+  private def q36Raw(s: SparkSession, dir: String): DataFrame = {
+    import graft.etl.Cleaning
     // t() already fans out the single-row-group orders scan, so the
     // regex-heavy cleaning chain runs spread across the cluster
-    q36RawFromOrders(t(s, dir, "orders"))
-
-  /** [[q36Raw]] over an explicit orders frame — lets [[ScaleProbe]]
-    * feed a replicated corpus through the identical derivation. */
-  private[graft] def q36RawFromOrders(o: DataFrame): DataFrame = {
-    import graft.etl.Cleaning
-    o.select(
+    t(s, dir, "orders").select(
       when(col("o_orderstatus") === "O", lit(" Entrada "))
         .otherwise(lit("salida")).as("tip_movi"),
       year(col("o_orderdate")).as("anio_movi"),

@@ -20,6 +20,12 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Table `name` as stored, for copying: a TIMESTAMP(NANOS) `ts` of
+    * the older events generation reads as its int64 nanos, which
+    * [[events]] and [[eventsEpochMicros]] read back from a copy. */
+  private[graft] def raw(spark: SparkSession, dir: String, name: String): DataFrame =
+    withNanosAsLong(spark)(load(spark, dir, name))
+
   /** Run `body` with `spark.sql.legacy.parquet.nanosAsLong` on, restoring
     * the prior value after. The flag is only needed for the EAGER
     * footer/schema resolution inside `body` (a TIMESTAMP(NANOS) footer is

@@ -1,5 +1,9 @@
 package graft
+
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,26 +15,11 @@ object Verify {
     val only = Queries.onlyNames("SPARK_GRAFT_ONLY", SparkEntry.queries.keySet)
     val spark = Sessions.local(Sessions.cpus(4))
     new java.io.File(outDir).mkdirs()
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmTree)
-      f.delete(): Unit
-    }
     val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
+      case Some(names) => SparkEntry.queries.keys.filter(names)
+      case None => SparkEntry.queries.keys
     }
-    selected.foreach { case (name, fn) =>
-      // delete any previous run's dump FIRST: if this query now fails,
-      // the driver's compare must see MISSING output, not silently
-      // validate the stale parquet of an older passing build
-      rmTree(new java.io.File(s"$outDir/$name"))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        rmTree(new java.io.File(s"$outDir/$name"))
-      }
-    }
+    selected.foreach(dump(spark, _, sfDir, outDir))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -51,5 +40,28 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes query `name` on `sfDir` to `outDir/name` as one parquet
+    * file, then clears the cache: a relation the query persisted (the
+    * q36 and q203-family warehouse stream) would otherwise serve a
+    * later query's dump from memory. The previous run's dump goes
+    * FIRST, so a query that now fails leaves MISSING output for the
+    * DuckDB compare, never the stale parquet of an older build. */
+  private[graft] def dump(spark: SparkSession, name: String, sfDir: String,
+      outDir: String): Unit = {
+    val out = new java.io.File(s"$outDir/$name")
+    rmTree(out)
+    try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+      .mode("overwrite").parquet(out.getPath)
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      rmTree(out)
+    } finally spark.catalog.clearCache()
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmTree)
+    f.delete(): Unit
   }
 }

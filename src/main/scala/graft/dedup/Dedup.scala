@@ -70,26 +70,6 @@ object Dedup {
   // (transform/aggregate) is interpreted per lambda element and
   // measured 20×+ slower on the same corpus.
 
-  /** LSH candidate pairs: split the signature into `bands` bands of
-    * `rowsPerBand` hashes; docs sharing any band bucket are candidates.
-    * Returns (id_a, id_b) with id_a < id_b, distinct across bands.
-    *
-    * Scale: the exploded (band, bucket, id) relation is `bands`× the doc
-    * count — the self-join happens per bucket, so skewed buckets (e.g.
-    * empty-text clusters) are the thing to watch; `spark.sql.adaptive`
-    * skew-join handles moderate cases, and a `maxBucket` cap guards
-    * degenerate ones.
-    */
-  def lshCandidates(docs: DataFrame, idCol: String, textCol: String,
-      shingleWidth: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      maxBucket: Int = 1000): DataFrame = {
-    val banded = docs
-      .select(col(idCol).as("id"),
-        posexplode(graft.functions.minhash_bands(col(textCol), shingleWidth,
-          bands, rowsPerBand)).as(Seq("band", "bucket")))
-    pairsFromBuckets(banded, Seq("band", "bucket"), maxBucket)
-  }
-
   /** Candidate pairs from a bucketed (bucketCols…, id) relation in ONE
     * shuffle: group each bucket's ids and expand the C(n,2) pairs in
     * place (a self-join on the bucket columns would shuffle the
@@ -979,7 +959,9 @@ object Dedup {
     * tiny diameters, so rounds stay low. Lineage is truncated per round
     * with an eager localCheckpoint — without it the plan tree doubles
     * every iteration. The convergence check rides the same materialized
-    * round (no extra pass over un-cached data).
+    * round (no extra pass over un-cached data), and the round it
+    * supersedes is released then, so a long propagation holds two
+    * rounds' blocks at most, not every round's until a driver GC.
     *
     * At 100 TB: rounds = O(component diameter); for adversarial chain
     * graphs swap in the alternating large-star/small-star contraction —
@@ -998,6 +980,7 @@ object Dedup {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint()
+    var held = checkpointed(labels)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
@@ -1008,6 +991,9 @@ object Dedup {
           least(col("label"), coalesce(col("__nmin"), col("label")))
             .as("label"))
         .localCheckpoint() // eager: materializes the round once
+      // next no longer reads the round it replaces
+      held.unpersist(blocking = false)
+      held = checkpointed(next)
       changed = next.filter(col("label") =!= col("__old")).count()
       labels = next.select(col("id"), col("label"))
       iter += 1
@@ -1022,6 +1008,12 @@ object Dedup {
         "maxIters; raise it or contract the graph first")
     labels.withColumnRenamed("label", "cluster")
   }
+
+  /** The RDD whose blocks hold a `localCheckpoint`ed frame's rows. */
+  private def checkpointed(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
 
   /** Chunk-level duplication profile — the cross-document repeated-
     * passage detector (the corpus-level cousin of MassiveText's

@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -40,18 +39,6 @@ object SurrogateKeys {
     }
     spark.createDataFrame(rdd, schema)
   }
-
-  /** Small-dimension variant kept on the pure DataFrame API (single
-    * partition window — only for dims known to be driver-tiny, where the
-    * extra RDD hop of [[dim]] is not worth it). */
-  def dimSmall(df: DataFrame, naturalKeys: Seq[String], idCol: String): DataFrame =
-    df.select(naturalKeys.map(col): _*).distinct()
-      .withColumn(idCol,
-        // driver-tiny by contract — pinned partition keeps the
-        // intentional single-task window out of the WindowExec warning
-        row_number().over(
-          Window.partitionBy(graft.plans.PinnedWindow.key(col(naturalKeys.head)))
-            .orderBy(naturalKeys.map(col): _*)).cast(LongType))
 
   /** Rows of `incoming` whose natural-key tuple `existing` has not
     * seen, every incoming column preserved. Null-safe anti-join

@@ -247,19 +247,9 @@ object Features {
     (df.filter(!isTest), df.filter(isTest))
   }
 
-  /** Time-ordered split: first `trainFraction` of rows by event order —
-    * `machineLearning.py:611-615`. `percent_rank` needs a global order;
-    * the tie-breaker column keeps it deterministic. At scale prefer a
-    * precomputed cutoff timestamp (one scalar agg) over the global
-    * window; both are provided. */
-  def timeSplitTag(df: DataFrame, timeCol: String, tieBreak: String,
-      trainFraction: Double, tagCol: String = "split"): DataFrame =
-    df.withColumn(tagCol,
-      when(percent_rank().over(Window.orderBy(col(timeCol), col(tieBreak)))
-        <= trainFraction, "train").otherwise("test"))
-
-  /** Scale path: cutoff by approximate quantile of the time column —
-    * no global sort, two passes over the data. */
+  /** Time-ordered split (`machineLearning.py:611-615`): cutoff by
+    * approximate quantile of the time column — no global sort, two
+    * passes over the data. */
   def timeSplitByQuantile(df: DataFrame, timeCol: String,
       trainFraction: Double): (DataFrame, DataFrame) = {
     val cutoff = df.stat.approxQuantile(timeCol, Array(trainFraction), 1e-4)(0)

@@ -29,10 +29,10 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Spark-first mechanics: a Catalyst optimizer rule (injected by
-  * [[graft.GraftExtensions]]; [[enable]] adds it to an existing
-  * session via `experimental.extraOptimizations`) matches a logical
-  * `Aggregate` whose child scans a ROUTED fact parquet path and
-  * rewrites it onto the smallest covering [[AggNavigator.AggTable]],
+  * [[graft.GraftExtensions]], which every [[graft.Sessions]] session
+  * carries) matches a logical `Aggregate` whose child scans a ROUTED
+  * fact parquet path and rewrites it onto the smallest covering
+  * [[AggNavigator.AggTable]],
   * re-aggregating the stored partials with each measure's `merge` —
   * the same bit-identical partial algebra `navigate` uses, so the
   * rewritten answer equals the fact answer exactly, not
@@ -151,13 +151,6 @@ object AggRoute {
 
   /** Detach every routed fact (test teardown, bulk re-registration). */
   def clear(): Unit = routes.clear()
-
-  /** Add [[Rewrite]] to an already-built session (sessions built with
-    * [[graft.GraftExtensions]] have it injected already). Idempotent. */
-  def enable(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(Rewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ Rewrite
 
   /** Attribute-id/name/case-blind canonical form: measure matching
     * must survive alias renames and fresh exprIds, and Spark's

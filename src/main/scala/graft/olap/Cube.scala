@@ -44,10 +44,6 @@ object Cube {
     wide.cube(col(a), col(b)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The two reference measures (`Schema_Trabajo_Final.xml:69-71,87-89`). */
-  def countMovements(key: String): Column = count(col(key)).as("cantidad_movimientos")
-  def avgAge(ageCol: String): Column = avg(col(ageCol)).as("promedio_edades")
-
   /** The WHOLE Mondrian serving surface in one pass: every prefix of
     * every hierarchy (each drill-down's member set) plus the `hasAll`
     * grand total, as a single GROUPING SETS aggregate keyed by

@@ -428,10 +428,6 @@ object Mdx {
   /** Parse one SELECT statement of the documented subset. */
   def parse(mdx: String): Parsed = new Parser(tokenize(mdx)).statement()
 
-  /** Parse one DRILLTHROUGH statement of the documented subset. */
-  def parseDrillthrough(mdx: String): DrillParsed =
-    new Parser(tokenize(mdx)).drillthrough()
-
   /** Execute a parsed DRILLTHROUGH: filter the FACT to the named
     * cell (typed member equality, the slicer rules), project the
     * RETURN columns, cap at MAXROWS. Reads the fact by definition —

@@ -33,12 +33,4 @@ object StarSchema {
     dims.foldLeft(fact) { case (acc, Dim(d, key, prefix)) =>
       acc.join(broadcast(prefixColumns(d, prefix, except = Seq(key))), Seq(key), "left")
     }
-
-  /** `SELECT *` variant (D2): join on the shared key name so the key
-    * column is not duplicated (structurally avoids the reference's
-    * post-hoc duplicate-column drop, `machineLearning.py:238`). */
-  def wideTableUnaliased(fact: DataFrame, dims: Seq[(DataFrame, String)]): DataFrame =
-    dims.foldLeft(fact) { case (acc, (d, key)) =>
-      acc.join(broadcast(d), Seq(key), "left")
-    }
 }

@@ -123,18 +123,4 @@ object RangeJoin {
       .map(c => col(s"__ojr.$c"))
     l.join(r, cond, "inner").select((lCols ++ rCols).toIndexedSeq: _*)
   }
-
-  /** Convenience for timestamp columns: seconds-resolution epoch
-    * bucketing (casts both sides to epoch seconds internally, keeps
-    * the original columns). */
-  def pointInIntervalTs(left: DataFrame, leftTs: String,
-      right: DataFrame, rightStartTs: String, rightEndTs: String,
-      equiKeys: Seq[String], bucketSeconds: Long): DataFrame = {
-    val l = left.withColumn("__pt", unix_timestamp(col(leftTs)))
-    val r = right
-      .withColumn("__s", unix_timestamp(col(rightStartTs)))
-      .withColumn("__e", unix_timestamp(col(rightEndTs)))
-    pointInInterval(l, "__pt", r, "__s", "__e", equiKeys, bucketSeconds)
-      .drop("__pt", "__s", "__e")
-  }
 }

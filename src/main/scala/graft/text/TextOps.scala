@@ -111,10 +111,6 @@ object TextOps {
       lit(0.3) * alphaRatio(text) +
       lit(0.3) * least(stopwordRatio(text) * lit(4.0), lit(1.0)))
 
-  /** 64-bit content fingerprint (xxhash64 of normalized text) — the
-    * fast exact-dedup key. */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   /** Engine-portable polynomial rolling hash over tokens:
     * h = fold(h*31 + (17*len(w) + ascii(w))) mod 1e9+7. Weaker than
     * xxhash64 but expressible identically in SQL oracles (DuckDB

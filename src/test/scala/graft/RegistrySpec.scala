@@ -21,17 +21,17 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
-  test("ScaleProbe knows exactly its 24 sets and rejects any other name") {
-    assert(ScaleProbe.sets.keySet === Set(
-      "r3", "r5", "r6", "r7", "r7b", "r8", "r9", "r13", "r13lookup",
-      "r14", "r15", "r17", "flagship", "events", "asof", "zorder",
-      "curationcmp", "curationstages", "sigfetch", "aggnav",
-      "viewrefresh", "streams", "streamcompact", "eventcompact"))
-    assert(ScaleProbe.set("r3") eq ScaleProbe.sets("r3"))
-    Seq("r71", "aggNav", "").foreach { bad =>
-      val e = intercept[IllegalArgumentException](ScaleProbe.set(bad))
-      assert(e.getMessage.contains("aggnav, asof"), e.getMessage)
-    }
+  test("ScaleProbe resolves query and stream names, and rejects typos") {
+    // pure name resolution: no session is needed to reject a typo
+    assert(ScaleProbe.entries(" q01_pricing,streams ,q36_esi_etl") ===
+      Seq("q01_pricing", "streams", "q36_esi_etl"))
+    assert(ScaleProbe.entries("streamcompact,eventcompact") ===
+      Seq("streamcompact", "eventcompact"))
+    val e = intercept[IllegalArgumentException](
+      ScaleProbe.entries("q01_pricing,flagship,q36_esi_etI"))
+    assert(e.getMessage.contains(
+      "ScaleProbe names unknown: flagship, q36_esi_etI"), e.getMessage)
+    intercept[IllegalArgumentException](ScaleProbe.entries(" , "))
   }
 
   test("the query-name filters select known names and reject typos") {

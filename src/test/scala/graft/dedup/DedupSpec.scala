@@ -308,4 +308,17 @@ class DedupSpec extends AnyFunSuite {
     assert(rows.minBy(_._5)._1 === 2)
     assert(rows.find(t => t._1 == 8 && t._2 == 4).get._4 <= 1e-5)
   }
+
+  test("dupClusters keeps only the returned labels persisted, with no GC") {
+    // a 6-node chain: the minimum label moves one hop per round, so
+    // propagation takes 5 rounds plus the round that sees no change
+    val chain = (1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val clusters = Dedup.dupClusters(chain)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size === 1, s"persisted by dupClusters: $added")
+    assert(clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      (1L to 6L).map(_ -> 1L).toSet)
+  }
 }
